@@ -6128,10 +6128,11 @@ def q_stream_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    ev.where(_sec("ts") < cut).write.parquet(src)
+    pre = F.coalesce(_sec("ts") < cut, F.lit(False))  # NULL ts -> drop 2
+    ev.where(pre).write.parquet(src)
     drain()
     n1 = len(snap.history(tbl))
-    ev.where(~(_sec("ts") < cut)).write.mode("append").parquet(src)
+    ev.where(~pre).write.mode("append").parquet(src)
     drain()
     n2 = len(snap.history(tbl))
     drain()  # restart with nothing new: exactly-once means zero commits
@@ -6432,328 +6433,171 @@ FROM rec GROUP BY 1, 2
 # registry
 # --------------------------------------------------------------------------
 
+# One entry per query: (name, builder, DuckDB oracle SQL). The order is part
+# of the public contract: queries() and oracle_sql() both list in it.
+_REGISTRY: tuple[tuple[str, Callable[[SparkSession, str], DataFrame], str], ...] = (
+    ("stream_cusum", q_stream_cusum, _SQL_STREAM_CUSUM),
+    ("stream_fingerprint", q_stream_fingerprint, _sql_stream_fingerprint()),
+    ("stream_time_since", q_stream_time_since, _SQL_STREAM_TIME_SINCE),
+    ("snapshot_compact", q_snapshot_compact, _SQL_SNAPSHOT_COMPACT),
+    ("stream_fill", q_stream_fill, _SQL_STREAM_FILL),
+    ("stream_seasonal", q_stream_seasonal, _SQL_STREAM_SEASONAL),
+    ("stream_rollup", q_stream_rollup, _SQL_STREAM_ROLLUP),
+    ("stream_hist", q_stream_hist, _SQL_STREAM_HIST),
+    ("stream_distinct", q_stream_distinct, _SQL_STREAM_DISTINCT),
+    ("stream_sessions", q_stream_sessions, _SQL_STREAM_SESSIONS),
+    ("stream_turn_rate", q_stream_turn_rate, _SQL_STREAM_TURN_RATE),
+    ("stream_asof_enrich", q_stream_asof_enrich, _SQL_STREAM_ASOF_ENRICH),
+    ("stream_interval_join", q_stream_interval_join, _SQL_STREAM_INTERVAL_JOIN),
+    ("stream_snapshot_sink", q_stream_snapshot_sink, _SQL_STREAM_SNAPSHOT_SINK),
+    ("stream_cdc_rollup", q_stream_cdc_rollup, _SQL_STREAM_CDC_ROLLUP),
+    ("backfill", q_backfill, _SQL_BACKFILL),
+    ("span_mask", q_span_mask, _SQL_SPAN_MASK),
+    ("snapshot_rollback", q_snapshot_rollback, _SQL_SNAPSHOT_ROLLBACK),
+    ("align_rejects", q_align_rejects, _SQL_ALIGN_REJECTS),
+    ("pack_utilization", q_pack_utilization, _SQL_PACK_UTILIZATION),
+    ("turn_transitions", q_turn_transitions, _SQL_TURN_TRANSITIONS),
+    ("degenerate_loops", q_degenerate_loops, _SQL_DEGENERATE_LOOPS),
+    # streaming op held to the BATCH oracle: the drained stream must
+    # hash-match the plain window SQL
+    ("stream_context", q_stream_context, _SQL_STREAM_CONTEXT),
+    ("sketch_topk", q_sketch_topk, _SQL_SKETCH_TOPK),
+    ("changepoints", q_changepoints, _SQL_CHANGEPOINTS),
+    ("drift_incremental", q_drift_incremental, _SQL_DRIFT_INCREMENTAL),
+    ("weighted_sample", q_weighted_sample, _SQL_WEIGHTED_SAMPLE),
+    ("topk_incremental", q_topk_incremental, _SQL_TOPK_INCREMENTAL),
+    ("rolling_trend", q_rolling_trend, _SQL_ROLLING_TREND),
+    ("ewma_mean", q_ewma_mean, _SQL_EWMA_MEAN),
+    ("cohort_retention", q_cohort_retention, _SQL_COHORT_RETENTION),
+    ("seasonal_baseline", q_seasonal_baseline, _SQL_SEASONAL_BASELINE),
+    ("drift_ks", q_drift_ks, _SQL_DRIFT_KS),
+    ("rolling_autocorr", q_rolling_autocorr, _SQL_ROLLING_AUTOCORR),
+    ("kanon_suppress", q_kanon_suppress, _SQL_KANON_SUPPRESS),
+    ("vocab_oov", q_vocab_oov, _SQL_VOCAB_OOV),
+    ("tool_funnel", q_tool_funnel, _SQL_TOOL_FUNNEL),
+    ("pit_enrich", q_pit_enrich, _SQL_PIT_ENRICH),
+    ("cv_folds", q_cv_folds, _SQL_CV_FOLDS),
+    ("drift_psi", q_drift_psi, _SQL_DRIFT_PSI),
+    ("response_latency", q_response_latency, _SQL_RESPONSE_LATENCY),
+    ("future_label", q_future_label, _SQL_FUTURE_LABEL),
+    ("sketch_cms", q_sketch_cms, _sql_sketch_cms()),
+    ("negative_sample", q_negative_sample, _sql_negative_sample()),
+    ("pit_staleness", q_pit_staleness, _SQL_PIT_STALENESS),
+    ("feature_vector", q_feature_vector,
+     _sql_feature_vector().format(flagship=_SQL_FLAGSHIP)),
+    ("sessionize", q_sessionize, _SQL_SESSIONIZE),
+    ("stats_normalize", q_stats_normalize, _SQL_STATS_NORMALIZE),
+    # minhash-LSH at r=1 banding has provably-total recall on this
+    # fixture (pytest-asserted), so its verified output equals the
+    # exact-Jaccard pair set — same oracle SQL, different physical plan
+    ("dedup_minhash", q_dedup_minhash, _SQL_NGRAM_JACCARD),
+    ("asof_salted", q_asof_salted, _SQL_ASOF_SALTED),
+    ("multi_align", q_multi_align, _SQL_MULTI_ALIGN),
+    # full-probe LSH / full-probe IVF degrade provably to exact brute
+    # force — the brute-force SQL oracles the bucketed machinery
+    ("ann_lsh", q_ann_lsh, _SQL_ANN_BRUTEFORCE),
+    ("ann_ivf", q_ann_ivf, _SQL_ANN_BRUTEFORCE),
+    ("embedding_neardup", q_embedding_neardup, _SQL_EMBEDDING_NEARDUP),
+    ("media_features", q_media_features, _SQL_MEDIA),
+    ("pack_concat", q_pack_concat, _SQL_PACK_CONCAT),
+    ("pack_greedy", q_pack_greedy, _SQL_PACK_GREEDY),
+    ("tfidf_topk", q_tfidf_topk, _SQL_TFIDF),
+    ("winsorize", q_winsorize, _SQL_WINSORIZE),
+    ("dedup_clusters", q_dedup_clusters, _SQL_DEDUP_CLUSTERS),
+    ("hash_split", q_hash_split, _SQL_HASH_SPLIT),
+    ("balanced_sample", q_balanced_sample, _SQL_BALANCED_SAMPLE),
+    ("shard_shuffle", q_shard_shuffle, _SQL_SHARD_SHUFFLE),
+    ("semantic_clusters", q_semantic_clusters, _SQL_SEMANTIC_CLUSTERS),
+    ("doc_quality", q_doc_quality, _SQL_DOC_QUALITY),
+    ("c4_clean", q_c4_clean, _SQL_C4_CLEAN),
+    ("pii_scrub", q_pii_scrub, _SQL_PII_SCRUB),
+    ("decontaminate", q_decontaminate, _SQL_DECONTAMINATE),
+    ("dup_spans", q_dup_spans, _SQL_DUP_SPANS),
+    ("dup_span_stats", q_dup_span_stats, _SQL_DUP_SPAN_STATS),
+    ("pruned_scan", q_pruned_scan, _SQL_PRUNED_SCAN),
+    # incremental maintenance at FULL probe degrades to the same exact
+    # brute force as ann_lsh / ann_ivf — over the WHOLE corpus only if the
+    # appended batch is visible and correctly bucketed
+    ("ann_ivf_incremental", q_ann_ivf_incremental, _SQL_ANN_BRUTEFORCE),
+    ("context_assembly", q_context_assembly, _SQL_CONTEXT_ASSEMBLY),
+    ("conv_dedup", q_conv_dedup, _sql_conv_dedup()),
+    ("chunk_documents", q_chunk_documents, _SQL_CHUNK_DOCUMENTS),
+    ("flagship_features", q_flagship_features, _SQL_FLAGSHIP),
+    ("asof_join", q_asof_join, _SQL_ASOF),
+    ("tpch_q1", q_tpch_q1, _SQL_TPCH_Q1),
+    ("rolling_stats", q_rolling_stats, _SQL_ROLLING),
+    ("forward_fill", q_forward_fill, _SQL_FFILL),
+    ("lag_lead_context", q_lag_lead_context, _SQL_LAG_LEAD),
+    ("rolling_hop", q_rolling_hop, _SQL_ROLLING_HOP),
+    ("session_bounds", q_session_bounds, _SQL_SESSION_BOUNDS),
+    ("session_rollup", q_session_rollup, _SQL_SESSION_ROLLUP),
+    ("run_boundaries", q_run_boundaries, _SQL_RUN_BOUNDARIES),
+    ("interp_fill", q_interp_fill, _SQL_INTERP),
+    ("resample_nearest", q_resample_nearest, _SQL_RESAMPLE_NEAREST),
+    ("resample_linear", q_resample_linear, _SQL_RESAMPLE_LINEAR),
+    ("multi_align_max", q_multi_align_max, _SQL_MULTI_ALIGN_MAX),
+    ("grouped_stats", q_grouped_stats, _SQL_GROUPED_STATS),
+    ("pivot_counts", q_pivot_counts, _SQL_PIVOT_COUNTS),
+    ("cube_stats", q_cube_stats, _SQL_CUBE_STATS),
+    ("percentile_report", q_percentile_report, _SQL_PERCENTILES),
+    ("weighted_percentile", q_weighted_percentile, _SQL_WEIGHTED_PCT),
+    ("histogram_filter", q_histogram_filter, _SQL_HISTOGRAM),
+    ("all_same_filter", q_all_same_filter, _SQL_ALL_SAME),
+    ("topk_per_group", q_topk_per_group, _SQL_TOPK),
+    ("rollup_hourly", q_rollup_hourly, _SQL_ROLLUP_HOURLY),
+    ("rollup_cascade", q_rollup_cascade, _SQL_ROLLUP_CASCADE),
+    ("stratified_sample", q_stratified_sample, _SQL_STRATIFIED),
+    ("keyset_diff", q_keyset_diff, _SQL_KEYSET_DIFF),
+    ("revenue_by_nation", q_revenue_by_nation, _SQL_REVENUE_NATION),
+    ("interval_expand", q_interval_expand, _SQL_INTERVAL_EXPAND),
+    ("interval_overlap", q_interval_overlap, _SQL_INTERVAL_OVERLAP),
+    ("props_parse", q_props_parse, _SQL_PROPS_PARSE),
+    ("onehot_features", q_onehot_features, _SQL_ONEHOT),
+    ("salted_rolling", q_salted_rolling, _SQL_SALTED_ROLLING),
+    ("salted_cumsum", q_salted_cumsum, _SQL_SALTED_CUMSUM),
+    ("salted_ffill", q_salted_ffill, _SQL_SALTED_FFILL),
+    ("entity_profile", q_entity_profile, _SQL_ENTITY_PROFILE),
+    ("keypoint_split", q_keypoint_split, _SQL_KEYPOINT),
+    ("pad_sessions", q_pad_sessions, _SQL_PAD),
+    ("boundary_adjust", q_boundary_adjust, _SQL_BOUNDARY),
+    ("range_refine", q_range_refine, _SQL_RANGE_REFINE),
+    ("dedup_exact", q_dedup_exact, _SQL_DEDUP_EXACT),
+    ("dedup_ngram_jaccard", q_dedup_ngram_jaccard, _SQL_NGRAM_JACCARD_CAPPED),
+    # portable polynomial token hash -> DuckDB recomputes identical
+    # fingerprints and checks the banded pair search against all-pairs
+    ("dedup_simhash", q_dedup_simhash, _simhash_sql()),
+    ("text_profile", q_text_profile, _SQL_TEXT_PROFILE),
+    ("ann_bruteforce", q_ann_bruteforce, _SQL_ANN_BRUTEFORCE),
+    ("embedding_outliers", q_embedding_outliers, _SQL_EMBEDDING_OUTLIERS),
+    ("dup_cut", q_dup_cut, _SQL_DUP_CUT),
+    ("mixture_sample", q_mixture_sample, _SQL_MIXTURE_SAMPLE),
+    ("doc_perplexity", q_doc_perplexity, _SQL_DOC_PERPLEXITY),
+    ("trailing_window", q_trailing_window, _SQL_TRAILING_WINDOW),
+    ("time_decay", q_time_decay, _SQL_TIME_DECAY),
+    ("target_encode", q_target_encode, _SQL_TARGET_ENCODE),
+    ("asof_nearest", q_asof_nearest, _SQL_ASOF_NEAREST),
+    ("quantile_bin", q_quantile_bin, _SQL_QUANTILE_BIN),
+    ("novelty_split", q_novelty_split, _SQL_NOVELTY_SPLIT),
+    ("robust_outliers", q_robust_outliers, _SQL_ROBUST_OUTLIERS),
+    ("onehot_accent", q_onehot_accent, _SQL_ONEHOT_ACCENT),
+    ("ann_recall", q_ann_recall, _SQL_ANN_RECALL),
+    ("ann_ivfpq", q_ann_ivfpq, _SQL_ANN_IVFPQ),
+    ("sketch_distinct", q_sketch_distinct, _SQL_SKETCH_DISTINCT),
+    ("sketch_cascade", q_sketch_cascade, _SQL_SKETCH_CASCADE),
+    ("salted_join_hot", q_salted_join_hot, _SQL_SALTED_JOIN),
+    ("snapshot_changes", q_snapshot_changes, _SQL_SNAPSHOT_CHANGES),
+    ("rollup_incremental", q_rollup_incremental, _SQL_ROLLUP_INCREMENTAL),
+    ("bloom_semi_join", q_bloom_semi_join, _SQL_BLOOM_SEMI_JOIN),
+    ("pruned_scan_zorder", q_pruned_scan_zorder, _SQL_PRUNED_SCAN_ZORDER),
+    ("sketch_quantiles", q_sketch_quantiles, _SQL_SKETCH_QUANTILES),
+    ("snapshot_profile", q_snapshot_profile, _SQL_SNAPSHOT_PROFILE),
+    ("hist_incremental", q_hist_incremental, _SQL_HIST_INCREMENTAL),
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver's correctness gate checks the FIRST 50
-    # entries, so the window rotates each round (VERDICT r3 #5 / r4 #1:
-    # every registry query driver-green within the last two rounds).
-    # Round-5 window (exactly 50): the 26 queries that had never been
-    # driver-graded before this round (r4 late additions + the r3-era
-    # analytics pack — all green in the judge's independent replay,
-    # VERDICT r4), followed by the 24 queries whose only driver evidence
-    # dates from r3 (oldest first, in their r3 ordering). Everything
-    # below position 50 was driver-green in r4 (CORRECTNESS_r04.json) or
-    # r3 (CORRECTNESS_r03.json) and stays covered by the local replay
-    # gate (tools/check_oracle.py, also run under a non-UTC session tz
-    # by tests/test_oracle_replay.py). New round-5 queries are inserted
-    # at the head of the window as they land.
-    return {
-        # -- round-5 driver window ------------------------------------------
-        # NEW in round 5: the streaming surface driver-graded (VERDICT r4 #4)
-        "stream_cusum": q_stream_cusum,
-        "stream_fingerprint": q_stream_fingerprint,
-        "stream_time_since": q_stream_time_since,
-        "snapshot_compact": q_snapshot_compact,
-        "stream_fill": q_stream_fill,
-        "stream_seasonal": q_stream_seasonal,
-        "stream_rollup": q_stream_rollup,
-        "stream_hist": q_stream_hist,
-        "stream_distinct": q_stream_distinct,
-        "stream_sessions": q_stream_sessions,
-        "stream_turn_rate": q_stream_turn_rate,
-        "stream_asof_enrich": q_stream_asof_enrich,
-        "stream_interval_join": q_stream_interval_join,
-        "stream_snapshot_sink": q_stream_snapshot_sink,
-        "stream_cdc_rollup": q_stream_cdc_rollup,
-        "backfill": q_backfill,
-        "span_mask": q_span_mask,
-        "snapshot_rollback": q_snapshot_rollback,
-        "align_rejects": q_align_rejects,
-        "pack_utilization": q_pack_utilization,
-        # 26 queries with no prior driver-grade evidence (replay-green)
-        "turn_transitions": q_turn_transitions,
-        "degenerate_loops": q_degenerate_loops,
-        "stream_context": q_stream_context,
-        "sketch_topk": q_sketch_topk,
-        "changepoints": q_changepoints,
-        "drift_incremental": q_drift_incremental,
-        "weighted_sample": q_weighted_sample,
-        "topk_incremental": q_topk_incremental,
-        "rolling_trend": q_rolling_trend,
-        "ewma_mean": q_ewma_mean,
-        "cohort_retention": q_cohort_retention,
-        "seasonal_baseline": q_seasonal_baseline,
-        "drift_ks": q_drift_ks,
-        "rolling_autocorr": q_rolling_autocorr,
-        "kanon_suppress": q_kanon_suppress,
-        "vocab_oov": q_vocab_oov,
-        "tool_funnel": q_tool_funnel,
-        "pit_enrich": q_pit_enrich,
-        "cv_folds": q_cv_folds,
-        "drift_psi": q_drift_psi,
-        "response_latency": q_response_latency,
-        "future_label": q_future_label,
-        "sketch_cms": q_sketch_cms,
-        "negative_sample": q_negative_sample,
-        "pit_staleness": q_pit_staleness,
-        "feature_vector": q_feature_vector,
-        # 24 oldest r3-only-green queries (driver evidence ages out)
-        "sessionize": q_sessionize,
-        "stats_normalize": q_stats_normalize,
-        "dedup_minhash": q_dedup_minhash,
-        "asof_salted": q_asof_salted,
-        "multi_align": q_multi_align,
-        "ann_lsh": q_ann_lsh,
-        "ann_ivf": q_ann_ivf,
-        "embedding_neardup": q_embedding_neardup,
-        "media_features": q_media_features,
-        "pack_concat": q_pack_concat,
-        "pack_greedy": q_pack_greedy,
-        "tfidf_topk": q_tfidf_topk,
-        "winsorize": q_winsorize,
-        "dedup_clusters": q_dedup_clusters,
-        "hash_split": q_hash_split,
-        "balanced_sample": q_balanced_sample,
-        "shard_shuffle": q_shard_shuffle,
-        "semantic_clusters": q_semantic_clusters,
-        "doc_quality": q_doc_quality,
-        "c4_clean": q_c4_clean,
-        "pii_scrub": q_pii_scrub,
-        "decontaminate": q_decontaminate,
-        "dup_spans": q_dup_spans,
-        "dup_span_stats": q_dup_span_stats,
-        # -- below the window: driver-green in r4 ---------------------------
-        "pruned_scan": q_pruned_scan,
-        "ann_ivf_incremental": q_ann_ivf_incremental,
-        "context_assembly": q_context_assembly,
-        "conv_dedup": q_conv_dedup,
-        "chunk_documents": q_chunk_documents,
-        "flagship_features": q_flagship_features,
-        "asof_join": q_asof_join,
-        "tpch_q1": q_tpch_q1,
-        "rolling_stats": q_rolling_stats,
-        "forward_fill": q_forward_fill,
-        "lag_lead_context": q_lag_lead_context,
-        "rolling_hop": q_rolling_hop,
-        "session_bounds": q_session_bounds,
-        "session_rollup": q_session_rollup,
-        "run_boundaries": q_run_boundaries,
-        "interp_fill": q_interp_fill,
-        "resample_nearest": q_resample_nearest,
-        "resample_linear": q_resample_linear,
-        "multi_align_max": q_multi_align_max,
-        "grouped_stats": q_grouped_stats,
-        "pivot_counts": q_pivot_counts,
-        "cube_stats": q_cube_stats,
-        "percentile_report": q_percentile_report,
-        "weighted_percentile": q_weighted_percentile,
-        "histogram_filter": q_histogram_filter,
-        "all_same_filter": q_all_same_filter,
-        "topk_per_group": q_topk_per_group,
-        "rollup_hourly": q_rollup_hourly,
-        "rollup_cascade": q_rollup_cascade,
-        "stratified_sample": q_stratified_sample,
-        "keyset_diff": q_keyset_diff,
-        "revenue_by_nation": q_revenue_by_nation,
-        "interval_expand": q_interval_expand,
-        "interval_overlap": q_interval_overlap,
-        "props_parse": q_props_parse,
-        "onehot_features": q_onehot_features,
-        "salted_rolling": q_salted_rolling,
-        "salted_cumsum": q_salted_cumsum,
-        "salted_ffill": q_salted_ffill,
-        "entity_profile": q_entity_profile,
-        "keypoint_split": q_keypoint_split,
-        "pad_sessions": q_pad_sessions,
-        "boundary_adjust": q_boundary_adjust,
-        "range_refine": q_range_refine,
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_simhash": q_dedup_simhash,
-        "text_profile": q_text_profile,
-        "ann_bruteforce": q_ann_bruteforce,
-        "embedding_outliers": q_embedding_outliers,
-        # -- below the window: driver-green in r3, replay-gated -------------
-        "dup_cut": q_dup_cut,
-        "mixture_sample": q_mixture_sample,
-        "doc_perplexity": q_doc_perplexity,
-        "trailing_window": q_trailing_window,
-        "time_decay": q_time_decay,
-        "target_encode": q_target_encode,
-        "asof_nearest": q_asof_nearest,
-        "quantile_bin": q_quantile_bin,
-        "novelty_split": q_novelty_split,
-        "robust_outliers": q_robust_outliers,
-        "onehot_accent": q_onehot_accent,
-        "ann_recall": q_ann_recall,
-        "ann_ivfpq": q_ann_ivfpq,
-        "sketch_distinct": q_sketch_distinct,
-        "sketch_cascade": q_sketch_cascade,
-        "salted_join_hot": q_salted_join_hot,
-        "snapshot_changes": q_snapshot_changes,
-        "rollup_incremental": q_rollup_incremental,
-        "bloom_semi_join": q_bloom_semi_join,
-        "pruned_scan_zorder": q_pruned_scan_zorder,
-        "sketch_quantiles": q_sketch_quantiles,
-        "snapshot_profile": q_snapshot_profile,
-        "hist_incremental": q_hist_incremental,
-    }
+    return {name: build for name, build, _ in _REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "stream_cusum": _SQL_STREAM_CUSUM,
-        "stream_fingerprint": _sql_stream_fingerprint(),
-        "stream_time_since": _SQL_STREAM_TIME_SINCE,
-        "snapshot_compact": _SQL_SNAPSHOT_COMPACT,
-        "stream_fill": _SQL_STREAM_FILL,
-        "stream_seasonal": _SQL_STREAM_SEASONAL,
-        "stream_rollup": _SQL_STREAM_ROLLUP,
-        "stream_hist": _SQL_STREAM_HIST,
-        "stream_distinct": _SQL_STREAM_DISTINCT,
-        "stream_sessions": _SQL_STREAM_SESSIONS,
-        "stream_turn_rate": _SQL_STREAM_TURN_RATE,
-        "stream_asof_enrich": _SQL_STREAM_ASOF_ENRICH,
-        "stream_interval_join": _SQL_STREAM_INTERVAL_JOIN,
-        "stream_snapshot_sink": _SQL_STREAM_SNAPSHOT_SINK,
-        "stream_cdc_rollup": _SQL_STREAM_CDC_ROLLUP,
-        "backfill": _SQL_BACKFILL,
-        "span_mask": _SQL_SPAN_MASK,
-        "snapshot_rollback": _SQL_SNAPSHOT_ROLLBACK,
-        "align_rejects": _SQL_ALIGN_REJECTS,
-        "pack_utilization": _SQL_PACK_UTILIZATION,
-        "flagship_features": _SQL_FLAGSHIP,
-        "lag_lead_context": _SQL_LAG_LEAD,
-        "rolling_stats": _SQL_ROLLING,
-        "rolling_hop": _SQL_ROLLING_HOP,
-        "sessionize": _SQL_SESSIONIZE,
-        "session_bounds": _SQL_SESSION_BOUNDS,
-        "session_rollup": _SQL_SESSION_ROLLUP,
-        "run_boundaries": _SQL_RUN_BOUNDARIES,
-        "forward_fill": _SQL_FFILL,
-        "interp_fill": _SQL_INTERP,
-        "asof_join": _SQL_ASOF,
-        "asof_salted": _SQL_ASOF_SALTED,
-        "resample_nearest": _SQL_RESAMPLE_NEAREST,
-        "resample_linear": _SQL_RESAMPLE_LINEAR,
-        "multi_align": _SQL_MULTI_ALIGN,
-        "multi_align_max": _SQL_MULTI_ALIGN_MAX,
-        "stats_normalize": _SQL_STATS_NORMALIZE,
-        "grouped_stats": _SQL_GROUPED_STATS,
-        "pivot_counts": _SQL_PIVOT_COUNTS,
-        "cube_stats": _SQL_CUBE_STATS,
-        "percentile_report": _SQL_PERCENTILES,
-        "weighted_percentile": _SQL_WEIGHTED_PCT,
-        "histogram_filter": _SQL_HISTOGRAM,
-        "all_same_filter": _SQL_ALL_SAME,
-        "topk_per_group": _SQL_TOPK,
-        "rollup_hourly": _SQL_ROLLUP_HOURLY,
-        "rollup_cascade": _SQL_ROLLUP_CASCADE,
-        "stratified_sample": _SQL_STRATIFIED,
-        "keyset_diff": _SQL_KEYSET_DIFF,
-        "tpch_q1": _SQL_TPCH_Q1,
-        "revenue_by_nation": _SQL_REVENUE_NATION,
-        "interval_expand": _SQL_INTERVAL_EXPAND,
-        "interval_overlap": _SQL_INTERVAL_OVERLAP,
-        "props_parse": _SQL_PROPS_PARSE,
-        "onehot_features": _SQL_ONEHOT,
-        "onehot_accent": _SQL_ONEHOT_ACCENT,
-        "salted_rolling": _SQL_SALTED_ROLLING,
-        "salted_cumsum": _SQL_SALTED_CUMSUM,
-        "salted_ffill": _SQL_SALTED_FFILL,
-        "entity_profile": _SQL_ENTITY_PROFILE,
-        "keypoint_split": _SQL_KEYPOINT,
-        "pad_sessions": _SQL_PAD,
-        "boundary_adjust": _SQL_BOUNDARY,
-        "range_refine": _SQL_RANGE_REFINE,
-        "dedup_exact": _SQL_DEDUP_EXACT,
-        "dedup_ngram_jaccard": _SQL_NGRAM_JACCARD_CAPPED,
-        # minhash-LSH at r=1 banding has provably-total recall on this
-        # fixture (pytest-asserted), so its verified output equals the
-        # exact-Jaccard pair set — same oracle SQL, different physical plan
-        "dedup_minhash": _SQL_NGRAM_JACCARD,
-        "text_profile": _SQL_TEXT_PROFILE,
-        "ann_bruteforce": _SQL_ANN_BRUTEFORCE,
-        "embedding_outliers": _SQL_EMBEDDING_OUTLIERS,
-        # full-probe LSH / full-probe IVF degrade provably to exact brute
-        # force — the brute-force SQL oracles the bucketed machinery
-        "ann_lsh": _SQL_ANN_BRUTEFORCE,
-        "ann_ivf": _SQL_ANN_BRUTEFORCE,
-        # incremental maintenance at FULL probe degrades to the same
-        # exact brute force — over the WHOLE corpus only if the appended
-        # batch is visible and correctly bucketed
-        "ann_ivf_incremental": _SQL_ANN_BRUTEFORCE,
-        "ann_recall": _SQL_ANN_RECALL,
-        "ann_ivfpq": _SQL_ANN_IVFPQ,
-        "sketch_distinct": _SQL_SKETCH_DISTINCT,
-        "sketch_cascade": _SQL_SKETCH_CASCADE,
-        "sketch_topk": _SQL_SKETCH_TOPK,
-        "changepoints": _SQL_CHANGEPOINTS,
-        "drift_incremental": _SQL_DRIFT_INCREMENTAL,
-        "weighted_sample": _SQL_WEIGHTED_SAMPLE,
-        "topk_incremental": _SQL_TOPK_INCREMENTAL,
-        "rolling_trend": _SQL_ROLLING_TREND,
-        "ewma_mean": _SQL_EWMA_MEAN,
-        "cohort_retention": _SQL_COHORT_RETENTION,
-        "seasonal_baseline": _SQL_SEASONAL_BASELINE,
-        "drift_ks": _SQL_DRIFT_KS,
-        "rolling_autocorr": _SQL_ROLLING_AUTOCORR,
-        "kanon_suppress": _SQL_KANON_SUPPRESS,
-        "vocab_oov": _SQL_VOCAB_OOV,
-        "tool_funnel": _SQL_TOOL_FUNNEL,
-        "salted_join_hot": _SQL_SALTED_JOIN,
-        "snapshot_changes": _SQL_SNAPSHOT_CHANGES,
-        "rollup_incremental": _SQL_ROLLUP_INCREMENTAL,
-        "pruned_scan": _SQL_PRUNED_SCAN,
-        "bloom_semi_join": _SQL_BLOOM_SEMI_JOIN,
-        "pruned_scan_zorder": _SQL_PRUNED_SCAN_ZORDER,
-        "sketch_quantiles": _SQL_SKETCH_QUANTILES,
-        "snapshot_profile": _SQL_SNAPSHOT_PROFILE,
-        "hist_incremental": _SQL_HIST_INCREMENTAL,
-        # portable polynomial token hash -> DuckDB recomputes identical
-        # fingerprints and checks the banded pair search against all-pairs
-        "dedup_simhash": _simhash_sql(),
-        "embedding_neardup": _SQL_EMBEDDING_NEARDUP,
-        "media_features": _SQL_MEDIA,
-        "pack_concat": _SQL_PACK_CONCAT,
-        "pack_greedy": _SQL_PACK_GREEDY,
-        "tfidf_topk": _SQL_TFIDF,
-        "winsorize": _SQL_WINSORIZE,
-        "dedup_clusters": _SQL_DEDUP_CLUSTERS,
-        "hash_split": _SQL_HASH_SPLIT,
-        "balanced_sample": _SQL_BALANCED_SAMPLE,
-        "shard_shuffle": _SQL_SHARD_SHUFFLE,
-        "semantic_clusters": _SQL_SEMANTIC_CLUSTERS,
-        "doc_quality": _SQL_DOC_QUALITY,
-        "c4_clean": _SQL_C4_CLEAN,
-        "pii_scrub": _SQL_PII_SCRUB,
-        "decontaminate": _SQL_DECONTAMINATE,
-        "dup_spans": _SQL_DUP_SPANS,
-        "dup_span_stats": _SQL_DUP_SPAN_STATS,
-        "dup_cut": _SQL_DUP_CUT,
-        "mixture_sample": _SQL_MIXTURE_SAMPLE,
-        "doc_perplexity": _SQL_DOC_PERPLEXITY,
-        "trailing_window": _SQL_TRAILING_WINDOW,
-        "time_decay": _SQL_TIME_DECAY,
-        "target_encode": _SQL_TARGET_ENCODE,
-        "asof_nearest": _SQL_ASOF_NEAREST,
-        "quantile_bin": _SQL_QUANTILE_BIN,
-        "novelty_split": _SQL_NOVELTY_SPLIT,
-        "robust_outliers": _SQL_ROBUST_OUTLIERS,
-        "context_assembly": _SQL_CONTEXT_ASSEMBLY,
-        "conv_dedup": _sql_conv_dedup(),
-        "chunk_documents": _SQL_CHUNK_DOCUMENTS,
-        "turn_transitions": _SQL_TURN_TRANSITIONS,
-        "degenerate_loops": _SQL_DEGENERATE_LOOPS,
-        # streaming op held to the BATCH oracle: the drained stream must
-        # hash-match the plain window SQL
-        "stream_context": _SQL_STREAM_CONTEXT,
-        "pit_enrich": _SQL_PIT_ENRICH,
-        "cv_folds": _SQL_CV_FOLDS,
-        "drift_psi": _SQL_DRIFT_PSI,
-        "response_latency": _SQL_RESPONSE_LATENCY,
-        "future_label": _SQL_FUTURE_LABEL,
-        "sketch_cms": _sql_sketch_cms(),
-        "negative_sample": _sql_negative_sample(),
-        "pit_staleness": _SQL_PIT_STALENESS,
-        "feature_vector": _sql_feature_vector().format(flagship=_SQL_FLAGSHIP),
-    }
+    return {name: sql for name, _, sql in _REGISTRY}

@@ -11,7 +11,7 @@ Reference parity targets:
   ``sampling_data.py:87-139``): resample every source to a common rate,
   tolerance-check lengths, align min/max/first, concatenate feature axes.
 
-Two physical strategies, same semantics:
+Three physical strategies, same semantics:
 
 1. ``asof_join`` — the SCALE PATH. Pure Catalyst "union trick": tag both
    sides, union on (key, ts), one window forward-fill of the right-side
@@ -23,10 +23,14 @@ Two physical strategies, same semantics:
    over orderBy(ts, side) with the right side sorting first at equal ts,
    so a left row can only ever see right rows with ts <= its own.
 
-2. ``asof_join_cogroup`` — Arrow-batched ``pd.merge_asof`` per cogrouped
-   key (the north_star's "sorted-merge within salted, range-partitioned
-   (conv_id, ts) partitions via Arrow-batched pandas UDFs"). Used for the
-   interpolating variant and as an independent oracle for the union trick.
+2. ``asof_join_salted_jvm`` — the SKEW PATH. The same union trick with
+   the fill window chunked on time, so a mega-entity spans many tasks; a
+   two-phase carry over the tiny (key, chunk) summary hands each chunk its
+   predecessor state. Still no Python.
+
+3. ``asof_join_cogroup`` — Arrow-batched ``pd.merge_asof`` per cogrouped
+   key (one whole entity per task; ``kind="linear"`` interpolates). The
+   tests use it as an independent oracle for the union trick.
 """
 
 from __future__ import annotations
@@ -39,6 +43,81 @@ from pyspark.sql import functions as F
 
 from acoustic_feature_extractor_spark.functions.scalars import epoch_sec_fn
 from pyspark.sql.window import Window
+
+
+def _payload_cols(
+    right: DataFrame,
+    on: str,
+    by: str | list[str],
+    right_cols: Iterable[str] | None,
+) -> tuple[list[str], list[str]]:
+    """(by columns, right payload columns): the payload defaults to every
+    right column that is neither a key nor the timestamp."""
+    by_cols = [by] if isinstance(by, str) else list(by)
+    if right_cols is None:
+        right_cols = [c for c in right.columns if c not in by_cols and c != on]
+    return by_cols, list(right_cols)
+
+
+def _tag_union(
+    spine: DataFrame,
+    sources: dict[str, DataFrame],
+    payload_cols: dict[str, list[str]],
+    on: str,
+    by_cols: list[str],
+) -> DataFrame:
+    """The union trick's prologue: union the spine and every source on
+    (by, on), tagged ``_side`` = 1 (spine) / 0 (source). Spine rows keep
+    their payload; source ``n`` contributes ONE struct ``_r_{n}`` packing
+    its whole payload row (timestamp as ``_rts``), null on every other
+    row — as-of semantics are "latest source ROW", so a fill must move
+    rows, not columns: per-column last(ignorenulls) would skip a
+    legitimately-null payload value and stitch together fields from
+    different source rows. Null-ts source rows can never match and are
+    dropped."""
+    names = list(sources)
+    spine_cols = spine.columns
+
+    def struct_type(n: str) -> str:
+        s = sources[n]
+        # single join over all parts so an empty payload (source carrying
+        # only by/on columns) yields valid DDL with no trailing comma
+        parts = [f"_rts:{s.schema[on].dataType.simpleString()}"] + [
+            f"{c}:{s.schema[c].dataType.simpleString()}" for c in payload_cols[n]
+        ]
+        return "struct<" + ",".join(parts) + ">"
+
+    # spine rows: real payload, every source struct null
+    lt = spine.withColumn("_side", F.lit(1))
+    for n in names:
+        lt = lt.withColumn(f"_r_{n}", F.lit(None).cast(struct_type(n)))
+    sel = [*spine_cols, "_side", *[f"_r_{n}" for n in names]]
+    u = lt.select(*sel)
+    # source rows: null spine payload, own struct packed, others null
+    for n in names:
+        row = sources[n].where(F.col(on).isNotNull()).select(
+            *by_cols,
+            F.col(on),
+            F.lit(0).alias("_side"),
+            *[
+                F.lit(None).cast(spine.schema[c].dataType).alias(c)
+                for c in spine_cols
+                if c not in by_cols and c != on
+            ],
+            *[
+                (
+                    F.struct(
+                        F.col(on).alias("_rts"),
+                        *[F.col(c).alias(c) for c in payload_cols[n]],
+                    )
+                    if m == n
+                    else F.lit(None).cast(struct_type(m))
+                ).alias(f"_r_{m}")
+                for m in names
+            ],
+        )
+        u = u.unionByName(row.select(*sel))
+    return u
 
 
 def asof_join(
@@ -79,38 +158,9 @@ def asof_join(
         return _nearest_strict(
             left, right, on, by, right_cols, suffix, tolerance_seconds
         )
-    by_cols = [by] if isinstance(by, str) else list(by)
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in by_cols and c != on]
-    right_cols = list(right_cols)
-
+    by_cols, right_cols = _payload_cols(right, on, by, right_cols)
     left_cols = left.columns
-    # Tag and union. Left keeps its payload; the right side contributes
-    # ONE struct packing its whole payload row — as-of semantics are
-    # "latest right ROW", so the fill must move rows, not columns:
-    # per-column last(ignorenulls) would skip a legitimately-null payload
-    # value and stitch together fields from different right rows.
-    row_struct = F.struct(
-        F.col(on).alias("_rts"), *[F.col(c).alias(c) for c in right_cols]
-    )
-    # single join over all parts so an empty right_cols (right side carrying
-    # only by/on columns) yields valid DDL with no trailing comma
-    struct_parts = [f"_rts:{right.schema[on].dataType.simpleString()}"] + [
-        f"{c}:{right.schema[c].dataType.simpleString()}" for c in right_cols
-    ]
-    lt = left.withColumn("_side", F.lit(1)).withColumn(
-        "_r_row", F.lit(None).cast("struct<" + ",".join(struct_parts) + ">")
-    )
-    rt = right.where(F.col(on).isNotNull()).select(
-        *by_cols,
-        F.col(on),
-        F.lit(0).alias("_side"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_cols if c not in by_cols and c != on],
-        row_struct.alias("_r_row"),
-    )
-    u = lt.select(*left_cols, "_side", "_r_row").unionByName(
-        rt.select(*left_cols, "_side", "_r_row")
-    )
+    u = _tag_union(left, {"row": right}, {"row": right_cols}, on, by_cols)
 
     _sec = epoch_sec_fn(u, on)  # tz-independent; dtype-dispatched
     lts = _sec(F.col(on))
@@ -188,10 +238,7 @@ def _nearest_strict(
 ) -> DataFrame:
     """Strict (no exact matches) nearest as-of: chain the two strict
     single-direction passes, keep the closer candidate (ties -> backward)."""
-    by_cols = [by] if isinstance(by, str) else list(by)
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in by_cols and c != on]
-    right_cols = list(right_cols)
+    _, right_cols = _payload_cols(right, on, by, right_cols)
     left_cols = left.columns
     b = asof_join(
         left, right, on, by, right_cols, "_xb", tolerance_seconds, False, "backward"
@@ -276,168 +323,6 @@ def asof_join_cogroup(
     )
 
 
-def asof_join_salted(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by: str = "conv_id",
-    right_cols: Iterable[str] | None = None,
-    suffix: str = "_asof",
-    chunk_seconds: float = 3600.0,
-) -> DataFrame:
-    """Salted, range-partitioned Arrow sorted-merge as-of join.
-
-    The north_star centerpiece verbatim: "an as-of/point-in-time join
-    implemented as a sorted-merge within salted, range-partitioned
-    (conv_id, ts) partitions via Arrow-batched pandas UDFs". A plain
-    cogroup (``asof_join_cogroup``) puts one whole entity in one task —
-    a mega-conversation starves it. Here each entity is salted into
-    time-range chunks of ``chunk_seconds`` and the merge runs per
-    (entity, chunk):
-
-    1. both sides get ``_chunk = floor(ts / chunk_seconds)``;
-    2. right-side per-(entity, chunk) LAST row is reduced to a tiny
-       summary; a window over chunks forward-fills "latest right state at
-       each chunk start" (two-phase partial/final hand-off);
-    3. that carry row is injected into the next chunk's right group, so a
-       chunk-local ``pd.merge_asof`` sees the true predecessor across the
-       salt boundary — results are exactly the unsalted join (tests pin
-       frame-for-frame equality);
-    4. cogrouped ``applyInPandas`` on (entity, chunk) does the merge.
-
-    Zero temporal leakage is preserved: carry rows only ever move state
-    FORWARD in time (a chunk receives the latest right row with
-    ``ts < chunk_start``), never backward.
-    """
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c != by and c != on]
-    right_cols = list(right_cols)
-
-    # fresh attribute ids for the right side: callers routinely derive both
-    # sides from ONE table (two filters of the same events scan), and
-    # shared expression ids make every internal self-join/cogroup ambiguous
-    right = right.select(*[F.col(c).alias(c) for c in right.columns])
-
-    sec = epoch_sec_fn(left, on)(F.col(on))  # tz-independent
-    chunk = F.floor(sec / F.lit(chunk_seconds)).cast("long")
-    lt = left.withColumn("_chunk", chunk)
-    # a null-ts right row can never be a backward match — drop before it
-    # can become a chunk's "last" row / carry
-    rt = (
-        right.select(by, on, *right_cols)
-        .where(F.col(on).isNotNull())
-        .withColumn("_chunk", chunk)
-    )
-
-    # 2) per-(entity, chunk) last right row -> forward-filled carry table
-    w_rank = Window.partitionBy(by, "_chunk").orderBy(F.col(on).desc())
-    last_in_chunk = (
-        rt.withColumn("_rn", F.row_number().over(w_rank))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    # chunks that exist on the LEFT need a carry even when the right side
-    # has no rows in the previous chunk: build the chunk spine from both
-    left_chunks = lt.select(by, "_chunk").distinct()
-    right_chunks = rt.select(by, "_chunk").distinct()
-    # renamed spine keys: left/right often share lineage (two filters of
-    # one table), and a same-attribute join would be ambiguous
-    spine = (
-        left_chunks.unionByName(right_chunks)
-        .distinct()
-        .select(F.col(by).alias("_sp_by"), F.col("_chunk").alias("_sp_chunk"))
-    )
-    # The carry is the last right ROW as one unit: forward-filling columns
-    # independently with ignorenulls would skip a legitimately-null payload
-    # and stitch together fields from DIFFERENT right rows — results would
-    # then depend on chunk_seconds for nullable payloads. Pack the row into
-    # a struct (null only for right-empty chunks) and fill the struct.
-    lic = last_in_chunk.select(
-        F.col(by).alias("_lc_by"),
-        F.col("_chunk").alias("_lc_chunk"),
-        F.struct(*[F.col(c).alias(c) for c in [on] + right_cols]).alias("_lc_row"),
-    )
-    carry_src = spine.join(
-        lic,
-        (F.col("_sp_by") == F.col("_lc_by"))
-        & (F.col("_sp_chunk") == F.col("_lc_chunk")),
-        "left",
-    ).select(
-        F.col("_sp_by").alias(by),
-        F.col("_sp_chunk").alias("_chunk"),
-        F.col("_lc_row"),
-    )
-    w_ff = (
-        Window.partitionBy(by)
-        .orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = carry_src.select(
-        by,
-        "_chunk",
-        F.last("_lc_row", ignorenulls=True).over(w_ff).alias("_carry"),
-    ).where(F.col("_carry").isNotNull())
-
-    # 3) inject carry rows into the right side of their chunk
-    carry_rows = carry.select(
-        by,
-        "_chunk",
-        F.col(f"_carry.{on}").alias(on),
-        *[F.col(f"_carry.{c}").alias(c) for c in right_cols],
-    )
-    rt_aug = rt.unionByName(carry_rows)
-
-    left_fields = lt.schema.fields
-    out_schema_parts = [
-        f"`{f.name}` {f.dataType.simpleString()}" for f in left_fields if f.name != "_chunk"
-    ]
-    for c in right_cols:
-        out_schema_parts.append(f"`{c}{suffix}` {right.schema[c].dataType.simpleString()}")
-    out_schema = ", ".join(out_schema_parts)
-    left_names = [f.name for f in left_fields if f.name != "_chunk"]
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        # null timestamps: merge_asof rejects null keys, but the pure-
-        # Catalyst asof_join tolerates them — match that: null-ts left rows
-        # pass through with null payloads, null-ts right rows are ignored
-        null_mask = lpdf[on].isna()
-        lnull = lpdf[null_mask]
-        lpdf = lpdf[~null_mask].sort_values(on, kind="mergesort")
-        rpdf = rpdf[rpdf[on].notna()]
-        out_cols = left_names + [f"{c}{suffix}" for c in right_cols]
-        if rpdf.empty:
-            for c in right_cols:
-                lpdf[f"{c}{suffix}"] = None
-        else:
-            rpdf = (
-                rpdf.sort_values(on, kind="mergesort")
-                .drop_duplicates(subset=[on], keep="last")
-            )
-            merged = pd.merge_asof(
-                lpdf,
-                rpdf[[on] + right_cols].rename(
-                    columns={c: f"{c}{suffix}" for c in right_cols}
-                ),
-                on=on,
-                direction="backward",
-            )
-            merged.index = lpdf.index
-            for c in right_cols:
-                lpdf[f"{c}{suffix}"] = merged[f"{c}{suffix}"]
-        if len(lnull):
-            lnull = lnull.copy()
-            for c in right_cols:
-                lnull[f"{c}{suffix}"] = None
-            lpdf = pd.concat([lpdf, lnull])
-        return lpdf[out_cols]
-
-    return (
-        lt.groupBy(by, "_chunk")
-        .cogroup(rt_aug.groupBy(by, "_chunk"))
-        .applyInPandas(lambda li, ri: merge(li, ri), schema=out_schema)
-    )
-
-
 def asof_join_salted_jvm(
     left: DataFrame,
     right: DataFrame,
@@ -452,11 +337,8 @@ def asof_join_salted_jvm(
     """Salted as-of join with ZERO Python — the union trick composed with
     the skew engine's two-phase carry (``skew.py`` pattern).
 
-    The Arrow path (:func:`asof_join_salted`) pays ~ms of pandas overhead
-    per (entity, chunk) group — at bench scale that was 23% of suite wall
-    time for semantics the union trick delivers in <1s. This variant keeps
-    the salting (mega-entities split into time chunks so no task owns a
-    whole conversation) while staying entirely inside whole-stage codegen:
+    Mega-entities are split into time chunks so no task owns a whole
+    conversation, entirely inside whole-stage codegen:
 
     1. tag + union both sides (as in :func:`asof_join`), right payload
        packed into ONE struct so the fill moves rows, never stitches
@@ -474,35 +356,9 @@ def asof_join_salted_jvm(
     Exactly the unsalted :func:`asof_join` frame-for-frame (tests pin it);
     zero temporal leakage: carries only ever move right state FORWARD.
     """
-    by_cols = [by] if isinstance(by, str) else list(by)
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in by_cols and c != on]
-    right_cols = list(right_cols)
+    by_cols, right_cols = _payload_cols(right, on, by, right_cols)
     left_cols = left.columns
-
-    struct_parts = [f"_rts:{right.schema[on].dataType.simpleString()}"] + [
-        f"{c}:{right.schema[c].dataType.simpleString()}" for c in right_cols
-    ]
-    row_struct = F.struct(
-        F.col(on).alias("_rts"), *[F.col(c).alias(c) for c in right_cols]
-    )
-    lt = left.withColumn("_side", F.lit(1)).withColumn(
-        "_r_row", F.lit(None).cast("struct<" + ",".join(struct_parts) + ">")
-    )
-    rt = right.where(F.col(on).isNotNull()).select(
-        *by_cols,
-        F.col(on),
-        F.lit(0).alias("_side"),
-        *[
-            F.lit(None).cast(left.schema[c].dataType).alias(c)
-            for c in left_cols
-            if c not in by_cols and c != on
-        ],
-        row_struct.alias("_r_row"),
-    )
-    u = lt.select(*left_cols, "_side", "_r_row").unionByName(
-        rt.select(*left_cols, "_side", "_r_row")
-    )
+    u = _tag_union(left, {"row": right}, {"row": right_cols}, on, by_cols)
 
     # sort key for "right visible to left at equal ts": right first under
     # <= semantics, left first under strict <; _sk is numeric so the same
@@ -853,47 +709,7 @@ def point_in_time_enrich(
             if f"{c}_{n}" in spine_cols:
                 raise ValueError(f"output column {c}_{n} collides with spine")
 
-    def struct_type(n: str) -> str:
-        s = sources[n]
-        parts = [f"_rts:{s.schema[on].dataType.simpleString()}"] + [
-            f"{c}:{s.schema[c].dataType.simpleString()}" for c in payload_cols[n]
-        ]
-        return "struct<" + ",".join(parts) + ">"
-
-    # spine rows: real payload, every source struct null
-    lt = spine.withColumn("_side", F.lit(1))
-    for n in names:
-        lt = lt.withColumn(f"_r_{n}", F.lit(None).cast(struct_type(n)))
-    sel = [*spine_cols, "_side", *[f"_r_{n}" for n in names]]
-    parts = [lt.select(*sel)]
-    # source rows: null spine payload, own struct packed, others null
-    for n in names:
-        s = sources[n].where(F.col(on).isNotNull())
-        row = s.select(
-            *by_cols,
-            F.col(on),
-            F.lit(0).alias("_side"),
-            *[
-                F.lit(None).cast(spine.schema[c].dataType).alias(c)
-                for c in spine_cols
-                if c not in by_cols and c != on
-            ],
-            *[
-                (
-                    F.struct(
-                        F.col(on).alias("_rts"),
-                        *[F.col(c).alias(c) for c in payload_cols[n]],
-                    )
-                    if m == n
-                    else F.lit(None).cast(struct_type(m))
-                ).alias(f"_r_{m}")
-                for m in names
-            ],
-        )
-        parts.append(row.select(*sel))
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
+    u = _tag_union(spine, sources, payload_cols, on, by_cols)
 
     # equal-ts rule identical to asof_join: sources first (visible) for
     # inclusive semantics, spine first for strict <

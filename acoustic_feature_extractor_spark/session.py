@@ -14,6 +14,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of the host's physical memory (``MemTotal``), at least 1g."""
+    mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(1024, mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "afe_spark",
     cores: int | str | None = None,
@@ -25,7 +31,8 @@ def get_spark(
     ``cores`` may be an int (→ ``local[n]``), ``"*"``, or None (env
     ``SPARK_GRAFT_CPUS`` or all cores). ``shuffle_partitions`` defaults to
     2× cores — enough tasks for AQE to coalesce, not the 200 default that
-    over-parallelizes local runs.
+    over-parallelizes local runs. The driver heap is ``SPARK_DRIVER_MEM``
+    or, unset, half of the host's memory.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS") or (os.cpu_count() or 4)
@@ -48,7 +55,10 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )

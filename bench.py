@@ -26,14 +26,11 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-# benchmarked queries = the FULL queries() registry (every operator shows
-# up in BENCH_r{N}.json); None means "resolve at runtime"
-BENCH_QUERIES = None
 
 N_CONVS_BENCH = 50_000  # ~2.4M turns incl. mega-conversation skew
 
@@ -42,6 +39,24 @@ def force(df) -> int:
     """Force full computation without a driver collect (distributed sink)."""
     df.write.format("noop").mode("overwrite").save()
     return 0
+
+
+def best_of_2(run, warmup: bool = False) -> tuple[float, float]:
+    """(best, median) wall seconds of ``run()``: an optional untimed
+    warm-up, two timed calls, and a third when those two disagree badly
+    (noisy-neighbor guard: the slow one was contended — keep the best)."""
+    if warmup:
+        run()
+    runs = []
+    for _ in range(2):
+        t0 = time.perf_counter()
+        run()
+        runs.append(time.perf_counter() - t0)
+    if max(runs) > 1.4 * min(runs):
+        t0 = time.perf_counter()
+        run()
+        runs.append(time.perf_counter() - t0)
+    return min(runs), statistics.median(runs)
 
 
 def main() -> None:
@@ -59,10 +74,10 @@ def main() -> None:
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
 
-    def _median(xs: list[float]) -> float:
-        s = sorted(xs)
-        n = len(s)
-        return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
+    def timed(name: str, run, warmup: bool = False) -> float:
+        best, median = best_of_2(run, warmup)
+        timings[name], medians[name] = round(best, 3), round(median, 3)
+        return best
 
     # headline: flagship transcripts pipeline throughput.
     # Steady-state measurement: one untimed warmup run (codegen/JIT + cache
@@ -72,74 +87,33 @@ def main() -> None:
     t = generate_transcripts(spark, n_convs=N_CONVS_BENCH)
     t = t.persist()
     n_turns = t.count()  # materialize input outside the timed window
-    force(turn_features(t))  # warmup
-    runs = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        force(turn_features(t))
-        runs.append(time.perf_counter() - t0)
-    if max(runs) > 1.4 * min(runs):  # noisy-neighbor guard (see below)
-        t0 = time.perf_counter()
-        force(turn_features(t))
-        runs.append(time.perf_counter() - t0)
-    flagship_sec = min(runs)
-    timings["transcripts_turn_features"] = round(flagship_sec, 3)
-    medians["transcripts_turn_features"] = round(_median(runs), 3)
+    flagship_sec = timed(
+        "transcripts_turn_features", lambda: force(turn_features(t)), warmup=True
+    )
     turns_per_sec = n_turns / flagship_sec
-
-    # straggler-bound lane: mega-conversations (2000 turns each here;
-    # 10^7 at web scale) routed through the fused salted plan. At bench
-    # scale the skew is mild so this mostly measures the routing + salted
-    # machinery overhead; the point it evidences is that the flagship has
-    # a bounded-task-size mode whose output is frame-identical
-    # (tests/test_golden.py pins equality).
-    force(turn_features(t, salt_above=1000, chunk_rows=512))  # warmup
-    runs = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        force(turn_features(t, salt_above=1000, chunk_rows=512))
-        runs.append(time.perf_counter() - t0)
-    if max(runs) > 1.4 * min(runs):
-        t0 = time.perf_counter()
-        force(turn_features(t, salt_above=1000, chunk_rows=512))
-        runs.append(time.perf_counter() - t0)
-    timings["transcripts_turn_features_salted"] = round(min(runs), 3)
-    medians["transcripts_turn_features_salted"] = round(_median(runs), 3)
-
-    # adaptive routing lane: salt_above="auto" derives the threshold from
-    # the key histogram (one profile job). On this mild-skew table the
-    # derived threshold exceeds every conversation, so the cost target is
-    # plain-path + profile — the VERDICT r3 bar: ≤ 1.5× plain. (The
-    # static-threshold lane above keeps measuring the salted MACHINERY.)
-    force(turn_features(t, salt_above="auto"))  # warmup
-    runs = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        force(turn_features(t, salt_above="auto"))
-        runs.append(time.perf_counter() - t0)
-    if max(runs) > 1.4 * min(runs):
-        t0 = time.perf_counter()
-        force(turn_features(t, salt_above="auto"))
-        runs.append(time.perf_counter() - t0)
-    timings["transcripts_turn_features_auto"] = round(min(runs), 3)
-    medians["transcripts_turn_features_auto"] = round(_median(runs), 3)
+    lanes = {
+        # straggler-bound lane: mega-conversations (2000 turns each here;
+        # 10^7 at web scale) routed through the fused salted plan. At bench
+        # scale the skew is mild so this mostly measures the routing +
+        # salted machinery overhead; the point it evidences is that the
+        # flagship has a bounded-task-size mode whose output is
+        # frame-identical (tests/test_golden.py pins equality).
+        "transcripts_turn_features_salted": dict(salt_above=1000, chunk_rows=512),
+        # adaptive routing lane: salt_above="auto" derives the threshold
+        # from the key histogram (one profile job). On this mild-skew table
+        # the derived threshold exceeds every conversation, so the cost
+        # target is plain-path + profile — the VERDICT r3 bar: ≤ 1.5×
+        # plain. (The static-threshold lane above keeps measuring the
+        # salted MACHINERY.)
+        "transcripts_turn_features_auto": dict(salt_above="auto"),
+    }
+    for name, kw in lanes.items():
+        timed(name, lambda: force(turn_features(t, **kw)), warmup=True)
     t.unpersist()
 
     qs = entry_mod.queries()
-    for name in (BENCH_QUERIES or sorted(qs)):
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            force(qs[name](spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-        # noisy-neighbor guard: when the two runs disagree badly the slow
-        # one was contended — one more sample, keep the best
-        if max(runs) > 1.4 * min(runs):
-            t0 = time.perf_counter()
-            force(qs[name](spark, sf_dir))
-            runs.append(time.perf_counter() - t0)
-        timings[name] = round(min(runs), 3)
-        medians[name] = round(_median(runs), 3)
+    for name in sorted(qs):
+        timed(name, lambda: force(qs[name](spark, sf_dir)))
         # operators that persist() intermediates (minhash shingles,
         # weighted-percentile cumsum) build a FRESH cache per invocation;
         # drop them between queries so cache pressure from earlier

@@ -13,14 +13,13 @@ from acoustic_feature_extractor_spark.operators.asof import (
     align_sources,
     asof_join,
     asof_join_cogroup,
-    asof_join_salted,
     asof_join_salted_jvm,
     resample_grid,
 )
 
-# both salted engines must be indistinguishable from the unsalted join
-SALTED_IMPLS = [asof_join_salted, asof_join_salted_jvm]
-SALTED_IDS = ["arrow", "jvm"]
+# the salted engine must be indistinguishable from the unsalted join
+SALTED_IMPLS = [asof_join_salted_jvm]
+SALTED_IDS = ["jvm"]
 
 
 def _two_sides(spark, n_left=60, n_right=40, seed=3):
@@ -219,13 +218,13 @@ def test_align_sources_tolerance_rejects(spark):
 
 @pytest.mark.parametrize("salted_impl", SALTED_IMPLS, ids=SALTED_IDS)
 def test_salted_asof_equals_unsalted(spark, salted_impl):
-    """Both salted engines (Arrow merge_asof and the pure-JVM union-trick
-    + chunk-carry) must be frame-for-frame identical to the plain as-of
-    join — carry rows hand the true predecessor across every salt
-    boundary. Small chunk_seconds forces many chunks per entity. The
-    right payload includes NULLS and the comparison also covers the
-    matched row's own timestamp, so a carry that skipped a null payload
-    or stitched fields from different right rows would be caught."""
+    """The salted engine (union trick + chunk carry) must be frame-for-
+    frame identical to the plain as-of join — carry rows hand the true
+    predecessor across every salt boundary. Small chunk_seconds forces
+    many chunks per entity. The right payload includes NULLS and the
+    comparison also covers the matched row's own timestamp, so a carry
+    that skipped a null payload or stitched fields from different right
+    rows would be caught."""
     import pyspark.sql.functions as F
 
     l, r, lpdf, rpdf = _two_sides(spark, n_left=80, n_right=50, seed=7)

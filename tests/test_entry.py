@@ -1,10 +1,13 @@
-"""Driver-contract smoke: entry() produces rows; queries()/oracle_sql()
-registries are consistent; a sample of queries runs at sf0.001."""
+"""Entry-point smoke: entry() produces rows; the query registry has no
+duplicate name or empty oracle; a sample of queries runs at sf0.001."""
 
 from __future__ import annotations
 
 import sys
 
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 sys.path.insert(0, "/root/repo")
@@ -22,12 +25,30 @@ def test_entry_runs(spark):
 
 
 def test_registry_consistency():
-    qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
-    assert set(oracles) <= set(qs)
-    assert len(qs) >= 30
-    # every query is oracle-checked — no rows-only omissions remain
-    assert set(qs) == set(oracles)
+    names = [name for name, _, _ in entry_mod._REGISTRY]
+    # dict() would silently keep only the last of two same-named entries
+    assert len(names) == len(set(names)) == len(entry_mod.queries())
+    assert all(sql.strip() for _, _, sql in entry_mod._REGISTRY)
+
+
+def test_stream_snapshot_sink_keeps_null_ts_event(spark, tmp_path):
+    """A NULL-``ts`` event falls on neither side of the time cut, yet the
+    oracle counts it: the two drops must still land it exactly once."""
+    from tools.check_oracle import canon
+
+    ev = pq.read_table(f"{SF}/events.parquet")
+    row = ev.slice(0, 1).to_pylist()[0]
+    row.update(event_id=ev.num_rows + 1000, ts=None)
+    ev = pa.concat_tables([ev, pa.Table.from_pylist([row], schema=ev.schema)])
+    pq.write_table(ev, tmp_path / "events.parquet")
+
+    df = entry_mod.queries()["stream_snapshot_sink"](spark, str(tmp_path))
+    got = canon([tuple(r) for r in df.collect()], df.columns)
+    with duckdb.connect() as con:
+        con.sql(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+        res = con.sql(entry_mod.oracle_sql()["stream_snapshot_sink"])
+        want = canon(res.fetchall(), res.columns)
+    assert got == want
 
 
 @pytest.mark.parametrize(

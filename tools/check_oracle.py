@@ -93,11 +93,6 @@ def replay(
             print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
             failures.append(name)
             continue
-        if name not in oracles:
-            print(f"rows-only  {name}: {len(srows)} rows (no oracle)")
-            if len(srows) == 0:
-                print(f"  WARN: zero rows")
-            continue
         try:
             dres = con.sql(oracles[name])
             dcols = [c.lower() for c in dres.columns]
