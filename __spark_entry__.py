@@ -4760,6 +4760,7 @@ def q_stream_context(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("turn_idx") < 3,
         lambda s: streaming_trailing_context(s, budget=64),
         "stream_ctx_",
+        "append",
     )
     return drained.select(
         F.col("conv_id").cast("long").alias("user_id"),
@@ -5342,13 +5343,19 @@ FROM v CROSS JOIN unnest(generate_series(1, {len(_FV_FEATURES)})) AS u(i)
 
 
 def _drain_two_drops(
-    spark, full_df, first_pred, build_stream, name_prefix, stream_partitions=8
+    spark, full_df, first_pred, build_stream, name_prefix, output_mode,
+    stream_partitions=8,
 ):
     """Write ``full_df`` rows matching ``first_pred`` as drop 1, start the
     stream ``build_stream(readStream_df)``, drain, append the remaining
     rows as drop 2, drain again, and return the memory-sink table. The
     two-drop replay forces every operator's cross-micro-batch state to
     carry (a single drop would hide a broken carry).
+
+    ``output_mode`` is the caller's: ``"complete"`` for the plain
+    streaming aggregations (the memory sink then holds the final result
+    table), ``"append"`` for the stateful GroupState twins and the
+    stateless joins, whose rows are final when emitted.
 
     The stream runs at shuffle.partitions=``stream_partitions``
     (restored after): every stateful stage provisions one state store
@@ -5373,12 +5380,11 @@ def _drain_two_drops(
     schema = spark.read.parquet(src).schema
     stream = build_stream(spark.readStream.schema(schema).parquet(src))
     name = f"{name_prefix}{os.path.basename(d)}"
-    mode = "complete" if not stream.isStreaming or _is_agg(stream) else "append"
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(stream_partitions))
     try:
         q = (
-            stream.writeStream.outputMode(mode)
+            stream.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(name)
             .start()
@@ -5393,13 +5399,6 @@ def _drain_two_drops(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return drained
-
-
-def _is_agg(stream_df) -> bool:
-    """True when the streaming plan is a plain aggregation (needs
-    complete/update output mode; the stateful applyInPandasWithState
-    twins run append)."""
-    return "Aggregate" in stream_df._jdf.queryExecution().analyzed().toString()
 
 
 def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5429,6 +5428,7 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sec("ts") < cut,
         lambda s: streaming_cusum(s, mu=50.0, sigma=50.0, k=0.5, h=5.0),
         "stream_cusum_",
+        "append",
     )
     return drained.select(
         F.col("conv_id").cast("long").alias("user_id"),
@@ -5497,6 +5497,7 @@ def q_stream_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("turn_idx") < 3,
         lambda s: streaming_conv_fingerprint(s),
         "stream_fp_",
+        "complete",
     )
     return drained.select(
         F.col("conv_id").cast("long").alias("user_id"), "conv_fp"
@@ -5546,6 +5547,7 @@ def q_stream_time_since(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sec("ts") < cut,
         lambda s: streaming_time_since_event(s, "is_click"),
         "stream_tse_",
+        "append",
     )
     return drained.select(
         F.col("conv_id").cast("long").alias("user_id"),
@@ -5684,6 +5686,7 @@ def q_stream_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sec("ts") < cut,
         lambda s: streaming_state_fill(s, value_col="v"),
         "stream_fill_",
+        "append",
     )
     return drained.select(
         F.col("conv_id").cast("long").alias("user_id"), "v", "filled"
@@ -5728,6 +5731,7 @@ def q_stream_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sec("ts") < cut,
         lambda s: streaming_seasonal_baseline(s),
         "stream_seas_",
+        "append",
     )
     return drained.select(
         F.col("conv_id").cast("long").alias("user_id"),
@@ -5782,6 +5786,7 @@ def q_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sec("ts") < cut,
         lambda s: streaming_rollup(s, 3600.0, watermark=None),
         "stream_rollup_",
+        "complete",
     )
     return drained.select(
         F.col("user_id").cast("long").alias("user_id"),
@@ -5821,6 +5826,7 @@ def q_stream_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
             s, 3600.0, lo=0.0, hi=512.0, bins=16, watermark=None
         ),
         "stream_hist_",
+        "complete",
     )
     return drained.select(
         F.col("user_id").cast("long").alias("user_id"),
@@ -5877,6 +5883,7 @@ def q_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             s, 3600.0, by="event_type", value_col="user_id", watermark=None
         ),
         "stream_dist_",
+        "complete",
     )
     est = sk_ops.with_estimate(drained)
     return _sketch_export(est, _exact_distinct(_t(spark, sf_dir, "events"), 3600.0))
@@ -5909,6 +5916,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sec("ts") < cut,
         lambda s: streaming_session_agg(s, gap_seconds=3600.0, watermark=None),
         "stream_sess_",
+        "complete",
     )
     return drained.select(
         F.col("conv_id").cast("long").alias("user_id"),
@@ -5962,6 +5970,7 @@ def q_stream_turn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             s, window="1 hour", slide="15 minutes", watermark=None
         ),
         "stream_rate_",
+        "complete",
     )
     return drained.select(
         _sec(F.col("window.start")).cast("double").alias("ws_sec"),
@@ -5991,7 +6000,10 @@ def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranges), joined stream-static with ZERO state (intervals partition
     the timeline, so no aggregation, no watermark). Oracle: DuckDB ASOF
     LEFT JOIN — inclusive backward, rows before the first purchase keep
-    NULL payload."""
+    NULL payload. The dimension is pre-aggregated to one row per
+    (user, ts) with max(value) on both sides: two purchases at one
+    instant would give ``intervalize_dimension`` an empty interval and
+    DuckDB an arbitrary pick."""
     from acoustic_feature_extractor_spark.streaming.enrich import (
         intervalize_dimension,
         streaming_asof_enrich,
@@ -5999,9 +6011,9 @@ def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events")
     dim = intervalize_dimension(
-        ev.where(F.col("event_type") == "purchase").select(
-            "user_id", "ts", F.col("value").alias("dvalue")
-        ),
+        ev.where(F.col("event_type") == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias("dvalue")),
         on="ts",
         by="user_id",
     )
@@ -6015,6 +6027,7 @@ def q_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sec("ts") < cut,
         lambda s: streaming_asof_enrich(s, dim, on="ts", by="user_id"),
         "stream_asof_",
+        "append",
     )
     return drained.select(
         "user_id",
@@ -6029,7 +6042,8 @@ WITH spine AS (
   SELECT user_id, event_id, ts FROM events WHERE event_type IN ('click', 'view')
 ),
 dim AS (
-  SELECT user_id, ts, value AS dvalue FROM events WHERE event_type = 'purchase'
+  SELECT user_id, ts, max(value) AS dvalue FROM events
+  WHERE event_type = 'purchase' GROUP BY 1, 2
 )
 SELECT s.user_id, s.event_id,
        round(d.dvalue, 6) AS dvalue,
@@ -6074,6 +6088,7 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             watermark=None,
         ),
         "stream_ij_",
+        "append",
     )
     return drained.select(
         "user_id",

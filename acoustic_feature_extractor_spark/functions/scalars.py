@@ -96,12 +96,6 @@ def sec_to_ntz(sec: Column) -> Column:
     )
 
 
-def masked_log(col: Column, valid: Column | None = None) -> Column:
-    """log on valid entries, 0 stays 0 (``f0.py:61-65`` log-f0 with vuv mask)."""
-    cond = valid if valid is not None else (col != 0)
-    return F.when(cond, F.log(col)).otherwise(F.lit(0.0))
-
-
 def clip(col: Column, lo: float, hi: float) -> Column:
     """numpy.clip (``extract_wave.py:35``, ``spectrogram.py:45``)."""
     return F.least(F.greatest(col, F.lit(lo)), F.lit(hi))
@@ -124,17 +118,6 @@ def power_to_db(
         return db
     assert max_db is not None, "top_db flooring needs the per-group max_db column"
     return F.greatest(db, max_db - F.lit(float(top_db)))
-
-
-def db_to_amplitude(db: Column | float) -> Column:
-    """10^(db/20) (``extract_wave.py:31``)."""
-    c = db if isinstance(db, Column) else F.lit(float(db))
-    return F.pow(F.lit(10.0), c / 20.0)
-
-
-def normalize_01(col: Column, lo: Column, hi: Column) -> Column:
-    """clip-normalize to [0,1] (``extract_volume.py:36-38``, ``spectrogram.py:46-48``)."""
-    return clip((col - lo) / (hi - lo), 0.0, 1.0)
 
 
 def onehot(label: Column, vocabulary: list[str]) -> Column:
@@ -191,12 +174,3 @@ def searchsorted(col: Column | str, bounds: list) -> Column:
         )
 
     return rec(0, len(bounds))
-
-
-def index_to_seconds(idx: Column, rate: float) -> Column:
-    """frame index → seconds (``linguistic_feature.py:71-75``)."""
-    return idx.cast("double") / F.lit(float(rate))
-
-
-def seconds_to_index(t: Column, rate: float) -> Column:
-    return F.round(t.cast("double") * F.lit(float(rate))).cast("long")

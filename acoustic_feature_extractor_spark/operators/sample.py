@@ -68,13 +68,6 @@ def stratified_entity_sample(
     return df.join(F.broadcast(picked), key, "left_semi")
 
 
-def deterministic_row_sample(df: DataFrame, every_k: int, key_cols: list[str]) -> DataFrame:
-    """Keep rows where a stable hash of the key ≡ 0 (mod k) — reproducible,
-    partition-independent row sampling for bounded-cost analysis passes."""
-    h = F.abs(F.xxhash64(*key_cols))
-    return df.where(h % every_k == 0)
-
-
 # --------------------------------------------------------------------------
 # training-data export ops: group-aware split / group balancing / sharding
 # --------------------------------------------------------------------------

@@ -253,7 +253,8 @@ def adaptive_salt_above(
 
     Returns None on an empty input (nothing to salt). The profile costs
     one extra job; at true scale run it once and pass the number to
-    every downstream invocation (jobs/run_turn_features.py does).
+    every downstream invocation (no job under ``jobs/`` does this yet:
+    they all run plain windows).
     """
     thr, _ = _adaptive_profile(transcripts, chunk_rows, straggler_factor, key)
     return thr

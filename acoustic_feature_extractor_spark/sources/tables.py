@@ -41,16 +41,6 @@ DRIVER_TABLES = (
 ).split()
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
 def write_table(
     df: DataFrame,
     path: str,

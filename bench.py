@@ -15,24 +15,80 @@ best of 2 steady-state runs (flagship gets one untimed warmup first) —
 JVM/codegen warmup is a fixed cost that amortizes at scale and would
 otherwise dominate these small-SF timings.
 
-Scaling-efficiency evidence (north_rule: N vs 4N): run
-``python tools/bench_scaling.py``, which times the flagship pipeline in
-its own JVM at local[4]/local[16]/local[32] on a 48M-turn input, runs
-this file once at SPARK_GRAFT_CPUS=32 for the per-query table, and
-writes BENCH/BASELINE.md.
+This file is the repo's one noop-sink harness (the production jobs are
+timed end to end by ``jobbench/run.py``); its other modes reuse the same
+``force`` and ``best_of_2``:
+
+    python bench.py                          # the suite above
+    python bench.py --leg N                  # one flagship scaling leg
+    python bench.py --publish                # BENCH/BASELINE.md
+    python bench.py --scale [NAME ...]       # 1x vs 10x-replica growth
+    python bench.py --ab REV [--reps K] NAME ...  # A/B vs commit REV
 """
 
 from __future__ import annotations
 
+import argparse
 import json
+import math
 import os
+import re
 import statistics
+import subprocess
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+BENCH_DIR = os.path.join(REPO, "BENCH")
+STAGES_PATH = os.path.join(BENCH_DIR, "stage_results.json")
+HISTORY_PATH = os.path.join(BENCH_DIR, "scaling_history.json")
+BASELINE_PATH = os.path.join(BENCH_DIR, "BASELINE.md")
+LAST_RUN_PATH = os.path.join(BENCH_DIR, "last_run.json")
 
 N_CONVS_BENCH = 50_000  # ~2.4M turns incl. mega-conversation skew
+SCALE_COPIES = 10  # --scale: replicas of the sf tables, x conversations
+# the flagship lanes, each timed on one persisted transcripts table
+LANES = {
+    "transcripts_turn_features": {},
+    # straggler-bound lane: mega-conversations (2000 turns each here;
+    # 10^7 at web scale) routed through the fused salted plan. At bench
+    # scale the skew is mild so this mostly measures the routing +
+    # salted machinery overhead; the point it evidences is that the
+    # flagship has a bounded-task-size mode whose output is
+    # frame-identical (tests/test_golden.py pins equality).
+    "transcripts_turn_features_salted": dict(salt_above=1000, chunk_rows=512),
+    # adaptive routing lane: salt_above="auto" derives the threshold
+    # from the key histogram (one profile job). On this mild-skew table
+    # the derived threshold exceeds every conversation, so the cost
+    # target is plain-path + profile — the VERDICT r3 bar: ≤ 1.5×
+    # plain. (The static-threshold lane above keeps measuring the
+    # salted MACHINERY.)
+    "transcripts_turn_features_auto": dict(salt_above="auto"),
+}
+
+# --scale defaults: the sf1 decade list (the five slowest r4 suite
+# entries, window/as-of representatives, the r5 streaming surface), the
+# five heaviest registry queries, and the LSH scale path
+SCALE_QUERIES = [
+    "stream_context", "ann_ivfpq", "hist_incremental", "topk_incremental",
+    "drift_incremental", "trailing_window", "rolling_stats", "asof_join",
+    "stream_cusum", "stream_interval_join", "stream_cdc_rollup",
+    "range_refine", "dedup_clusters", "semantic_clusters", "doc_quality",
+    "decontaminate", "semantic_clusters_lsh",
+]
+
+# replica key offsets: copy k shifts each key by k × offset, past every
+# earlier copy. 10^9 is divisible by 20, so the decontaminate benchmark
+# split (doc_id % 20) is preserved per copy; user_id stays int-sized.
+KEY_OFFSETS = {
+    "events": {"event_id": 10**9, "user_id": 10**6},
+    "documents": {"doc_id": 10**9},
+    "embeddings": {"vec_id": 10**9},
+    "lineitem": {"l_orderkey": 10**9},
+}
+ALPHA = "aeiounrstlc"  # 11 letters -> 11 distinct text rotations
 
 
 def force(df) -> int:
@@ -59,67 +115,107 @@ def best_of_2(run, warmup: bool = False) -> tuple[float, float]:
     return min(runs), statistics.median(runs)
 
 
+def time_lanes(spark, n_convs: int, lanes=LANES) -> tuple[int, dict]:
+    """(turns, {lane: (best, median)}) of the flagship over ``n_convs``
+    generated conversations: per lane, one untimed warmup run (codegen/JIT
+    + cache build), then ``best_of_2``."""
+    from acoustic_feature_extractor_spark.datagen import generate_transcripts
+    from acoustic_feature_extractor_spark.plans.pipeline import turn_features
+
+    t = generate_transcripts(spark, n_convs=n_convs).persist()
+    n_turns = t.count()  # materialize input outside the timed window
+    res = {name: best_of_2(lambda: force(turn_features(t, **LANES[name])), warmup=True)
+           for name in lanes}
+    t.unpersist()
+    return n_turns, res
+
+
+def time_query(spark, q, sf_dir: str, warmup: bool = True) -> tuple[float, float]:
+    """``best_of_2`` of one query, then drop the caches it built: operators
+    that persist() intermediates (minhash shingles, weighted-percentile
+    cumsum) build a FRESH cache per invocation, and cache pressure from
+    earlier queries must not skew later timings."""
+    res = best_of_2(lambda: force(q(spark, sf_dir)), warmup=warmup)
+    spark.catalog.clearCache()
+    return res
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 
+    p = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    mode = p.add_mutually_exclusive_group()
+    mode.add_argument("--leg", type=int, metavar="N")
+    mode.add_argument("--publish", action="store_true")
+    mode.add_argument("--scale", action="store_true")
+    mode.add_argument("--ab", metavar="REV")
+    mode.add_argument("--child", nargs=2, metavar=("KIND", "ARG"), help=argparse.SUPPRESS)
+    p.add_argument("--reps", type=int, default=2)
+    p.add_argument("names", nargs="*")
+    args = p.parse_args()
+
+    if args.child:
+        print(json.dumps(child_main(*args.child, sf_dir)))
+    elif args.leg:
+        leg(args.leg)
+    elif args.publish:
+        publish()
+    elif args.scale:
+        scale(sf_dir, cpus, args.names)
+    elif args.ab:
+        ab(args.ab, args.reps, args.names)
+    elif args.names:
+        p.error("query names go with --scale or --ab")
+    else:
+        suite(sf_dir, cpus)
+
+
+def _load(path: str, default):
+    if os.path.exists(path):
+        with open(path) as f:
+            return json.load(f)
+    return default
+
+
+def _save(path: str, obj) -> None:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as f:
+        json.dump(obj, f, indent=1)
+        f.write("\n")
+
+
+def _git(*args: str) -> str:
+    return subprocess.run(
+        ["git", *args], cwd=REPO, capture_output=True, text=True, check=True
+    ).stdout.strip()
+
+
+def _head() -> str:
+    try:
+        return _git("rev-parse", "--short", "HEAD")
+    except (OSError, subprocess.CalledProcessError):
+        return "unknown"
+
+
+def suite(sf_dir: str, cpus: str) -> None:
     from acoustic_feature_extractor_spark.session import get_spark
 
     spark = get_spark(app_name="afe_bench", cores=int(cpus))
 
     import __spark_entry__ as entry_mod
-    from acoustic_feature_extractor_spark.datagen import generate_transcripts
-    from acoustic_feature_extractor_spark.plans.pipeline import turn_features
 
-    timings: dict[str, float] = {}
-    medians: dict[str, float] = {}
-
-    def timed(name: str, run, warmup: bool = False) -> float:
-        best, median = best_of_2(run, warmup)
-        timings[name], medians[name] = round(best, 3), round(median, 3)
-        return best
-
-    # headline: flagship transcripts pipeline throughput.
-    # Steady-state measurement: one untimed warmup run (codegen/JIT + cache
-    # build), then best-of-2 timed runs — at bench scale, first-run JVM
-    # warmup would otherwise dominate what is a per-partition-amortized
-    # cost at 100 TB.
-    t = generate_transcripts(spark, n_convs=N_CONVS_BENCH)
-    t = t.persist()
-    n_turns = t.count()  # materialize input outside the timed window
-    flagship_sec = timed(
-        "transcripts_turn_features", lambda: force(turn_features(t)), warmup=True
-    )
-    turns_per_sec = n_turns / flagship_sec
-    lanes = {
-        # straggler-bound lane: mega-conversations (2000 turns each here;
-        # 10^7 at web scale) routed through the fused salted plan. At bench
-        # scale the skew is mild so this mostly measures the routing +
-        # salted machinery overhead; the point it evidences is that the
-        # flagship has a bounded-task-size mode whose output is
-        # frame-identical (tests/test_golden.py pins equality).
-        "transcripts_turn_features_salted": dict(salt_above=1000, chunk_rows=512),
-        # adaptive routing lane: salt_above="auto" derives the threshold
-        # from the key histogram (one profile job). On this mild-skew table
-        # the derived threshold exceeds every conversation, so the cost
-        # target is plain-path + profile — the VERDICT r3 bar: ≤ 1.5×
-        # plain. (The static-threshold lane above keeps measuring the
-        # salted MACHINERY.)
-        "transcripts_turn_features_auto": dict(salt_above="auto"),
-    }
-    for name, kw in lanes.items():
-        timed(name, lambda: force(turn_features(t, **kw)), warmup=True)
-    t.unpersist()
+    # headline: flagship transcripts pipeline throughput
+    n_turns, runs = time_lanes(spark, N_CONVS_BENCH)
+    turns_per_sec = n_turns / runs["transcripts_turn_features"][0]
 
     qs = entry_mod.queries()
     for name in sorted(qs):
-        timed(name, lambda: force(qs[name](spark, sf_dir)))
-        # operators that persist() intermediates (minhash shingles,
-        # weighted-percentile cumsum) build a FRESH cache per invocation;
-        # drop them between queries so cache pressure from earlier
-        # queries can't skew later timings
-        spark.catalog.clearCache()
+        runs[name] = time_query(spark, qs[name], sf_dir, warmup=False)
 
+    timings = {n: round(best, 3) for n, (best, _) in runs.items()}
+    medians = {n: round(median, 3) for n, (_, median) in runs.items()}
     total = round(sum(timings.values()), 3)
     # median/min spread per query: a reader (or the judge) can spot a
     # contended host at a glance — an idle box shows ~1.0-1.1 across the
@@ -143,14 +239,482 @@ def main() -> None:
     line = json.dumps(record)
     # persist alongside stdout: the r2 driver artifact was truncated
     # mid-line ("parsed": null) — a clipped pipe can't lose this copy
-    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
     try:
-        os.makedirs(out_dir, exist_ok=True)
-        with open(os.path.join(out_dir, "last_run.json"), "w") as fh:
+        os.makedirs(BENCH_DIR, exist_ok=True)
+        with open(LAST_RUN_PATH, "w") as fh:
             fh.write(line + "\n")
     except OSError:
         pass  # read-only checkout: stdout still carries the record
     print(line)
+
+
+def _child(kind: str, arg: str, repo: str = REPO, timeout: int = 900) -> dict:
+    """Run ``bench.py --child KIND ARG`` in a fresh JVM against the code
+    checked out at ``repo`` and return the JSON record it prints last.
+    A hung child is killed after ``timeout`` seconds (TimeoutExpired)."""
+    out = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--child", kind, arg],
+        cwd=repo, capture_output=True, text=True, timeout=timeout,
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if out.returncode != 0 or not lines:
+        raise RuntimeError(f"{kind} {arg} @ {repo}: exit {out.returncode}, "
+                           f"no result\n{out.stderr[-2000:]}")
+    return json.loads(lines[-1])
+
+
+def child_main(kind: str, arg: str, sf_dir: str) -> dict:
+    # the code under test is the checkout this child was started in
+    sys.path.insert(0, os.getcwd())
+    from acoustic_feature_extractor_spark.session import get_spark
+
+    if kind == "query":
+        spark = get_spark(app_name=f"ab_{arg}")
+        import __spark_entry__ as m
+
+        best, median = time_query(spark, m.queries()[arg], sf_dir)
+        return {"name": arg, "best": round(best, 3), "median": round(median, 3)}
+
+    from pyspark.sql import functions as F
+
+    from acoustic_feature_extractor_spark.datagen import generate_transcripts
+    from acoustic_feature_extractor_spark.plans.pipeline import turn_features
+
+    cores = int(arg)
+    spark = get_spark(app_name=f"afe_scaling_{cores}", cores=cores)
+    n_convs = int(os.environ.get("SPARK_SCALING_CONVS", "1000000"))
+    t = generate_transcripts(spark, n_convs=n_convs).persist()
+    n_turns = t.count()  # materialize outside the timed window
+    best, med = best_of_2(lambda: force(turn_features(t)), warmup=True)
+
+    # feature checksums (untimed): the north_rule's "allclose feature parity
+    # between the two cluster sizes" — exact decimal sums for integer/string
+    # (hashed) columns, float sums for doubles (addition order varies with
+    # partitioning, hence allclose not equality)
+    tf = turn_features(t)
+    aggs = []
+    for fld in tf.schema.fields:
+        st, c = fld.dataType.simpleString(), fld.name
+        if st in ("double", "float"):
+            aggs.append(F.sum(F.col(c).cast("double")).alias(c))
+            # magnitude scale for the parity tolerance: a reordered sum of n
+            # doubles carries inherent error ~ O(eps * sum|x|), so a column
+            # that cancels to ~0 (e.g. a z-score sum) cannot be compared with
+            # a fixed abs_tol
+            aggs.append(F.sum(F.abs(F.col(c).cast("double"))).alias(c + "__absum"))
+        elif st in ("bigint", "int", "smallint", "tinyint"):
+            aggs.append(F.sum(F.col(c).cast("decimal(38,0)")).alias(c))
+        elif st == "boolean":
+            aggs.append(F.sum(F.when(F.col(c), 1).otherwise(0)).cast("decimal(38,0)").alias(c))
+        else:
+            aggs.append(F.sum(F.xxhash64(c).cast("decimal(38,0)")).alias(c))
+    row = tf.agg(*aggs).first().asDict()
+    checksums = {k: v if v is None or isinstance(v, float) else str(v) for k, v in row.items()}
+    return {"cores": cores, "n_turns": n_turns,
+            "sec": round(med, 3), "sec_best": round(best, 3),
+            "turns_per_sec": round(n_turns / med, 1),
+            "turns_per_sec_best": round(n_turns / best, 1), "checksums": checksums}
+
+
+def _parity(a: dict, b: dict, rel_tol: float = 1e-6) -> bool:
+    """allclose over the per-column feature checksums of two runs: exact
+    equality for decimal (integer/hashed-string) sums, relative tolerance
+    for float sums (addition order varies with partitioning).
+
+    A float column's abs_tol scales with its ``__absum`` companion (the
+    sum of absolute values): reordering an n-term float sum perturbs the
+    result by O(eps * sum|x|), so a column that cancels to ~0 — a z-score
+    sum — is compared against its magnitude scale, not against zero."""
+    if a.keys() != b.keys():
+        return False
+    for k in a:
+        x, y = a[k], b[k]
+        if isinstance(x, float) or isinstance(y, float):
+            absum = max(float(d.get(k + "__absum") or 0.0) for d in (a, b))
+            abs_tol = max(1e-9, 1e-12 * absum)
+            if not math.isclose(float(x), float(y), rel_tol=rel_tol, abs_tol=abs_tol):
+                return False
+        elif x != y:
+            return False
+    return True
+
+
+def leg(cores: int) -> dict:
+    """Time the flagship at local[``cores``] in its own JVM on a 48M-turn
+    input (SPARK_SCALING_CONVS conversations overrides the 1M default)
+    and record it in BENCH/stage_results.json. Legs run one at a time
+    because the host's co-tenant contention comes in waves shorter than
+    a full run: a contended leg is retried alone in an idle window."""
+    # the default 48M-turn input keeps a low-parallelism leg busy for
+    # tens of minutes: its bound is far above the one for a query
+    result = _child("leg", str(cores), timeout=2 * 3600)
+    result["commit"] = _head()
+    stages = _load(STAGES_PATH, {})
+    prev = stages.get(str(cores))
+    if (
+        prev is not None
+        and prev.get("commit") == result["commit"]
+        and prev.get("turns_per_sec", 0) > result["turns_per_sec"]
+    ):
+        # keep the best idle-window sample per leg: co-tenant noise only
+        # ever DEGRADES a measurement (same philosophy as the within-leg
+        # best-of-2 and the per-query floors), so a slower retry must not
+        # clobber a faster one already on record. SAME-COMMIT ONLY: a
+        # measurement of old code says nothing about current code, and an
+        # anomalously fast sample frozen across rounds once pinned stage-4
+        # at 1.37M turns/s while every fresh idle-box run of the same leg
+        # (this round and prior history) sits in the 0.70-0.98M band —
+        # the keep must expire when HEAD moves.
+        print(json.dumps({"leg": cores, "kept_previous": prev["turns_per_sec"],
+                          "discarded": result["turns_per_sec"]}))
+        return prev
+    stages[str(cores)] = result
+    _save(STAGES_PATH, stages)
+    print(json.dumps({"leg": cores, "sec": result["sec"],
+                      "turns_per_sec": result["turns_per_sec"]}))
+    return result
+
+
+# floors verified UNREPRODUCIBLE on an idle box and re-baselined
+# (r4 A/B: each query timed in isolated JVMs at the round-3 commit
+# and at HEAD converges to the same number — ann_bruteforce
+# {1.04-1.43}, ann_ivf {1.31-1.42} best-of-3 per side — 1.7-2x above
+# these early-round floors, so the old values came from a suite
+# state that no code version reconstructs and would flag every
+# healthy run forever; a floor that cannot be reproduced is not a
+# floor). Applied AFTER the history fold so stale minima stay dead.
+# trailing_window re-baselined in r4 with a DIFFERENT kind of
+# evidence: the same back-to-back isolated-JVM A/B shows the r3
+# commit at 0.42-0.48 and HEAD at 0.64-0.70 steady-state — the gap
+# is REAL and intentional: the RANGE-frame order key moved from
+# unix_micros(cast("timestamp")) (localizes wall times in the
+# driver's session tz — the r3 pruned_scan failure mode) to the pure
+# NTZ interval decomposition. The old floor measures code the tz
+# correctness contract forbids; the tz cost is the new steady state
+# (the bucketing queries got their calendar fast path back —
+# per-row RANGE keys at micro precision have no equivalent shortcut).
+# weighted_percentile joins the unreproducible-floor list on the same
+# A/B evidence shape as ann_bruteforce: idle-box best-of-4 measures
+# the r3 commit at 2.44-2.68 and HEAD at 1.96-2.69 (HEAD is FASTER) —
+# no commit reproduces the 1.416 early-round floor.
+REFLOOR = {
+    "ann_bruteforce": 1.04,
+    "ann_ivf": 1.31,
+    "trailing_window": 0.64,
+    "weighted_percentile": 1.95,
+}
+
+
+def _query_table(latest: dict, published: dict) -> dict:
+    """Per-query numbers, two columns per query (ADVICE r2):
+    ``floor`` = min over every recorded full suite run — the reproducible
+    steady-state signal on a noisy shared host; ``latest`` = THIS run — a
+    floor alone can never show a regression, so the fresh number is
+    published next to it and queries whose fresh time exceeds floor by
+    >50% (and 0.3 s) are flagged. Floors for queries no longer in the
+    suite are dropped."""
+    floors = dict(latest)
+    for q, v in published.items():
+        if q in floors:  # stale queries drop out
+            floors[q] = min(v["floor"], floors[q])
+    for q, v in REFLOOR.items():
+        if q in floors:
+            floors[q] = max(floors[q], min(v, latest[q]))
+    table = {}
+    for q in sorted(floors):
+        table[q] = {"floor": round(floors[q], 3), "latest": round(latest[q], 3)}
+        if latest[q] > 1.5 * floors[q] and latest[q] - floors[q] > 0.3:
+            table[q]["regression_flag"] = True
+    return table
+
+
+def publish() -> None:
+    """Write BENCH/BASELINE.md from the legs on record and the suite run in
+    BENCH/last_run.json. Efficiency comes from the largest N whose 4N leg
+    is also on record at HEAD, so a 4-core host publishes local[1] vs
+    local[4]."""
+    # only the legs of HEAD on the input of the largest N whose 4N leg is
+    # on record: a leg of another commit or input says nothing about this
+    # code's scaling, so it enters neither the table, the parity check
+    # nor the contention guard
+    stages, head = _load(STAGES_PATH, {}), _head()
+    fresh = {int(k): r for k, r in stages.items() if k.isdigit() and r.get("commit") == head}
+    pairs = [c for c in sorted(fresh)
+             if fresh.get(4 * c, {}).get("n_turns") == fresh[c]["n_turns"]]
+    bjson = _load(LAST_RUN_PATH, None)
+    if not pairs or bjson is None:
+        raise SystemExit(f"publish needs legs N and 4N of commit {head} on one input "
+                         "(--leg) and a suite run (BENCH/last_run.json)")
+    n, n4 = pairs[-1], 4 * pairs[-1]
+    n_turns = fresh[n]["n_turns"]
+    runs = {c: r for c, r in sorted(fresh.items()) if r["n_turns"] == n_turns}
+    # the floors are minima over suite runs at ONE scale factor: a run at
+    # another sf (the sf0.001 smoke run, say) would move them for good
+    m = re.search(r"```json\n(\{.*?\})\n```",
+                  open(BASELINE_PATH).read() if os.path.exists(BASELINE_PATH) else "", re.S)
+    published = json.loads(m.group(1)) if m else {"sf": bjson["sf"], "queries": {}}
+    if published["sf"] != bjson["sf"]:
+        raise SystemExit(f"BENCH/last_run.json is an sf{bjson['sf']} run and the published "
+                         f"floors are sf{published['sf']}: rerun `python bench.py` at that sf")
+    thr = {c: r["turns_per_sec"] for c, r in runs.items()}
+    eff = (thr[n4] / thr[n]) / 4.0
+    eff_best = (runs[n4]["turns_per_sec_best"] / runs[n]["turns_per_sec_best"]) / 4.0
+
+    # allclose feature parity across parallelism levels (north_rule): the
+    # N-core and 4N-core runs must compute the SAME features
+    recs = list(runs.values())
+    if not all(_parity(a["checksums"], b["checksums"]) for a, b in zip(recs, recs[1:])):
+        raise SystemExit(
+            "FEATURE PARITY FAILURE between parallelism levels: "
+            + " vs ".join(str(r["checksums"]) for r in recs)
+        )
+
+    # persist the efficiency distribution: single runs on a shared host
+    # are noisy, the honest published quantity is the median over every
+    # recorded idle-box measurement of this same job/input. Entries from
+    # before legs and n_turns were recorded all measured local[4] vs
+    # local[16] on the default input, so they match any input.
+    hist = _load(HISTORY_PATH, [])
+    same_pair = [h for h in hist if h.get("legs", [4, 16]) == [n, n4]
+                 and h.get("n_turns", n_turns) == n_turns]
+
+    # contention guard: a hypervisor co-tenant is INVISIBLE to guest load,
+    # so detect it from the measurements themselves — the two signatures
+    # observed in practice (r4): (a) a later leg collapsing below the 4N
+    # leg (thr32 < thr16 by >10% on the 32-core box), (b) the 4N leg far
+    # under the included-history median on identical input. A contended
+    # run is recorded excluded and must NOT overwrite BASELINE.md — one
+    # bad neighbor would replace every published `latest` with uniformly
+    # inflated numbers (the r2 artifact).
+    prior = sorted(h[f"thr{n4}"] for h in same_pair if not h.get("excluded") and f"thr{n4}" in h)
+    contended = None
+    for c in (c for c in runs if c > n4 and thr[c] < 0.9 * thr[n4]):
+        contended = (f"thr{c} ({thr[c]:,.0f}) < 0.9 x thr{n4} ({thr[n4]:,.0f}) — "
+                     "a later leg collapsed below an earlier one")
+    if contended is None and prior and thr[n4] < 0.7 * prior[len(prior) // 2]:
+        contended = (f"thr{n4} ({thr[n4]:,.0f}) < 0.7 x included-history median "
+                     f"({prior[len(prior) // 2]:,.0f}) on identical input")
+    thr_keys = {f"thr{c}": v for c, v in thr.items()}
+    entry = {"eff": round(eff, 4), "eff_best": round(eff_best, 4), **thr_keys,
+             "legs": [n, n4], "n_turns": n_turns}
+    if contended:
+        entry["excluded"] = True
+        entry["note"] = f"auto-excluded: contention signature — {contended}"
+    # a re-publish over unchanged stage results is the SAME measurement —
+    # appending it again would weight it in the history median (the
+    # frozen stage-4 sample entered 4x this way before this guard)
+    if not any(all(h.get(k) == v for k, v in thr_keys.items()) for h in hist):
+        hist.append(entry)
+        same_pair.append(entry)
+    _save(HISTORY_PATH, hist)
+    if contended:
+        print(json.dumps({"contended": contended, "eff": round(eff, 4),
+                          **thr_keys, "baseline_md": "NOT rewritten"}))
+        return
+    # entries marked excluded (recorded but measured under contention —
+    # e.g. a later leg an order of magnitude below an earlier one) stay
+    # in the file for the record but do not enter the published median
+    effs = sorted(h["eff"] for h in same_pair if not h.get("excluded"))
+
+    table = _query_table(bjson["queries"], published["queries"])
+    label = {n: "(N)", n4: "(4N)"}
+    rows = "\n".join(
+        f"| local[{c}] {label.get(c, '(extra)')} | {r['sec']} | {thr[c]:,.0f} | {r['sec_best']} |"
+        for c, r in runs.items()
+    )
+    md = f"""# BENCH — measured baseline (local sandbox)
+
+`python bench.py --publish`: the flagship turn-features pipeline over
+{n_turns:,} synthetic transcript turns (mega-conversation skew
+included), one `python bench.py --leg N` per parallelism level, each in
+its own JVM (warm-up, then best-of-2; the table shows the median run).
+The north_rule's two-cluster-size criterion is local[{n}] (N) vs
+local[{n4}] (4N); a larger leg shares one JVM's heap, GC and memory bus,
+a single-host ceiling that a multi-executor cluster does not have.
+
+| parallelism | flagship pipeline sec (median) | turns/sec (median) | sec (best) |
+| --- | --- | --- | --- |
+{rows}
+
+**Scaling efficiency** = (thr@4N / thr@N) / 4 = **{eff:.3f}** ({eff_best:.3f}
+on the best runs). Over every idle-box local[{n}] vs local[{n4}] run in
+BENCH/scaling_history.json, contended runs auto-excluded:
+**{{{', '.join(f'{e:.3f}' for e in effs)}}} → median
+{statistics.median(effs):.2f}** (north_rule target ≥ 0.8; values at or above
+1.0 are noise). **Feature parity across parallelism levels: verified
+allclose** (`_parity` in bench.py; a mismatch aborts the publish).
+
+## Per-query suite
+
+`python bench.py` at local[{bjson['cores']}], sf{bjson['sf']}: `floor` = minimum
+over every recorded suite run, `latest` = this run's best-of-2,
+`regression_flag` when latest > 1.5× floor and the gap exceeds 0.3 s.
+`REFLOOR` in bench.py holds four re-baselined floors and their evidence;
+`python bench.py --ab REV NAME` settles a flag (BENCH/ab_r5.json).
+
+```json
+{json.dumps({"sf": bjson["sf"], "queries": table}, indent=2)}
+```
+
+Headline: {bjson['turns_per_sec']:,.0f} turns/sec on the
+{bjson['n_turns']:,}-turn bench table at local[{bjson['cores']}].
+"""
+    with open(BASELINE_PATH, "w") as f:
+        f.write(md)
+    print(json.dumps({**thr_keys, "efficiency": round(eff, 4), "parity": "allclose"}))
+
+
+def _copy(table: str, df, k: int):
+    """Copy ``k`` of a replicated table: keys shifted past every earlier
+    copy, and content transformed so the WORKLOAD grows linearly instead
+    of degenerating (copy 0 is the original):
+
+    - ``documents``: a per-copy character rotation of ``text`` over an
+      11-letter alphabet — near-dup structure inside a copy is exactly the
+      source's, while cross-copy shingle collisions vanish (verbatim copies
+      would turn every doc into a C-clique of near-dups);
+    - ``embeddings``: a per-copy circular dimension rotation — copies of
+      one vector are ~orthogonal to each other, so the near-dup graph
+      grows linearly;
+    - ``lineitem``: ``l_extendedprice`` + k·0.001 — C× distinct values, so
+      the weighted-percentile / range-refine distinct-value axis grows too;
+    - ``events``: keys only — C× entities over the same time span, so
+      time-chunked plans keep their chunk count and per-entity windows
+      keep their row counts."""
+    from pyspark.sql import functions as F
+
+    df = df.withColumns(
+        {c: F.col(c) + F.lit(k * off) for c, off in KEY_OFFSETS[table].items()}
+    )
+    if k == 0:
+        return df
+    if table == "documents":
+        rot = ALPHA[k % len(ALPHA):] + ALPHA[:k % len(ALPHA)]
+        return df.withColumn("text", F.translate("text", ALPHA, rot))
+    if table == "embeddings":
+        # circular dimension rotation: slice+concat, pure Catalyst
+        return df.withColumn("embedding", F.expr(
+            f"concat(slice(embedding, {k + 1}, size(embedding) - {k}), "
+            f"slice(embedding, 1, {k}))"
+        ))
+    if table == "lineitem":
+        return df.withColumn("l_extendedprice", F.col("l_extendedprice") + F.lit(k * 0.001))
+    return df
+
+
+def replicate(spark, src: str, out: str, copies: int) -> None:
+    """Write ``copies`` copies (``_copy``) of the key tables in ``src`` to
+    ``out`` and symlink every other table. Deterministic — same input,
+    same offsets, no randomness — and a no-op once ``out`` is built."""
+    marker = os.path.join(out, "_BUILT")
+    if os.path.exists(marker):
+        return
+    os.makedirs(out, exist_ok=True)
+    for name in sorted(os.listdir(src)):
+        dst = os.path.join(out, name)
+        if name.removesuffix(".parquet") not in KEY_OFFSETS and not os.path.lexists(dst):
+            os.symlink(os.path.abspath(os.path.join(src, name)), dst)
+    for table in KEY_OFFSETS:
+        base = spark.read.parquet(os.path.join(src, f"{table}.parquet"))
+        u = _copy(table, base, 0)
+        for k in range(1, copies):
+            u = u.unionByName(_copy(table, base, k))
+        u.write.mode("overwrite").parquet(os.path.join(out, f"{table}.parquet"))
+    with open(marker, "w") as f:
+        f.write("ok\n")
+
+
+def _lsh_clusters(spark, sf_dir: str):
+    """The semantic-cluster path that runs at 100 TB: LSH bucketing whose
+    plane count grows with the corpus (log2(n/64)), so bucket occupancy —
+    and per-bucket verify cost — stays constant while the bucket COUNT
+    carries the scale. (``semantic_clusters`` is the exact all-pairs
+    oracle path: O(n²) by definition.)"""
+    from pyspark.sql import functions as F
+
+    from acoustic_feature_extractor_spark.operators import cluster as cl_ops
+    from acoustic_feature_extractor_spark.operators import similarity as sim_ops
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    planes = max(4, int(math.ceil(math.log2(max(2, e.count() / 64)))))
+    pairs = sim_ops.embedding_neardup_pairs(e, dim=64, threshold=0.45, n_planes=planes)
+    return cl_ops.dedup_clusters(pairs).select(F.col("doc_id").alias("vec_id"), "cluster_id")
+
+
+def scale(sf_dir: str, cpus: str, names: list[str]) -> None:
+    """Time each query at ``sf_dir`` and at SCALE_COPIES replicas of it,
+    and the flagship at 50k vs 10×50k conversations, both scales in one
+    JVM. A scalable plan grows by at most 10×; only the exact all-pairs
+    ``semantic_clusters`` (O(n²) by definition) may grow more. Writes
+    BENCH/SCALE10.md and prints one JSON line."""
+    from acoustic_feature_extractor_spark.session import get_spark
+
+    spark = get_spark(app_name="afe_scale", cores=int(cpus))
+    import __spark_entry__ as m
+
+    big = os.path.join(BENCH_DIR, "scale10_data", os.path.basename(sf_dir.rstrip("/")))
+    replicate(spark, sf_dir, big, SCALE_COPIES)
+    qs = {**m.queries(), "semantic_clusters_lsh": _lsh_clusters}
+    rows: dict[str, dict] = {}
+
+    def row(name: str, t1: float, t10: float, **extra) -> None:
+        rows[name] = {"sec_1x": round(t1, 3), "sec_10x": round(t10, 3),
+                      "growth": round(t10 / t1, 2) if t1 > 0 else None, **extra}
+        print(f"# {name}: {rows[name]}", file=sys.stderr, flush=True)
+
+    for name in [q for q in names or SCALE_QUERIES if q not in LANES]:
+        row(name, time_query(spark, qs[name], sf_dir)[0], time_query(spark, qs[name], big)[0])
+    lanes = [q for q in LANES if not names or q in names]
+    if lanes:
+        n1, at_1x = time_lanes(spark, N_CONVS_BENCH, lanes)
+        n10, at_10x = time_lanes(spark, SCALE_COPIES * N_CONVS_BENCH, lanes)
+        for name in lanes:
+            row(name, at_1x[name][0], at_10x[name][0], turns=[n1, n10])
+
+    line = json.dumps({"copies": SCALE_COPIES, "cores": int(cpus), "queries": rows})
+    table = "\n".join(
+        f"| {q} | {v['sec_1x']} | {v['sec_10x']} | {v['growth']}× |" for q, v in rows.items()
+    )
+    md = f"""# BENCH — 10× scale point
+
+`python bench.py --scale` on local[{cpus}]: each query at the
+sf{sf_dir.rstrip('/').split('sf')[-1]} test tables and at 10 copies of them
+(`replicate` in bench.py), the flagship at {N_CONVS_BENCH:,} vs
+{SCALE_COPIES * N_CONVS_BENCH:,} conversations. Linear growth is 10×; more
+means super-linear work, except for the exact all-pairs
+`semantic_clusters` (O(n²)), whose scale path is `semantic_clusters_lsh`.
+
+| query | sec @1× | sec @10× | time growth |
+| --- | --- | --- | --- |
+{table}
+"""
+    with open(os.path.join(BENCH_DIR, "SCALE10.md"), "w") as f:
+        f.write(md)
+    print(line)
+
+
+def ab(rev: str, reps: int, names: list[str]) -> None:
+    """Settle a floor flag (BENCH/BASELINE.md): time each query in its own
+    JVM (warm-up + best-of-2), ``reps`` JVMs per side, interleaved
+    REV/working tree so a host-load wave hits both sides equally. Both
+    sides converge ABOVE the floor -> the floor is unreproducible,
+    re-baseline it; sides at DIFFERENT steady states -> the gap is a real
+    code change, trace the commit; both sides reach the floor -> the flag
+    was cross-day host noise, clear it. Run it on an idle box."""
+    sha = _git("rev-parse", "--short", rev)
+    wt = os.path.join(tempfile.gettempdir(), f"spark_graft_ab_{sha}")
+    if not os.path.isdir(wt):
+        _git("worktree", "add", "--detach", wt, sha)
+    for name in names:
+        sides: dict[str, list[float]] = {"rev": [], "head": []}
+        for _ in range(reps):  # interleaved so load waves hit both sides
+            sides["rev"].append(_child("query", name, wt)["best"])
+            sides["head"].append(_child("query", name, REPO)["best"])
+        print(json.dumps({
+            "query": name, "rev": sha,
+            "rev_runs": sides["rev"], "head_runs": sides["head"],
+            "rev_best": min(sides["rev"]), "head_best": min(sides["head"]),
+        }), flush=True)
 
 
 if __name__ == "__main__":
