@@ -4373,9 +4373,7 @@ def q_quantile_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "events")
     # ONE sketch scan serves both binnings (the grouped call would
     # otherwise re-sketch on top of the first binning's whole plan)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    fr = [i / n_part for i in range(1, n_part)]
-    bounds = d.where(F.col("value").isNotNull()).stat.approxQuantile("value", fr, 0.01) if fr else []
+    bounds = pct_ops.value_bounds(d.where(F.col("value").isNotNull()), "value")
     g = pct_ops.quantile_bin(
         d, "value", 10, tiebreak_cols=["event_id"], out_col="bin_global",
         chunk_bounds=bounds,

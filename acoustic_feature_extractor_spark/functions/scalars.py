@@ -101,25 +101,6 @@ def clip(col: Column, lo: float, hi: float) -> Column:
     return F.least(F.greatest(col, F.lit(lo)), F.lit(hi))
 
 
-def power_to_db(
-    col: Column,
-    ref: float = 1.0,
-    amin: float = 1e-10,
-    top_db: float | None = None,
-    max_db: Column | None = None,
-) -> Column:
-    """librosa.power_to_db semantics (``extract_volume.py:32-38``):
-    10·log10(max(amin, x)) − 10·log10(ref); with ``top_db`` set, floored at
-    ``max_db − top_db`` where ``max_db`` is the caller-computed per-group
-    max (a window/agg column — computing it here would hide a global
-    shuffle inside a scalar function)."""
-    db = 10.0 * F.log10(F.greatest(col, F.lit(amin))) - F.lit(10.0) * F.log10(F.lit(max(amin, ref)))
-    if top_db is None:
-        return db
-    assert max_db is not None, "top_db flooring needs the per-group max_db column"
-    return F.greatest(db, max_db - F.lit(float(top_db)))
-
-
 def onehot(label: Column, vocabulary: list[str]) -> Column:
     """Closed-vocabulary one-hot as array<int> (``phoneme.py:44-48``)."""
     return F.array(*[(label == F.lit(v)).cast("int") for v in vocabulary])

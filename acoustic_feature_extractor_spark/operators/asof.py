@@ -11,7 +11,7 @@ Reference parity targets:
   ``sampling_data.py:87-139``): resample every source to a common rate,
   tolerance-check lengths, align min/max/first, concatenate feature axes.
 
-Three physical strategies, same semantics:
+Two physical strategies, same semantics:
 
 1. ``asof_join`` — the SCALE PATH. Pure Catalyst "union trick": tag both
    sides, union on (key, ts), one window forward-fill of the right-side
@@ -25,23 +25,24 @@ Three physical strategies, same semantics:
 
 2. ``asof_join_salted_jvm`` — the SKEW PATH. The same union trick with
    the fill window chunked on time, so a mega-entity spans many tasks; a
-   two-phase carry over the tiny (key, chunk) summary hands each chunk its
-   predecessor state. Still no Python.
-
-3. ``asof_join_cogroup`` — Arrow-batched ``pd.merge_asof`` per cogrouped
-   key (one whole entity per task; ``kind="linear"`` interpolates). The
-   tests use it as an independent oracle for the union trick.
+   two-phase carry over the tiny (key, chunk) summary
+   (``skew.carry_across_chunks``) hands each chunk its predecessor state.
+   Still no Python.
 """
 
 from __future__ import annotations
 
 from typing import Iterable
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from acoustic_feature_extractor_spark.functions.scalars import epoch_sec_fn
+from acoustic_feature_extractor_spark.operators.skew import (
+    CHUNK_KEY,
+    carry_across_chunks,
+    chunk_key,
+)
 from pyspark.sql.window import Window
 
 
@@ -197,7 +198,7 @@ def asof_join(
             .rowsBetween(Window.unboundedPreceding, 0)
         )
         fill = F.last("_r_row", ignorenulls=True).over(w)
-        dist = lambda: lts - _sec(F.col("_f_row._rts"))  # noqa: E731
+        dist = lts - _sec(F.col("_f_row._rts"))
     else:  # forward
         # mirror: the frame FOLLOWS the row, so at equal ts the right row
         # must sort at-or-after the left row to be visible (<= semantics)
@@ -208,23 +209,28 @@ def asof_join(
             .rowsBetween(0, Window.unboundedFollowing)
         )
         fill = F.first("_r_row", ignorenulls=True).over(w)
-        dist = lambda: _sec(F.col("_f_row._rts")) - lts  # noqa: E731
+        dist = _sec(F.col("_f_row._rts")) - lts
     filled = u.withColumn("_f_row", fill)
+    return _emit_filled(filled, left_cols, right_cols, on, suffix, dist, tolerance_seconds)
 
-    out = filled.where(F.col("_side") == 1)
-    keep = (
-        dist() <= F.lit(tolerance_seconds)
-        if tolerance_seconds is not None
-        else F.lit(True)
+
+def _emit_filled(
+    filled: DataFrame,
+    left_cols: list[str],
+    right_cols: list[str],
+    on: str,
+    suffix: str,
+    dist: Column,
+    tolerance_seconds: float | None,
+) -> DataFrame:
+    """The spine rows of a filled union, the matched ``_f_row`` unpacked
+    into ``{col}{suffix}`` columns; NULL where ``dist`` exceeds the
+    tolerance."""
+    keep = dist <= F.lit(tolerance_seconds) if tolerance_seconds is not None else F.lit(True)
+    fields = {f"{c}{suffix}": c for c in right_cols} | {f"{on}{suffix}": "_rts"}
+    return filled.where(F.col("_side") == 1).select(
+        *left_cols, *[F.when(keep, F.col(f"_f_row.{c}")).alias(n) for n, c in fields.items()]
     )
-    for c in right_cols:
-        out = out.withColumn(
-            f"{c}{suffix}", F.when(keep, F.col(f"_f_row.{c}")).otherwise(F.lit(None))
-        )
-    out = out.withColumn(
-        f"{on}{suffix}", F.when(keep, F.col("_f_row._rts")).otherwise(F.lit(None))
-    )
-    return out.select(*left_cols, *[f"{c}{suffix}" for c in right_cols], f"{on}{suffix}")
 
 
 def _nearest_strict(
@@ -262,67 +268,6 @@ def _nearest_strict(
     return out.select(*left_cols, *[f"{c}{suffix}" for c in right_cols], f"{on}{suffix}")
 
 
-def asof_join_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by: str = "conv_id",
-    right_cols: Iterable[str] | None = None,
-    suffix: str = "_asof",
-    kind: str = "nearest",  # "nearest" (backward) | "linear"
-) -> DataFrame:
-    """Arrow-batched sorted-merge as-of join (``pd.merge_asof`` per key).
-
-    ``kind="linear"`` interpolates numeric right columns between the
-    bracketing right rows (edge-clamped), matching the reference's
-    ``kind="linear"`` resample (``sampling_data.py:43-50`` via
-    scipy.interp1d with fill_value=(first, last)).
-    """
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c != by and c != on]
-    right_cols = list(right_cols)
-    left_fields = left.schema.fields
-    out_schema_parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in left_fields]
-    for c in right_cols:
-        dt = "double" if kind == "linear" else right.schema[c].dataType.simpleString()
-        out_schema_parts.append(f"`{c}{suffix}` {dt}")
-    out_schema = ", ".join(out_schema_parts)
-    left_names = [f.name for f in left_fields]
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.sort_values(on, kind="mergesort")
-        if rpdf.empty:
-            for c in right_cols:
-                lpdf[f"{c}{suffix}"] = None
-            return lpdf[left_names + [f"{c}{suffix}" for c in right_cols]]
-        rpdf = rpdf.sort_values(on, kind="mergesort")
-        if kind == "linear":
-            import numpy as np
-
-            lx = lpdf[on].astype("int64").to_numpy()
-            rx = rpdf[on].astype("int64").to_numpy()
-            for c in right_cols:
-                ry = rpdf[c].astype("float64").to_numpy()
-                lpdf[f"{c}{suffix}"] = np.interp(lx, rx, ry)
-        else:
-            merged = pd.merge_asof(
-                lpdf,
-                rpdf[[on] + right_cols].rename(columns={c: f"{c}{suffix}" for c in right_cols}),
-                on=on,
-                direction="backward",
-            )
-            merged.index = lpdf.index
-            for c in right_cols:
-                lpdf[f"{c}{suffix}"] = merged[f"{c}{suffix}"]
-        return lpdf[left_names + [f"{c}{suffix}" for c in right_cols]]
-
-    return (
-        left.groupBy(by)
-        .cogroup(right.groupBy(by))
-        .applyInPandas(lambda li, ri: merge(li, ri), schema=out_schema)
-    )
-
-
 def asof_join_salted_jvm(
     left: DataFrame,
     right: DataFrame,
@@ -335,7 +280,7 @@ def asof_join_salted_jvm(
     allow_exact_matches: bool = True,
 ) -> DataFrame:
     """Salted as-of join with ZERO Python — the union trick composed with
-    the skew engine's two-phase carry (``skew.py`` pattern).
+    the skew engine's two-phase carry (``skew.carry_across_chunks``).
 
     Mega-entities are split into time chunks so no task owns a whole
     conversation, entirely inside whole-stage codegen:
@@ -343,15 +288,10 @@ def asof_join_salted_jvm(
     1. tag + union both sides (as in :func:`asof_join`), right payload
        packed into ONE struct so the fill moves rows, never stitches
        columns from different right rows;
-    2. chunk on ``floor(ts / chunk_seconds)``; the fill window runs inside
-       (key, chunk) — bounded partitions regardless of entity size;
-    3. per-(key, chunk) final state = the fill value of the chunk's last
-       row (``max_by`` over the same (ts, side) order the window uses);
-    4. an exclusive forward-fill over the TINY (key, chunk) summary table
-       hands each chunk the true predecessor state (partial/final
-       aggregation, the north_star requirement); joined back (AQE picks
-       broadcast at runtime — no forced hint) and coalesced under the
-       chunk-local fill.
+    2. chunk on ``floor(ts / chunk_seconds)``; each chunk's last right row
+       in the (ts, side) window order is carried to later chunks of the
+       key (``skew.carry_across_chunks``), and the chunk-local fill falls
+       back to it — bounded partitions regardless of entity size.
 
     Exactly the unsalted :func:`asof_join` frame-for-frame (tests pin it);
     zero temporal leakage: carries only ever move right state FORWARD.
@@ -365,59 +305,21 @@ def asof_join_salted_jvm(
     # order drives both the window and the chunk-last max_by
     sk = F.col("_side") if allow_exact_matches else -F.col("_side")
     _sec = epoch_sec_fn(u, on)  # tz-independent; dtype-dispatched
-    u = u.withColumn("_chunk", F.floor(_sec(F.col(on)) / F.lit(chunk_seconds)).cast("long"))
-    u = u.withColumn("_sk", sk)
-
+    chunk = F.floor(_sec(F.col(on)) / F.lit(chunk_seconds)).cast("long")
+    u = u.withColumn(CHUNK_KEY, chunk_key(by_cols, chunk)).withColumn("_sk", sk)
+    # a chunk's state is its last right row in the window's (ts, side) order
+    u = carry_across_chunks(
+        u, lasts={"_carry": F.col("_r_row")}, order=F.struct(F.col(on), F.col("_sk"))
+    )
     w_local = (
-        Window.partitionBy(*by_cols, "_chunk")
+        Window.partitionBy(*by_cols, CHUNK_KEY)
         .orderBy(F.col(on).asc(), F.col("_sk").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    u = u.withColumn("_local", F.last("_r_row", ignorenulls=True).over(w_local))
-
-    # per-chunk final state: the _local of the chunk's LAST row in window
-    # order (its running fill == the chunk's last non-null right row).
-    # Window output is already hash-partitioned on (by, chunk), so this
-    # groupBy adds no exchange.
-    lasts = u.groupBy(*by_cols, "_chunk").agg(
-        F.max_by("_local", F.struct(F.col(on), F.col("_sk"))).alias("_chunk_last")
-    )
-    w_carry = (
-        Window.partitionBy(*by_cols)
-        .orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = lasts.select(
-        *[F.col(c).alias(f"_cb_{c}") for c in by_cols],
-        F.col("_chunk").alias("_cc"),
-        F.last("_chunk_last", ignorenulls=True).over(w_carry).alias("_carry"),
-    ).where(F.col("_carry").isNotNull())
-
-    cond = F.col("_cc") == F.col("_chunk")
-    for c in by_cols:
-        cond = cond & (F.col(f"_cb_{c}") == F.col(c))
-    filled = u.join(carry, cond, "left").withColumn(
-        "_f_row", F.coalesce(F.col("_local"), F.col("_carry"))
-    )
-
-    out = filled.where(F.col("_side") == 1)
-    keep = (
-        (
-            _sec(F.col(on))
-            - _sec(F.col("_f_row._rts"))
-        )
-        <= F.lit(tolerance_seconds)
-        if tolerance_seconds is not None
-        else F.lit(True)
-    )
-    for c in right_cols:
-        out = out.withColumn(
-            f"{c}{suffix}", F.when(keep, F.col(f"_f_row.{c}")).otherwise(F.lit(None))
-        )
-    out = out.withColumn(
-        f"{on}{suffix}", F.when(keep, F.col("_f_row._rts")).otherwise(F.lit(None))
-    )
-    return out.select(*left_cols, *[f"{c}{suffix}" for c in right_cols], f"{on}{suffix}")
+    local = F.last("_r_row", ignorenulls=True).over(w_local)
+    filled = u.withColumn("_f_row", F.coalesce(local, F.col("_carry")))
+    dist = _sec(F.col(on)) - _sec(F.col("_f_row._rts"))
+    return _emit_filled(filled, left_cols, right_cols, on, suffix, dist, tolerance_seconds)
 
 
 def resample_grid(

@@ -266,26 +266,6 @@ def _doc_sets(sh: DataFrame, id_col: str) -> DataFrame:
     return sh.groupBy(id_col).agg(F.array_sort(F.collect_set("shingle")).alias("_set"))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = 3,
-    num_hashes: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash signatures: sig[i] = min over shingles of (aᵢ·h + bᵢ mod p).
-
-    One explode + one groupBy with ``num_hashes`` min-aggregates — a single
-    shuffle, all JVM-side. Signature returned as array<long>. The shingle
-    dedup shuffle is skipped: min() is duplicate-invariant, and Catalyst's
-    partial aggregation already collapses each partition to one row per
-    (id × hash) before the exchange.
-    """
-    sh = _shingle_table(df, text_col, id_col, w, distinct=False)
-    return _signatures_from_shingles(sh, id_col, num_hashes, seed)
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",

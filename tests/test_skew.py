@@ -45,8 +45,19 @@ def test_salted_rolling_equals_plain(spark):
     assert len(got) == len(exp)
 
 
+def _with_null_key(spark, df, n=130):
+    """``df`` plus a NULL-key entity spanning several chunks: one entity,
+    as in the plain window, and none of its rows may be lost."""
+    rng = np.random.RandomState(5)
+    extra = pd.DataFrame(
+        {"conv_id": [None] * n, "turn_idx": range(n), "v": rng.rand(n) * 100}
+    )
+    extra.loc[extra.index % 4 == 1, "v"] = None
+    return df.unionByName(spark.createDataFrame(extra, schema=df.schema))
+
+
 def test_salted_cumsum_equals_plain(spark):
-    df = _skewed(spark).withColumn("v", F.coalesce("v", F.lit(0.0)))
+    df = _with_null_key(spark, _skewed(spark)).withColumn("v", F.coalesce("v", F.lit(0.0)))
     got = (
         salted_cumsum(df, "v", chunk_rows=50, out_col="c")
         .orderBy("conv_id", "turn_idx")
@@ -54,11 +65,12 @@ def test_salted_cumsum_equals_plain(spark):
     )
     w = Window.partitionBy("conv_id").orderBy("turn_idx").rowsBetween(Window.unboundedPreceding, 0)
     exp = df.withColumn("c", F.sum("v").over(w)).orderBy("conv_id", "turn_idx").toPandas()
+    assert len(got) == len(exp) == 660
     np.testing.assert_allclose(got["c"].to_numpy(), exp["c"].to_numpy(), rtol=1e-9)
 
 
 def test_salted_ffill_equals_plain(spark):
-    df = _skewed(spark)
+    df = _with_null_key(spark, _skewed(spark))
     got = (
         salted_forward_fill(df, "v", chunk_rows=40, out_col="f")
         .orderBy("conv_id", "turn_idx")
@@ -70,6 +82,7 @@ def test_salted_ffill_equals_plain(spark):
         .orderBy("conv_id", "turn_idx")
         .toPandas()
     )
+    assert len(got) == len(exp) == 660
     np.testing.assert_array_equal(
         got["f"].to_numpy(dtype=float), exp["f"].to_numpy(dtype=float)
     )

@@ -841,7 +841,7 @@ def test_future_outcomes_bruteforce(spark):
 def test_chunked_carry_pre_epoch_timestamps(spark):
     """Spark's % takes the dividend's sign: a pre-1970 timestamp gets a
     negative remainder, so the old carry predicate never fired and the
-    chunked plan silently diverged from the plain one. _chunk_salt uses
+    chunked plan silently diverged from the plain one. skew.carry_rows uses
     pmod; chunked must equal plain on both operators for negative-µs
     data."""
     from acoustic_feature_extractor_spark.operators.temporal import (
@@ -880,12 +880,15 @@ def test_chunked_carry_pre_epoch_timestamps(spark):
 
 def test_chunked_keeps_null_timestamp_rows(spark):
     """A NULL-ts row joins no RANGE frame, but it must still EMIT: the
-    chunk explode would otherwise delete it (all-null chunk array), so
-    chunked output lost rows vs plain. Pinned for both chunked
-    operators: same rows, same values, frame-for-frame."""
+    chunk explode would otherwise delete it (all-null chunk array), and an
+    equi-join back on a nullable (key, chunk) would drop it, so chunked
+    output lost rows vs plain. A NULL-key entity sits next to the NULL-ts
+    rows: it is one entity, as in the plain window. Pinned for every
+    chunked operator: same rows, same values, frame-for-frame (time decay,
+    which has no plain path, against its docstring formula)."""
     from acoustic_feature_extractor_spark.operators.temporal import (
+        expanding_distinct_count,
         time_since_event,
-        trailing_time_window,
     )
 
     rows = []
@@ -894,27 +897,64 @@ def test_chunked_keeps_null_timestamp_rows(spark):
                      float(i % 7), "c0" if i % 5 == 0 else "c1"))
     rows.append(("u0", 60, None, 3.0, "c0"))  # null ts, marked
     rows.append(("u0", 61, None, 4.0, "c1"))  # null ts, unmarked
+    for i in range(24):  # the NULL-key entity, a NULL category among it
+        rows.append((None, 62 + i, EPOCH + dt.timedelta(seconds=i * 307.0),
+                     float(i % 5), [None, "c0", "c1"][i % 3]))
+    rows.append((None, 86, None, 2.0, "c1"))
+    n = len(rows)
     pdf = pd.DataFrame(rows, columns=["user_id", "event_id", "ts", "value", "cat"])
     df = spark.createDataFrame(pdf)
 
-    plain_t = trailing_time_window(
-        df, "value", [900.0], key="user_id", ts_col="ts"
-    ).orderBy("event_id").toPandas()
-    chunk_t = trailing_time_window(
-        df, "value", [900.0], key="user_id", ts_col="ts", chunk_seconds=1800.0
-    ).orderBy("event_id").toPandas()[plain_t.columns]
-    assert len(plain_t) == 62 and len(chunk_t) == 62
-    pd.testing.assert_frame_equal(plain_t.reset_index(drop=True),
-                                  chunk_t.reset_index(drop=True))
+    def same(plain, chunked):
+        a = plain.orderBy("event_id").toPandas()
+        b = chunked.orderBy("event_id").toPandas()[a.columns]
+        assert len(a) == n and len(b) == n
+        pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
 
+    same(
+        trailing_time_window(df, "value", [900.0], key="user_id", ts_col="ts"),
+        trailing_time_window(
+            df, "value", [900.0], key="user_id", ts_col="ts", chunk_seconds=1800.0
+        ),
+    )
     mark = F.col("cat") == "c0"
-    plain_s = time_since_event(
-        df, mark, key="user_id", ts_col="ts", max_lookback_seconds=900.0
-    ).orderBy("event_id").toPandas()
-    chunk_s = time_since_event(
-        df, mark, key="user_id", ts_col="ts",
-        chunk_seconds=1800.0, max_lookback_seconds=900.0,
-    ).orderBy("event_id").toPandas()[plain_s.columns]
-    assert len(plain_s) == 62 and len(chunk_s) == 62
-    pd.testing.assert_frame_equal(plain_s.reset_index(drop=True),
-                                  chunk_s.reset_index(drop=True))
+    same(
+        time_since_event(
+            df, mark, key="user_id", ts_col="ts", max_lookback_seconds=900.0
+        ),
+        time_since_event(
+            df, mark, key="user_id", ts_col="ts",
+            chunk_seconds=1800.0, max_lookback_seconds=900.0,
+        ),
+    )
+    kw = dict(ts_col="ts", tiebreak_col="event_id")
+    same(
+        past_target_encode(df, "cat", "value", chunk_seconds=None, **kw),
+        past_target_encode(df, "cat", "value", **kw),  # default chunking
+    )
+    kw = dict(key="user_id", ts_col="ts", tiebreak_col="event_id")
+    same(
+        expanding_distinct_count(df, "cat", **kw),
+        expanding_distinct_count(df, "cat", chunk_seconds=1800.0, **kw),
+    )
+
+    got = (
+        time_decayed_sum(df, "value", 600.0, chunk_half_lives=2, **kw)
+        .orderBy("event_id")
+        .toPandas()
+    )
+    assert len(got) == n
+    for _, r in pdf.iterrows():
+        g = got.loc[got.event_id == r.event_id, "value_decay"].iloc[0]
+        if pd.isna(r.ts):
+            assert pd.isna(g), r.event_id  # NULL t: NULL exponent
+            continue
+        past = pdf[
+            (pdf.user_id.isna() if r.user_id is None else pdf.user_id == r.user_id)
+            & pdf.ts.notna()
+        ]
+        past = past[(past.ts < r.ts) | ((past.ts == r.ts) & (past.event_id < r.event_id))]
+        want = float(
+            (past.value * 2.0 ** (-(r.ts - past.ts).dt.total_seconds() / 600.0)).sum()
+        )
+        assert g == pytest.approx(want, rel=1e-9, abs=1e-12), r.event_id
