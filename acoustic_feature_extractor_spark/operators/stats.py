@@ -19,9 +19,24 @@ broadcast into the projection — no second shuffle over the fact table.
 from __future__ import annotations
 
 from acoustic_feature_extractor_spark.plans.hints import maybe_broadcast
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def corpus_aggs(value: str | Column) -> list[Column]:
+    """The aggregates of :func:`corpus_stats` over one value: mean,
+    var_pop, stddev_pop, count, min and max. Also usable as the metrics of
+    an ``Observation``, which computes them on a write instead of in a
+    job of their own."""
+    return [
+        F.mean(value).alias("mean"),
+        F.var_pop(value).alias("var"),
+        F.stddev_pop(value).alias("stddev"),
+        F.count(value).alias("n"),
+        F.min(value).alias("min"),
+        F.max(value).alias("max"),
+    ]
 
 
 def corpus_stats(
@@ -32,14 +47,7 @@ def corpus_stats(
 ) -> DataFrame:
     """mean / var_pop / stddev_pop / count over valid rows, optionally grouped."""
     src = df.where(F.col(valid_col)) if valid_col else df
-    aggs = [
-        F.mean(value_col).alias("mean"),
-        F.var_pop(value_col).alias("var"),
-        F.stddev_pop(value_col).alias("stddev"),
-        F.count(value_col).alias("n"),
-        F.min(value_col).alias("min"),
-        F.max(value_col).alias("max"),
-    ]
+    aggs = corpus_aggs(value_col)
     if group_cols:
         return src.groupBy(*group_cols).agg(*aggs)
     return src.agg(*aggs)

@@ -25,7 +25,7 @@ class RunManifest:
     partitions: list[dict] = field(default_factory=list)
     finished_unix: float | None = None
 
-    def record_partition(self, partition_id: str, rows: int, seconds: float, **extra) -> None:
+    def record_partition(self, partition_id: str, rows: int, seconds: float | None, **extra) -> None:
         self.partitions.append(
             {"partition": partition_id, "rows": rows, "seconds": seconds, **extra}
         )
@@ -34,11 +34,7 @@ class RunManifest:
         self.finished_unix = time.time()
 
     def save(self, out_dir: str) -> str:
-        os.makedirs(out_dir, exist_ok=True)
-        path = os.path.join(out_dir, "manifest.json")
-        with open(path, "w") as f:
-            json.dump(asdict(self), f, indent=2, default=str)
-        return path
+        return _write_json(os.path.join(out_dir, "manifest.json"), asdict(self))
 
     @staticmethod
     def load(out_dir: str) -> "RunManifest | None":
@@ -63,8 +59,18 @@ def completed_partitions(out_dir: str) -> set[str]:
 
 def save_arguments(args: dict, out_dir: str) -> str:
     """Direct ``arguments.json`` analog (provenance sink S6)."""
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "arguments.json")
-    with open(path, "w") as f:
-        json.dump({k: str(v) for k, v in args.items()}, f, indent=2)
+    return _write_json(
+        os.path.join(out_dir, "arguments.json"), {k: str(v) for k, v in args.items()}
+    )
+
+
+def _write_json(path: str, obj: dict) -> str:
+    """Write ``obj`` to a temp file, then rename it over ``path``: a kill
+    at any point leaves either the previous file or the new one, never a
+    torn one that ``--resume`` could not load."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=2, default=str)
+    os.replace(tmp, path)
     return path

@@ -12,21 +12,38 @@ Execution model (north_rule: "resumable from checkpoint with
 per-partition lineage + metrics"):
 
 - the conversation space is split into ``--buckets`` hash buckets
-  (``xxhash64(conv_id) % K``); conversations never straddle buckets, so
-  every engine op (windows, sessionization, fill, as-of) is exact within
-  a bucket — the bucket is the unit of work, checkpointing, and resume.
-- each bucket runs as its own Spark write job into
-  ``<output>/bucket=<i>/``; on success its row count + wall time is
-  appended to ``<output>/_manifest/manifest.json`` (the reference's
-  ``arguments.json`` provenance generalized,
-  ``/root/reference/src/acoustic_feature_extractor/utility/json_utility.py:14-15``).
-  The manifest is saved after EVERY bucket, so a killed run loses at most
-  one bucket of work.
-- ``--resume`` skips buckets already present in the manifest (the
-  Iceberg-snapshot analog for the parquet backend); corpus statistics are
-  computed once over the full input and frozen into the manifest so
+  (``pmod(xxhash64(conv_id), K)``); conversations never straddle buckets,
+  so every engine op (windows, sessionization, fill, as-of) is exact
+  within a bucket — the bucket is the unit of work, checkpointing, and
+  resume.
+- one staging scan reads the input once: a map-only write (no shuffle)
+  saves it as ``<output>/_staging/_bucket=<b>/``, and bucket *b* reads
+  only its own directory. An ``Observation`` on that write yields the
+  corpus statistics of ``length(text)`` (the ``corpus_stats``
+  aggregates) and the staged row count without a job of their own; both
+  are frozen into the manifest (``_frozen_stats``, ``_staged_rows``) so
   resumed buckets normalize against identical stats (no leakage between
-  restart and original run).
+  restart and original run). A bucket no conversation hashes to is
+  recorded with 0 rows.
+- the pending buckets run concurrently, from a thread pool of
+  ``defaultParallelism`` threads (PySpark's pinned-thread mode keeps each
+  thread's Spark jobs apart). Each writes ``<output>/bucket=<i>/``; only
+  after that write commits is its row count + wall time recorded in
+  ``<output>/_manifest/manifest.json`` (the reference's
+  ``arguments.json`` provenance generalized, see ``plans/lineage.py``),
+  and the manifest saved, under one lock. A killed run loses at most the
+  in-flight buckets. Per-bucket ``seconds`` overlap, so they sum to more
+  than the run's wall time.
+- ``--resume`` skips buckets already present in the manifest (the
+  Iceberg-snapshot analog for the parquet backend). It re-stages only
+  when buckets are pending and ``_staging/_SUCCESS`` is missing, and the
+  frozen stats always win over re-observed ones. ``_staging`` is deleted
+  once every bucket is recorded.
+- the run exits non-zero when the recorded bucket rows, resumed ones
+  included, do not sum to ``_staged_rows``.
+- ``--snapshots`` commits each bucket as an append snapshot instead. The
+  snapshot log is single-writer, so its commits are serialized under the
+  same lock, and that mode gains only the overlap of plan building.
 
 The final metrics line (one JSON object on stdout) reports per-bucket
 lineage and aggregate turns/sec.
@@ -37,11 +54,15 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 
@@ -64,7 +85,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args(argv)
 
-    from acoustic_feature_extractor_spark.plans.lineage import RunManifest, completed_partitions
+    from acoustic_feature_extractor_spark.plans.lineage import RunManifest
     from acoustic_feature_extractor_spark.plans.pipeline import turn_features
     from acoustic_feature_extractor_spark.session import get_spark
 
@@ -81,18 +102,7 @@ def main(argv: list[str] | None = None) -> int:
 
     manifest_dir = os.path.join(args.output, "_manifest")
     snap_table = os.path.join(args.output, "features")
-    if args.snapshots:
-        from acoustic_feature_extractor_spark.sources import snapshots as snaplog
-
-        # the snapshot LOG is the source of truth for completed buckets:
-        # an entry exists iff that bucket's data committed atomically
-        done = (
-            {s.lineage.get("bucket") for s in snaplog.history(snap_table)}
-            if args.resume
-            else set()
-        )
-    else:
-        done = completed_partitions(manifest_dir) if args.resume else set()
+    staging = os.path.join(args.output, "_staging")
     prev = RunManifest.load(manifest_dir) if args.resume else None
     if prev is not None:
         # a resumed run MUST partition identically: mismatched buckets /
@@ -108,62 +118,81 @@ def main(argv: list[str] | None = None) -> int:
 
     run_id = f"run-{int(time.time())}"
     manifest = RunManifest(run_id=run_id, args=vars(args))
-    stats = None
+    frozen = {}
     if prev is not None:
-        # snapshot mode: keep only lineage the log still vouches for (a
-        # crash between snapshot commit and manifest save makes the
-        # manifest lag the log, never lead it)
+        manifest.partitions = list(prev.partitions)
+        frozen = {k: prev.args[k] for k in ("_frozen_stats", "_staged_rows") if k in prev.args}
+    if args.snapshots:
+        from acoustic_feature_extractor_spark.sources import snapshots as snaplog
+
+        # the snapshot LOG is the source of truth for completed buckets:
+        # an entry exists iff that bucket's data committed atomically. Keep
+        # the lineage the log still vouches for, and the empty buckets,
+        # which commit nothing; a bucket whose commit landed but whose
+        # manifest save was lost is recorded from the log.
+        logged = (
+            {s.lineage.get("bucket"): s.rows for s in snaplog.history(snap_table)}
+            if args.resume
+            else {}
+        )
         manifest.partitions = [
-            p
-            for p in prev.partitions
-            if not args.snapshots or p.get("partition") in done
+            p for p in manifest.partitions if p["partition"] in logged or p["rows"] == 0
         ]
-        stats = (prev.args or {}).get("_frozen_stats")
+        for pid in logged.keys() - {p["partition"] for p in manifest.partitions}:
+            manifest.record_partition(pid, rows=logged[pid], seconds=None)
+    done = {p["partition"] for p in manifest.partitions}
+    pending = [b for b in range(args.buckets) if f"bucket={b}" not in done]
 
-    # Corpus stats computed ONCE over the full input and frozen into the
-    # manifest — resumed buckets must normalize against the same numbers.
-    if stats is None:
-        from acoustic_feature_extractor_spark.operators.stats import corpus_stats
+    t_all = time.perf_counter()
+    if "_staged_rows" not in frozen or (
+        pending and not os.path.exists(os.path.join(staging, "_SUCCESS"))
+    ):
+        frozen = {**_stage(t, staging, args.buckets), **frozen}
+    manifest.args.update(frozen)
+    manifest.save(manifest_dir)
 
-        row = corpus_stats(
-            t.withColumn("text_len", F.length("text").cast("double")), "text_len"
-        ).first()
-        stats = {"mean": row["mean"], "stddev": row["stddev"]}
-    manifest.args["_frozen_stats"] = stats
+    stats, schema, lock = frozen["_frozen_stats"], t.schema, threading.Lock()
 
-    bucket = F.pmod(F.xxhash64("conv_id"), F.lit(args.buckets))
-    t = t.withColumn("_bucket", bucket)
-
-    total_rows, t_all = 0, time.perf_counter()
-    for b in range(args.buckets):
+    def run_bucket(b: int) -> int:
         pid = f"bucket={b}"
-        if pid in done:
-            continue
         t0 = time.perf_counter()
-        part = t.where(F.col("_bucket") == b).drop("_bucket")
-        feats = turn_features(part, gap_seconds=args.gap_seconds, frozen_stats=stats)
-        if args.snapshots:
-            snap = snaplog.commit(
-                feats,
-                snap_table,
-                lineage={"bucket": pid, "run_id": run_id},
-            )
-            rows = snap.rows
-        else:
-            out_path = os.path.join(args.output, pid)
-            # row count via Observation on the write itself — re-reading
-            # the fresh output would double the job's I/O at scale
-            from pyspark.sql import Observation
+        src = os.path.join(staging, f"_bucket={b}")
+        rows = 0  # no conversation hashes to this bucket: nothing to write
+        if os.path.isdir(src):
+            # the input's schema: no footer-reading job per bucket
+            part = spark.read.schema(schema).parquet(src)
+            feats = turn_features(part, gap_seconds=args.gap_seconds, frozen_stats=stats)
+            if args.snapshots:
+                with lock:  # the snapshot log is single-writer
+                    rows = snaplog.commit(
+                        feats, snap_table, lineage={"bucket": pid, "run_id": run_id}
+                    ).rows
+            else:
+                # row count via Observation on the write itself — re-reading
+                # the fresh output would double the job's I/O at scale
+                obs = Observation(f"rows_{pid}")
+                feats.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                    "overwrite"
+                ).parquet(os.path.join(args.output, pid))
+                rows = int(obs.get["rows"])
+        with lock:  # recorded only after its write committed
+            manifest.record_partition(pid, rows=rows, seconds=round(time.perf_counter() - t0, 3))
+            manifest.save(manifest_dir)
+        return rows
 
-            obs = Observation(f"rows_{pid}")
-            feats.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                "overwrite"
-            ).parquet(out_path)
-            rows = int(obs.get["rows"])
-        total_rows += rows
-        manifest.record_partition(pid, rows=rows, seconds=round(time.perf_counter() - t0, 3))
-        manifest.save(manifest_dir)  # checkpoint after every bucket
+    threads = max(1, min(len(pending), spark.sparkContext.defaultParallelism))
+    with ThreadPoolExecutor(max_workers=threads) as pool:
+        total_rows = sum(pool.map(run_bucket, pending))
+    shutil.rmtree(staging, ignore_errors=True)
 
+    recorded = sum(p["rows"] for p in manifest.partitions)
+    if recorded != frozen["_staged_rows"]:
+        print(
+            f"row check failed: the buckets recorded {recorded} rows, "
+            f"the staging scan saw {frozen['_staged_rows']}",
+            file=sys.stderr,
+        )
+        return 1
     manifest.finish()
     manifest.save(manifest_dir)
     wall = time.perf_counter() - t_all
@@ -180,6 +209,23 @@ def main(argv: list[str] | None = None) -> int:
         )
     )
     return 0
+
+
+def _stage(t, staging: str, buckets: int) -> dict:
+    """Write ``t`` once as ``staging/_bucket=<b>/`` (map-only: no bucket is
+    forced into one task) and return the frozen-stats entries observed on
+    that write."""
+    from acoustic_feature_extractor_spark.operators.stats import corpus_aggs
+
+    obs = Observation("staging")
+    t.withColumn("_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(buckets))).observe(
+        obs, *corpus_aggs(F.length("text").cast("double")), F.count(F.lit(1)).alias("rows")
+    ).write.mode("overwrite").partitionBy("_bucket").parquet(staging)
+    m = obs.get
+    return {
+        "_frozen_stats": {"mean": m["mean"], "stddev": m["stddev"]},
+        "_staged_rows": int(m["rows"]),
+    }
 
 
 if __name__ == "__main__":

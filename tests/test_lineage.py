@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
+
 from acoustic_feature_extractor_spark.plans.lineage import (
     RunManifest,
     completed_partitions,
@@ -26,6 +28,29 @@ def test_manifest_roundtrip_and_resume():
             "conv000000-conv000099",
             "conv000100-conv000199",
         }
+
+
+def test_save_that_fails_midway_keeps_previous_manifest(tmp_path):
+    """A save killed partway must not tear manifest.json: --resume loads
+    the previous manifest."""
+    d = str(tmp_path)
+    m = RunManifest(run_id="r1", args={"buckets": 4})
+    m.record_partition("bucket=0", rows=10, seconds=0.5)
+    m.save(d)
+
+    class Unprintable:
+        def __str__(self):
+            raise OSError("disk full")
+
+    # json.dump streams: everything before this partition is written
+    # when the encoder reaches it and raises
+    m.record_partition("bucket=1", rows=11, seconds=0.4, note=Unprintable())
+    with pytest.raises(OSError):
+        m.save(d)
+
+    loaded = RunManifest.load(d)
+    assert loaded is not None and loaded.args == {"buckets": 4}
+    assert [p["partition"] for p in loaded.partitions] == ["bucket=0"]
 
 
 def test_save_arguments():
