@@ -27,6 +27,8 @@ exact value cannot be carried.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -652,6 +654,38 @@ def ks_from_hists(
             F.max("_gap").alias(out_col),
         )
     )
+
+
+def drift_from_counts(
+    ref: list[int], cur: list[int], eps: float = 1e-6
+) -> tuple[float, float | None]:
+    """``(psi, ks)`` of two bin-count lists, scored on the driver for when
+    both histograms are already there (one pinned in lineage, one
+    collected): the math of :func:`psi_from_hists` (Laplace ``eps``, the
+    summed per-bin ``(p−q)·ln(p/q)``) and :func:`ks_from_hists` (the max
+    ECDF gap; ``None`` when either side totals zero) without shipping the
+    counts back into Spark. Raises on a width mismatch, as their in-plan
+    check does."""
+    if len(ref) != len(cur):
+        raise ValueError(
+            f"drift_from_counts: ref hist width {len(ref)} != cur hist width {len(cur)}"
+        )
+    bins = len(ref)
+    tot_r, tot_c = sum(ref), sum(cur)
+    psi = 0.0
+    for n_r, n_c in zip(ref, cur):
+        p = (n_r + eps) / (tot_r + eps * bins)
+        q = (n_c + eps) / (tot_c + eps * bins)
+        psi += (p - q) * math.log(p / q)
+    if tot_r == 0 or tot_c == 0:
+        return psi, None
+    ks = 0.0
+    cum_r = cum_c = 0
+    for n_r, n_c in zip(ref, cur):
+        cum_r += n_r
+        cum_c += n_c
+        ks = max(ks, abs(cum_r / tot_r - cum_c / tot_c))
+    return psi, ks
 
 
 def freq_apply_changes(

@@ -54,9 +54,12 @@ import shutil
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import lru_cache
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 _LOG = "metadata/snapshots.json"
 _LOCK = "metadata/commit.lock"
@@ -142,9 +145,9 @@ class Snapshot:
     # {dir_rel: schema_ddl} — which (possibly evolved) schema wrote each
     # dir. Populated by :func:`compact_log`/:func:`expire` when they fold
     # away the historical entries that otherwise carry this information
-    # implicitly; consulted by ``_spans_writer_schemas`` so mergeSchema
-    # detection survives log compaction. Empty on ordinary commits (the
-    # full entry chain is the source of truth while it exists).
+    # implicitly; consulted by ``_spans_writer_schemas`` so the mergeSchema
+    # fallback of ``_scan`` survives log compaction. Empty on ordinary
+    # commits (the full entry chain is the source of truth while it exists).
     writer_schemas: dict = field(default_factory=dict)
 
 
@@ -327,10 +330,9 @@ def commit(
     ``evolve=True`` permits ADDITIVE schema evolution on append (new
     columns; every existing column must keep its exact type — the
     Iceberg add-column rule): historical files simply read the new
-    columns as NULL (:func:`read` detects the mixed log and turns on
-    mergeSchema), no rewrite of any old byte. Renames/drops/type changes
-    stay rejected — they reinterpret existing data and need an explicit
-    overwrite.
+    columns as NULL (every read passes the logged schema, :func:`_scan`),
+    no rewrite of any old byte. Renames/drops/type changes stay rejected —
+    they reinterpret existing data and need an explicit overwrite.
     """
     if operation not in ("append", "overwrite"):
         raise ValueError(f"operation must be append|overwrite, got {operation}")
@@ -370,39 +372,94 @@ def commit(
     return snap
 
 
+def _snapshot(snaps: list[Snapshot], snapshot_id: int | None) -> Snapshot:
+    """The log entry ``snapshot_id`` (default: current) of ``snaps``."""
+    if snapshot_id is None:
+        return snaps[-1]
+    for s in snaps:
+        if s.snapshot_id == snapshot_id:
+            return s
+    raise KeyError(
+        f"snapshot {snapshot_id} not in log "
+        f"(have {sorted(s.snapshot_id for s in snaps)}) — expired?"
+    )
+
+
+@lru_cache(maxsize=64)
+def _logged_struct(schema: str) -> StructType | None:
+    """The logged ``schema`` string parsed back into a StructType, or None
+    when it does not round-trip (a column name the simpleString form
+    cannot quote, a type the parser reads differently)."""
+    try:
+        parsed = _parse_datatype_string(schema)
+    except ParseException:
+        return None
+    if not isinstance(parsed, StructType) or parsed.simpleString() != schema:
+        return None
+    return parsed
+
+
+def _scan(
+    spark: SparkSession,
+    table_path: str,
+    snaps: list[Snapshot],
+    rels: list[str],
+    schema: str,
+    dirs: list[str] | None = None,
+) -> DataFrame:
+    """The one way this module reads data: ``rels`` (data dirs, or files
+    in ``dirs``) read at the logged ``schema``.
+
+    The log already records the schema, so it is passed to the reader and
+    no job infers it from parquet footers. Every dir's writer schema is
+    the logged one or an additive ancestor of it (:func:`commit`'s
+    evolution rule), so files written before an ``evolve=True`` append
+    surface its new columns as NULL — also in a merge or compaction that
+    reads only such dirs. Only when the logged string does not round-trip
+    does the read fall back to inference, with ``mergeSchema`` when the
+    dirs were written under more than one schema (otherwise an arbitrary
+    file's schema wins and newer columns vanish)."""
+    reader = spark.read
+    parsed = _logged_struct(schema)
+    if parsed is not None:
+        reader = reader.schema(parsed)
+    elif _spans_writer_schemas(snaps, dirs if dirs is not None else rels, schema):
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*[os.path.join(table_path, r) for r in rels])
+
+
 def read(
     spark: SparkSession, table_path: str, snapshot_id: int | None = None
 ) -> DataFrame:
     """Read the table at ``snapshot_id`` (default: current). Time travel is
     resolving an older log entry to its directory list."""
+    return read_dirs(spark, table_path, snapshot_id=snapshot_id)
+
+
+def read_dirs(
+    spark: SparkSession,
+    table_path: str,
+    dirs: list[str] | None = None,
+    snapshot_id: int | None = None,
+) -> DataFrame:
+    """Read ``dirs`` (relative data dirs; default: all of the snapshot's)
+    at the logged schema of ``snapshot_id`` (default: current) — e.g. the
+    dirs an increment appended, found by diffing two snapshots' lists."""
     snaps = _load_log(table_path)
     if not snaps:
         raise FileNotFoundError(f"no snapshots at {table_path}")
-    if snapshot_id is None:
-        snap = snaps[-1]
-    else:
-        by_id = {s.snapshot_id: s for s in snaps}
-        if snapshot_id not in by_id:
-            raise KeyError(
-                f"snapshot {snapshot_id} not in log (have {sorted(by_id)}) — expired?"
-            )
-        snap = by_id[snapshot_id]
-    reader = spark.read
-    # additive schema evolution: when the snapshot's dirs were written by
-    # snapshots with DIFFERENT schemas (evolve=True appends), merge the
-    # file schemas so historical files surface the newer columns as NULL.
-    # The option costs extra footer reads, so it stays off for the common
-    # homogeneous log.
-    if _spans_writer_schemas(snaps, snap.dirs, snap.schema):
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*[os.path.join(table_path, d) for d in snap.dirs])
+    snap = _snapshot(snaps, snapshot_id)
+    return _scan(
+        spark, table_path, snaps, snap.dirs if dirs is None else dirs, snap.schema
+    )
 
 
 def _spans_writer_schemas(snaps, dirs, fallback_schema) -> bool:
     """True when ``dirs`` were written under more than one (additively
     evolved) schema — the condition under which a multi-dir parquet read
-    must mergeSchema, or an arbitrary file's schema wins and newer
-    columns silently vanish."""
+    that infers its schema (:func:`_scan`'s fallback) must mergeSchema,
+    or an arbitrary file's schema wins and newer columns silently
+    vanish."""
     writer_schema = {}
     for s in snaps:
         # compaction folds dropped entries' dir→schema mapping into the
@@ -536,14 +593,7 @@ def plan_scan_multi(
         if lo is None and hi is None:
             raise ValueError(f"predicate on {c!r} needs at least one bound")
     idx = _planner_index(table_path)
-    snaps = idx["snaps"]
-    if snapshot_id is None:
-        target = snaps[-1]
-    else:
-        by_id = {s.snapshot_id: s for s in snaps}
-        if snapshot_id not in by_id:
-            raise KeyError(f"snapshot {snapshot_id} not in log")
-        target = by_id[snapshot_id]
+    target = _snapshot(idx["snaps"], snapshot_id)
     stats = idx["stats"]
     keys = {
         c: (
@@ -649,19 +699,12 @@ def read_where_multi(
     if not kept:
         df = read(spark, table_path, snapshot_id).limit(0)
     else:
-        # same evolve=True contract as read(): if the kept files span
-        # dirs written under different (additive) schemas, merge them —
-        # otherwise one file's schema wins arbitrarily and newer columns
-        # are silently absent from the pruned read.
+        # same evolve=True contract as read(): the kept files are read at
+        # the snapshot's logged schema, whichever dirs they come from
         snaps = _load_log(table_path)
-        tgt = snaps[-1]
-        if snapshot_id is not None:
-            tgt = {s.snapshot_id: s for s in snaps}[snapshot_id]
+        tgt = _snapshot(snaps, snapshot_id)
         kept_dirs = sorted({f.rsplit("/", 1)[0] for f in kept})
-        reader = spark.read
-        if _spans_writer_schemas(snaps, kept_dirs, tgt.schema):
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*[os.path.join(table_path, f) for f in kept])
+        df = _scan(spark, table_path, snaps, kept, tgt.schema, dirs=kept_dirs)
     for col, (lo, hi) in preds.items():
         c = F.col(col)
         if lo is not None:
@@ -687,14 +730,7 @@ def table_profile(table_path: str, snapshot_id: int | None = None) -> dict:
     ``os.listdir`` runs only for a pre-stats dir the log has no entries
     for, the same zero-LIST contract as :func:`plan_scan_multi`."""
     idx = _planner_index(table_path)
-    snaps = idx["snaps"]
-    if snapshot_id is None:
-        target = snaps[-1]
-    else:
-        by_id = {s.snapshot_id: s for s in snaps}
-        if snapshot_id not in by_id:
-            raise KeyError(f"snapshot {snapshot_id} not in log")
-        target = by_id[snapshot_id]
+    target = _snapshot(idx["snaps"], snapshot_id)
     stats = idx["stats"]
     by_dir = idx["by_dir"]
     acc: dict = {}
@@ -913,9 +949,7 @@ def _merge_upsert_locked(
         # probe: which dirs hold a matched key. Column-pruned scan (keys
         # only); the dir is the file's immediate parent (anchored to the
         # filename so a table path containing "data/snap-…" never matches).
-        probe = spark.read.parquet(
-            *[os.path.join(table_path, d) for d in head.dirs]
-        ).select(
+        probe = _scan(spark, table_path, snaps, head.dirs, head.schema).select(
             *key_cols,
             F.regexp_extract(
                 F.input_file_name(), r"(data/snap-[^/]+)/[^/]+$", 1
@@ -930,11 +964,13 @@ def _merge_upsert_locked(
         )
         untouched = [d for d in head.dirs if d not in set(hit)]
         # rewrite leg reads ONLY the hit dirs — merge IO is O(touched), the
-        # probe above reads key columns only
+        # probe above reads key columns only. Survivors are read at the
+        # head's schema, so a hit dir that predates an evolve=True append
+        # unions with the updates column for column
         if hit:
-            survivors = spark.read.parquet(
-                *[os.path.join(table_path, d) for d in hit]
-            ).join(ukeys, key_cols, "left_anti")
+            survivors = _scan(spark, table_path, snaps, hit, head.schema).join(
+                ukeys, key_cols, "left_anti"
+            )
             new_data = survivors.unionByName(updates)
         else:
             new_data = updates
@@ -999,17 +1035,18 @@ def _compact_locked(
         return head
     sid = head.snapshot_id + 1
     rel = f"data/snap-{sid}"
-    abs_dirs = [os.path.join(table_path, d) for d in head.dirs]
-    df = spark.read.parquet(*abs_dirs)
-    if partitions is not None:
-        df = df.repartition(partitions)
+    # read at the logged schema: dirs written before an evolve=True append
+    # surface its columns as NULL instead of an arbitrary footer's schema
+    # dropping them from the rewrite
+    old = _scan(spark, table_path, snaps, head.dirs, head.schema)
+    df = old if partitions is None else old.repartition(partitions)
     obs = Observation(f"snap_rows_{sid}")
     df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(
         os.path.join(table_path, rel)
     )
     rows = int(obs.get["rows"])
     # footer-metadata count of the old dir set — cheap independent check
-    before = spark.read.parquet(*abs_dirs).count()
+    before = old.count()
     if rows != before:
         raise RuntimeError(
             f"compaction row drift: table has {before}, rewrite has {rows}"
@@ -1104,24 +1141,20 @@ def read_changes(
     schema plus ``_change_type``.
     """
     snaps = _load_log(table_path)
-    by_id = {s.snapshot_id: s for s in snaps}
-    if from_snapshot not in by_id:
-        raise KeyError(f"snapshot {from_snapshot} not in log (have {sorted(by_id)})")
-    to_id = to_snapshot if to_snapshot is not None else snaps[-1].snapshot_id
-    if to_id not in by_id:
-        raise KeyError(f"snapshot {to_id} not in log (have {sorted(by_id)})")
-    dirs_from, dirs_to = set(by_id[from_snapshot].dirs), set(by_id[to_id].dirs)
-    removed = sorted(dirs_from - dirs_to)
-    added = sorted(dirs_to - dirs_from)
+    frm, to = _snapshot(snaps, from_snapshot), _snapshot(snaps, to_snapshot)
+    removed = sorted(set(frm.dirs) - set(to.dirs))
+    added = sorted(set(to.dirs) - set(frm.dirs))
 
+    # both sides are read at the target snapshot's schema, so an
+    # evolve=True append between the two compares column for column
     def _rows(rels: list[str]) -> DataFrame | None:
         if not rels:
             return None
-        return spark.read.parquet(*[os.path.join(table_path, d) for d in rels])
+        return _scan(spark, table_path, snaps, rels, to.schema)
 
     old, new = _rows(removed), _rows(added)
     # schema anchor for the all-carried / empty-diff cases (reads no rows)
-    anchor = read(spark, table_path, to_id).limit(0)
+    anchor = _scan(spark, table_path, snaps, to.dirs, to.schema).limit(0)
     ins = new.exceptAll(old) if (new is not None and old is not None) else new
     dels = old.exceptAll(new) if (new is not None and old is not None) else old
     parts = []

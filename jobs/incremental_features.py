@@ -20,16 +20,23 @@ job is the INCREMENTAL twin a 10^12-turn deployment actually runs hourly:
    already-served feature stable (training/serving consistency). Re-fit
    by truncating the features table and rerunning.
 5. Every increment SELF-MONITORS drift: the first run also pins a
-   fixed-range histogram sketch of the normalized signal (text_len) in
-   lineage, and each later increment scores the DELTA's distribution
-   against it with ``sketches.psi_from_hists`` — one extra aggregate
-   over data the job already reads, no second fact pass. The PSI lands
-   in the JSON line and in the commit lineage; ``--max-psi`` turns it
-   into a gate (a drifted drop fails the job instead of silently
-   poisoning the features table with stale normalization).
+   fixed-range 16-bin histogram of the normalized signal (text_len) in
+   lineage, and each later increment bins the DELTA the same way, in the
+   one aggregate that also counts its conversations. PSI and KS are then
+   scored on the driver from the two count lists
+   (``sketches.drift_from_counts``, the math of ``psi_from_hists`` /
+   ``ks_from_hists``): the scoring runs no Spark job. Both land
+   in the JSON line and in the commit lineage; ``--max-psi`` / ``--max-ks``
+   turn them into a gate (a drifted drop fails the job instead of
+   silently poisoning the features table with stale normalization).
 
-Cost per increment ≈ O(touched conversations), not O(corpus): an hourly
-drop touching 0.1% of conversations reads and writes 0.1% of the bytes.
+Cost per increment: the delta is found from metadata and profiled in one
+aggregate, and the feature recompute covers only the touched
+conversations. The merge is not O(touched) yet: it rewrites every feature
+dir that holds a touched conversation, and the features table is a
+single dir after its first commit, so each increment rewrites the whole
+table; the history read and the merge's key probe also scan the whole
+source and the whole features table.
 
 Emits one JSON line: rows upserted, touched conversations, processed
 source snapshot, drift PSI vs the pinned window, and whether the run
@@ -77,7 +84,8 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from acoustic_feature_extractor_spark.datagen import SESSION_GAP_SECONDS
-    from acoustic_feature_extractor_spark.operators.stats import corpus_stats
+    from acoustic_feature_extractor_spark.operators.sketches import drift_from_counts
+    from acoustic_feature_extractor_spark.operators.stats import corpus_aggs
     from acoustic_feature_extractor_spark.plans.pipeline import turn_features
     from acoustic_feature_extractor_spark.session import get_spark
     from acoustic_feature_extractor_spark.sources import snapshots as snap
@@ -120,61 +128,50 @@ def main(argv: list[str] | None = None) -> int:
             "is undefined; truncate the features table and rerun full"
         )
     new_dirs = [d for d in head.dirs if d not in old_dirs]
-    delta = spark.read.parquet(*[os.path.join(args.source, d) for d in new_dirs])
-    touched = delta.select("conv_id").distinct()
-
-    # full history of ONLY the touched conversations (windows need whole
-    # convs; everything untouched keeps its existing feature rows)
     full = snap.read(spark, args.source)
-    hist = full.join(touched, "conv_id", "left_semi")
 
     # fixed-range drift-sketch domain for text_len (chars): pinned once,
     # every later increment bins identically (same at-rest contract as
     # sketches.hist_rollup)
     _H_LO, _H_HI, _H_BINS = 0.0, 1024.0, 16
+    w_bin = (_H_HI - _H_LO) / _H_BINS
+    text_bin = F.least(
+        F.greatest(
+            F.floor((F.length("text").cast("double") - F.lit(_H_LO)) / F.lit(w_bin)),
+            F.lit(0),
+        ),
+        F.lit(_H_BINS - 1),
+    )
 
-    def _text_len_hist(df) -> list[int]:
-        w_bin = (_H_HI - _H_LO) / _H_BINS
-        b = F.least(
-            F.greatest(
-                F.floor((F.length("text").cast("double") - F.lit(_H_LO)) / F.lit(w_bin)),
-                F.lit(0),
-            ),
-            F.lit(_H_BINS - 1),
-        )
-        got = {
-            r["_b"]: r["_c"]
-            for r in df.groupBy(b.alias("_b")).agg(F.count(F.lit(1)).alias("_c")).collect()
-        }
-        return [int(got.get(i, 0)) for i in range(_H_BINS)]
+    def _profile(df, *aggs):
+        """One aggregate over ``df``: its text_len histogram and ``aggs``."""
+        row = df.agg(
+            *[F.count(F.when(text_bin == i, 1)).alias(f"_h{i}") for i in range(_H_BINS)],
+            *aggs,
+        ).first()
+        return [int(row[f"_h{i}"]) for i in range(_H_BINS)], row
 
     drift_psi = None
     drift_ks = None
     if feat_hist:
         stats = feat_hist[0].lineage["stats"]
         ref_hist = feat_hist[0].lineage.get("text_len_hist")
+        # one aggregate over the delta gives its histogram and its
+        # conversation count
+        delta = snap.read_dirs(spark, args.source, new_dirs)
+        cur_hist, row = _profile(delta, F.count_distinct("conv_id").alias("_convs"))
+        n_touched = int(row["_convs"])
+        # full history of ONLY the touched conversations (windows need
+        # whole convs; everything untouched keeps its existing feature rows)
+        hist = full.join(delta.select("conv_id").distinct(), "conv_id", "left_semi")
         if ref_hist:
-            # PSI + KS of the DELTA (the new drop, already in memory) vs
-            # the pinned training window — both scored from the SAME two
-            # 1-row hist frames (sketches.psi_from_hists / ks_from_hists);
-            # bins-sized collects
-            from acoustic_feature_extractor_spark.operators.sketches import (
-                ks_from_hists,
-                psi_from_hists,
-            )
-
-            cur_hist = _text_len_hist(delta)
-            rdf = spark.createDataFrame([("all", ref_hist)], "g string, hist array<bigint>")
-            cdf = spark.createDataFrame([("all", cur_hist)], "g string, hist array<bigint>")
-            terms = psi_from_hists(rdf, cdf, by="g", bins=_H_BINS).collect()
-            drift_psi = float(sum(r["psi_term"] for r in terms))
-            drift_ks = float(
-                ks_from_hists(rdf, cdf, by="g", bins=_H_BINS).first()["ks"]
-            )
+            # PSI + KS of the DELTA vs the pinned training window, both
+            # scored on the driver from the same two 16-bin count lists
+            drift_psi, drift_ks = drift_from_counts(ref_hist, cur_hist)
             tripped = None
             if args.max_psi is not None and drift_psi > args.max_psi:
                 tripped = {"drift_psi": round(drift_psi, 6), "max_psi": args.max_psi}
-            elif args.max_ks is not None and drift_ks > args.max_ks:
+            elif args.max_ks is not None and (drift_ks or 0.0) > args.max_ks:
                 tripped = {"drift_ks": round(drift_ks, 6), "max_ks": args.max_ks}
             if tripped is not None:
                 print(
@@ -189,12 +186,12 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 return 2
     else:
-        row = corpus_stats(
-            full.withColumn("text_len", F.length("text").cast("double")),
-            "text_len",
-        ).first()
+        # first run: every conversation is new. One aggregate pins the
+        # corpus stats and the drift histogram together
+        ref_hist, row = _profile(full, *corpus_aggs(F.length("text").cast("double")))
         stats = {"mean": float(row["mean"]), "stddev": float(row["stddev"])}
-        ref_hist = _text_len_hist(full)
+        n_touched = full.select(F.count_distinct("conv_id")).first()[0]
+        hist = full.where(F.col("conv_id").isNotNull())  # as the semi-join would
 
     feats = turn_features(
         hist, gap_seconds=gap, rolling=args.rolling, frozen_stats=stats
@@ -222,7 +219,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         rewritten = out.lineage["rewritten_dirs"]
 
-    n_touched = touched.count()
     print(
         json.dumps(
             {

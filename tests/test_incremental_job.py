@@ -180,3 +180,53 @@ def test_incremental_drift_gate(tmp_path, spark, transcripts):
     assert rc4 == 0 and m4["drift_psi"] > 0.25
     assert snap.history(feat)[-1].lineage["drift_psi"] == round(m4["drift_psi"], 6)
     assert snap.history(feat)[-1].lineage["drift_ks"] == round(m4["drift_ks"], 6)
+
+
+# Spark jobs one increment launches on the tiny table below: 3 for the
+# delta profile, 6 for the merge's fused key check over the recomputed
+# features, 3 for the hit-dir probe and 2 for the write, measured with
+# this suite's 8 shuffle partitions. No job infers a parquet schema (the
+# snapshot log records it) and none scores drift (the driver does, from
+# the two 16-bin count lists).
+INCREMENT_JOB_BUDGET = 14
+
+
+def test_increment_job_budget(tmp_path, spark, transcripts, capsys):
+    """One in-process increment that merges into the first run's dir
+    stays within its Spark-job budget, and reports the touched
+    conversations and the drift it scored."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("incremental_features", JOB)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    src = str(tmp_path / "src")
+    feat = str(tmp_path / "feat")
+    t = transcripts.where(F.col("conv_id") < "conv000033")
+    wave1 = t.where((F.col("conv_id") < "conv000030") & (F.col("turn_idx") < 10))
+    wave2 = t.exceptAll(wave1)
+    touched = wave2.select("conv_id").distinct().count()
+    argv = ["--source", src, "--features", feat]
+    # the job's get_spark re-applies its runtime settings to this session
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    sc = spark.sparkContext
+    group = "increment-job-budget"
+    try:
+        snap.commit(wave1, src)
+        assert job.main(argv) == 0
+        snap.commit(wave2, src)
+        sc.setJobGroup(group, "one increment")
+        try:
+            assert job.main(argv) == 0
+        finally:
+            sc.setJobGroup(None, None)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    out = json.loads([l for l in capsys.readouterr().out.splitlines() if l.startswith("{")][-1])
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= INCREMENT_JOB_BUDGET, f"{n_jobs} jobs"
+    assert out["rewritten_dirs"] == ["data/snap-1"]
+    assert out["touched_convs"] == touched and out["source_snapshot"] == 2
+    assert out["drift_psi"] is not None and out["drift_ks"] is not None
+    assert snap.read(spark, feat).count() == t.count()

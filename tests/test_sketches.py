@@ -609,6 +609,48 @@ def test_ks_from_hists_one_sided_and_identical(spark):
         ks_from_hists(ref, bad, by="g", bins=4).collect()
 
 
+def test_drift_from_counts_matches_spark_scoring(spark):
+    """The driver-side PSI/KS agrees with psi_from_hists/ks_from_hists to
+    rel 1e-12 on random 16-bin pairs; a zero-total side has KS None and
+    the same smoothed PSI; a width mismatch raises."""
+    import random
+
+    import pytest as _pytest
+
+    from acoustic_feature_extractor_spark.operators.sketches import (
+        drift_from_counts,
+        ks_from_hists,
+        psi_from_hists,
+    )
+
+    rng = random.Random(8)
+    pairs = {}
+    for i in range(40):
+        hi = rng.choice([3, 50, 10**6])
+        pairs[f"g{i}"] = (
+            [rng.randint(0, hi) for _ in range(16)],
+            [rng.randint(0, hi) for _ in range(16)],
+        )
+    pairs["empty_ref"] = ([0] * 16, [rng.randint(0, 9) for _ in range(16)])
+    pairs["empty_cur"] = ([rng.randint(0, 9) for _ in range(16)], [0] * 16)
+    ddl = "g string, hist array<bigint>"
+    ref = spark.createDataFrame([(g, r) for g, (r, _) in pairs.items()], ddl)
+    cur = spark.createDataFrame([(g, c) for g, (_, c) in pairs.items()], ddl)
+    terms: dict = {}
+    for r in psi_from_hists(ref, cur, by="g", bins=16).collect():
+        terms.setdefault(r["g"], {})[r["bin"]] = r["psi_term"]
+    ks = {r["g"]: r["ks"] for r in ks_from_hists(ref, cur, by="g", bins=16).collect()}
+    for g, (r, c) in pairs.items():
+        psi, d = drift_from_counts(r, c)
+        assert psi == _pytest.approx(sum(terms[g][b] for b in sorted(terms[g])), rel=1e-12), g
+        if g.startswith("empty"):
+            assert d is None and ks[g] is None
+        else:
+            assert d == _pytest.approx(ks[g], rel=1e-12), g
+    with _pytest.raises(ValueError, match="width"):
+        drift_from_counts([1] * 16, [1] * 15)
+
+
 # ---------------------------------------------------------------------------
 # count-min sketch
 # ---------------------------------------------------------------------------

@@ -801,3 +801,133 @@ def test_expire_preserves_pruning_stats_and_writer_schemas(spark, tmp_path):
     got = snap.read_where(spark, t, "id", lo=0, hi=2000)
     assert set(got.columns) == {"id", "v", "tag"}
     assert got.where("tag IS NULL").count() == 100
+
+
+# ---------------------------------------------------------------------------
+# every read is at the logged schema (additively evolved tables)
+# ---------------------------------------------------------------------------
+
+
+def _evolved(spark, t):
+    """(k, v) rows k=0..5 in snap-1, then (k, v, extra) rows k=10..12
+    appended with evolve=True in snap-2."""
+    snap.commit(
+        spark.createDataFrame([(i, float(i)) for i in range(6)], "k bigint, v double"), t
+    )
+    snap.commit(
+        spark.createDataFrame(
+            [(10 + i, float(10 + i), f"e{i}") for i in range(3)],
+            "k bigint, v double, extra string",
+        ),
+        t,
+        evolve=True,
+    )
+
+
+def test_compact_keeps_evolved_columns(spark, tmp_path):
+    """Compaction of an evolved table must keep the evolved column: read
+    with one footer's schema, the compacted dir lost ``extra`` while the
+    log still listed it, and the row-count check could not notice."""
+    t = str(tmp_path / "evolved")
+    _evolved(spark, t)
+    s3 = snap.compact(spark, t, partitions=1)
+    written = spark.read.parquet(os.path.join(t, s3.dirs[0]))
+    assert written.columns == ["k", "v", "extra"]
+    got = {r["k"]: r["extra"] for r in written.collect()}
+    assert got == {**{i: None for i in range(6)}, 10: "e0", 11: "e1", 12: "e2"}
+    assert s3.schema == snap.history(t)[-2].schema
+
+
+def test_merge_upsert_into_evolved_table(spark, tmp_path):
+    """A merge whose hit dir predates the evolution reads its survivors
+    at the head's schema, so they union with the updates (it used to
+    fail with NUM_COLUMNS_MISMATCH). The CDC scan of that merge compares
+    the old-schema dir at the new schema too."""
+    t = str(tmp_path / "evolved")
+    _evolved(spark, t)
+    upd = spark.createDataFrame(
+        [(1, -1.0, "u1"), (99, -99.0, None)], "k bigint, v double, extra string"
+    )
+    s3 = snap.merge_upsert(spark, upd, t, key="k")
+    assert s3.lineage["rewritten_dirs"] == ["data/snap-1"]
+    got = {r["k"]: (r["v"], r["extra"]) for r in snap.read(spark, t).collect()}
+    assert len(got) == 10
+    assert got[1] == (-1.0, "u1") and got[99] == (-99.0, None)
+    assert got[0] == (0.0, None) and got[10] == (10.0, "e0")
+    ch = snap.read_changes(spark, t, 2, s3.snapshot_id)
+    rows = sorted((r["k"], r["v"], str(r["extra"]), r["_change_type"]) for r in ch.collect())
+    assert rows == [
+        (1, -1.0, "u1", "insert"),
+        (1, 1.0, "None", "delete"),
+        (99, -99.0, "None", "insert"),
+    ]
+
+
+def test_merge_upsert_survivors_from_two_older_schemas(spark, tmp_path):
+    """Hit dirs written under two older schemas, neither of them the
+    head's: merging their footer schemas would still lack the newest
+    column, so survivors are read at the logged head schema."""
+    t = str(tmp_path / "evolved")
+    _evolved(spark, t)
+    snap.commit(
+        spark.createDataFrame(
+            [(20, 20.0, "e20", 1)], "k bigint, v double, extra string, n int"
+        ),
+        t,
+        evolve=True,
+    )
+    upd = spark.createDataFrame(
+        [(1, -1.0, "u1", 7), (11, -11.0, "u11", 8)],
+        "k bigint, v double, extra string, n int",
+    )
+    s4 = snap.merge_upsert(spark, upd, t, key="k")
+    assert s4.lineage["rewritten_dirs"] == ["data/snap-1", "data/snap-2"]
+    got = {r["k"]: (r["extra"], r["n"]) for r in snap.read(spark, t).collect()}
+    assert len(got) == 10
+    assert got[1] == ("u1", 7) and got[11] == ("u11", 8)
+    assert got[0] == (None, None) and got[10] == ("e0", None) and got[20] == ("e20", 1)
+
+
+def test_read_where_old_schema_dirs_returns_logged_columns(spark, tmp_path):
+    """A pruned read whose keep-set lies only in pre-evolution dirs has
+    one writer schema, yet returns the logged columns with NULLs, as
+    read() does."""
+    t = str(tmp_path / "evolved")
+    _evolved(spark, t)
+    kept, _ = snap.plan_scan(t, "k", lo=0, hi=5)
+    assert {f.rsplit("/", 1)[0] for f in kept} == {"data/snap-1"}
+    got = snap.read_where(spark, t, "k", lo=0, hi=5)
+    assert got.columns == snap.read(spark, t).columns == ["k", "v", "extra"]
+    assert got.count() == 6 and got.where("extra IS NULL").count() == 6
+
+
+def test_unparseable_logged_schema_falls_back_to_inference(spark, tmp_path):
+    """A column name the simpleString form cannot quote does not
+    round-trip, so the read infers the schema from the footers instead."""
+    t = str(tmp_path / "odd")
+    df = spark.createDataFrame([(1, 2.0)], "`a:b` bigint, v double")
+    s1 = snap.commit(df, t)
+    assert snap._logged_struct(s1.schema) is None
+    got = snap.read(spark, t)
+    assert got.columns == ["a:b", "v"] and got.first()["a:b"] == 1
+
+
+def test_single_schema_read_launches_no_job(spark, tmp_path):
+    """With the schema taken from the log, building a read (plain, at an
+    older snapshot, or pruned) infers nothing from parquet footers."""
+    t = str(tmp_path / "tbl")
+    snap.commit(_df(spark, range(5)), t)
+    snap.commit(_df(spark, range(10, 15)), t)
+    sc = spark.sparkContext
+    group = "snapshot-read-build"
+    sc.setJobGroup(group, "snapshot read build")
+    try:
+        dfs = [
+            snap.read(spark, t),
+            snap.read(spark, t, 1),
+            snap.read_where(spark, t, "id", lo=11),
+        ]
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert [d.columns for d in dfs] == [["id", "v"]] * 3
