@@ -138,36 +138,3 @@ def generate_turn_features(
         (F.col("turn_idx") % 11 != 7).alias("valid"),
     )
 
-
-def generate_spans(
-    spark: SparkSession,
-    n_convs: int = 200,
-    seed: int = 42,
-    turns_per_span: int = 4,
-    **kwargs,
-) -> DataFrame:
-    """spans(conv_id, span_id, label, start_ts, end_ts) — interval table.
-
-    Ordered and non-overlapping; each span covers its turns' [min ts,
-    max ts], so consecutive spans have inter-turn GAPS between end and
-    next start (unlike the reference's strictly-contiguous phoneme
-    intervals, ``phoneme.py:69-74`` — the contiguity invariant is
-    verified on span ORDER, not shared edges; see tests).
-    Labels from a closed vocabulary including the designated 'idle' label
-    (space-phoneme analog).
-    """
-    t = generate_transcripts(spark, n_convs=n_convs, seed=seed, **kwargs)
-    span_id = (F.col("turn_idx") / turns_per_span).cast("int")
-    g = (
-        t.groupBy("conv_id", span_id.alias("span_id"))
-        .agg(F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts"), F.count("*").alias("n"))
-    )
-    label = F.when(
-        _mix(F.xxhash64("conv_id") % _MOD + F.col("span_id"), seed + 2) % 5 == 0, "idle"
-    ).otherwise(
-        F.element_at(
-            F.array(F.lit("plan"), F.lit("act"), F.lit("observe"), F.lit("reply")),
-            (F.col("span_id") % 4 + 1).cast("int"),
-        )
-    )
-    return g.select("conv_id", "span_id", label.alias("label"), "start_ts", "end_ts")

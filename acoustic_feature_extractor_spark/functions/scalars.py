@@ -96,16 +96,6 @@ def sec_to_ntz(sec: Column) -> Column:
     )
 
 
-def clip(col: Column, lo: float, hi: float) -> Column:
-    """numpy.clip (``extract_wave.py:35``, ``spectrogram.py:45``)."""
-    return F.least(F.greatest(col, F.lit(lo)), F.lit(hi))
-
-
-def onehot(label: Column, vocabulary: list[str]) -> Column:
-    """Closed-vocabulary one-hot as array<int> (``phoneme.py:44-48``)."""
-    return F.array(*[(label == F.lit(v)).cast("int") for v in vocabulary])
-
-
 def searchsorted(col: Column | str, bounds: list) -> Column:
     """Number of ``bounds`` values ≤ ``col`` (numpy.searchsorted side
     'right' over a SORTED literal boundary list), as a balanced tree of

@@ -215,17 +215,6 @@ def alpha_word_ratio(text: Column) -> Column:
     )
 
 
-def symbol_word_ratio(text: Column) -> Column:
-    """Hash/ellipsis symbols per word (Gopher drops docs > 0.1)."""
-    n = token_count(text)
-    syms = (
-        F.regexp_count(text, F.lit("#"))
-        + F.regexp_count(text, F.lit(r"\.\.\."))
-        + F.regexp_count(text, F.lit("…"))
-    )
-    return F.when(n <= 0, F.lit(0.0)).otherwise(syms / n.cast("double"))
-
-
 def mean_word_length(text: Column) -> Column:
     toks = whitespace_tokens(text)
     n = F.size(toks)
@@ -273,15 +262,37 @@ def top_gram_share(text: Column, w: int = 2) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def _scalar_signals(t: Column, id_col: str, extra: list[Column]) -> list[Column]:
-    return [
-        id_col,
-        *extra,
-        F.round(dup_line_ratio(t), 6).alias("dup_line_ratio"),
-        F.round(dup_line_char_ratio(t), 6).alias("dup_line_char_ratio"),
-        F.round(alpha_word_ratio(t), 6).alias("alpha_word_ratio"),
-        F.round(mean_word_length(t), 6).alias("mean_word_len"),
-    ]
+def _gopher_signals(t: Column) -> dict[str, Column]:
+    """The projection-side Gopher signals, rounded as ``gopher_filter``
+    reports them (the top-gram share comes separately)."""
+    return {
+        "n_words": token_count(t),
+        "dup_line_ratio": F.round(dup_line_ratio(t), 6),
+        "dup_line_char_ratio": F.round(dup_line_char_ratio(t), 6),
+        "alpha_word_ratio": F.round(alpha_word_ratio(t), 6),
+        "mean_word_len": F.round(mean_word_length(t), 6),
+    }
+
+
+def _gopher_gate(s: dict[str, Column], min_words: int) -> Column:
+    """The published Gopher thresholds over the signal columns ``s``."""
+    return (
+        (s["n_words"] >= min_words)
+        & (s["n_words"] <= 100_000)
+        & (s["mean_word_len"] >= 3.0)
+        & (s["mean_word_len"] <= 10.0)
+        & (s["alpha_word_ratio"] >= 0.8)
+        & (s["dup_line_ratio"] <= 0.3)
+        & (s["top_gram_share"] <= 0.2)
+    )
+
+
+def gopher_keep(text: Column, min_words: int = 50) -> Column:
+    """:func:`gopher_filter`'s ``keep`` as one Column predicate over the
+    text. The top-gram share is :func:`top_gram_share`'s sorted-runs
+    fold, so the gate is a pure projection — no exchange, no Python — and
+    fits a streaming plan after its stateful stage."""
+    return _gopher_gate({**_gopher_signals(text), "top_gram_share": top_gram_share(text)}, min_words)
 
 
 def _top_gram_grouped(df: DataFrame, t: Column, id_col: str, w: int) -> DataFrame:
@@ -313,81 +324,26 @@ def _top_gram_grouped(df: DataFrame, t: Column, id_col: str, w: int) -> DataFram
     )
 
 
-def repetition_profile(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = 2,
-    method: str = "grouped",
-) -> DataFrame:
-    """Per-doc repetition + shape signals, Gopher-style.
-
-    The scalar signals are ONE projection; the top-w-gram share comes in
-    two interchangeable shapes (identical values — pytest-equal):
-
-    - ``grouped`` (default): explode → groupBy(doc, gram) → per-doc max.
-      Map-side partial aggregation keeps the shuffle at one row per
-      distinct (doc, gram); fastest measured single-node (the fold's
-      interpreted per-element lambda costs more than this machine's
-      in-memory shuffle — honest A/B with a noop sink, not a pruned agg).
-    - ``fold``: :func:`top_gram_share`'s sorted-runs fold — ZERO
-      exchanges, the whole profile pipelines with the scan. The shape to
-      pick when cluster network, not CPU, is the scarce resource.
-    """
-    t = F.col(text_col)
-    if method == "fold":
-        return df.select(
-            *_scalar_signals(t, id_col, []),
-            top_gram_share(t, w).alias("top_gram_share"),
-        )
-    if method != "grouped":
-        raise ValueError(f"method must be grouped|fold, got {method}")
-    scalar = df.select(*_scalar_signals(t, id_col, []))
-    top = _top_gram_grouped(df, t, id_col, w)
-    return scalar.join(top, id_col, "left").na.fill({"top_gram_share": 0.0})
-
-
 def gopher_filter(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    min_alpha_ratio: float = 0.8,
-    max_dup_line_ratio: float = 0.3,
-    max_top_gram_share: float = 0.2,
-    method: str = "grouped",
 ) -> DataFrame:
     """Apply the published Gopher quality thresholds; adds ``keep`` +
     the signals so rejects are auditable (filtering silently is how
-    corpora rot). Scalar signals + n_words share ONE projection; the
-    top-gram side follows ``method`` (grouped: one join; fold: the gate
-    is entirely map-only)."""
+    corpora rot). The scalar signals share ONE projection; the top-gram
+    share is an explode → groupBy(doc, gram) → per-doc max joined back
+    (map-side partial aggregation keeps the shuffle at one row per
+    distinct (doc, gram)). :func:`gopher_keep` gives the same ``keep``
+    with no exchange.
+    """
     t = F.col(text_col)
-    sig = df.select(
-        *_scalar_signals(t, id_col, [token_count(t).alias("n_words")])
+    sig = df.select(id_col, *[c.alias(n) for n, c in _gopher_signals(t).items()])
+    sig = sig.join(_top_gram_grouped(df, t, id_col, 2), id_col, "left").na.fill(
+        {"top_gram_share": 0.0}
     )
-    if method == "fold":
-        sig = df.select(
-            *_scalar_signals(t, id_col, [token_count(t).alias("n_words")]),
-            top_gram_share(t).alias("top_gram_share"),
-        )
-    else:
-        sig = sig.join(_top_gram_grouped(df, t, id_col, 2), id_col, "left").na.fill(
-            {"top_gram_share": 0.0}
-        )
-    keep = (
-        (F.col("n_words") >= min_words)
-        & (F.col("n_words") <= max_words)
-        & (F.col("mean_word_len") >= min_mean_word_len)
-        & (F.col("mean_word_len") <= max_mean_word_len)
-        & (F.col("alpha_word_ratio") >= min_alpha_ratio)
-        & (F.col("dup_line_ratio") <= max_dup_line_ratio)
-        & (F.col("top_gram_share") <= max_top_gram_share)
-    )
-    return sig.withColumn("keep", keep)
+    return sig.withColumn("keep", _gopher_gate({n: F.col(n) for n in sig.columns}, min_words))
 
 
 # --------------------------------------------------------------------------
@@ -465,6 +421,20 @@ def c4_kept_lines(text: Column, min_line_words: int = 5) -> Column:
     )
 
 
+def _c4_page_tells(text: Column) -> tuple[Column, Column]:
+    """(contains "lorem ipsum" case-insensitively, contains a curly brace
+    — the code tell): C4's page-level rejects."""
+    return F.lower(text).contains("lorem ipsum"), text.contains("{")
+
+
+def c4_page_keep(text: Column, kept: Column, min_lines: int = 3) -> Column:
+    """C4's document-level gate (Raffel et al. 2020): drop any page with
+    a lorem-ipsum or curly-brace tell, and any page left with fewer than
+    ``min_lines`` of its :func:`c4_kept_lines` ``kept``."""
+    lorem, brace = _c4_page_tells(text)
+    return (F.size(kept) >= min_lines) & ~lorem & ~brace
+
+
 def c4_clean(
     df: DataFrame,
     text_col: str = "text",
@@ -474,12 +444,10 @@ def c4_clean(
 ) -> DataFrame:
     """C4 heuristic cleaning: line-level filters + document-level gates.
 
-    Line level: :func:`c4_kept_lines`.  Document level (again the
-    published C4 rules): drop any page containing "lorem ipsum"
-    (case-insensitive) or a curly brace (code tell), and any page left
-    with fewer than ``min_lines`` kept lines.  The reference analog is
-    the validity-mask projection chain (reference ``f0.py`` valid-frame
-    masking) — a map-only pass; rejects stay auditable via the flags.
+    Line level: :func:`c4_kept_lines`.  Document level:
+    :func:`c4_page_keep`.  The reference analog is the validity-mask
+    projection chain (reference ``f0.py`` valid-frame masking) — a
+    map-only pass; rejects stay auditable via the flags.
 
     Output: (id, n_lines, kept_lines, dropped_lines, has_lorem_ipsum,
     has_brace, keep, clean_text).  ``clean_text`` re-joins the surviving
@@ -491,8 +459,7 @@ def c4_clean(
     lines = _line_array(t)
     kept = c4_kept_lines(t, min_line_words)
     n_kept = F.size(kept)
-    lorem = F.lower(t).contains("lorem ipsum")
-    brace = t.contains("{")
+    lorem, brace = _c4_page_tells(t)
     return df.select(
         id_col,
         F.size(lines).alias("n_lines"),
@@ -500,7 +467,7 @@ def c4_clean(
         (F.size(lines) - n_kept).alias("dropped_lines"),
         lorem.alias("has_lorem_ipsum"),
         brace.alias("has_brace"),
-        ((n_kept >= min_lines) & ~lorem & ~brace).alias("keep"),
+        c4_page_keep(t, kept, min_lines).alias("keep"),
         F.array_join(kept, "\n").alias("clean_text"),
     )
 

@@ -539,20 +539,6 @@ def contamination_pairs(
     return hits.select("train_id", "bench_id", "shared")
 
 
-def contaminated_ids(
-    train: DataFrame,
-    bench: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = 8,
-    min_shared: int = 1,
-) -> DataFrame:
-    """Distinct train ids to DROP before training (the decontamination
-    filter input: ``train.join(out, id_col, "left_anti")``)."""
-    p = contamination_pairs(train, bench, text_col, id_col, w, min_shared)
-    return p.select(F.col("train_id").alias(id_col)).distinct()
-
-
 def positional_windows(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", w: int = 8
 ) -> DataFrame:
@@ -772,93 +758,3 @@ def cut_duplicated_spans(
         F.size("_tk").alias("total_tokens"),
     )
 
-
-# --------------------------------------------------------------------------
-# incremental dedup: at-rest MinHash index + delta probe
-# --------------------------------------------------------------------------
-
-def minhash_index_write(
-    df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-) -> None:
-    """Materialize the LSH dedup index at rest so INCREMENTAL batches probe
-    without re-hashing the corpus: ``bands/`` (one row per doc x band,
-    partitioned by band id) drives candidate generation, ``sets/`` (one row
-    per doc: sorted distinct shingle hashes) drives the exact-Jaccard
-    verify, ``params/`` pins the hash family so a probe with mismatched
-    (w, num_hashes, bands, seed) fails fast instead of silently missing
-    every duplicate.
-
-    Scale shape: the corpus pays its shingle/signature cost ONCE at index
-    build; a daily delta of d docs then costs O(d) hashing + two equi-joins
-    against the index scans — never a corpus rescan. Band partitioning
-    keeps a partial-band probe (e.g. early-exit dedup) pruned at the scan.
-    """
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-    spark = df.sparkSession
-    sh = tracked_persist(_shingle_table(df, text_col, id_col, w, distinct=False))
-    sig = _signatures_from_shingles(sh, id_col, num_hashes, seed)
-    _band_table(sig, id_col, bands, r).write.mode("overwrite").partitionBy(
-        "band"
-    ).parquet(f"{path}/bands")
-    _doc_sets(sh, id_col).write.mode("overwrite").parquet(f"{path}/sets")
-    spark.createDataFrame(
-        [(w, num_hashes, bands, seed)], "w int, num_hashes int, bands int, seed int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
-
-
-def minhash_index_probe(
-    new_df: DataFrame,
-    path: str,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Near-duplicate pairs between a NEW batch and the at-rest index:
-    (new_id, index_id, jaccard >= threshold). Hash-family parameters come
-    from the index's ``params/`` table — the probe can never disagree with
-    the build. New-vs-new duplicates are the batch's own concern
-    (``minhash_lsh_pairs`` on the delta); this joins delta x corpus only.
-    """
-    spark = new_df.sparkSession
-    p = spark.read.parquet(f"{path}/params").head()
-    r = p.num_hashes // p.bands
-    sh = tracked_persist(
-        _shingle_table(new_df, text_col, id_col, p.w, distinct=False)
-    )
-    sig = _signatures_from_shingles(sh, id_col, p.num_hashes, p.seed)
-    new_bands = _band_table(sig, id_col, p.bands, r).select(
-        F.col(id_col).alias("new_id"), "band", "bh"
-    )
-    idx_bands = spark.read.parquet(f"{path}/bands").select(
-        F.col(id_col).alias("index_id"), "band", "bh"
-    )
-    cand = (
-        new_bands.join(idx_bands, ["band", "bh"])
-        .select("new_id", "index_id")
-        .distinct()
-    )
-    new_sets = _doc_sets(sh, id_col).select(
-        F.col(id_col).alias("new_id"), F.col("_set").alias("_sa")
-    )
-    idx_sets = spark.read.parquet(f"{path}/sets").select(
-        F.col(id_col).alias("index_id"), F.col("_set").alias("_sb")
-    )
-    j = cand.join(maybe_broadcast(new_sets), "new_id").join(
-        maybe_broadcast(idx_sets), "index_id"
-    )
-    j = j.withColumn("_i", F.size(F.array_intersect("_sa", "_sb")))
-    return (
-        j.withColumn(
-            "jaccard", F.col("_i") / (F.size("_sa") + F.size("_sb") - F.col("_i"))
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("new_id", "index_id", "jaccard")
-    )

@@ -29,23 +29,13 @@ def onehot(col: Column | str, vocab: list[str]) -> Column:
     """array<double> onehot over a closed vocabulary (``phoneme.py:44-48``).
 
     A label outside the vocabulary yields the all-zero vector (the
-    reference instead hard-asserts membership — use
-    :func:`vocabulary_violations` as the validation query); a NULL label
-    also yields all zeros.
+    reference instead hard-asserts membership, ``phoneme.py:32-34``); a
+    NULL label also yields all zeros.
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.array(
         *[F.coalesce((c == F.lit(v)).cast("double"), F.lit(0.0)) for v in vocab]
     )
-
-
-def vocabulary_violations(
-    df: DataFrame, label_col: str, vocab: list[str]
-) -> DataFrame:
-    """Rows whose label is outside the closed vocabulary — the engine's
-    recast of the reference's ``verify`` assert (``phoneme.py:32-34``):
-    empty result ⇔ the vocabulary contract holds."""
-    return df.where(~F.col(label_col).isin(vocab) | F.col(label_col).isNull())
 
 
 def label_id(col: Column | str, vocab: list[str]) -> Column:
@@ -54,8 +44,8 @@ def label_id(col: Column | str, vocab: list[str]) -> Column:
     ``phoneme.py`` ``phoneme_id`` = index in ``phoneme_list``).
 
     Out-of-vocabulary / NULL labels yield -1.0 (the reference hard-asserts
-    membership instead; pair with :func:`vocabulary_violations`). Pure
-    Catalyst: ``array_position`` over a literal array, codegen'd.
+    membership instead). Pure Catalyst: ``array_position`` over a literal
+    array, codegen'd.
     """
     c = F.col(col) if isinstance(col, str) else col
     # array_position is 1-based and returns 0 when absent -> shift to

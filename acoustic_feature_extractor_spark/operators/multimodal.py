@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Image/audio/video payloads are opaque ``binary`` columns with a typed
-metadata struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched kernels over ``mapInPandas``. The decode step itself is
+metadata struct; decode and feature extraction run as Arrow-batched
+kernels over ``mapInPandas``. The decode step itself is
 STUBBED (no image/audio libs in this container): ``decode_stub`` raises
 ``NotImplementedError`` unless ``fake=True``, in which case it produces a
 deterministic fake feature vector from the bytes — the Spark-side plumbing
@@ -20,27 +20,6 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                    T.StructField("n_frames", T.IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 FEATURE_DIM = 8
 
@@ -189,80 +168,3 @@ def extract_media_features(df: DataFrame, fake: bool = True, batch_note_col: boo
             )
 
     return df.mapInPandas(kernel, schema=out_schema)
-
-
-def resize_stub(
-    payload: bytes, width: int | None, height: int | None, target_w: int, target_h: int, fake: bool
-) -> bytes:
-    """STUB resize: a real implementation is one PIL/cv2 call on the
-    decoded image inside the same Arrow batch. The deterministic fake
-    scales the byte buffer by the pixel ratio (truncate / cycle-pad), so
-    output size tracks the target dimensions and the plumbing is
-    testable end-to-end."""
-    if not fake:
-        raise NotImplementedError(
-            "media resize requires PIL/cv2 — not available in this "
-            "environment; pass fake=True for the deterministic test double"
-        )
-    if payload is None:
-        return None
-    src_px = max((width or 1) * (height or 1), 1)
-    ratio = (target_w * target_h) / src_px
-    n = max(int(len(payload) * ratio), 1)
-    if n <= len(payload):
-        return payload[:n]
-    reps = -(-n // max(len(payload), 1))
-    return (payload * reps)[:n]
-
-
-def resize_media(
-    df: DataFrame, target_w: int = 64, target_h: int = 64, fake: bool = True
-) -> DataFrame:
-    """Arrow-batched resize over ``mapInPandas``: payload transformed by
-    the (stubbed) kernel, metadata REWRITTEN to the target dims — the
-    schema contract downstream feature extractors rely on. Map-only: at
-    100 TB this pipelines with the scan like every other media kernel."""
-    out_schema = MEDIA_SCHEMA
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # empty Arrow batches happen (empty partitions/splits):
-            # pd.DataFrame([]) has no columns, so meta["width"] would
-            # KeyError and fail the whole task instead of yielding nothing
-            if len(pdf) == 0:
-                continue
-            meta = pd.DataFrame(list(pdf["meta"]))
-            pdf = pdf.assign(
-                payload=[
-                    resize_stub(p, w, h, target_w, target_h, fake)
-                    for p, w, h in zip(pdf["payload"], meta["width"], meta["height"])
-                ],
-                meta=[
-                    {
-                        "width": target_w,
-                        "height": target_h,
-                        "sample_rate": m.get("sample_rate"),
-                        "n_frames": m.get("n_frames"),
-                    }
-                    for m in pdf["meta"]
-                ],
-            )
-            yield pdf
-
-    return df.mapInPandas(kernel, schema=out_schema)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling PLAN: explode frame indices 0..n_frames-1 and
-    keep every n-th — the distributed part of frame sampling; the per-frame
-    decode is the stubbed kernel above."""
-    return (
-        # n_frames > 0, not just non-null: sequence(0, -1) would yield the
-        # descending [0, -1] and emit a plan row for a nonexistent frame
-        df.where(F.col("meta.n_frames") > 0)
-        .select(
-            "media_id",
-            F.explode(F.sequence(F.lit(0), F.col("meta.n_frames") - 1)).alias("frame_idx"),
-        )
-        .where(F.col("frame_idx") % every_n == 0)
-    )

@@ -1,12 +1,10 @@
-"""Privacy gates for training-data release: k-anonymity suppression and
-l-diversity auditing over quasi-identifier columns.
+"""Privacy gate for training-data release: k-anonymity suppression over
+quasi-identifier columns.
 
 A corpus row is re-identifiable when its combination of quasi-identifiers
 (region x segment x signup-week, ...) is rare; the standard release gate
 (Sweeney 2002) requires every published quasi-identifier group to contain
-at least k rows, and l-diversity (Machanavalli et al. 2007) additionally
-requires >= l distinct sensitive values inside each group so the group
-can't leak the sensitive attribute by uniformity.
+at least k rows.
 
 Scale shape: ONE window count over the quasi columns — no join, no second
 scan of the fact table (the count rides the same exchange the output
@@ -64,19 +62,3 @@ def k_anonymize(
             ),
         )
     return out.drop("_gn")
-
-
-def anonymity_report(
-    df: DataFrame,
-    quasi_cols: list[str],
-    sensitive_col: str | None = None,
-) -> DataFrame:
-    """Audit table: one row per quasi group with its size ``n`` (the
-    group's anonymity level — the corpus k-anonymity is the MIN of this
-    column) and, when ``sensitive_col`` is given, ``l`` = the number of
-    distinct sensitive values in the group (corpus l-diversity = min l).
-    Plain groupBy — partial-combined, rollup-sized output."""
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if sensitive_col is not None:
-        aggs.append(F.count_distinct(F.col(sensitive_col)).alias("l"))
-    return df.groupBy(*quasi_cols).agg(*aggs)

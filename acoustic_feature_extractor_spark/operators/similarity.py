@@ -207,9 +207,8 @@ def cosine_topk_ivf(
     corpus vector is assigned to its nearest centroid (its inverted list),
     and a query scans only its ``n_probe`` nearest lists. ``n_probe =
     n_centroids`` degrades gracefully to exact brute force (tests pin
-    this). Pass ``centroids`` to reuse a trained/cached set across calls —
-    repeated invocations then cost zero extra jobs; train a better set
-    with :func:`kmeans_centroids` (distributed Lloyd, same contract).
+    this). Pass ``centroids`` to reuse a cached set across calls —
+    repeated invocations then cost zero extra jobs.
 
     Scale shape: the corpus is partitioned by centroid id (at rest:
     partition the table by ``_cid``), a query touches n_probe/n_centroids
@@ -618,58 +617,6 @@ def embedding_neardup_pairs(
     )
 
 
-def kmeans_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    n_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    spherical: bool = True,
-) -> list[list[float]]:
-    """Distributed Lloyd k-means over the embedding column — the trained
-    upgrade of :func:`pick_centroids` for IVF coarse quantization.
-
-    Per round: assignment reuses the broadcast-literal nearest-centroid
-    expression (JVM-side, no Python); the update is
-    ``posexplode → groupBy(cid, dim).avg`` — map-side partial
-    aggregation means each task ships only k×dim partial sums, so the
-    shuffle is (partitions × k × dim) rows regardless of corpus size.
-    The driver only ever holds the k×dim centroid matrix (k is tiny by
-    construction). Fixed ``n_iter`` rounds keep the plan deterministic;
-    empty clusters keep their previous centroid. ``spherical`` re-unit-
-    normalizes means each round (cosine-IVF convention).
-
-    Initialization is the deterministic hash pick, so results are
-    reproducible run-to-run and engine-to-engine.
-    """
-    cents = pick_centroids(corpus, n_centroids, id_col, vec_col)
-    d = corpus.select(F.col(vec_col).cast("array<double>").alias("_v"))
-    for _ in range(max(n_iter, 0)):
-        rows = (
-            d.withColumn(
-                "_cid", F.element_at(_nearest_centroid_cols("_v", cents, 1), 1)
-            )
-            .select("_cid", F.posexplode("_v").alias("_dim", "_x"))
-            .groupBy("_cid", "_dim")
-            .agg(F.avg("_x").alias("_m"))
-            .collect()  # k × dim rows — centroid-matrix-sized, never corpus-sized
-        )
-        means: dict[int, list[float]] = {}
-        for r in rows:
-            means.setdefault(r["_cid"], [0.0] * len(cents[0]))[r["_dim"]] = r["_m"]
-        new = []
-        for i, old in enumerate(cents):
-            m = means.get(i, old)  # empty cluster: keep previous centroid
-            if spherical:
-                import math
-
-                n = math.sqrt(sum(x * x for x in m)) or 1.0
-                m = [x / n for x in m]
-            new.append(m)
-        cents = new
-    return cents
-
-
 def label_centroids(
     corpus: DataFrame,
     label_col: str = "label",
@@ -680,10 +627,10 @@ def label_centroids(
     groupBy(label, dim).avg`` (map-side partial sums — each task ships
     labels×dim partials, never corpus rows), then the dim rows fold back
     into one ``array<double>`` per label (``collect_list`` is dim-sized
-    per group, bounded by construction). Unlike :func:`kmeans_centroids`
-    nothing lands on the driver, so the label space may be arbitrarily
-    large (e.g. dedup-cluster ids). ``spherical`` unit-normalizes each
-    centroid (cosine convention; zero vectors stay zero)."""
+    per group, bounded by construction). Nothing lands on the driver, so
+    the label space may be arbitrarily large (e.g. dedup-cluster ids).
+    ``spherical`` unit-normalizes each centroid (cosine convention; zero
+    vectors stay zero)."""
     d = corpus.select(
         F.col(label_col).alias("_lbl"),
         F.col(vec_col).cast("array<double>").alias("_v"),
@@ -1081,83 +1028,6 @@ def cosine_topk_ivfpq(
     )
 
 
-def _ivfpq_meta_path(path: str) -> str:
-    import os
-
-    # underscore prefix: Spark's parquet reader ignores the sidecar
-    return os.path.join(path, "_ivfpq_meta.json")
-
-
-def ivfpq_index_write(
-    corpus: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    residual: bool = False,
-) -> None:
-    """Materialize the IVF-PQ index AT REST: (id, codes) partitioned by
-    coarse list (``_cid=<i>/`` directories) — the index holds m ints per
-    vector, NOT the vectors (at 10^9 × dim-64 that is the difference
-    between a ~60 GB index and a ~4 TB one). Queries partition-prune to
-    n_probe directories and score codes via the LUT; the exact re-rank
-    (when wanted) goes back to the CORPUS table for just the shortlist.
-
-    ``residual=True`` encodes IVFADC residuals ``x_unit − c(x)`` —
-    codebooks must then come from ``pq_train(residual_of=centroids)``.
-    The training mode is RECORDED in a ``_ivfpq_meta.json`` sidecar and
-    validated at query time: scoring residual codes through the raw LUT
-    identity (or vice versa) is silently, badly wrong, not approximate."""
-    import json
-
-    c = _ivfpq_encode(corpus, centroids, codebooks, id_col, vec_col, residual)
-    c.write.partitionBy("_cid").mode("overwrite").parquet(path)
-    with open(_ivfpq_meta_path(path), "w") as f:
-        json.dump(
-            {
-                "residual": bool(residual),
-                "m": len(codebooks),
-                "pq_k": len(codebooks[0]),
-                "n_centroids": len(centroids),
-            },
-            f,
-        )
-
-
-def _ivfpq_encode(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    id_col: str,
-    vec_col: str,
-    residual: bool,
-) -> DataFrame:
-    """(id, _cid, codes) — the one encode expression both the full write
-    and the incremental append must share, or appended codes silently
-    come from a different quantizer than the files already at rest."""
-    ln = len(codebooks[0][0])
-    cm = _centroid_matrix_sql(centroids)
-    code_exprs = ", ".join(
-        _pq_code_sql("_cu", cb, j * ln + 1, ln) for j, cb in enumerate(codebooks)
-    )
-    c = (
-        corpus.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("_cv")
-        )
-        .withColumn(
-            "_cid", F.element_at(_nearest_centroid_cols("_cv", centroids, 1), 1)
-        )
-        .withColumn("_cu", _unit_vec("_cv"))
-    )
-    if residual:
-        c = c.withColumn(
-            "_cu",
-            F.expr(f"zip_with(_cu, element_at({cm}, _cid + 1), (a, b) -> a - b)"),
-        )
-    return c.select(id_col, "_cid", F.expr(f"array({code_exprs})").alias("codes"))
-
-
 def ivf_index_append(
     new_vectors: DataFrame,
     path: str,
@@ -1166,11 +1036,10 @@ def ivf_index_append(
     vec_col: str = "embedding",
 ) -> None:
     """Fold NEW vectors into an existing at-rest IVF index WITHOUT a
-    rebuild (the ``minhash_index_probe`` story for ANN — VERDICT r3 #8):
-    the batch is assigned to lists with the SAME frozen centroids the
-    index was built with and appended as new files inside the touched
-    ``_cid=`` directories. IO ∝ the batch, untouched lists keep their
-    files byte-for-byte; queries see old + new vectors through the
+    rebuild: the batch is assigned to lists with the SAME frozen
+    centroids the index was built with and appended as new files inside
+    the touched ``_cid=`` directories. IO ∝ the batch, untouched lists
+    keep their files byte-for-byte; queries see old + new vectors through the
     identical partition-pruned scan (tests pin parity vs a full rebuild).
     Centroids must be the index's own — re-trained centroids change the
     assignment function and require a rebuild, exactly like IVF libraries
@@ -1179,164 +1048,3 @@ def ivf_index_append(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     ).withColumn("_cid", F.element_at(_nearest_centroid_cols(vec_col, centroids, 1), 1))
     c.write.partitionBy("_cid").mode("append").parquet(path)
-
-
-def ivfpq_index_append(
-    new_vectors: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental maintenance for the CODES index: encode the new batch
-    with the index's frozen quantizers (coarse centroids + PQ codebooks,
-    residual mode read from the sidecar) and append into the partitioned
-    layout. The sidecar is the guard: appending with quantizer SHAPES
-    that differ from the ones at rest would interleave incomparable codes
-    in the same directories, so a mismatch raises."""
-    import json
-    import os
-
-    meta_p = _ivfpq_meta_path(path)
-    if not os.path.exists(meta_p):
-        raise ValueError(
-            f"no _ivfpq_meta.json at {path} — append requires an index "
-            "written by ivfpq_index_write (the sidecar pins the quantizer)"
-        )
-    with open(meta_p) as f:
-        meta = json.load(f)
-    got = {
-        "m": len(codebooks),
-        "pq_k": len(codebooks[0]),
-        "n_centroids": len(centroids),
-    }
-    exp = {k: meta[k] for k in got}
-    if got != exp:
-        raise ValueError(
-            f"quantizer shape mismatch vs index at {path}: index={exp}, "
-            f"append={got} — retrain means rebuild, not append"
-        )
-    c = _ivfpq_encode(
-        new_vectors, centroids, codebooks, id_col, vec_col,
-        bool(meta.get("residual", False)),
-    )
-    c.write.partitionBy("_cid").mode("append").parquet(path)
-
-
-def cosine_topk_ivfpq_at_rest(
-    spark,
-    path: str,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    k: int = 5,
-    n_probe: int = 2,
-    refine_factor: int | None = 4,
-    corpus: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    residual: bool = False,
-) -> DataFrame:
-    """Query a materialized IVF-PQ index with partition pruning: only the
-    probed ``_cid=`` directories are read, each candidate costs m code
-    bytes of IO and m LUT lookups of CPU. With ``refine_factor`` the
-    shortlist re-ranks against ``corpus`` (the full-vector table) for
-    exact cos_sim — corpus IO is shortlist-sized, k·refine rows per
-    query. Same semantics as :func:`cosine_topk_ivfpq` with the same
-    centroids/codebooks and the same ``residual`` mode (tests pin this);
-    ``residual=True`` adds the IVFADC anchor term ``q·c(list)`` to the
-    LUT sum. The flag is validated against the mode recorded at
-    :func:`ivfpq_index_write` time — a mismatch raises rather than
-    silently mis-scoring."""
-    import json
-    import os
-
-    if refine_factor is not None and corpus is None:
-        raise ValueError("refine_factor needs corpus= (the full-vector table)")
-    meta_p = _ivfpq_meta_path(path)
-    if os.path.exists(meta_p):
-        with open(meta_p) as f:
-            meta = json.load(f)
-        if bool(meta.get("residual", False)) != bool(residual):
-            raise ValueError(
-                f"index at {path} was written with residual="
-                f"{meta.get('residual')}; queried with residual={residual} — "
-                "codes and LUT identities don't mix across modes"
-            )
-    n_probe = min(n_probe, len(centroids))
-    pq_k = len(codebooks[0])
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("_qv"),
-        )
-        .withColumn("_qu", _unit_vec("_qv"))
-        .withColumn("_lut", F.expr(_pq_lut_sql("_qu", codebooks)))
-        .withColumn(
-            "_cid", F.explode(_nearest_centroid_cols("_qv", centroids, n_probe))
-        )
-        .drop("_qv")
-    )
-    if residual:
-        anchors = ", ".join(_dot_sql("_qu", c) for c in _unit_rows(centroids))
-        q = q.withColumn(
-            "_anchor", F.expr(f"element_at(array({anchors}), _cid + 1)")
-        )
-    else:
-        q = q.withColumn("_anchor", F.lit(0.0))
-    probed = sorted({r["_cid"] for r in q.select("_cid").distinct().collect()})
-    cand = (
-        spark.read.parquet(path)
-        .where(F.col("_cid").isin(probed))  # partition-pruned scan
-        .select("_cid", F.col(id_col).alias("neighbor_id"), "codes")
-    )
-    scored = (
-        cand.join(maybe_broadcast(q), "_cid")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "_approx",
-            F.col("_anchor")
-            + F.expr(
-                f"aggregate(transform(codes, (c, j) -> "
-                f"element_at(_lut, j * {pq_k} + c + 1)), 0d, (a, v) -> a + v)"
-            ),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("_approx").desc(), F.col("neighbor_id").asc()
-    )
-    if refine_factor is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(wk))
-            .where(F.col("rank") <= k)
-            .select(
-                "query_id", "neighbor_id", "rank", F.round("_approx", 6).alias("cos_sim")
-            )
-        )
-    short = (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= int(k) * int(refine_factor))
-        .select("query_id", "neighbor_id")
-    )
-    cvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_cv"),
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-    )
-    exact = (
-        short.join(cvec, "neighbor_id")
-        .join(maybe_broadcast(qv), "query_id")
-        .withColumn("_cos", cosine(F.col("_qv"), F.col("_cv")))
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("_cos", 6).alias("cos_sim"))
-    )

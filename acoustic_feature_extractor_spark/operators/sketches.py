@@ -904,51 +904,3 @@ def cms_estimate(
         j.groupBy(*by_cols, item_col)
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).cast("long").alias(out_col))
     )
-
-
-def cms_apply_changes(
-    old: DataFrame,
-    changes: DataFrame,
-    item_col: str,
-    by: str | list[str] | None = None,
-    depth: int = 4,
-    width: int = 256,
-    hash_fn=None,
-    change_type_col: str = "_change_type",
-) -> DataFrame:
-    """Incremental maintenance of a CMS counter table from a CDC change
-    set (``snapshots.read_changes`` output). Like histograms — and unlike
-    HLL — count-min is FULLY retractable: cells are linear in the facts,
-    so a delete subtracts where an insert added and the folded table is
-    IDENTICAL to a rebuild (pytest pins frame equality). The fold is the
-    same explode + partial/final groupBy as the build, but over the
-    change set only, outer-merged into the counter table: IO ∝ changes +
-    sketch, never the fact table. Cells that return to 0 are dropped —
-    ``cms_estimate`` reads absent cells as 0, so the table stays minimal.
-    (depth, width, hash_fn) must match the build; a negative cell after
-    the fold means the change set deleted rows it never inserted."""
-    by_cols = [by] if isinstance(by, str) else list(by or [])
-    keys = [*by_cols, "d", "bucket"]
-    item = F.col(item_col)
-    sign = _change_sign(change_type_col)
-    src, pairs = _with_cms_pairs(
-        changes.where(item.isNotNull()), item, depth, width, hash_fn
-    )
-    delta = (
-        src.select(*by_cols, sign.alias("_sgn"), F.explode(pairs).alias("_db"))
-        .groupBy(
-            *by_cols, F.col("_db.d").alias("d"), F.col("_db.bucket").alias("bucket")
-        )
-        .agg(F.sum("_sgn").alias("_dcnt"))
-    )
-    return (
-        old.join(delta, keys, "full")
-        .select(
-            *keys,
-            (
-                F.coalesce(F.col("cnt"), F.lit(0))
-                + F.coalesce(F.col("_dcnt"), F.lit(0))
-            ).alias("cnt"),
-        )
-        .where(F.col("cnt") != 0)
-    )

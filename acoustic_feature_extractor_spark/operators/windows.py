@@ -170,69 +170,6 @@ def pad_segments_to_max(
     return core.unionByName(pads).withColumnRenamed("_pos", "pos")
 
 
-def estimate_pad_values(
-    df: DataFrame,
-    value_col: str,
-    key: str = "conv_id",
-    segment_col: str | None = None,
-    order: str = "turn_idx",
-    n_edge: int = 5,
-) -> DataFrame:
-    """Per-segment pad-value estimate with the reference's CONSENSUS check
-    (``estimate_padding_value``,
-    ``/root/reference/src/acoustic_feature_extractor/data/sampling_data.py:62-71``):
-    the pad value is taken from the first/last ``n_edge`` rows and the
-    reference ASSERTS they are all equal — a data-quality gate, not just a
-    default. Output: one row per (key[, segment]) with ``pad_value``,
-    ``consensus_ok`` (all 2·n_edge edge rows equal and non-null), and
-    ``n_edge_distinct`` for diagnostics. Callers route
-    ``consensus_ok = false`` segments to a quarantine sink or
-    :func:`assert_pad_consensus`.
-
-    Scale shape: two rank windows on the existing (key, segment) exchange,
-    then a tiny per-segment aggregate — no extra fact shuffle.
-    """
-    gcols = [key] + ([segment_col] if segment_col else [])
-    w_asc = Window.partitionBy(*gcols).orderBy(F.col(order).asc())
-    w_desc = Window.partitionBy(*gcols).orderBy(F.col(order).desc())
-    d = (
-        df.withColumn("_rn", F.row_number().over(w_asc))
-        .withColumn("_rrn", F.row_number().over(w_desc))
-        .where((F.col("_rn") <= n_edge) | (F.col("_rrn") <= n_edge))
-    )
-    return d.groupBy(*gcols).agg(
-        F.min_by(value_col, "_rn").alias("pad_value"),
-        (
-            (F.count("*") == F.count(value_col))
-            & (F.min(value_col) == F.max(value_col))
-        ).alias("consensus_ok"),
-        F.count_distinct(value_col).alias("n_edge_distinct"),
-    )
-
-
-def assert_pad_consensus(
-    df: DataFrame,
-    value_col: str,
-    key: str = "conv_id",
-    segment_col: str | None = None,
-    order: str = "turn_idx",
-    n_edge: int = 5,
-    max_report: int = 10,
-) -> DataFrame:
-    """Eager twin of :func:`estimate_pad_values` mirroring the reference's
-    assert: raises ``ValueError`` naming the violating segments if any
-    segment's edge rows disagree; otherwise returns the estimates."""
-    est = estimate_pad_values(df, value_col, key, segment_col, order, n_edge)
-    bad = est.where(~F.col("consensus_ok")).limit(max_report).collect()
-    if bad:
-        keys = [tuple(r[c] for c in ([key] + ([segment_col] if segment_col else []))) for r in bad]
-        raise ValueError(
-            f"padding-value consensus violated for segments {keys}: edge rows "
-            f"are not all equal (reference sampling_data.py:62-71 asserts this)"
-        )
-    return est
-
-
 def topk_per_group(
     df: DataFrame,
     group: str | list[str],

@@ -57,13 +57,6 @@ def completed_partitions(out_dir: str) -> set[str]:
     return {p["partition"] for p in m.partitions}
 
 
-def save_arguments(args: dict, out_dir: str) -> str:
-    """Direct ``arguments.json`` analog (provenance sink S6)."""
-    return _write_json(
-        os.path.join(out_dir, "arguments.json"), {k: str(v) for k, v in args.items()}
-    )
-
-
 def _write_json(path: str, obj: dict) -> str:
     """Write ``obj`` to a temp file, then rename it over ``path``: a kill
     at any point leaves either the previous file or the new one, never a

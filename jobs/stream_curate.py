@@ -8,13 +8,12 @@ versioned corpus table::
     → Gopher quality gate → PII redaction → exactly-once snapshot table
 
 Everything after the dedup is MAP-ONLY by construction — the quality
-signals use the sorted-runs fold (``top_gram_share``), the C4 filters and
+signals use the sorted-runs fold (``gopher_keep``), the C4 filters and
 PII scrub are pure projections — so the whole curation pass pipelines
 with the scan: the only stateful operator is the content-hash dedup,
 whose store is bounded by the watermark horizon. The near-dup (MinHash)
 stage is deliberately batch-only: LSH banding needs corpus-wide joins;
-run ``curate_corpus.py`` (or ``minhash_index_probe`` against an at-rest
-index) over the snapshot table it lands in.
+run ``curate_corpus.py`` over the snapshot table it lands in.
 
 The sink is :func:`~acoustic_feature_extractor_spark.sources.snapshots.snapshot_sink`:
 each micro-batch commits as one snapshot (idempotent on epoch replay →
@@ -49,40 +48,31 @@ DOC_SCHEMA = (
 
 def curation_columns(min_words: int, c4: bool, c4_min_line_words: int, c4_min_lines: int):
     """(keep_predicate, projection) — every gate as pure Columns so the
-    streaming plan stays map-only after the dedup. Mirrors the batch
-    stages: C4 rewrites text to its kept lines; Gopher thresholds gate;
-    PII is redacted with the counts kept as the audit trail."""
+    streaming plan stays map-only after the dedup. The gates are the batch
+    stages' own predicates: C4 rewrites text to its kept lines
+    (``c4_page_keep``), Gopher gates (``gopher_keep``), and PII is
+    redacted with the counts kept as the audit trail."""
     from acoustic_feature_extractor_spark.functions import text as tx
 
     t = F.col("text")
     if c4:
         kept = tx.c4_kept_lines(t, c4_min_line_words)
-        lorem = F.lower(t).contains("lorem ipsum")
-        brace = t.contains("{")
-        c4_keep = (F.size(kept) >= c4_min_lines) & ~lorem & ~brace
+        c4_keep = tx.c4_page_keep(t, kept, c4_min_lines)
         text_out = F.array_join(kept, "\n")
     else:
         c4_keep = F.lit(True)
         text_out = t
 
-    g = text_out  # Gopher signals score the POST-C4 text, like the batch order
-    gopher_keep = (
-        (tx.token_count(g) >= min_words)
-        & (tx.token_count(g) <= 100_000)
-        & (tx.mean_word_length(g) >= 3.0)
-        & (tx.mean_word_length(g) <= 10.0)
-        & (tx.alpha_word_ratio(g) >= 0.8)
-        & (tx.dup_line_ratio(g) <= 0.3)
-        & (tx.top_gram_share(g) <= 0.2)
-    )
+    # Gopher scores the POST-C4 text, like the batch order
+    keep = c4_keep & tx.gopher_keep(text_out, min_words)
     proj = [
         "doc_id",
         "lang",
         "source",
-        *tx.pii_counts(g),
-        tx.redact_pii(g).alias("text"),
+        *tx.pii_counts(text_out),
+        tx.redact_pii(text_out).alias("text"),
     ]
-    return c4_keep & gopher_keep, proj
+    return keep, proj
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -10,11 +10,8 @@ from pyspark.sql import functions as F
 
 from acoustic_feature_extractor_spark.datagen import (
     SESSION_GAP_SECONDS,
-    generate_spans,
     generate_transcripts,
-    generate_turn_features,
 )
-from acoustic_feature_extractor_spark.sources.tables import validate_transcripts
 
 
 def test_deterministic(spark):
@@ -25,7 +22,16 @@ def test_deterministic(spark):
 
 
 def test_contiguous_turn_idx(transcripts):
-    assert validate_transcripts(transcripts).count() == 0
+    """turn_idx is contiguous and 0-based per conversation, and the key
+    columns are never NULL — the reference's interval invariants
+    (``phoneme.py:69-74``) recast."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    bad = transcripts.withColumn("rn", F.row_number().over(w) - 1).where(
+        (F.col("rn") != F.col("turn_idx")) | F.col("conv_id").isNull() | F.col("ts").isNull()
+    )
+    assert bad.count() == 0
 
 
 def test_text_equality_invariant(spark, transcripts):
@@ -68,14 +74,3 @@ def test_turn_features_populations(turn_features_df):
     m = {r["pop"]: r["m"] for r in d.groupBy("pop").agg(F.avg("feature").alias("m")).collect()}
     assert m["low"] < m["high"]
 
-
-def test_spans_contiguous_invariants(spark):
-    spans = generate_spans(spark, n_convs=10)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("conv_id").orderBy("span_id")
-    bad = spans.withColumn("prev_end", F.lag("end_ts").over(w)).where(
-        F.col("prev_end").isNotNull() & (F.col("start_ts") < F.col("prev_end"))
-    )
-    assert bad.count() == 0
-    assert spans.where(F.col("start_ts") > F.col("end_ts")).count() == 0

@@ -204,14 +204,10 @@ def test_ngram_prefix_filter_lossless(spark):
 
 
 def test_contamination_pairs_bruteforce(spark):
-    """contamination_pairs == brute-force shared-w-shingle count, and
-    contaminated_ids is exactly the distinct train side of those pairs."""
+    """contamination_pairs == brute-force shared-w-shingle count."""
     import itertools
 
-    from acoustic_feature_extractor_spark.operators.dedup import (
-        contaminated_ids,
-        contamination_pairs,
-    )
+    from acoustic_feature_extractor_spark.operators.dedup import contamination_pairs
 
     rng = __import__("random").Random(7)
     vocab = [f"w{i}" for i in range(40)]
@@ -252,9 +248,6 @@ def test_contamination_pairs_bruteforce(spark):
     }
     assert got == want
     assert want, "fixture must actually plant contamination"
-
-    drop = {r["doc_id"] for r in contaminated_ids(train, bench, w=w).collect()}
-    assert drop == {t for (t, _) in want}
 
 
 def test_duplicated_spans_bruteforce(spark):
@@ -355,55 +348,3 @@ def test_cut_duplicated_spans_keep_one(spark):
     assert out[1] == ("Epsilon zeta eta theta iota", 6, 11)
     assert out[2] == ("kappa lam mu nu xi omicron pi rho", 6, 14)
     assert out[3] == (docs[3][1], 0, 10)
-
-
-def test_minhash_index_probe_matches_full_lsh(spark, tmp_path):
-    """Incremental probe (delta x at-rest index) must find exactly the
-    cross pairs the full-corpus LSH finds at the same hash family."""
-    from acoustic_feature_extractor_spark.operators.dedup import (
-        minhash_index_probe,
-        minhash_index_write,
-    )
-
-    old = spark.createDataFrame(pd.DataFrame(DOCS[:4], columns=["doc_id", "text"]))
-    new = spark.createDataFrame(pd.DataFrame(DOCS[4:], columns=["doc_id", "text"]))
-    path = str(tmp_path / "mh_index")
-    minhash_index_write(old, path, num_hashes=64, bands=32)
-    got = {
-        (r["new_id"], r["index_id"]): r["jaccard"]
-        for r in minhash_index_probe(new, path, threshold=0.4).collect()
-    }
-    full = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in minhash_lsh_pairs(
-            _docs(spark), threshold=0.4, num_hashes=64, bands=32
-        ).collect()
-    }
-    old_ids = {d[0] for d in DOCS[:4]}
-    new_ids = {d[0] for d in DOCS[4:]}
-    cross = {
-        (b, a): j for (a, b), j in full.items() if a in old_ids and b in new_ids
-    } | {(a, b): j for (a, b), j in full.items() if a in new_ids and b in old_ids}
-    assert set(got) == set(cross)
-    for k in cross:
-        assert np.isclose(got[k], cross[k], rtol=1e-9)
-
-
-def test_minhash_index_probe_uses_stored_params(spark, tmp_path):
-    """Probe must read the hash family from the index, not from defaults:
-    an index built with a non-default family still matches itself."""
-    from acoustic_feature_extractor_spark.operators.dedup import (
-        minhash_index_probe,
-        minhash_index_write,
-    )
-
-    old = spark.createDataFrame(pd.DataFrame(DOCS[:2], columns=["doc_id", "text"]))
-    new = spark.createDataFrame(
-        pd.DataFrame([(9, DOCS[0][1])], columns=["doc_id", "text"])
-    )
-    path = str(tmp_path / "mh_index2")
-    minhash_index_write(old, path, w=2, num_hashes=32, bands=8, seed=123)
-    got = minhash_index_probe(new, path, threshold=0.9).collect()
-    # doc 9 is an exact copy of docs 0/1 -> jaccard 1.0 against both
-    assert {(r["new_id"], r["index_id"]) for r in got} == {(9, 0), (9, 1)}
-    assert all(np.isclose(r["jaccard"], 1.0) for r in got)

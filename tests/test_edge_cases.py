@@ -81,19 +81,6 @@ def test_resample_short_entity_empty_grid(spark):
     assert out == []
 
 
-def test_frame_sample_zero_frames(spark):
-    from acoustic_feature_extractor_spark.operators.multimodal import frame_sample_plan
-
-    df = spark.createDataFrame(
-        [(1, {"width": None, "height": None, "sample_rate": None, "n_frames": 0}),
-         (2, {"width": None, "height": None, "sample_rate": None, "n_frames": 25})],
-        "media_id long, meta struct<width:int,height:int,sample_rate:int,n_frames:int>",
-    )
-    rows = frame_sample_plan(df, every_n=10).collect()
-    assert {r["media_id"] for r in rows} == {2}
-    assert sorted(r["frame_idx"] for r in rows) == [0, 10, 20]
-
-
 def test_salted_rolling_margin_near_chunk(spark):
     """Rows near BOTH chunk edges carry both ways: margin close to
     chunk_rows must still reproduce the plain window exactly."""

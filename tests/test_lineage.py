@@ -9,7 +9,6 @@ import pytest
 from acoustic_feature_extractor_spark.plans.lineage import (
     RunManifest,
     completed_partitions,
-    save_arguments,
 )
 
 
@@ -51,13 +50,3 @@ def test_save_that_fails_midway_keeps_previous_manifest(tmp_path):
     loaded = RunManifest.load(d)
     assert loaded is not None and loaded.args == {"buckets": 4}
     assert [p["partition"] for p in loaded.partitions] == ["bucket=0"]
-
-
-def test_save_arguments():
-    with tempfile.TemporaryDirectory() as d:
-        p = save_arguments({"input_glob": "/x/*.parquet", "rate": 100}, d)
-        import json
-
-        with open(p) as f:
-            args = json.load(f)
-        assert args["rate"] == "100"

@@ -10,7 +10,6 @@ from acoustic_feature_extractor_spark.operators.multimodal import (
     attach_binary_payload,
     decode_stub,
     extract_media_features,
-    frame_sample_plan,
 )
 
 
@@ -31,64 +30,6 @@ def test_media_features_match_local_stub(spark):
 def test_decode_stub_raises_without_fake():
     with pytest.raises(NotImplementedError):
         decode_stub(b"bytes", "image", fake=False)
-
-
-def test_frame_sample_plan(spark):
-    pdf = pd.DataFrame(
-        {
-            "media_id": [0],
-            "kind": ["video"],
-            "payload": [b""],
-        }
-    )
-    import pyspark.sql.functions as F
-
-    df = spark.createDataFrame(pdf).withColumn(
-        "meta",
-        F.struct(
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("int").alias("sample_rate"),
-            F.lit(25).alias("n_frames"),
-        ),
-    )
-    frames = frame_sample_plan(df, every_n=10).orderBy("frame_idx").collect()
-    assert [r["frame_idx"] for r in frames] == [0, 10, 20]
-
-
-def test_resize_media_rewrites_meta_and_scales_payload(spark):
-    from acoustic_feature_extractor_spark.operators.multimodal import resize_media
-
-    media = attach_binary_payload(_docs(spark))
-    out = resize_media(media, target_w=8, target_h=8).collect()
-    src = {r["media_id"]: r for r in media.collect()}
-    assert len(out) == 3
-    for r in out:
-        assert r["meta"]["width"] == 8 and r["meta"]["height"] == 8
-        s = src[r["media_id"]]
-        src_px = max((s["meta"]["width"] or 1) * (s["meta"]["height"] or 1), 1)
-        want = max(int(len(s["payload"]) * 64 / src_px), 1)
-        assert len(r["payload"]) == want
-    # deterministic: second run byte-identical
-    again = {r["media_id"]: r["payload"] for r in resize_media(media, 8, 8).collect()}
-    assert all(bytes(r["payload"]) == bytes(again[r["media_id"]]) for r in out)
-
-
-def test_resize_media_honest_without_fake(spark):
-    from acoustic_feature_extractor_spark.operators.multimodal import resize_media
-
-    media = attach_binary_payload(_docs(spark))
-    with pytest.raises(Exception, match="NotImplementedError|resize requires"):
-        resize_media(media, fake=False).collect()
-
-
-def test_resize_media_survives_empty_partitions(spark):
-    # empty Arrow batches (empty partitions) must yield nothing, not
-    # KeyError on the column-less meta frame
-    from acoustic_feature_extractor_spark.operators.multimodal import resize_media
-
-    media = attach_binary_payload(_docs(spark)).repartition(16)
-    assert resize_media(media, target_w=8, target_h=8).count() == 3
 
 
 def test_wav_roundtrip_sample_exact():

@@ -225,65 +225,26 @@ def test_temporal_two_phase_no_python(spark, entry_mod):
         assert "Window" in plan, q
 
 
-def test_bucketed_tables_join_and_agg_without_shuffle(spark, tmp_path):
-    """Tables bucketed on the same key with the same bucket count must
-    equi-join AND aggregate with ZERO exchanges — the write-once,
-    shuffle-never co-location contract the table layer promises for
-    repeated feature-backfill jobs."""
-    import re
-
-    from acoustic_feature_extractor_spark.datagen import generate_transcripts
-    from acoustic_feature_extractor_spark.sources.tables import (
-        read_bucketed_table,
-        write_bucketed_table,
-    )
-
-    t = generate_transcripts(spark, n_convs=40)
-    agg = t.groupBy("conv_id").count().withColumnRenamed("count", "n")
-    spark.sql("DROP TABLE IF EXISTS _bkt_l")
-    spark.sql("DROP TABLE IF EXISTS _bkt_r")
-    write_bucketed_table(t, "_bkt_l", n_buckets=8, path=str(tmp_path / "l"))
-    write_bucketed_table(
-        agg, "_bkt_r", key="conv_id", order="conv_id", n_buckets=8,
-        path=str(tmp_path / "r"),
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = read_bucketed_table(spark, "_bkt_l").join(
-            read_bucketed_table(spark, "_bkt_r"), "conv_id"
-        )
-        plan = _plan(j)
-        assert "SortMergeJoin" in plan
-        assert not re.findall(r"\(\d+\) Exchange\b", plan), plan[:2000]
-        g = read_bucketed_table(spark, "_bkt_l").groupBy("conv_id").count()
-        assert not re.findall(r"\(\d+\) Exchange\b", _plan(g))
-        assert j.count() == t.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS _bkt_l")
-        spark.sql("DROP TABLE IF EXISTS _bkt_r")
-
-
 def test_gopher_fold_map_only_and_methods_agree(spark):
-    """method="fold" makes the whole Gopher gate ONE map-only projection
-    (zero exchanges — the wide-cluster shape); the default grouped method
-    must produce identical rows (it wins on this single-node box)."""
+    """``gopher_keep`` — the fold-based predicate the streaming curation
+    job gates with — is ONE map-only projection (zero exchanges, zero
+    Python), and its verdicts equal ``gopher_filter``'s grouped ``keep``."""
     import re
 
-    import pandas as pd
+    from pyspark.sql import functions as F
 
-    from acoustic_feature_extractor_spark.functions.text import gopher_filter
+    from acoustic_feature_extractor_spark.functions.text import gopher_filter, gopher_keep
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    fold = gopher_filter(docs, min_words=20, method="fold")
+    fold = docs.select("doc_id", gopher_keep(F.col("text"), min_words=20).alias("keep"))
     plan = _plan(fold)
     assert "EvalPython" not in plan
     assert not re.findall(r"\(\d+\) Exchange\b", plan), plan[:2000]
-    grouped = gopher_filter(docs, min_words=20)
+    grouped = gopher_filter(docs, min_words=20).select("doc_id", "keep")
     a = sorted(map(tuple, fold.collect()))
     b = sorted(map(tuple, grouped.collect()))
     assert a == b
+    assert {k for _, k in a} == {True, False}  # the fixture exercises both verdicts
 
 
 def test_c4_clean_map_only(spark, entry_mod):

@@ -1,14 +1,11 @@
-"""k-anonymity suppression / redaction and l-diversity auditing."""
+"""k-anonymity suppression / redaction."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from acoustic_feature_extractor_spark.operators.privacy import (
-    anonymity_report,
-    k_anonymize,
-)
+from acoustic_feature_extractor_spark.operators.privacy import k_anonymize
 
 
 @pytest.fixture(scope="module")
@@ -60,17 +57,6 @@ def test_redact_keeps_rows_and_masks(spark, people):
     assert all(
         r["count"] >= 3 for r in real.groupBy("region", "segment").count().collect()
     )
-
-
-def test_anonymity_report_k_and_l(spark, people):
-    rep = {
-        (r["region"], r["segment"]): (r["n"], r["l"])
-        for r in anonymity_report(people, ["region", "segment"], "s").collect()
-    }
-    assert rep[("us", "a")] == (4, 3)
-    assert rep[("eu", "a")] == (3, 1)  # uniform sensitive value: l = 1
-    assert rep[("eu", "b")] == (1, 1)
-    assert min(n for n, _ in rep.values()) == 1
 
 
 def test_bad_args(spark, people):

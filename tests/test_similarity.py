@@ -236,51 +236,6 @@ def test_ivf_at_rest_matches_in_memory(spark, tmp_path):
     assert "PartitionFilters" in plan and "_cid" in plan
 
 
-def test_kmeans_centroids_matches_numpy_lloyd(spark):
-    """Distributed Lloyd == a numpy Lloyd with the same deterministic
-    init, cosine assignment, and spherical update; and the trained
-    centroids separate planted blobs."""
-    import numpy as np
-    import pandas as pd
-
-    from acoustic_feature_extractor_spark.operators.similarity import (
-        kmeans_centroids,
-        pick_centroids,
-    )
-
-    rng = np.random.default_rng(3)
-    blobs = np.array([[10.0, 0, 0, 0], [0, 10.0, 0, 0], [0, 0, 10.0, 0]])
-    X = np.vstack([blobs[i % 3] + rng.normal(0, 0.4, 4) for i in range(120)])
-    df = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(120), "embedding": [list(map(float, x)) for x in X]})
-    )
-
-    k, iters = 3, 4
-    got = np.array(kmeans_centroids(df, n_centroids=k, n_iter=iters))
-
-    # numpy twin with the identical init
-    cents = np.array(pick_centroids(df, k))
-    for _ in range(iters):
-        units = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-300)
-        sims = X @ units.T
-        # ties broken toward the LOWER cid, matching array_sort+reverse
-        # (stable sort keeps the earlier struct first among equal sims)
-        assign = np.argmax(sims, axis=1)
-        new = []
-        for i in range(k):
-            pts = X[assign == i]
-            m = pts.mean(axis=0) if len(pts) else cents[i]
-            m = m / (np.linalg.norm(m) or 1.0)
-            new.append(m)
-        cents = np.array(new)
-
-    assert np.allclose(got, cents, atol=1e-9)
-
-    # blob separation: each trained centroid aligns with one planted axis
-    axes = {int(np.argmax(c)) for c in got}
-    assert axes == {0, 1, 2}
-
-
 def test_embedding_label_outliers_matches_numpy(spark):
     """Per-label centroid cosine must equal the numpy computation, and a
     planted far-from-cluster vector must flag as the outlier."""
@@ -454,39 +409,6 @@ def test_ivfpq_partial_probe_recall(spark):
     assert recall >= 0.4, recall
 
 
-def test_ivfpq_at_rest_matches_in_memory(spark, tmp_path):
-    """The materialized codes-only index returns the SAME rows as the
-    in-memory IVF-PQ path with the same centroids/codebooks, and the
-    written index holds codes, not vectors."""
-    from acoustic_feature_extractor_spark.operators.similarity import (
-        cosine_topk_ivfpq,
-        cosine_topk_ivfpq_at_rest,
-        ivfpq_index_write,
-        pick_centroids,
-        pq_train,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = pick_centroids(e, n_centroids=4)
-    books = pq_train(e, m=8, pq_k=16, n_iter=2)
-    p = str(tmp_path / "pq_index")
-    ivfpq_index_write(e, p, cents, books)
-    idx = spark.read.parquet(p)
-    assert set(idx.columns) == {"vec_id", "codes", "_cid"}
-    q = e.where(F.col("vec_id") < 6)
-    mem = cosine_topk_ivfpq(
-        q, e, k=5, n_probe=2, refine_factor=4, centroids=cents, codebooks=books
-    )
-    rest = cosine_topk_ivfpq_at_rest(
-        spark, p, q, cents, books, k=5, n_probe=2, refine_factor=4, corpus=e
-    )
-    a = sorted((r["query_id"], r["rank"], r["neighbor_id"]) for r in mem.collect())
-    b = sorted((r["query_id"], r["rank"], r["neighbor_id"]) for r in rest.collect())
-    assert a == b and len(a) == 30
-    with pytest.raises(ValueError, match="corpus"):
-        cosine_topk_ivfpq_at_rest(spark, p, q, cents, books, refine_factor=2)
-
-
 def test_ivfpq_residual_full_probe_big_refine_equals_bruteforce(spark):
     """Residual (IVFADC) mode degrades to exact brute force under full
     probe + corpus-wide refine, same as raw mode."""
@@ -548,60 +470,6 @@ def test_ivfpq_residual_score_decomposition(spark):
         assert abs(r["cos_sim"] - round(exp, 6)) <= 1e-6, (r, exp)
 
 
-def test_ivfpq_at_rest_residual_matches_in_memory_and_guards_mode(spark, tmp_path):
-    """ADVICE r3: the at-rest pair must support IVFADC residual mode with
-    the same identity as the in-memory path (anchor term at score,
-    centroid subtraction at encode), and the index must RECORD its
-    training mode so a mode-mismatched query raises instead of silently
-    mis-scoring."""
-    import pytest
-
-    from acoustic_feature_extractor_spark.operators.similarity import (
-        cosine_topk_ivfpq,
-        cosine_topk_ivfpq_at_rest,
-        ivfpq_index_write,
-        pick_centroids,
-        pq_train,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = pick_centroids(e, n_centroids=4)
-    books = pq_train(e, m=8, pq_k=16, n_iter=2, residual_of=cents)
-    p = str(tmp_path / "pq_res_index")
-    ivfpq_index_write(e, p, cents, books, residual=True)
-    q = e.where(F.col("vec_id") < 6)
-    mem = cosine_topk_ivfpq(
-        q, e, k=5, n_probe=2, refine_factor=None,
-        centroids=cents, codebooks=books, residual=True,
-    )
-    rest = cosine_topk_ivfpq_at_rest(
-        spark, p, q, cents, books, k=5, n_probe=2, refine_factor=None,
-        residual=True,
-    )
-    a = sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"], r["cos_sim"])
-        for r in mem.collect()
-    )
-    b = sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"], r["cos_sim"])
-        for r in rest.collect()
-    )
-    assert a == b and len(a) == 30
-    # mode mismatch in BOTH directions raises
-    with pytest.raises(ValueError, match="residual"):
-        cosine_topk_ivfpq_at_rest(
-            spark, p, q, cents, books, k=5, n_probe=2, refine_factor=None
-        )
-    p_raw = str(tmp_path / "pq_raw_index")
-    books_raw = pq_train(e, m=8, pq_k=16, n_iter=2)
-    ivfpq_index_write(e, p_raw, cents, books_raw)
-    with pytest.raises(ValueError, match="residual"):
-        cosine_topk_ivfpq_at_rest(
-            spark, p_raw, q, cents, books_raw, k=5, n_probe=2,
-            refine_factor=None, residual=True,
-        )
-
-
 def test_ivf_append_matches_rebuild(spark, tmp_path):
     """Incremental IVF maintenance: write the index on a base slice,
     append the rest with the frozen centroids — PARTIAL-probe queries
@@ -634,55 +502,6 @@ def test_ivf_append_matches_rebuild(spark, tmp_path):
         a = canon(cosine_topk_ivf_at_rest(spark, incr, q, cents, k=5, n_probe=n_probe))
         b = canon(cosine_topk_ivf_at_rest(spark, full, q, cents, k=5, n_probe=n_probe))
         assert a == b and len(a) == 40
-
-
-def test_ivfpq_append_matches_rebuild_and_guards_quantizer(spark, tmp_path):
-    """Codes-index maintenance: append encodes the batch with the frozen
-    quantizers (residual mode read from the sidecar) and must equal a
-    full rebuild; a quantizer-shape mismatch or a missing sidecar raises
-    instead of interleaving incomparable codes."""
-    import pytest
-
-    from acoustic_feature_extractor_spark.operators.similarity import (
-        cosine_topk_ivfpq_at_rest,
-        ivfpq_index_append,
-        ivfpq_index_write,
-        pick_centroids,
-        pq_train,
-    )
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = pick_centroids(e, n_centroids=4)
-    books = pq_train(e, m=8, pq_k=16, n_iter=2, residual_of=cents)
-    incr = str(tmp_path / "pq_incr")
-    ivfpq_index_write(e.where(F.col("vec_id") % 3 != 0), incr, cents, books, residual=True)
-    ivfpq_index_append(e.where(F.col("vec_id") % 3 == 0), incr, cents, books)
-    full = str(tmp_path / "pq_full")
-    ivfpq_index_write(e, full, cents, books, residual=True)
-    q = e.where(F.col("vec_id") < 6)
-
-    def canon(df):
-        return sorted(
-            (r["query_id"], r["rank"], r["neighbor_id"], r["cos_sim"])
-            for r in df.collect()
-        )
-
-    a = canon(cosine_topk_ivfpq_at_rest(
-        spark, incr, q, cents, books, k=5, n_probe=2, refine_factor=None,
-        residual=True,
-    ))
-    b = canon(cosine_topk_ivfpq_at_rest(
-        spark, full, q, cents, books, k=5, n_probe=2, refine_factor=None,
-        residual=True,
-    ))
-    assert a == b and len(a) == 30
-    # shape mismatch: different m
-    books_m4 = pq_train(e, m=4, pq_k=16, n_iter=2, residual_of=cents)
-    with pytest.raises(ValueError, match="shape mismatch"):
-        ivfpq_index_append(e.limit(1), incr, cents, books_m4)
-    # missing sidecar (an index not written by ivfpq_index_write)
-    with pytest.raises(ValueError, match="sidecar"):
-        ivfpq_index_append(e.limit(1), str(tmp_path / "nowhere"), cents, books)
 
 
 def test_ivfpq_residual_beats_raw_on_clustered_corpus(spark):

@@ -101,7 +101,7 @@ def test_stream_curate_drain_gates_and_exactly_once(tmp_path, spark):
 @pytest.mark.slow
 def test_stream_curate_gate_matches_batch_operators(tmp_path, spark):
     """The streamed keep-decision must equal the batch c4_clean +
-    gopher_filter(fold) composition on the same docs (no dups here, so
+    gopher_filter composition on the same docs (no dups here, so
     dedup is a no-op and the gates are the only effect)."""
     from acoustic_feature_extractor_spark.functions import text as tx
 
@@ -127,7 +127,7 @@ def test_stream_curate_gate_matches_batch_operators(tmp_path, spark):
     c4_pass = cleaned.where("keep").select(
         "doc_id", F.col("clean_text").alias("text")
     )
-    gop = tx.gopher_filter(c4_pass, min_words=5, method="fold")
+    gop = tx.gopher_filter(c4_pass, min_words=5)
     exp_ids = sorted(r["doc_id"] for r in gop.where("keep").collect())
     assert got_ids == exp_ids
     assert exp_ids  # fixture admits at least one doc

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from acoustic_feature_extractor_spark.functions import text as tx
 
 
@@ -25,7 +23,7 @@ def _docs(spark):
 def test_dup_line_ratios(spark):
     out = {
         r.doc_id: r
-        for r in tx.repetition_profile(_docs(spark)).collect()
+        for r in tx.gopher_filter(_docs(spark)).collect()
     }
     assert abs(out[1].dup_line_ratio - 1 / 3) < 1e-5
     # repeated line is 11 of 32 line-chars
@@ -35,7 +33,7 @@ def test_dup_line_ratios(spark):
 
 
 def test_top_gram_share(spark):
-    out = {r.doc_id: r for r in tx.repetition_profile(_docs(spark)).collect()}
+    out = {r.doc_id: r for r in tx.gopher_filter(_docs(spark)).collect()}
     assert out[3].top_gram_share == 1.0  # every bigram is "spam spam"
     assert out[2].top_gram_share == 0.1  # 10 distinct bigrams
     assert out[6].top_gram_share == 0.0  # too short for a bigram
@@ -43,17 +41,9 @@ def test_top_gram_share(spark):
 
 def test_alpha_and_symbol_ratios(spark):
     d = _docs(spark)
-    out = {r.doc_id: r for r in tx.repetition_profile(d).collect()}
+    out = {r.doc_id: r for r in tx.gopher_filter(d).collect()}
     assert out[2].alpha_word_ratio == 1.0
     assert out[4].alpha_word_ratio == 0.5  # "###" and "..." carry no letter
-    sym = {
-        r.doc_id: r.s
-        for r in d.select(
-            "doc_id", tx.symbol_word_ratio(F.col("text")).alias("s")
-        ).collect()
-    }
-    assert sym[2] == 0.0
-    assert abs(sym[4] - 6 / 6) < 1e-9  # 4 '#' + 1 '...' + 1 ellipsis over 6 words
 
 
 def test_gopher_filter_verdicts(spark):
@@ -69,8 +59,8 @@ def test_gopher_filter_verdicts(spark):
 
 def test_profile_partition_invariant(spark):
     d = _docs(spark)
-    a = sorted(map(tuple, tx.repetition_profile(d).collect()))
-    b = sorted(map(tuple, tx.repetition_profile(d.repartition(7)).collect()))
+    a = sorted(map(tuple, tx.gopher_filter(d).collect()))
+    b = sorted(map(tuple, tx.gopher_filter(d.repartition(7)).collect()))
     assert a == b
 
 

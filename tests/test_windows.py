@@ -106,52 +106,6 @@ def test_pad_segments_to_max(spark):
         assert lens[cid].nunique() == 1
 
 
-def test_pad_value_consensus(spark):
-    """estimate_pad_values mirrors the reference's estimate_padding_value
-    (sampling_data.py:62-71): pad value = consensus of the first/last 5
-    rows, all-equal ASSERTED — good segments pass, a disagreeing edge is
-    flagged and assert_pad_consensus raises like the reference."""
-    import pandas as pd
-    import pytest
-
-    from acoustic_feature_extractor_spark.operators.windows import (
-        assert_pad_consensus,
-        estimate_pad_values,
-    )
-
-    good = [("g", i, 7.0 if i < 5 or i >= 15 else float(i)) for i in range(20)]
-    bad = [("b", i, float(i)) for i in range(20)]  # edges disagree
-    df = spark.createDataFrame(
-        pd.DataFrame(good + bad, columns=["conv_id", "turn_idx", "v"])
-    )
-    est = {r["conv_id"]: r for r in estimate_pad_values(df, "v").collect()}
-    assert est["g"]["consensus_ok"] and est["g"]["pad_value"] == 7.0
-    assert not est["b"]["consensus_ok"]
-
-    with pytest.raises(ValueError, match="consensus violated"):
-        assert_pad_consensus(df, "v")
-    # the good-only subset passes the eager assert
-    ok = assert_pad_consensus(df.where("conv_id = 'g'"), "v").collect()
-    assert len(ok) == 1 and ok[0]["pad_value"] == 7.0
-
-
-def test_pad_consensus_short_segment(spark):
-    """Segments shorter than 2*n_edge: every row is an edge row (the
-    reference concatenates array[:5] and array[-5:] which overlap)."""
-    import pandas as pd
-
-    from acoustic_feature_extractor_spark.operators.windows import (
-        estimate_pad_values,
-    )
-
-    df = spark.createDataFrame(
-        pd.DataFrame([("s", 0, 1.0), ("s", 1, 1.0), ("s", 2, 1.0)],
-                     columns=["conv_id", "turn_idx", "v"])
-    )
-    r = estimate_pad_values(df, "v").collect()[0]
-    assert r["consensus_ok"] and r["pad_value"] == 1.0
-
-
 def test_topk_per_group_salted_equals_plain(spark, transcripts):
     """Two-phase salted top-k == the single-window top-k, at any input
     partitioning (the salt is spark_partition_id, so repartitioning is
