@@ -2484,12 +2484,12 @@ def q_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     span = mx_us - mn_us
     lo = mn_us + int(0.3 * span)
     hi = mn_us + int(0.5 * span)
-    kept, total = snap.plan_scan(t, "ts_us", lo=lo, hi=hi)
+    kept, total = snap.plan_scan(t, {"ts_us": (lo, hi)})
     if not (total == 8 and 0 < len(kept) < total):
         raise RuntimeError(
             f"data-skipping evidence failed: kept {len(kept)} of {total} files"
         )
-    df = snap.read_where(spark, t, "ts_us", lo=lo, hi=hi)
+    df = snap.read_where(spark, t, {"ts_us": (lo, hi)})
     return df.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.round(F.sum("value"), 6).alias("sum_v"),
@@ -2615,7 +2615,7 @@ GROUP BY 1
 
 def q_pruned_scan_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-column data skipping over a z-ordered layout
-    (sources/layout.py + snapshots.plan_scan_multi): events committed
+    (sources/layout.py + snapshots.plan_scan): events committed
     clustered along the (user_id, value) Morton curve, then a conjunctive
     box predicate prunes files on BOTH columns from the snapshot log's
     per-file stats — the property no single-column range layout has
@@ -2633,8 +2633,8 @@ def q_pruned_scan_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = tempfile.mkdtemp(prefix="zorder_query_")
     snap.commit(zorder_layout(ev, ["user_id", "value"], 32), t)
     preds = {"user_id": (30, 79), "value": (100.0, 249.0)}
-    kept, total = snap.plan_scan_multi(t, preds)
-    df = snap.read_where_multi(spark, t, preds)
+    kept, total = snap.plan_scan(t, preds)
+    df = snap.read_where(spark, t, preds)
     return df.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.round(F.sum("value"), 6).alias("sum_v"),
@@ -5609,9 +5609,9 @@ def q_snapshot_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     lo = mn_us + int(0.2 * span)
     hi = mn_us + int(0.6 * span)
-    kept_pre, total_pre = snap.plan_scan(t, "ts_us", lo=lo, hi=hi)
+    kept_pre, total_pre = snap.plan_scan(t, {"ts_us": (lo, hi)})
     dropped = snap.compact_log(t, keep_last=1)
-    kept_post, total_post = snap.plan_scan(t, "ts_us", lo=lo, hi=hi)
+    kept_post, total_post = snap.plan_scan(t, {"ts_us": (lo, hi)})
     if dropped != 5 or len(snap.history(t)) != 1:
         raise RuntimeError(f"compact_log evidence failed: dropped {dropped}")
     if sorted(kept_pre) != sorted(kept_post) or total_pre != total_post:
@@ -5629,12 +5629,12 @@ def q_snapshot_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     deleted = snap.expire(t, keep_last=1)
     if len(deleted) != 6:
         raise RuntimeError(f"expire evidence failed: deleted {deleted}")
-    kept_f, total_f = snap.plan_scan(t, "ts_us", lo=lo, hi=hi)
+    kept_f, total_f = snap.plan_scan(t, {"ts_us": (lo, hi)})
     if not (total_f == 8 and 0 < len(kept_f) < total_f):
         raise RuntimeError(
             f"post-expiry pruning failed: kept {len(kept_f)} of {total_f}"
         )
-    df = snap.read_where(spark, t, "ts_us", lo=lo, hi=hi)
+    df = snap.read_where(spark, t, {"ts_us": (lo, hi)})
     return df.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.round(F.sum("value"), 6).alias("sum_v"),

@@ -5,7 +5,7 @@ column — pruning on anything else degrades to a full scan. The lakehouse
 answer (Delta ``OPTIMIZE ZORDER BY``, Iceberg's z-order rewrite) is to
 sort files along a space-filling curve over SEVERAL columns: each file
 then covers a small hyper-rectangle, so the snapshot log's per-file
-[min, max] stats (``snapshots.plan_scan_multi``) skip on every clustered
+[min, max] stats (``snapshots.plan_scan``) skip on every clustered
 column at once.
 
 The curve here is the classic bit-interleaved Morton/z-value, built from

@@ -31,8 +31,16 @@ directories that make up the table at that version:
   right-sized dir, metadata-published like any commit; history intact.
 
 Each snapshot records row count (via ``Observation`` on the write itself —
-no re-read), schema DDL, wall-clock, parent id, and a caller lineage dict —
-the per-partition lineage + metrics contract jobs build on.
+no re-read), the table schema, wall-clock, parent id, and a caller lineage
+dict — the per-partition lineage + metrics contract jobs build on.
+
+The schema is logged in Spark's JSON form (``StructType.jsonValue()``, as
+Iceberg writes its schemas into table metadata as JSON) and parsed back
+with ``StructType.fromJson``: pure Python, exact for every column name and
+type. So every data read (:func:`read`, :func:`read_where`,
+:func:`read_changes`, the merge's probe and survivors, :func:`compact`) is
+one :func:`_scan` at the logged schema, and no read infers a schema from
+parquet footers.
 
 **Writer concurrency contract**: one writer per table at a time. Every
 log mutation (commit / merge / compact / rollback / expire) takes an
@@ -54,15 +62,14 @@ import shutil
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from functools import lru_cache
 
-from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType, _parse_datatype_string
+from pyspark.sql.types import StructType
 
 _LOG = "metadata/snapshots.json"
 _LOCK = "metadata/commit.lock"
+_STALE_LOCK_S = 3600.0  # a lock older than this is a crashed writer's
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -82,12 +89,12 @@ def _pid_alive(pid: int) -> bool:
 
 
 @contextmanager
-def _writer_lock(table_path: str, stale_after: float = 3600.0):
+def _writer_lock(table_path: str):
     """Single-writer enforcement: O_EXCL lock held for the whole mutation
     (sid choice → data write → log publish), so concurrent writers can
     neither lose a snapshot to the read-modify-write race nor overwrite
     each other's same-sid data dir. Stale locks (dead pid, or older than
-    ``stale_after``) are reclaimed once."""
+    ``_STALE_LOCK_S``) are reclaimed once."""
     path = os.path.join(table_path, _LOCK)
     os.makedirs(os.path.dirname(path), exist_ok=True)
     fd = None
@@ -103,7 +110,7 @@ def _writer_lock(table_path: str, stale_after: float = 3600.0):
             except (OSError, ValueError):
                 holder = {}
             alive = _pid_alive(int(holder.get("pid", -1)))
-            stale = time.time() - float(holder.get("ts", 0.0)) > stale_after
+            stale = time.time() - float(holder.get("ts", 0.0)) > _STALE_LOCK_S
             if attempt == 0 and (not alive or stale):
                 try:
                     os.unlink(path)  # reclaim and retry once
@@ -130,10 +137,10 @@ def _writer_lock(table_path: str, stale_after: float = 3600.0):
 class Snapshot:
     snapshot_id: int
     parent_id: int | None
-    operation: str  # append | overwrite | rollback
+    operation: str  # append | overwrite | rollback | merge | compact
     dirs: list[str]
     rows: int
-    schema: str
+    schema: dict  # StructType.jsonValue() of the table at this snapshot
     wall_ts: float
     lineage: dict = field(default_factory=dict)
     # per-FILE column min/max for the dirs THIS snapshot wrote (Iceberg's
@@ -142,13 +149,6 @@ class Snapshot:
     # pruned read never opens footers — at 100 TB the stats live in the
     # log, not in a million S3 footer round-trips per query.
     stats: dict = field(default_factory=dict)
-    # {dir_rel: schema_ddl} — which (possibly evolved) schema wrote each
-    # dir. Populated by :func:`compact_log`/:func:`expire` when they fold
-    # away the historical entries that otherwise carry this information
-    # implicitly; consulted by ``_spans_writer_schemas`` so the mergeSchema
-    # fallback of ``_scan`` survives log compaction. Empty on ordinary
-    # commits (the full entry chain is the source of truth while it exists).
-    writer_schemas: dict = field(default_factory=dict)
 
 
 def _enc_stat(v):
@@ -180,6 +180,7 @@ def _collect_file_stats(table_path: str, rel_dir: str) -> dict:
     footers only (pyarrow metadata; zero data pages touched). A column
     missing min/max in ANY row group of a file is dropped for that file
     (pruning then keeps the file: conservative in the safe direction)."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     out: dict = {}
@@ -212,7 +213,11 @@ def _collect_file_stats(table_path: str, rel_dir: str) -> dict:
                 elif a[2] >= 0:
                     a[2] += nulls
                 if st is not None and st.has_min_max:
-                    mn, mx = _enc_stat(st.min), _enc_stat(st.max)
+                    try:
+                        mn, mx = _enc_stat(st.min), _enc_stat(st.max)
+                    except pa.ArrowNotImplementedError:
+                        # pyarrow cannot decode e.g. INT64-backed decimals
+                        mn = mx = None
                     if mn is None or mx is None:  # unencodable type
                         a[3] = False
                         continue
@@ -284,34 +289,13 @@ def history(table_path: str) -> list[Snapshot]:
     return _load_log(table_path)
 
 
-def _is_additive_evolution(old_simple: str, new_schema) -> bool:
-    """True iff ``new_schema`` only ADDS columns to the simpleString
-    ``old_simple`` (every old column present with an identical type) —
-    the Iceberg add-column rule: safe because old files read the new
-    columns as NULL, and no existing value reinterprets its type."""
-    import re
-
-    m = re.match(r"struct<(.*)>$", old_simple)
-    if not m:
-        return False
-    old_cols = {}
-    depth, start, body = 0, 0, m.group(1)
-    parts = []
-    for i, ch in enumerate(body):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(body[start:i])
-            start = i + 1
-    if body[start:]:
-        parts.append(body[start:])
-    for p in parts:
-        name, _, typ = p.partition(":")
-        old_cols[name] = typ
-    new_cols = {f.name: f.dataType.simpleString() for f in new_schema.fields}
-    return all(new_cols.get(n) == t for n, t in old_cols.items())
+def _is_additive_evolution(old: StructType, new: StructType) -> bool:
+    """True iff ``new`` only ADDS columns to ``old`` (every old column
+    present with an identical type, nullability aside) — the Iceberg
+    add-column rule: safe because old files read the new columns as NULL,
+    and no existing value reinterprets its type."""
+    new_types = {f.name: f.dataType.simpleString() for f in new.fields}
+    return all(new_types.get(f.name) == f.dataType.simpleString() for f in old.fields)
 
 
 def commit(
@@ -339,14 +323,13 @@ def commit(
     with _writer_lock(table_path):
         snaps = _load_log(table_path)
         parent = snaps[-1] if snaps else None
-        if (
-            operation == "append"
-            and parent is not None
-            and parent.schema != df.schema.simpleString()
-        ):
-            if not (evolve and _is_additive_evolution(parent.schema, df.schema)):
+        if operation == "append" and parent is not None:
+            old = StructType.fromJson(parent.schema)
+            if old.simpleString() != df.schema.simpleString() and not (
+                evolve and _is_additive_evolution(old, df.schema)
+            ):
                 raise ValueError(
-                    f"append schema mismatch: table has {parent.schema}, "
+                    f"append schema mismatch: table has {old.simpleString()}, "
                     f"commit has {df.schema.simpleString()} — pass evolve=True "
                     "for additive column adds, or overwrite to restate"
                 )
@@ -363,7 +346,7 @@ def commit(
             operation=operation,
             dirs=dirs,
             rows=int(obs.get["rows"]),
-            schema=df.schema.simpleString(),
+            schema=df.schema.jsonValue(),
             wall_ts=round(time.time(), 3),
             lineage=lineage or {},
             stats=_collect_file_stats(table_path, rel),
@@ -385,90 +368,39 @@ def _snapshot(snaps: list[Snapshot], snapshot_id: int | None) -> Snapshot:
     )
 
 
-@lru_cache(maxsize=64)
-def _logged_struct(schema: str) -> StructType | None:
-    """The logged ``schema`` string parsed back into a StructType, or None
-    when it does not round-trip (a column name the simpleString form
-    cannot quote, a type the parser reads differently)."""
-    try:
-        parsed = _parse_datatype_string(schema)
-    except ParseException:
-        return None
-    if not isinstance(parsed, StructType) or parsed.simpleString() != schema:
-        return None
-    return parsed
-
-
 def _scan(
-    spark: SparkSession,
-    table_path: str,
-    snaps: list[Snapshot],
-    rels: list[str],
-    schema: str,
-    dirs: list[str] | None = None,
+    spark: SparkSession, table_path: str, paths: list[str], schema: dict
 ) -> DataFrame:
-    """The one way this module reads data: ``rels`` (data dirs, or files
-    in ``dirs``) read at the logged ``schema``.
+    """The one way this module reads data: ``paths`` (data dirs or files,
+    relative to the table) read at the logged ``schema``.
 
-    The log already records the schema, so it is passed to the reader and
-    no job infers it from parquet footers. Every dir's writer schema is
-    the logged one or an additive ancestor of it (:func:`commit`'s
-    evolution rule), so files written before an ``evolve=True`` append
-    surface its new columns as NULL — also in a merge or compaction that
-    reads only such dirs. Only when the logged string does not round-trip
-    does the read fall back to inference, with ``mergeSchema`` when the
-    dirs were written under more than one schema (otherwise an arbitrary
-    file's schema wins and newer columns vanish)."""
-    reader = spark.read
-    parsed = _logged_struct(schema)
-    if parsed is not None:
-        reader = reader.schema(parsed)
-    elif _spans_writer_schemas(snaps, dirs if dirs is not None else rels, schema):
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*[os.path.join(table_path, r) for r in rels])
+    The schema comes from the log, so no job infers it from parquet
+    footers. Every dir's writer schema is the logged one or an additive
+    ancestor of it (:func:`commit`'s evolution rule), so files written
+    before an ``evolve=True`` append surface its new columns as NULL —
+    also in a merge, compaction or pruned read that opens only such
+    files."""
+    return spark.read.schema(StructType.fromJson(schema)).parquet(
+        *[os.path.join(table_path, p) for p in paths]
+    )
 
 
 def read(
-    spark: SparkSession, table_path: str, snapshot_id: int | None = None
-) -> DataFrame:
-    """Read the table at ``snapshot_id`` (default: current). Time travel is
-    resolving an older log entry to its directory list."""
-    return read_dirs(spark, table_path, snapshot_id=snapshot_id)
-
-
-def read_dirs(
     spark: SparkSession,
     table_path: str,
-    dirs: list[str] | None = None,
     snapshot_id: int | None = None,
+    dirs: list[str] | None = None,
 ) -> DataFrame:
-    """Read ``dirs`` (relative data dirs; default: all of the snapshot's)
-    at the logged schema of ``snapshot_id`` (default: current) — e.g. the
-    dirs an increment appended, found by diffing two snapshots' lists."""
+    """Read the table at ``snapshot_id`` (default: current). Time travel is
+    resolving an older log entry to its directory list. ``dirs`` (relative
+    data dirs) narrows the read to those dirs at the snapshot's schema —
+    e.g. the dirs an increment appended, found by diffing two snapshots'
+    lists."""
     snaps = _load_log(table_path)
     if not snaps:
         raise FileNotFoundError(f"no snapshots at {table_path}")
     snap = _snapshot(snaps, snapshot_id)
-    return _scan(
-        spark, table_path, snaps, snap.dirs if dirs is None else dirs, snap.schema
-    )
-
-
-def _spans_writer_schemas(snaps, dirs, fallback_schema) -> bool:
-    """True when ``dirs`` were written under more than one (additively
-    evolved) schema — the condition under which a multi-dir parquet read
-    that infers its schema (:func:`_scan`'s fallback) must mergeSchema,
-    or an arbitrary file's schema wins and newer columns silently
-    vanish."""
-    writer_schema = {}
-    for s in snaps:
-        # compaction folds dropped entries' dir→schema mapping into the
-        # survivors' writer_schemas; explicit beats positional inference
-        for d, sch in (s.writer_schemas or {}).items():
-            writer_schema.setdefault(d, sch)
-        for d in s.dirs:
-            writer_schema.setdefault(d, s.schema)
-    return len({writer_schema.get(d, fallback_schema) for d in dirs}) > 1
+    return _scan(spark, table_path, snap.dirs if dirs is None else dirs, snap.schema)
 
 
 # planner index cache: {table_path: ((log_mtime_ns, log_size), index)}.
@@ -542,37 +474,25 @@ def _planner_index(table_path: str) -> dict:
 
 def plan_scan(
     table_path: str,
-    col: str,
-    lo=None,
-    hi=None,
+    preds: dict,
     snapshot_id: int | None = None,
 ) -> tuple[list[str], int]:
-    """File-level min/max pruning plan for ``lo <= col <= hi`` (either
-    bound optional): the kept file list (relative paths) and the total
+    """File-level min/max pruning plan for the conjunctive ranges ``preds``
+    (column name → ``(lo, hi)``, ``lo <= col <= hi``; either bound may be
+    None, not both): the kept file list (relative paths) and the total
     file count at that snapshot. Driver-side metadata only — no job, no
     footer reads (stats come from the log; each data dir is written by
     exactly one snapshot, whose entry carries its files' stats).
 
-    Conservative by construction: a file is skipped only when its recorded
-    [min, max] provably cannot intersect the range, or when the column is
-    all-null in it (a range predicate never matches NULL). Files or
-    columns without stats are kept. The residual filter must still be
-    applied to kept files (:func:`read_where` does)."""
-    return plan_scan_multi(table_path, {col: (lo, hi)}, snapshot_id=snapshot_id)
-
-
-def plan_scan_multi(
-    table_path: str,
-    preds: dict,
-    snapshot_id: int | None = None,
-) -> tuple[list[str], int]:
-    """Conjunctive multi-column pruning plan: ``preds`` maps column name →
-    ``(lo, hi)`` (either bound may be None, not both). A file is skipped
-    when ANY predicate provably cannot match it — with a multi-dimensional
-    clustering (:func:`~acoustic_feature_extractor_spark.sources.layout.zorder_layout`)
+    Conservative by construction: a file is skipped only when some
+    predicate's recorded [min, max] provably cannot intersect its range,
+    or when that column is all-null in it (a range predicate never matches
+    NULL). Files or columns without stats are kept. The residual filter
+    must still be applied to kept files (:func:`read_where` does). With a
+    multi-dimensional clustering
+    (:func:`~acoustic_feature_extractor_spark.sources.layout.zorder_layout`)
     every predicate contributes skipping, which no single-column range
-    layout can offer. Same conservatism as :func:`plan_scan`: unknown
-    stats keep the file.
+    layout can offer.
 
     Planning is PURE LOG METADATA, two levels deep — Iceberg's
     manifest-list → manifest hierarchy in miniature:
@@ -588,7 +508,7 @@ def plan_scan_multi(
     (pre-stats snapshots) — on object storage that is the difference
     between zero LIST calls per query and one per directory."""
     if not preds:
-        raise ValueError("plan_scan_multi needs at least one predicate")
+        raise ValueError("plan_scan needs at least one predicate")
     for c, (lo, hi) in preds.items():
         if lo is None and hi is None:
             raise ValueError(f"predicate on {c!r} needs at least one bound")
@@ -666,45 +586,25 @@ def plan_scan_multi(
 def read_where(
     spark: SparkSession,
     table_path: str,
-    col: str,
-    lo=None,
-    hi=None,
-    snapshot_id: int | None = None,
-) -> DataFrame:
-    """Range-predicate read with file-level data skipping: open ONLY the
-    files :func:`plan_scan` keeps, then apply the residual filter (pruning
-    is file-granular; kept files still carry out-of-range rows). With a
-    range-clustered layout (``df.repartitionByRange(n, col)`` before
-    commit) a narrow range reads a constant number of files regardless of
-    table size — the Iceberg metadata-pruning property this format exists
-    to reproduce. Empty keep-set returns an empty frame with the table
-    schema."""
-    return read_where_multi(
-        spark, table_path, {col: (lo, hi)}, snapshot_id=snapshot_id
-    )
-
-
-def read_where_multi(
-    spark: SparkSession,
-    table_path: str,
     preds: dict,
     snapshot_id: int | None = None,
 ) -> DataFrame:
-    """Conjunctive-range read with multi-column file skipping: open only
-    the :func:`plan_scan_multi` keep-set, then apply every residual
-    filter. Pair with :func:`~acoustic_feature_extractor_spark.sources.layout.zorder_layout`
-    so that EVERY predicate column prunes, not just the one the files were
-    range-partitioned on."""
-    kept, _ = plan_scan_multi(table_path, preds, snapshot_id=snapshot_id)
+    """Conjunctive-range read with file-level data skipping: open ONLY the
+    files :func:`plan_scan` keeps for ``preds``, then apply every residual
+    filter (pruning is file-granular; kept files still carry out-of-range
+    rows). With a range-clustered layout (``df.repartitionByRange(n,
+    col)`` before commit) a narrow range reads a constant number of files
+    regardless of table size — the Iceberg metadata-pruning property this
+    format exists to reproduce; pair with
+    :func:`~acoustic_feature_extractor_spark.sources.layout.zorder_layout`
+    so that every predicate column prunes. The kept files are read at the
+    snapshot's logged schema; an empty keep-set returns an empty frame
+    with that schema."""
+    kept, _ = plan_scan(table_path, preds, snapshot_id=snapshot_id)
+    tgt = _snapshot(_planner_index(table_path)["snaps"], snapshot_id)
+    df = _scan(spark, table_path, kept or tgt.dirs, tgt.schema)
     if not kept:
-        df = read(spark, table_path, snapshot_id).limit(0)
-    else:
-        # same evolve=True contract as read(): the kept files are read at
-        # the snapshot's logged schema, whichever dirs they come from
-        snaps = _load_log(table_path)
-        tgt = _snapshot(snaps, snapshot_id)
-        kept_dirs = sorted({f.rsplit("/", 1)[0] for f in kept})
-        df = _scan(spark, table_path, snaps, kept, tgt.schema, dirs=kept_dirs)
+        df = df.limit(0)
     for col, (lo, hi) in preds.items():
         c = F.col(col)
         if lo is not None:
@@ -728,7 +628,7 @@ def table_profile(table_path: str, snapshot_id: int | None = None) -> dict:
 
     File enumeration comes from the log via the cached planner index —
     ``os.listdir`` runs only for a pre-stats dir the log has no entries
-    for, the same zero-LIST contract as :func:`plan_scan_multi`."""
+    for, the same zero-LIST contract as :func:`plan_scan`."""
     idx = _planner_index(table_path)
     target = _snapshot(idx["snaps"], snapshot_id)
     stats = idx["stats"]
@@ -789,38 +689,27 @@ def rollback(table_path: str, snapshot_id: int) -> Snapshot:
     return snap
 
 
-def _fold_dropped_metadata(snaps: list[Snapshot], kept: list[Snapshot]) -> None:
+def _fold_dropped_stats(snaps: list[Snapshot], kept: list[Snapshot]) -> None:
     """When log entries are dropped (:func:`expire` / :func:`compact_log`),
-    the survivors must inherit (a) the per-file stats and (b) the
-    dir→writer-schema mapping for every still-referenced dir — the dropped
-    entries are what carried them, and losing either silently degrades
-    pruned reads to listdir + keep-everything and blinds the mergeSchema
-    detection to evolved dirs. Everything folds onto the OLDEST survivor
-    (newest-wins order is preserved: later survivors' own stats re-apply
-    identical values)."""
+    the survivors must inherit the per-file stats of every still-referenced
+    dir — the dropped entries are what carried them, and losing them
+    silently degrades pruned reads to listdir + keep-everything. They fold
+    onto the OLDEST survivor (newest-wins order is preserved: later
+    survivors' own stats re-apply identical values)."""
     live = {d for s in kept for d in s.dirs}
-    folded_stats: dict = {}
-    folded_ws: dict = {}
-    for s in snaps:
-        for d, sch in (s.writer_schemas or {}).items():
-            if d in live:
-                folded_ws.setdefault(d, sch)
-        for d in s.dirs:
-            if d in live:
-                folded_ws.setdefault(d, s.schema)
-        for rel, st_ in (s.stats or {}).items():
-            if rel.rsplit("/", 1)[0] in live:
-                folded_stats[rel] = st_
-    kept[0].stats = folded_stats
-    kept[0].writer_schemas = folded_ws
+    kept[0].stats = {
+        rel: st_
+        for s in snaps
+        for rel, st_ in (s.stats or {}).items()
+        if rel.rsplit("/", 1)[0] in live
+    }
 
 
 def compact_log(table_path: str, keep_last: int = 1) -> int:
     """METADATA-ONLY log compaction — Iceberg's snapshot expiry applied to
     the manifest list without touching a data byte: keep the last
-    ``keep_last`` entries and fold the dropped entries' per-file stats and
-    writer-schema mappings for still-referenced dirs into the oldest
-    survivor. Bounds the log size (hence every ``_load_log`` parse and the
+    ``keep_last`` entries and fold the dropped entries' per-file stats
+    for still-referenced dirs into the oldest survivor. Bounds the log size (hence every ``_load_log`` parse and the
     planner-index build) at O(live files + keep_last) no matter how many
     commits the table has seen — without it a long-lived table's planning
     cost grows with its HISTORY, not its size. Time travel narrows to the
@@ -834,7 +723,7 @@ def compact_log(table_path: str, keep_last: int = 1) -> int:
         dropped = len(snaps) - len(kept)
         if dropped == 0:
             return 0  # nothing to fold — skip the republish
-        _fold_dropped_metadata(snaps, kept)
+        _fold_dropped_stats(snaps, kept)
         _publish_log(table_path, kept)
     return dropped
 
@@ -843,15 +732,15 @@ def expire(table_path: str, keep_last: int = 1) -> list[str]:
     """Drop all but the last ``keep_last`` snapshots from the log and
     delete data dirs no surviving snapshot references (including orphan
     dirs from crashed commits). Surviving entries inherit the dropped
-    entries' stats/writer-schema metadata for dirs still alive
-    (:func:`_fold_dropped_metadata`). Returns the deleted dirs."""
+    entries' file stats for dirs still alive
+    (:func:`_fold_dropped_stats`). Returns the deleted dirs."""
     with _writer_lock(table_path):
         snaps = _load_log(table_path)
         if not snaps:
             return []
         kept = snaps[-max(keep_last, 1):]
         live = {d for s in kept for d in s.dirs}
-        _fold_dropped_metadata(snaps, kept)
+        _fold_dropped_stats(snaps, kept)
         _publish_log(table_path, kept)
         deleted = []
         data_root = os.path.join(table_path, "data")
@@ -869,7 +758,6 @@ def merge_upsert(
     table_path: str,
     key: str | list[str],
     lineage: dict | None = None,
-    assert_unique_keys: bool = True,
 ) -> Snapshot:
     """Copy-on-write MERGE: upsert ``updates`` by key, rewriting ONLY the
     data dirs that contain a matched key (Iceberg's copy-on-write MERGE
@@ -884,52 +772,38 @@ def merge_upsert(
     """
     key_cols = [key] if isinstance(key, str) else list(key)
     with _writer_lock(table_path):
-        return _merge_upsert_locked(
-            spark, updates, table_path, key_cols, lineage, assert_unique_keys
-        )
-
-
-def _merge_upsert_locked(
-    spark: SparkSession,
-    updates: DataFrame,
-    table_path: str,
-    key_cols: list[str],
-    lineage: dict | None,
-    assert_unique_keys: bool,
-) -> Snapshot:
-    snaps = _load_log(table_path)
-    if not snaps:
-        raise FileNotFoundError(f"no snapshots at {table_path}")
-    head = snaps[-1]
-    if head.schema != updates.schema.simpleString():
-        raise ValueError(
-            f"merge schema mismatch: table has {head.schema}, "
-            f"updates have {updates.schema.simpleString()}"
-        )
-    # the updates plan is consumed several times (key checks, hit-dir
-    # probe, final write) — pin it so an expensive upstream (e.g. the
-    # incremental feature recompute) executes once
-    updates = updates.persist()
-    try:
-        ukeys = updates.select(*key_cols).dropDuplicates(key_cols)
-        # NULL keys never match an equi-join: the old row would survive AND
-        # the update would insert — a silent duplicate. Always refuse.
-        null_pred = key_cols and F.lit(False)
-        for k in key_cols:
-            null_pred = null_pred | F.col(k).isNull()
-        if assert_unique_keys:
-            # FUSED validation: the NULL-key and duplicate-key checks share
-            # one groupBy job (group keys surface the key columns, so the
-            # null predicate evaluates on the grouped output) instead of
-            # two sequential jobs per merge — merges are the inner loop of
-            # every incremental-maintenance path.
+        snaps = _load_log(table_path)
+        if not snaps:
+            raise FileNotFoundError(f"no snapshots at {table_path}")
+        head = snaps[-1]
+        head_simple = StructType.fromJson(head.schema).simpleString()
+        if head_simple != updates.schema.simpleString():
+            raise ValueError(
+                f"merge schema mismatch: table has {head_simple}, "
+                f"updates have {updates.schema.simpleString()}"
+            )
+        # the updates plan is consumed several times (key checks, hit-dir
+        # probe, final write) — pin it so an expensive upstream (e.g. the
+        # incremental feature recompute) executes once
+        updates = updates.persist()
+        try:
+            ukeys = updates.select(*key_cols).dropDuplicates(key_cols)
+            # NULL keys never match an equi-join: the old row would survive
+            # AND the update would insert — a silent duplicate. Duplicate
+            # keys make the upsert ambiguous. Both checks share one groupBy
+            # job (group keys surface the key columns, so the null
+            # predicate evaluates on the grouped output) — merges are the
+            # inner loop of every incremental-maintenance path.
+            null_pred = F.lit(False)
+            for k in key_cols:
+                null_pred = null_pred | F.col(k).isNull()
             row = (
                 updates.groupBy(*key_cols)
                 .agg(F.count(F.lit(1)).alias("_c"))
                 .agg(
-                    F.max(
-                        F.when(null_pred, F.lit(1)).otherwise(F.lit(0))
-                    ).alias("_has_null"),
+                    F.max(F.when(null_pred, F.lit(1)).otherwise(F.lit(0))).alias(
+                        "_has_null"
+                    ),
                     F.max("_c").alias("_max_c"),
                 )
                 .collect()[0]
@@ -940,60 +814,58 @@ def _merge_upsert_locked(
                 )
             if (row["_max_c"] or 0) > 1:
                 raise ValueError("updates carry duplicate keys — upsert is ambiguous")
-        elif updates.where(null_pred).limit(1).count():
-            # no uniqueness assertion: keep the short-circuiting null probe
-            raise ValueError("updates carry NULL key values — upsert cannot match them")
 
-        sid = head.snapshot_id + 1
-        rel = f"data/snap-{sid}"
-        # probe: which dirs hold a matched key. Column-pruned scan (keys
-        # only); the dir is the file's immediate parent (anchored to the
-        # filename so a table path containing "data/snap-…" never matches).
-        probe = _scan(spark, table_path, snaps, head.dirs, head.schema).select(
-            *key_cols,
-            F.regexp_extract(
-                F.input_file_name(), r"(data/snap-[^/]+)/[^/]+$", 1
-            ).alias("_dir"),
-        )
-        hit = sorted(
-            r["_dir"]
-            for r in probe.join(ukeys, key_cols, "left_semi")
-            .select("_dir")
-            .distinct()
-            .collect()
-        )
-        untouched = [d for d in head.dirs if d not in set(hit)]
-        # rewrite leg reads ONLY the hit dirs — merge IO is O(touched), the
-        # probe above reads key columns only. Survivors are read at the
-        # head's schema, so a hit dir that predates an evolve=True append
-        # unions with the updates column for column
-        if hit:
-            survivors = _scan(spark, table_path, snaps, hit, head.schema).join(
-                ukeys, key_cols, "left_anti"
+            sid = head.snapshot_id + 1
+            rel = f"data/snap-{sid}"
+            # probe: which dirs hold a matched key. Column-pruned scan (keys
+            # only); the dir is the file's immediate parent (anchored to the
+            # filename so a table path containing "data/snap-…" never
+            # matches).
+            probe = _scan(spark, table_path, head.dirs, head.schema).select(
+                *key_cols,
+                F.regexp_extract(
+                    F.input_file_name(), r"(data/snap-[^/]+)/[^/]+$", 1
+                ).alias("_dir"),
             )
-            new_data = survivors.unionByName(updates)
-        else:
-            new_data = updates
-        obs = Observation(f"snap_rows_{sid}")
-        new_data.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(table_path, rel))
-    finally:
-        updates.unpersist()
-    snap = Snapshot(
-        snapshot_id=sid,
-        parent_id=head.snapshot_id,
-        operation="merge",
-        dirs=[*untouched, rel],
-        # rows = rows THIS snapshot wrote (commit()'s convention; total
-        # table size is a read-side question, not snapshot metadata)
-        rows=int(obs.get["rows"]),
-        schema=head.schema,
-        wall_ts=round(time.time(), 3),
-        lineage={**(lineage or {}), "rewritten_dirs": hit},
-        stats=_collect_file_stats(table_path, rel),
-    )
-    _publish_log(table_path, snaps + [snap])
+            hit = sorted(
+                r["_dir"]
+                for r in probe.join(ukeys, key_cols, "left_semi")
+                .select("_dir")
+                .distinct()
+                .collect()
+            )
+            untouched = [d for d in head.dirs if d not in set(hit)]
+            # rewrite leg reads ONLY the hit dirs — merge IO is O(touched),
+            # the probe above reads key columns only. Survivors are read at
+            # the head's schema, so a hit dir that predates an evolve=True
+            # append unions with the updates column for column
+            if hit:
+                survivors = _scan(spark, table_path, hit, head.schema).join(
+                    ukeys, key_cols, "left_anti"
+                )
+                new_data = survivors.unionByName(updates)
+            else:
+                new_data = updates
+            obs = Observation(f"snap_rows_{sid}")
+            new_data.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(table_path, rel))
+        finally:
+            updates.unpersist()
+        snap = Snapshot(
+            snapshot_id=sid,
+            parent_id=head.snapshot_id,
+            operation="merge",
+            dirs=[*untouched, rel],
+            # rows = rows THIS snapshot wrote (commit()'s convention; total
+            # table size is a read-side question, not snapshot metadata)
+            rows=int(obs.get["rows"]),
+            schema=head.schema,
+            wall_ts=round(time.time(), 3),
+            lineage={**(lineage or {}), "rewritten_dirs": hit},
+            stats=_collect_file_stats(table_path, rel),
+        )
+        _publish_log(table_path, snaps + [snap])
     return snap
 
 
@@ -1015,54 +887,45 @@ def compact(
     force a specific output file count (adds one exchange).
     """
     with _writer_lock(table_path):
-        return _compact_locked(spark, table_path, partitions, lineage)
-
-
-def _compact_locked(
-    spark: SparkSession,
-    table_path: str,
-    partitions: int | None,
-    lineage: dict | None,
-) -> Snapshot:
-    snaps = _load_log(table_path)
-    if not snaps:
-        raise FileNotFoundError(f"no snapshots at {table_path}")
-    head = snaps[-1]
-    if len(head.dirs) <= 1 and partitions is None:
-        # one dir and no explicit file-count request: nothing to merge.
-        # With partitions= the single dir may still hold many small files
-        # (a wide write), so the rewrite proceeds.
-        return head
-    sid = head.snapshot_id + 1
-    rel = f"data/snap-{sid}"
-    # read at the logged schema: dirs written before an evolve=True append
-    # surface its columns as NULL instead of an arbitrary footer's schema
-    # dropping them from the rewrite
-    old = _scan(spark, table_path, snaps, head.dirs, head.schema)
-    df = old if partitions is None else old.repartition(partitions)
-    obs = Observation(f"snap_rows_{sid}")
-    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(
-        os.path.join(table_path, rel)
-    )
-    rows = int(obs.get["rows"])
-    # footer-metadata count of the old dir set — cheap independent check
-    before = old.count()
-    if rows != before:
-        raise RuntimeError(
-            f"compaction row drift: table has {before}, rewrite has {rows}"
+        snaps = _load_log(table_path)
+        if not snaps:
+            raise FileNotFoundError(f"no snapshots at {table_path}")
+        head = snaps[-1]
+        if len(head.dirs) <= 1 and partitions is None:
+            # one dir and no explicit file-count request: nothing to merge.
+            # With partitions= the single dir may still hold many small
+            # files (a wide write), so the rewrite proceeds.
+            return head
+        sid = head.snapshot_id + 1
+        rel = f"data/snap-{sid}"
+        # read at the logged schema: dirs written before an evolve=True
+        # append surface its columns as NULL instead of an arbitrary
+        # footer's schema dropping them from the rewrite
+        old = _scan(spark, table_path, head.dirs, head.schema)
+        df = old if partitions is None else old.repartition(partitions)
+        obs = Observation(f"snap_rows_{sid}")
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(table_path, rel))
+        rows = int(obs.get["rows"])
+        # footer-metadata count of the old dir set — cheap independent check
+        before = old.count()
+        if rows != before:
+            raise RuntimeError(
+                f"compaction row drift: table has {before}, rewrite has {rows}"
+            )
+        snap = Snapshot(
+            snapshot_id=sid,
+            parent_id=head.snapshot_id,
+            operation="compact",
+            dirs=[rel],
+            rows=rows,
+            schema=head.schema,
+            wall_ts=round(time.time(), 3),
+            lineage={**(lineage or {}), "compacted_dirs": list(head.dirs)},
+            stats=_collect_file_stats(table_path, rel),
         )
-    snap = Snapshot(
-        snapshot_id=sid,
-        parent_id=head.snapshot_id,
-        operation="compact",
-        dirs=[rel],
-        rows=rows,
-        schema=head.schema,
-        wall_ts=round(time.time(), 3),
-        lineage={**(lineage or {}), "compacted_dirs": list(head.dirs)},
-        stats=_collect_file_stats(table_path, rel),
-    )
-    _publish_log(table_path, snaps + [snap])
+        _publish_log(table_path, snaps + [snap])
     return snap
 
 
@@ -1148,13 +1011,9 @@ def read_changes(
     # both sides are read at the target snapshot's schema, so an
     # evolve=True append between the two compares column for column
     def _rows(rels: list[str]) -> DataFrame | None:
-        if not rels:
-            return None
-        return _scan(spark, table_path, snaps, rels, to.schema)
+        return _scan(spark, table_path, rels, to.schema) if rels else None
 
     old, new = _rows(removed), _rows(added)
-    # schema anchor for the all-carried / empty-diff cases (reads no rows)
-    anchor = _scan(spark, table_path, snaps, to.dirs, to.schema).limit(0)
     ins = new.exceptAll(old) if (new is not None and old is not None) else new
     dels = old.exceptAll(new) if (new is not None and old is not None) else old
     parts = []
@@ -1163,6 +1022,8 @@ def read_changes(
     if dels is not None:
         parts.append(dels.withColumn("_change_type", F.lit("delete")))
     if not parts:
+        # all dirs carried: an empty frame at the table schema (reads no rows)
+        anchor = _scan(spark, table_path, to.dirs, to.schema).limit(0)
         return anchor.withColumn("_change_type", F.lit(""))
     out = parts[0]
     for p in parts[1:]:

@@ -158,7 +158,7 @@ def main(argv: list[str] | None = None) -> int:
         ref_hist = feat_hist[0].lineage.get("text_len_hist")
         # one aggregate over the delta gives its histogram and its
         # conversation count
-        delta = snap.read_dirs(spark, args.source, new_dirs)
+        delta = snap.read(spark, args.source, dirs=new_dirs)
         cur_hist, row = _profile(delta, F.count_distinct("conv_id").alias("_convs"))
         n_touched = int(row["_convs"])
         # full history of ONLY the touched conversations (windows need

@@ -96,7 +96,8 @@ def test_simhash_long_docs_not_dropped(spark):
         .selectExpr("xxhash64(t) AS h")
         .collect()
     )
-    hs = np.array([r["h"] for r in tok_rows], dtype=np.uint64)
+    # xxhash64 values are signed: reinterpret their bits as unsigned
+    hs = np.array([r["h"] for r in tok_rows], dtype=np.int64).view(np.uint64)
     ref = 0
     for j in range(64):
         if int(((hs >> np.uint64(j)) & np.uint64(1)).sum()) * 2 > len(hs):

@@ -39,7 +39,7 @@ BOX = {"x": (100.0, 349.0), "y": (200.0, 449.0)}
 
 def test_read_where_multi_exact(spark, xy, tables):
     tz, _ = tables
-    got = snap.read_where_multi(spark, tz, BOX)
+    got = snap.read_where(spark, tz, BOX)
     exp = xy.where(
         (F.col("x").between(100.0, 349.0)) & (F.col("y").between(200.0, 449.0))
     )
@@ -48,16 +48,16 @@ def test_read_where_multi_exact(spark, xy, tables):
 
 def test_zorder_prunes_both_dimensions(spark, tables):
     tz, tr = tables
-    kz, total = snap.plan_scan_multi(tz, BOX)
-    kr, _ = snap.plan_scan_multi(tr, BOX)
+    kz, total = snap.plan_scan(tz, BOX)
+    kr, _ = snap.plan_scan(tr, BOX)
     assert total == 64
     # 2-D box: z-order touches fewer hyper-rectangles than the 1-D layout
     assert len(kz) < len(kr)
     # the decisive property: a predicate on the NON-partitioned column
     # prunes nothing on the range layout, but real fractions on z-order
     y_only = {"y": (200.0, 449.0)}
-    kz_y, _ = snap.plan_scan_multi(tz, y_only)
-    kr_y, _ = snap.plan_scan_multi(tr, y_only)
+    kz_y, _ = snap.plan_scan(tz, y_only)
+    kr_y, _ = snap.plan_scan(tr, y_only)
     assert len(kr_y) == 64
     assert len(kz_y) <= 32
 
@@ -76,9 +76,9 @@ def test_zorder_timestamp_column(spark, tmp_path):
     lo = base + dt.timedelta(minutes=100)
     hi = base + dt.timedelta(minutes=200)
     preds = {"ts": (lo, hi), "m": (10.0, 20.0)}
-    kept, total = snap.plan_scan_multi(t, preds)
+    kept, total = snap.plan_scan(t, preds)
     assert total == 8 and 0 < len(kept) < total
-    got = snap.read_where_multi(spark, t, preds)
+    got = snap.read_where(spark, t, preds)
     exp = df.where(
         (F.col("ts") >= F.lit(lo))
         & (F.col("ts") <= F.lit(hi))
@@ -96,7 +96,7 @@ def test_zorder_constant_and_null_columns(spark, tmp_path):
     )
     t = str(tmp_path / "constz")
     snap.commit(zorder_layout(df, ["c", "x"], 4), t)
-    got = snap.read_where_multi(spark, t, {"x": (100.0, 400.0)})
+    got = snap.read_where(spark, t, {"x": (100.0, 400.0)})
     assert got.count() == df.where("x between 100 and 400").count()
 
 
@@ -126,6 +126,6 @@ def test_plan_scan_multi_validation(spark, tmp_path):
     t = str(tmp_path / "val")
     snap.commit(spark.range(10), t)
     with pytest.raises(ValueError, match="at least one predicate"):
-        snap.plan_scan_multi(t, {})
+        snap.plan_scan(t, {})
     with pytest.raises(ValueError, match="at least one bound"):
-        snap.plan_scan_multi(t, {"id": (None, None)})
+        snap.plan_scan(t, {"id": (None, None)})

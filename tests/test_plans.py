@@ -227,8 +227,8 @@ def test_temporal_two_phase_no_python(spark, entry_mod):
 
 def test_gopher_fold_map_only_and_methods_agree(spark):
     """``gopher_keep`` — the fold-based predicate the streaming curation
-    job gates with — is ONE map-only projection (zero exchanges, zero
-    Python), and its verdicts equal ``gopher_filter``'s grouped ``keep``."""
+    job gates with — and ``gopher_filter`` are each ONE map-only
+    projection (zero exchanges, zero Python), and their verdicts agree."""
     import re
 
     from pyspark.sql import functions as F
@@ -240,9 +240,12 @@ def test_gopher_fold_map_only_and_methods_agree(spark):
     plan = _plan(fold)
     assert "EvalPython" not in plan
     assert not re.findall(r"\(\d+\) Exchange\b", plan), plan[:2000]
-    grouped = gopher_filter(docs, min_words=20).select("doc_id", "keep")
+    batch = gopher_filter(docs, min_words=20)
+    plan = _plan(batch)
+    assert "EvalPython" not in plan
+    assert not re.findall(r"\(\d+\) Exchange\b", plan), plan[:2000]
     a = sorted(map(tuple, fold.collect()))
-    b = sorted(map(tuple, grouped.collect()))
+    b = sorted(map(tuple, batch.select("doc_id", "keep").collect()))
     assert a == b
     assert {k for _, k in a} == {True, False}  # the fixture exercises both verdicts
 

@@ -294,7 +294,7 @@ def test_zorder_read_where_multi_equals_filter(spark, tmp_path_factory, data):
     df = spark.createDataFrame(pdf)
     t = str(tmp_path_factory.mktemp("zprop"))
     snap.commit(zorder_layout(df, ["x", "y"], n_files, bits=bits), t)
-    got = snap.read_where_multi(spark, t, box)
+    got = snap.read_where(spark, t, box)
     exp = df.where(
         (df.x >= box["x"][0]) & (df.x <= box["x"][1])
         & (df.y >= box["y"][0]) & (df.y <= box["y"][1])

@@ -9,6 +9,7 @@ import os
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from acoustic_feature_extractor_spark.sources import snapshots as snap
 
@@ -391,21 +392,21 @@ def test_plan_scan_prunes_read_where_exact(spark, tmp_path):
         "id bigint, v double, grp string",
     ).repartitionByRange(8, "id")
     snap.commit(df, t)
-    kept, total = snap.plan_scan(t, "id", lo=100, hi=220)
+    kept, total = snap.plan_scan(t, {"id": (100, 220)})
     assert total == 8 and 1 <= len(kept) <= 3
-    got = snap.read_where(spark, t, "id", lo=100, hi=220)
+    got = snap.read_where(spark, t, {"id": (100, 220)})
     exp = df.where((F.col("id") >= 100) & (F.col("id") <= 220))
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, exp.collect()))
     # string pruning
-    kept_s, total_s = snap.plan_scan(t, "grp", lo="g2", hi="g2")
+    kept_s, total_s = snap.plan_scan(t, {"grp": ("g2", "g2")})
     assert total_s == 8 and len(kept_s) == 8  # every file holds g0..g2
     # one-sided bounds
-    kept_lo, _ = snap.plan_scan(t, "id", lo=900)
+    kept_lo, _ = snap.plan_scan(t, {"id": (900, None)})
     assert 1 <= len(kept_lo) <= 2
     # out-of-range: nothing kept, empty frame with table schema
-    kept0, _ = snap.plan_scan(t, "id", lo=10_000)
+    kept0, _ = snap.plan_scan(t, {"id": (10_000, None)})
     assert kept0 == []
-    empty = snap.read_where(spark, t, "id", lo=10_000)
+    empty = snap.read_where(spark, t, {"id": (10_000, None)})
     assert empty.count() == 0 and empty.columns == ["id", "v", "grp"]
 
 
@@ -424,12 +425,12 @@ def test_plan_scan_null_and_unknown_columns(spark, tmp_path):
     ).coalesce(1)
     snap.commit(a, t)
     s = snap.commit(b, t)
-    kept, total = snap.plan_scan(t, "v", lo=0.0, hi=100.0)
+    kept, total = snap.plan_scan(t, {"v": (0.0, 100.0)})
     assert total == 2 and len(kept) == 1  # all-null file pruned
-    got = snap.read_where(spark, t, "v", lo=0.0, hi=100.0)
+    got = snap.read_where(spark, t, {"v": (0.0, 100.0)})
     assert got.count() == 10
     # column without stats (nested/list): conservative keep-everything
-    kept_u, total_u = snap.plan_scan(t, "emb", lo=0.0)
+    kept_u, total_u = snap.plan_scan(t, {"emb": (0.0, None)})
     assert len(kept_u) == total_u == 2
     # stats survive the JSON log round-trip
     reloaded = snap.history(t)[-1]
@@ -449,22 +450,22 @@ def test_read_where_timestamps_and_merge(spark, tmp_path):
     ).repartitionByRange(6, "ts")
     snap.commit(df, t)
     lo, hi = base + dt.timedelta(minutes=100), base + dt.timedelta(minutes=199)
-    kept, total = snap.plan_scan(t, "ts", lo=lo, hi=hi)
+    kept, total = snap.plan_scan(t, {"ts": (lo, hi)})
     assert total == 6 and 1 <= len(kept) <= 2
-    got = snap.read_where(spark, t, "ts", lo=lo, hi=hi)
+    got = snap.read_where(spark, t, {"ts": (lo, hi)})
     assert got.count() == 100
     # after a merge the rewritten dir gets fresh stats; pruning stays exact
     upd = spark.createDataFrame(
         [(5, base + dt.timedelta(minutes=5), 99.0)], "id bigint, ts timestamp, v double"
     )
     snap.merge_upsert(spark, upd, t, key="id")
-    got2 = snap.read_where(spark, t, "ts", lo=lo, hi=hi)
+    got2 = snap.read_where(spark, t, {"ts": (lo, hi)})
     assert got2.count() == 100
-    kept2, total2 = snap.plan_scan(t, "ts", lo=lo, hi=hi)
+    kept2, total2 = snap.plan_scan(t, {"ts": (lo, hi)})
     assert len(kept2) < total2
     # time travel: pruning at the pre-merge snapshot still works
     sid1 = snap.history(t)[0].snapshot_id
-    kept_tt, _ = snap.plan_scan(t, "ts", lo=lo, hi=hi, snapshot_id=sid1)
+    kept_tt, _ = snap.plan_scan(t, {"ts": (lo, hi)}, snapshot_id=sid1)
     assert kept_tt == kept
 
 
@@ -476,7 +477,7 @@ def test_plan_scan_requires_bound(spark, tmp_path):
     t = str(tmp_path / "nob")
     snap.commit(spark.range(5), t)
     with _pytest.raises(ValueError, match="bound"):
-        snap.plan_scan(t, "id")
+        snap.plan_scan(t, {"id": (None, None)})
 
 
 def test_table_profile_zero_scan(spark, tmp_path):
@@ -554,7 +555,7 @@ def test_additive_schema_evolution(spark, tmp_path):
         snap.commit(dropped, t, evolve=True)
     # pruning on the evolved column: old files have no stats for it ->
     # conservatively kept; new files prune normally
-    kept, total = snap.plan_scan(t, "id", lo=1100)
+    kept, total = snap.plan_scan(t, {"id": (1100, None)})
     assert 0 < len(kept) < total
 
 
@@ -587,7 +588,7 @@ def test_plan_scan_never_lists_filesystem(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         "acoustic_feature_extractor_spark.sources.snapshots.os.listdir", spy
     )
-    kept, total = snap.plan_scan(t, "id", lo=100, hi=220)
+    kept, total = snap.plan_scan(t, {"id": (100, 220)})
     assert calls == [], f"planning touched the filesystem: {calls}"
     assert total == 8 and 1 <= len(kept) <= 2
     assert all("snap-1/" in f for f in kept)  # snap-2's dir fully skipped
@@ -630,17 +631,17 @@ def test_planner_keeps_statless_file(spark, tmp_path):
     statless = sorted(snaps[-1].stats)[0]  # lowest-range file
     snaps[-1].stats[statless] = {}  # simulate an uncoverable writer
     snap._publish_log(t, snaps)
-    kept, total = snap.plan_scan(t, "id", lo=90)
+    kept, total = snap.plan_scan(t, {"id": (90, None)})
     assert statless in kept  # conservative keep despite being out of range
     assert len(kept) < total  # other files still prune
-    assert snap.read_where(spark, t, "id", lo=90).count() == 10
+    assert snap.read_where(spark, t, {"id": (90, None)}).count() == 10
 
 
 def test_read_where_merges_evolved_schemas(spark, tmp_path):
     """ADVICE r3: a pruned read whose keep-set spans dirs written under
-    different (additive) schemas must mergeSchema like read() does —
-    otherwise an arbitrary file's schema wins and the evolved column is
-    silently absent."""
+    different (additive) schemas must return the logged columns like
+    read() does — otherwise an arbitrary file's schema wins and the
+    evolved column is silently absent."""
     t = str(tmp_path / "evolve")
     v1 = spark.createDataFrame([(i, float(i)) for i in range(10)], "id bigint, v double")
     snap.commit(v1, t)
@@ -649,7 +650,7 @@ def test_read_where_merges_evolved_schemas(spark, tmp_path):
         "id bigint, v double, tag string",
     )
     snap.commit(wide, t, evolve=True)
-    got = snap.read_where(spark, t, "id", lo=5, hi=102)
+    got = snap.read_where(spark, t, {"id": (5, 102)})
     assert set(got.columns) == {"id", "v", "tag"}
     assert got.count() == 8  # ids 5..9 + 100..102
     assert got.where("tag IS NULL").count() == 5  # historical rows as NULL
@@ -657,7 +658,7 @@ def test_read_where_merges_evolved_schemas(spark, tmp_path):
 
 def test_read_where_scans_exactly_the_keep_set(spark, tmp_path):
     """VERDICT r3 #6a: the pruned read's PHYSICAL scan opens exactly the
-    files plan_scan_multi keeps — not the whole table with a filter on
+    files plan_scan keeps — not the whole table with a filter on
     top. inputFiles() is the executed scan's file list."""
     t = str(tmp_path / "exact")
     df = spark.createDataFrame(
@@ -665,9 +666,9 @@ def test_read_where_scans_exactly_the_keep_set(spark, tmp_path):
     ).repartitionByRange(8, "id")
     snap.commit(df, t)
     preds = {"id": (400, 700)}
-    kept, total = snap.plan_scan_multi(t, preds)
+    kept, total = snap.plan_scan(t, preds)
     assert 1 <= len(kept) < total
-    got = snap.read_where_multi(spark, t, preds)
+    got = snap.read_where(spark, t, preds)
     scanned = {os.path.relpath(f.replace("file:", ""), t) for f in got.inputFiles()}
     assert scanned == set(kept), (sorted(scanned), sorted(kept))
     # and the residual filter still lands on the pruned scan
@@ -688,9 +689,9 @@ def test_zorder_read_applies_both_residual_filters(spark, tmp_path):
     )
     snap.commit(zorder_layout(df, ["x", "y"], n_files=16), t)
     preds = {"x": (10.0, 30.0), "y": (40.0, 60.0)}
-    kept, total = snap.plan_scan_multi(t, preds)
+    kept, total = snap.plan_scan(t, preds)
     assert total == 16 and len(kept) < total  # both dims prune
-    got = snap.read_where_multi(spark, t, preds)
+    got = snap.read_where(spark, t, preds)
     exp = df.where("x BETWEEN 10.0 AND 30.0 AND y BETWEEN 40.0 AND 60.0")
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, exp.collect()))
     plan = got._jdf.queryExecution().executedPlan().toString()
@@ -705,6 +706,9 @@ def test_zorder_read_applies_both_residual_filters(spark, tmp_path):
     for pat in (r"x#\d+>=10\.0", r"x#\d+<=30\.0", r"y#\d+>=40\.0", r"y#\d+<=60\.0"):
         assert re.search(pat, low), (pat, low[:1500])
     assert "greaterthanorequal(x,10.0)" in low  # pushed down to parquet
+
+
+_ID_V = StructType([StructField("id", LongType()), StructField("v", DoubleType())])
 
 
 def _synthetic_log(t: str, n_snaps: int, files_per: int = 10) -> None:
@@ -728,7 +732,7 @@ def _synthetic_log(t: str, n_snaps: int, files_per: int = 10) -> None:
             snap.Snapshot(
                 snapshot_id=sid, parent_id=sid - 1 or None, operation="append",
                 dirs=dirs, rows=100 * files_per * sid,
-                schema="struct<id:bigint,v:double>", wall_ts=float(sid),
+                schema=_ID_V.jsonValue(), wall_ts=float(sid),
                 stats=stats,
             )
         )
@@ -754,17 +758,17 @@ def test_compacted_log_bounded_planning_thousand_snapshots(tmp_path, monkeypatch
     monkeypatch.setattr(snap, "_load_log", counting_load)
     snap._PLAN_CACHE.clear()
     preds = {"id": (123_450, 123_700), "v": (0.0, 0.5)}
-    kept_full, total_full = snap.plan_scan_multi(t, preds)
+    kept_full, total_full = snap.plan_scan(t, preds)
     assert total_full == 10_000 and 1 <= len(kept_full) <= 4
     assert parses["n"] == 1
     for _ in range(5):  # warm calls: zero log parses
-        k2, t2 = snap.plan_scan_multi(t, preds)
+        k2, t2 = snap.plan_scan(t, preds)
         assert (k2, t2) == (kept_full, total_full)
     assert parses["n"] == 1
 
     size_full = os.path.getsize(snap._log_path(t))
     assert snap.compact_log(t) == 999
-    kept_c, total_c = snap.plan_scan_multi(t, preds)  # new log version: re-plan
+    kept_c, total_c = snap.plan_scan(t, preds)  # new log version: re-plan
     assert (kept_c, total_c) == (kept_full, total_full)
     # 3 = initial parse + compact_log's own read + one re-plan parse
     assert parses["n"] == 3
@@ -775,11 +779,11 @@ def test_compacted_log_bounded_planning_thousand_snapshots(tmp_path, monkeypatch
     assert snap.compact_log(t) == 0
 
 
-def test_expire_preserves_pruning_stats_and_writer_schemas(spark, tmp_path):
+def test_expire_preserves_pruning_stats_and_evolved_reads(spark, tmp_path):
     """expire() used to drop the log entries that carried still-live dirs'
-    file stats and writer schemas: pruned reads silently degraded to
-    keep-everything and mergeSchema detection went blind. Both must
-    survive entry expiry."""
+    file stats: pruned reads silently degraded to keep-everything. The
+    stats must survive entry expiry, and a pruned read of the evolved
+    table still returns the logged columns."""
     t = str(tmp_path / "exp")
     v1 = spark.createDataFrame(
         [(i, float(i)) for i in range(100)], "id bigint, v double"
@@ -790,15 +794,15 @@ def test_expire_preserves_pruning_stats_and_writer_schemas(spark, tmp_path):
         "id bigint, v double, tag string",
     )
     snap.commit(wide, t, evolve=True)
-    kept_before, total_before = snap.plan_scan(t, "id", lo=0, hi=30)
+    kept_before, total_before = snap.plan_scan(t, {"id": (0, 30)})
     assert total_before > 1 and 1 <= len(kept_before) < total_before
 
     snap.expire(t, keep_last=1)
     snap._PLAN_CACHE.clear()
-    kept_after, total_after = snap.plan_scan(t, "id", lo=0, hi=30)
+    kept_after, total_after = snap.plan_scan(t, {"id": (0, 30)})
     assert (kept_after, total_after) == (kept_before, total_before)
-    # evolved read still merges schemas (old files surface tag as NULL)
-    got = snap.read_where(spark, t, "id", lo=0, hi=2000)
+    # old files still surface the evolved column as NULL
+    got = snap.read_where(spark, t, {"id": (0, 2000)})
     assert set(got.columns) == {"id", "v", "tag"}
     assert got.where("tag IS NULL").count() == 100
 
@@ -894,30 +898,35 @@ def test_read_where_old_schema_dirs_returns_logged_columns(spark, tmp_path):
     read() does."""
     t = str(tmp_path / "evolved")
     _evolved(spark, t)
-    kept, _ = snap.plan_scan(t, "k", lo=0, hi=5)
+    kept, _ = snap.plan_scan(t, {"k": (0, 5)})
     assert {f.rsplit("/", 1)[0] for f in kept} == {"data/snap-1"}
-    got = snap.read_where(spark, t, "k", lo=0, hi=5)
+    got = snap.read_where(spark, t, {"k": (0, 5)})
     assert got.columns == snap.read(spark, t).columns == ["k", "v", "extra"]
     assert got.count() == 6 and got.where("extra IS NULL").count() == 6
 
 
-def test_unparseable_logged_schema_falls_back_to_inference(spark, tmp_path):
-    """A column name the simpleString form cannot quote does not
-    round-trip, so the read infers the schema from the footers instead."""
-    t = str(tmp_path / "odd")
-    df = spark.createDataFrame([(1, 2.0)], "`a:b` bigint, v double")
-    s1 = snap.commit(df, t)
-    assert snap._logged_struct(s1.schema) is None
-    got = snap.read(spark, t)
-    assert got.columns == ["a:b", "v"] and got.first()["a:b"] == 1
-
-
 def test_single_schema_read_launches_no_job(spark, tmp_path):
     """With the schema taken from the log, building a read (plain, at an
-    older snapshot, or pruned) infers nothing from parquet footers."""
+    older snapshot, or pruned) infers nothing from parquet footers — also
+    for a column name and types the simpleString form cannot round-trip
+    (``a:b``, nested types, decimals, ``timestamp_ntz``): the log keeps
+    the schema as JSON."""
+    import datetime
+    from decimal import Decimal
+
     t = str(tmp_path / "tbl")
     snap.commit(_df(spark, range(5)), t)
     snap.commit(_df(spark, range(10, 15)), t)
+    odd_t = str(tmp_path / "odd")
+    odd = spark.createDataFrame(
+        [(i, [i, i + 1], (i, f"s{i}"), Decimal(f"{i}.25"), datetime.datetime(2024, 1, 1, i))
+         for i in range(1, 4)],
+        "`a:b` bigint, arr array<int>, st struct<x:int,`y z`:string>, "
+        "d decimal(10,2), tn timestamp_ntz",
+    )
+    snap.commit(odd.where("`a:b` < 3"), odd_t)
+    snap.commit(odd.where("`a:b` = 3"), odd_t)
+    assert StructType.fromJson(snap.history(odd_t)[-1].schema) == odd.schema
     sc = spark.sparkContext
     group = "snapshot-read-build"
     sc.setJobGroup(group, "snapshot read build")
@@ -925,9 +934,17 @@ def test_single_schema_read_launches_no_job(spark, tmp_path):
         dfs = [
             snap.read(spark, t),
             snap.read(spark, t, 1),
-            snap.read_where(spark, t, "id", lo=11),
+            snap.read_where(spark, t, {"id": (11, None)}),
+        ]
+        odd_dfs = [
+            snap.read(spark, odd_t),
+            snap.read(spark, odd_t, 1),
+            snap.read_where(spark, odd_t, {"a:b": (3, None)}),
         ]
     finally:
         sc.setJobGroup(None, None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert [d.columns for d in dfs] == [["id", "v"]] * 3
+    assert [d.schema.simpleString() for d in odd_dfs] == [odd.schema.simpleString()] * 3
+    assert [sorted(r["a:b"] for r in d.collect()) for d in odd_dfs] == [[1, 2, 3], [1, 2], [3]]
+    assert odd_dfs[2].first()["st"]["y z"] == "s3"
