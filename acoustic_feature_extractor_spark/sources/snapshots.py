@@ -24,11 +24,14 @@ directories that make up the table at that version:
   nothing is deleted).
 - EXPIRE drops old log entries and deletes data dirs no surviving
   snapshot references.
-- MERGE (:func:`merge_upsert`) is copy-on-write at dir granularity:
-  only dirs containing a matched key are rewritten, everything else is
-  carried by reference.
+- MERGE (:func:`merge_upsert`) is merge-on-read, after Iceberg v2's
+  equality deletes: it writes only the updated rows into a new dir and
+  records that dir's key columns in the snapshot's ``delete_keys``. A
+  read drops every row of an OLDER dir whose key the merge dir holds
+  (:func:`_scan`); no old byte is read or rewritten by the merge.
 - COMPACT (:func:`compact`) rewrites the current dir set into one
-  right-sized dir, metadata-published like any commit; history intact.
+  right-sized dir, folding the merges' deletes into the data,
+  metadata-published like any commit; history intact.
 
 Each snapshot records row count (via ``Observation`` on the write itself —
 no re-read), the table schema, wall-clock, parent id, and a caller lineage
@@ -38,9 +41,8 @@ The schema is logged in Spark's JSON form (``StructType.jsonValue()``, as
 Iceberg writes its schemas into table metadata as JSON) and parsed back
 with ``StructType.fromJson``: pure Python, exact for every column name and
 type. So every data read (:func:`read`, :func:`read_where`,
-:func:`read_changes`, the merge's probe and survivors, :func:`compact`) is
-one :func:`_scan` at the logged schema, and no read infers a schema from
-parquet footers.
+:func:`read_changes`, :func:`compact`) is one :func:`_scan` at the logged
+schema, and no read infers a schema from parquet footers.
 
 **Writer concurrency contract**: one writer per table at a time. Every
 log mutation (commit / merge / compact / rollback / expire) takes an
@@ -56,16 +58,19 @@ gone or the lock is older than an hour. Readers never lock — the
 
 from __future__ import annotations
 
+import decimal
 import json
 import os
 import shutil
 import time
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from acoustic_feature_extractor_spark.plans.hints import maybe_broadcast
 
 _LOG = "metadata/snapshots.json"
 _LOCK = "metadata/commit.lock"
@@ -149,17 +154,27 @@ class Snapshot:
     # pruned read never opens footers — at 100 TB the stats live in the
     # log, not in a million S3 footer round-trips per query.
     stats: dict = field(default_factory=dict)
+    # merge-on-read deletes: {merge_dir: key columns} for each live dir a
+    # merge_upsert wrote. The dir's keys delete the rows with equal keys
+    # from every dir listed before it in ``dirs`` (list position plays
+    # the role of Iceberg's sequence number). Appends and merges extend
+    # ``dirs`` and so carry the mapping whole, a rollback copies its
+    # target's, an overwrite or compaction starts empty.
+    delete_keys: dict = field(default_factory=dict)
 
 
 def _enc_stat(v):
     """JSON-encodable, ORDER-PRESERVING encoding of a parquet stat value.
     Naive timestamps map through a fixed UTC offset (monotonic — a local
-    DST-aware conversion would not be); bytes/unencodable → None (column
-    dropped, file kept conservatively)."""
+    DST-aware conversion would not be); decimals keep their exact digits
+    as ``{"dec": str}``; bytes/unencodable → None (column dropped, file
+    kept conservatively)."""
     import datetime as _dt
 
     if isinstance(v, bool) or isinstance(v, (int, float, str)):
         return v
+    if isinstance(v, decimal.Decimal):
+        return {"dec": str(v)}
     if isinstance(v, _dt.datetime):
         if v.tzinfo is None:
             v = v.replace(tzinfo=_dt.timezone.utc)
@@ -170,8 +185,11 @@ def _enc_stat(v):
 
 
 def _stat_key(v):
-    """Comparable form of an ENCODED stat value (dict = timestamp)."""
-    return v["ts"] if isinstance(v, dict) else v
+    """Comparable form of an ENCODED stat value (dict = timestamp or
+    decimal)."""
+    if isinstance(v, dict):
+        return decimal.Decimal(v["dec"]) if "dec" in v else v["ts"]
+    return v
 
 
 def _collect_file_stats(table_path: str, rel_dir: str) -> dict:
@@ -216,8 +234,15 @@ def _collect_file_stats(table_path: str, rel_dir: str) -> dict:
                     try:
                         mn, mx = _enc_stat(st.min), _enc_stat(st.max)
                     except pa.ArrowNotImplementedError:
-                        # pyarrow cannot decode e.g. INT64-backed decimals
+                        # pyarrow hands out INT32/INT64-backed decimals
+                        # only as unscaled ints: apply the column's scale
+                        lt = json.loads(st.logical_type.to_json())
                         mn = mx = None
+                        if lt.get("Type") == "Decimal":
+                            mn, mx = (
+                                _enc_stat(decimal.Decimal(r).scaleb(-lt["scale"]))
+                                for r in (st.min_raw, st.max_raw)
+                            )
                     if mn is None or mx is None:  # unencodable type
                         a[3] = False
                         continue
@@ -339,7 +364,8 @@ def commit(
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(
             os.path.join(table_path, rel)
         )
-        dirs = ([*parent.dirs, rel] if (operation == "append" and parent) else [rel])
+        extends = operation == "append" and parent is not None
+        dirs = [*parent.dirs, rel] if extends else [rel]
         snap = Snapshot(
             snapshot_id=sid,
             parent_id=parent.snapshot_id if parent else None,
@@ -350,6 +376,7 @@ def commit(
             wall_ts=round(time.time(), 3),
             lineage=lineage or {},
             stats=_collect_file_stats(table_path, rel),
+            delete_keys=dict(parent.delete_keys) if extends else {},
         )
         _publish_log(table_path, snaps + [snap])
     return snap
@@ -368,21 +395,56 @@ def _snapshot(snaps: list[Snapshot], snapshot_id: int | None) -> Snapshot:
     )
 
 
-def _scan(
-    spark: SparkSession, table_path: str, paths: list[str], schema: dict
+def _union(a: DataFrame | None, b: DataFrame) -> DataFrame:
+    return b if a is None else a.unionByName(b)
+
+
+def _files(
+    spark: SparkSession, table_path: str, schema: dict, rels: list[str]
 ) -> DataFrame:
-    """The one way this module reads data: ``paths`` (data dirs or files,
-    relative to the table) read at the logged ``schema``.
+    """``rels`` (data dirs or files, relative to the table) as stored, at
+    the logged ``schema``: no delete applied."""
+    return spark.read.schema(StructType.fromJson(schema)).parquet(
+        *[os.path.join(table_path, p) for p in rels]
+    )
+
+
+def _scan(
+    spark: SparkSession, table_path: str, snap: Snapshot, paths: list[str]
+) -> DataFrame:
+    """The one way this module reads data: the live rows of ``paths``
+    (dirs of ``snap``, or files in them, relative to the table) at the
+    snapshot's logged schema.
 
     The schema comes from the log, so no job infers it from parquet
     footers. Every dir's writer schema is the logged one or an additive
     ancestor of it (:func:`commit`'s evolution rule), so files written
     before an ``evolve=True`` append surface its new columns as NULL —
-    also in a merge, compaction or pruned read that opens only such
-    files."""
-    return spark.read.schema(StructType.fromJson(schema)).parquet(
-        *[os.path.join(table_path, p) for p in paths]
-    )
+    also in a compaction or pruned read that opens only such files.
+
+    Merge-on-read: each dir in ``snap.delete_keys`` deletes the rows with
+    an equal key from the dirs listed before it. The read is one
+    left-deep chain: the paths older than a merge dir are anti-joined
+    with that dir's key columns (read key-columns-only, also when
+    ``paths`` holds none of its files; a size-gated broadcast), then
+    unioned with the next group of paths. With no ``delete_keys`` this is
+    one plain scan, and building any read launches no job."""
+    live, by_dir = set(snap.dirs), {}
+    for p in paths:
+        d = p if p in live else p.rsplit("/", 1)[0]
+        if d not in live:
+            raise ValueError(f"{p} is not in snapshot {snap.snapshot_id}")
+        by_dir.setdefault(d, []).append(p)
+    out, group = None, []
+    for d in [*snap.dirs, None]:
+        keys = snap.delete_keys.get(d)
+        if group and (keys or d is None):
+            out, group = _union(out, _files(spark, table_path, snap.schema, group)), []
+        if keys and out is not None:
+            deleted = _files(spark, table_path, snap.schema, [d]).select(*keys)
+            out = out.join(maybe_broadcast(deleted), keys, "left_anti")
+        group += by_dir.get(d, [])
+    return _files(spark, table_path, snap.schema, []) if out is None else out
 
 
 def read(
@@ -393,14 +455,14 @@ def read(
 ) -> DataFrame:
     """Read the table at ``snapshot_id`` (default: current). Time travel is
     resolving an older log entry to its directory list. ``dirs`` (relative
-    data dirs) narrows the read to those dirs at the snapshot's schema —
-    e.g. the dirs an increment appended, found by diffing two snapshots'
-    lists."""
+    data dirs) narrows the read to the live rows of those dirs at the
+    snapshot's schema — e.g. the dirs an increment appended, found by
+    diffing two snapshots' lists."""
     snaps = _load_log(table_path)
     if not snaps:
         raise FileNotFoundError(f"no snapshots at {table_path}")
     snap = _snapshot(snaps, snapshot_id)
-    return _scan(spark, table_path, snap.dirs if dirs is None else dirs, snap.schema)
+    return _scan(spark, table_path, snap, snap.dirs if dirs is None else dirs)
 
 
 # planner index cache: {table_path: ((log_mtime_ns, log_size), index)}.
@@ -598,11 +660,12 @@ def read_where(
     format exists to reproduce; pair with
     :func:`~acoustic_feature_extractor_spark.sources.layout.zorder_layout`
     so that every predicate column prunes. The kept files are read at the
-    snapshot's logged schema; an empty keep-set returns an empty frame
-    with that schema."""
+    snapshot's logged schema, with every merge's deletes applied (a merge
+    dir whose files were pruned still deletes, :func:`_scan`); an empty
+    keep-set returns an empty frame with that schema."""
     kept, _ = plan_scan(table_path, preds, snapshot_id=snapshot_id)
     tgt = _snapshot(_planner_index(table_path)["snaps"], snapshot_id)
-    df = _scan(spark, table_path, kept or tgt.dirs, tgt.schema)
+    df = _scan(spark, table_path, tgt, kept or tgt.dirs)
     if not kept:
         df = df.limit(0)
     for col, (lo, hi) in preds.items():
@@ -628,9 +691,16 @@ def table_profile(table_path: str, snapshot_id: int | None = None) -> dict:
 
     File enumeration comes from the log via the cached planner index —
     ``os.listdir`` runs only for a pre-stats dir the log has no entries
-    for, the same zero-LIST contract as :func:`plan_scan`."""
+    for, the same zero-LIST contract as :func:`plan_scan`.
+
+    A snapshot with merge-on-read deletes gets ``{}``, as one with
+    pre-stats files does: the per-file stats still count the rows a merge
+    deleted, and only a scan could tell which. :func:`compact` folds the
+    deletes and restores an exact profile."""
     idx = _planner_index(table_path)
     target = _snapshot(idx["snaps"], snapshot_id)
+    if target.delete_keys:
+        return {}
     stats = idx["stats"]
     by_dir = idx["by_dir"]
     acc: dict = {}
@@ -684,6 +754,7 @@ def rollback(table_path: str, snapshot_id: int) -> Snapshot:
             schema=src.schema,
             wall_ts=round(time.time(), 3),
             lineage={"rolled_back_to": snapshot_id},
+            delete_keys=dict(src.delete_keys),
         )
         _publish_log(table_path, snaps + [snap])
     return snap
@@ -759,16 +830,20 @@ def merge_upsert(
     key: str | list[str],
     lineage: dict | None = None,
 ) -> Snapshot:
-    """Copy-on-write MERGE: upsert ``updates`` by key, rewriting ONLY the
-    data dirs that contain a matched key (Iceberg's copy-on-write MERGE
-    at directory granularity — the snapshot log tracks dirs, not files).
+    """Merge-on-read MERGE: upsert ``updates`` by key, writing ONLY the
+    updates (Iceberg v2's equality deletes, with the update dir as its own
+    delete file).
 
-    Plan: one semi-join finds the hit dirs (tiny collect — dir names, not
-    rows); survivors of those dirs anti-join the update keys and land in
-    one new dir together with the updates; every untouched dir is carried
-    by reference. A table where updates touch 1% of the dirs rewrites 1%
-    of the bytes. Publishes atomically like every other commit; time
-    travel to the pre-merge snapshot still works.
+    The updates land in one new dir appended to the head's dir list, and
+    ``delete_keys`` maps that dir to ``key``: every read (:func:`_scan`)
+    anti-joins the older dirs with its keys, so an updated key's old row
+    drops out and a new key is an insert. The merge reads no old data dir
+    and rewrites none (``rewritten_dirs`` is always empty), so its IO is
+    O(updates) however large the table; :func:`compact` folds the deletes
+    into the data. One aggregate checks the keys, one write stores the
+    updates.
+    Publishes atomically like every other commit; time travel to the
+    pre-merge snapshot still works.
     """
     key_cols = [key] if isinstance(key, str) else list(key)
     with _writer_lock(table_path):
@@ -782,12 +857,11 @@ def merge_upsert(
                 f"merge schema mismatch: table has {head_simple}, "
                 f"updates have {updates.schema.simpleString()}"
             )
-        # the updates plan is consumed several times (key checks, hit-dir
-        # probe, final write) — pin it so an expensive upstream (e.g. the
-        # incremental feature recompute) executes once
+        # the updates plan is consumed twice (key checks, write) — pin it
+        # so an expensive upstream (e.g. the incremental feature
+        # recompute) executes once
         updates = updates.persist()
         try:
-            ukeys = updates.select(*key_cols).dropDuplicates(key_cols)
             # NULL keys never match an equi-join: the old row would survive
             # AND the update would insert — a silent duplicate. Duplicate
             # keys make the upsert ambiguous. Both checks share one groupBy
@@ -817,37 +891,8 @@ def merge_upsert(
 
             sid = head.snapshot_id + 1
             rel = f"data/snap-{sid}"
-            # probe: which dirs hold a matched key. Column-pruned scan (keys
-            # only); the dir is the file's immediate parent (anchored to the
-            # filename so a table path containing "data/snap-…" never
-            # matches).
-            probe = _scan(spark, table_path, head.dirs, head.schema).select(
-                *key_cols,
-                F.regexp_extract(
-                    F.input_file_name(), r"(data/snap-[^/]+)/[^/]+$", 1
-                ).alias("_dir"),
-            )
-            hit = sorted(
-                r["_dir"]
-                for r in probe.join(ukeys, key_cols, "left_semi")
-                .select("_dir")
-                .distinct()
-                .collect()
-            )
-            untouched = [d for d in head.dirs if d not in set(hit)]
-            # rewrite leg reads ONLY the hit dirs — merge IO is O(touched),
-            # the probe above reads key columns only. Survivors are read at
-            # the head's schema, so a hit dir that predates an evolve=True
-            # append unions with the updates column for column
-            if hit:
-                survivors = _scan(spark, table_path, hit, head.schema).join(
-                    ukeys, key_cols, "left_anti"
-                )
-                new_data = survivors.unionByName(updates)
-            else:
-                new_data = updates
             obs = Observation(f"snap_rows_{sid}")
-            new_data.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            updates.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
                 "overwrite"
             ).parquet(os.path.join(table_path, rel))
         finally:
@@ -856,14 +901,15 @@ def merge_upsert(
             snapshot_id=sid,
             parent_id=head.snapshot_id,
             operation="merge",
-            dirs=[*untouched, rel],
+            dirs=[*head.dirs, rel],
             # rows = rows THIS snapshot wrote (commit()'s convention; total
             # table size is a read-side question, not snapshot metadata)
             rows=int(obs.get["rows"]),
             schema=head.schema,
             wall_ts=round(time.time(), 3),
-            lineage={**(lineage or {}), "rewritten_dirs": hit},
+            lineage={**(lineage or {}), "rewritten_dirs": []},
             stats=_collect_file_stats(table_path, rel),
+            delete_keys={**head.delete_keys, rel: key_cols},
         )
         _publish_log(table_path, snaps + [snap])
     return snap
@@ -875,11 +921,12 @@ def compact(
     partitions: int | None = None,
     lineage: dict | None = None,
 ) -> Snapshot:
-    """Small-file compaction: rewrite the CURRENT snapshot's dirs into one
-    dir and publish a ``compact`` snapshot (row-for-row identical —
-    verified by observation — so readers see no data change, just fewer,
-    right-sized files). Old dirs stay until :func:`expire`, so time travel
-    across the compaction keeps working.
+    """Small-file compaction: rewrite the CURRENT snapshot's live rows
+    into one dir and publish a ``compact`` snapshot (row-for-row identical
+    — verified by observation — so readers see no data change, just fewer,
+    right-sized files). The merges' deletes fold into the rewrite, so the
+    compacted snapshot has no ``delete_keys``. Old dirs stay until
+    :func:`expire`, so time travel across the compaction keeps working.
 
     Default sizing needs no shuffle: the merged-scan partitioning already
     targets ``spark.sql.files.maxPartitionBytes`` per split, so writing it
@@ -898,17 +945,18 @@ def compact(
             return head
         sid = head.snapshot_id + 1
         rel = f"data/snap-{sid}"
-        # read at the logged schema: dirs written before an evolve=True
-        # append surface its columns as NULL instead of an arbitrary
-        # footer's schema dropping them from the rewrite
-        old = _scan(spark, table_path, head.dirs, head.schema)
+        # the live rows at the logged schema: merges' deletes apply, and
+        # dirs written before an evolve=True append surface its columns as
+        # NULL instead of an arbitrary footer's schema dropping them
+        old = _scan(spark, table_path, head, head.dirs)
         df = old if partitions is None else old.repartition(partitions)
         obs = Observation(f"snap_rows_{sid}")
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite"
         ).parquet(os.path.join(table_path, rel))
         rows = int(obs.get["rows"])
-        # footer-metadata count of the old dir set — cheap independent check
+        # an independent count of the live rows: footers only for a
+        # table without deletes, the key columns' anti-joins otherwise
         before = old.count()
         if rows != before:
             raise RuntimeError(
@@ -988,32 +1036,52 @@ def read_changes(
 ) -> DataFrame:
     """Incremental (CDC) scan: the NET row-level changes between two
     snapshots, tagged ``_change_type`` ∈ {insert, delete} — Iceberg's
-    changelog-scan shape for a copy-on-write table. An updated row appears
-    as its old version (delete) plus its new version (insert).
+    changelog-scan shape. An updated row appears as its old version
+    (delete) plus its new version (insert); a rollback across a merge
+    shows the reverse.
 
-    Plan: diff the two snapshots' DIRECTORY lists first — dirs carried by
-    reference between the versions are provably unchanged and are never
-    read (the incremental-backfill property: IO scales with touched data,
-    not table size). Rows of removed dirs and added dirs then net out via
-    multiset difference (``exceptAll`` both ways), so a compaction or
-    rollback-and-forward that only reshuffles bytes yields ZERO changes,
-    and merge_upsert's rewritten survivors cancel against themselves.
+    Plan: diff the two snapshots' DIRECTORY lists first. A dir only one
+    snapshot lists contributes its live rows in that snapshot. A dir both
+    list holds the same bytes in both; its rows can only be live in one
+    view and not the other where a merge dir that just one snapshot has
+    deletes them. So a shared dir contributes only its live rows whose
+    key such a merge dir holds, and is never read when there is none
+    (the incremental-backfill property: IO scales with touched data, not
+    table size). Each side is its own snapshot's live view; the two net
+    out via multiset difference (``exceptAll`` both ways), so a
+    compaction or rollback-and-forward that only reshuffles bytes yields
+    ZERO changes.
 
-    The shuffle carries only touched-dir rows; at 100 TB with 1%-touched
-    merges this reads ~1% of the table. Empty result keeps the table
-    schema plus ``_change_type``.
+    Both sides are read at the target snapshot's schema, so an
+    evolve=True append between the two compares column for column. Empty
+    result keeps the table schema plus ``_change_type``.
     """
     snaps = _load_log(table_path)
     frm, to = _snapshot(snaps, from_snapshot), _snapshot(snaps, to_snapshot)
-    removed = sorted(set(frm.dirs) - set(to.dirs))
-    added = sorted(set(to.dirs) - set(frm.dirs))
+    shared = [d for d in to.dirs if d in frm.dirs]
+    # key columns → the keys of the merge dirs only one snapshot has
+    touched: dict[tuple, DataFrame] = {}
+    if shared:
+        for s in (frm, to):
+            for d, k in s.delete_keys.items():
+                if (d in frm.delete_keys) != (d in to.delete_keys):
+                    keys = _files(spark, table_path, s.schema, [d]).select(*k)
+                    touched[tuple(k)] = _union(touched.get(tuple(k)), keys)
 
-    # both sides are read at the target snapshot's schema, so an
-    # evolve=True append between the two compares column for column
-    def _rows(rels: list[str]) -> DataFrame | None:
-        return _scan(spark, table_path, rels, to.schema) if rels else None
+    def _side(s: Snapshot, other: Snapshot) -> DataFrame | None:
+        s = replace(s, schema=to.schema)
+        own = [d for d in s.dirs if d not in other.dirs]
+        rows = _scan(spark, table_path, s, own) if own else None
+        if touched:
+            live = _scan(spark, table_path, s, shared)
+            for cols, keys in touched.items():
+                # one part per key-column set, each row in at most one
+                keys = maybe_broadcast(keys)
+                rows = _union(rows, live.join(keys, list(cols), "left_semi"))
+                live = live.join(keys, list(cols), "left_anti")
+        return rows
 
-    old, new = _rows(removed), _rows(added)
+    old, new = _side(frm, to), _side(to, frm)
     ins = new.exceptAll(old) if (new is not None and old is not None) else new
     dels = old.exceptAll(new) if (new is not None and old is not None) else old
     parts = []
@@ -1022,8 +1090,8 @@ def read_changes(
     if dels is not None:
         parts.append(dels.withColumn("_change_type", F.lit("delete")))
     if not parts:
-        # all dirs carried: an empty frame at the table schema (reads no rows)
-        anchor = _scan(spark, table_path, to.dirs, to.schema).limit(0)
+        # same dirs and deletes: an empty frame at the table schema
+        anchor = _files(spark, table_path, to.schema, to.dirs).limit(0)
         return anchor.withColumn("_change_type", F.lit(""))
     out = parts[0]
     for p in parts[1:]:

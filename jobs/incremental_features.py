@@ -12,7 +12,8 @@ job is the INCREMENTAL twin a 10^12-turn deployment actually runs hourly:
    the full history of only the conversations TOUCHED by the delta (a
    semi-join; with conv-bucketed layout this is a pruned read) and
    :func:`~acoustic_feature_extractor_spark.sources.snapshots.merge_upsert`'s
-   copy-on-write merge rewrites only the feature dirs those convs live in.
+   merge-on-read merge writes just those rows into one new feature dir,
+   whose keys delete the old rows on read.
 4. Normalization statistics are computed ONCE on the first run and pinned
    in lineage (the reference's separate-statistics-job contract,
    ``extract_f0_statistics.py`` → applied by ``f0.convert``): later
@@ -31,12 +32,10 @@ job is the INCREMENTAL twin a 10^12-turn deployment actually runs hourly:
    silently poisoning the features table with stale normalization).
 
 Cost per increment: the delta is found from metadata and profiled in one
-aggregate, and the feature recompute covers only the touched
-conversations. The merge is not O(touched) yet: it rewrites every feature
-dir that holds a touched conversation, and the features table is a
-single dir after its first commit, so each increment rewrites the whole
-table; the history read and the merge's key probe also scan the whole
-source and the whole features table.
+aggregate, the feature recompute covers only the touched conversations,
+and the merge checks their keys and writes their rows: it reads and
+rewrites no existing feature dir (``rewritten_dirs`` stays empty). The
+history read of the touched conversations still scans the whole source.
 
 Emits one JSON line: rows upserted, touched conversations, processed
 source snapshot, drift PSI vs the pinned window, and whether the run

@@ -1,5 +1,5 @@
 """Incremental feature backfill: metadata-diff delta detection, touched-conv
-recompute, copy-on-write upsert, pinned normalization stats."""
+recompute, merge-on-read upsert, pinned normalization stats."""
 
 from __future__ import annotations
 
@@ -80,7 +80,7 @@ def test_incremental_equals_full_with_pinned_stats(tmp_path, spark, transcripts)
     assert not m2["noop"] and m2["source_snapshot"] == 2
     n_convs = t.select("conv_id").distinct().count()
     assert 0 < m2["touched_convs"] < n_convs  # some convs were untouched
-    assert m2["rewritten_dirs"]  # copy-on-write actually merged
+    assert m2["rewritten_dirs"] == []  # merge-on-read rewrites no dir
 
     got2 = _frame(spark, feat)
     exp2 = (
@@ -89,9 +89,11 @@ def test_incremental_equals_full_with_pinned_stats(tmp_path, spark, transcripts)
         .toPandas()
     )
     assert len(got2) == len(exp2)
-    # rows_written = the merged dir (touched-conv features + survivors of
-    # rewritten dirs) — strictly less than a full recompute
+    # rows_written = the merged dir: the touched conversations' feature
+    # rows only — strictly less than a full recompute
     assert 0 < m2["rows_written"] <= len(exp2)
+    touched = wave2.select("conv_id").distinct()
+    assert m2["rows_written"] == t.join(touched, "conv_id", "left_semi").count()
     assert (got2["conv_id"].to_numpy() == exp2["conv_id"].to_numpy()).all()
     assert (got2["text"].to_numpy() == exp2["text"].to_numpy()).all()
     for c in ("text_len_z", "roll_len_mean", "dt_prev_sec"):
@@ -184,16 +186,18 @@ def test_incremental_drift_gate(tmp_path, spark, transcripts):
 
 # Spark jobs one increment launches on the tiny table below: 3 for the
 # delta profile, 6 for the merge's fused key check over the recomputed
-# features, 3 for the hit-dir probe and 2 for the write, measured with
-# this suite's 8 shuffle partitions. No job infers a parquet schema (the
-# snapshot log records it) and none scores drift (the driver does, from
-# the two 16-bin count lists).
-INCREMENT_JOB_BUDGET = 14
+# features and 1 for the write of the updates, measured with this
+# suite's 8 shuffle partitions. No job reads an old data dir (the merge
+# writes only the updates), none infers a parquet schema (the snapshot
+# log records it) and none scores drift (the driver does, from the two
+# 16-bin count lists).
+INCREMENT_JOB_BUDGET = 10
 
 
 def test_increment_job_budget(tmp_path, spark, transcripts, capsys):
     """One in-process increment that merges into the first run's dir
-    stays within its Spark-job budget, and reports the touched
+    stays within its Spark-job budget, writes only the touched
+    conversations' rows into one new dir, and reports the touched
     conversations and the drift it scored."""
     import importlib.util
 
@@ -226,7 +230,12 @@ def test_increment_job_budget(tmp_path, spark, transcripts, capsys):
     out = json.loads([l for l in capsys.readouterr().out.splitlines() if l.startswith("{")][-1])
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n_jobs <= INCREMENT_JOB_BUDGET, f"{n_jobs} jobs"
-    assert out["rewritten_dirs"] == ["data/snap-1"]
+    assert out["rewritten_dirs"] == []
+    head = snap.history(feat)[-1]
+    assert head.dirs == ["data/snap-1", "data/snap-2"]
+    assert head.rows == out["rows_written"] == t.join(
+        wave2.select("conv_id").distinct(), "conv_id", "left_semi"
+    ).count()
     assert out["touched_convs"] == touched and out["source_snapshot"] == 2
     assert out["drift_psi"] is not None and out["drift_ks"] is not None
     assert snap.read(spark, feat).count() == t.count()

@@ -87,10 +87,11 @@ def test_crashed_commit_invisible(spark, tmp_path):
     assert snap.read(spark, t).count() == 3
 
 
-def test_merge_upsert_copy_on_write(spark, tmp_path):
-    """MERGE rewrites only the dirs holding matched keys: updates to
-    snap-1 keys must carry the snap-2 dir BY REFERENCE, update matched
-    rows, insert new keys, and keep the pre-merge snapshot time-travelable."""
+def test_merge_upsert_merge_on_read(spark, tmp_path):
+    """MERGE writes only the updates, into one new dir after the head's
+    dirs, and records its key columns as the deletes of the older dirs:
+    matched rows update, new keys insert, every old dir is carried by
+    reference, and the pre-merge snapshot stays time-travelable."""
     t = str(tmp_path / "tbl")
     snap.commit(_df(spark, range(5)), t)  # snap-1: ids 0..4
     snap.commit(_df(spark, range(100, 105)), t)  # snap-2: ids 100..104
@@ -99,11 +100,12 @@ def test_merge_upsert_copy_on_write(spark, tmp_path):
     )
     s3 = snap.merge_upsert(spark, upd, t, key="id")
     assert s3.operation == "merge"
-    assert s3.lineage["rewritten_dirs"] == ["data/snap-1"]
-    assert "data/snap-2" in s3.dirs  # untouched dir carried by reference
-    # rows = rows THIS snapshot wrote (commit convention): 3 survivors of
-    # snap-1 (ids 0,3,4) + 2 updates + 1 insert
-    assert s3.rows == 6
+    assert s3.lineage["rewritten_dirs"] == []
+    assert s3.dirs == ["data/snap-1", "data/snap-2", "data/snap-3"]
+    assert s3.delete_keys == {"data/snap-3": ["id"]}
+    # rows = rows THIS snapshot wrote (commit convention): 2 updates + 1
+    # insert, nothing of the old dirs
+    assert s3.rows == 3
     got = {r["id"]: r["v"] for r in snap.read(spark, t).collect()}
     assert len(got) == 11
     assert got[1] == -1.0 and got[2] == -2.0 and got[999] == -999.0
@@ -138,7 +140,137 @@ def test_merge_upsert_pure_insert(spark, tmp_path):
     s2 = snap.merge_upsert(spark, _df(spark, range(10, 12)), t, key="id")
     assert s2.lineage["rewritten_dirs"] == []
     assert s2.dirs == ["data/snap-1", "data/snap-2"]
+    assert s2.rows == 2
     assert snap.read(spark, t).count() == 6
+
+
+def _upd(spark, pairs):
+    return spark.createDataFrame(pd.DataFrame({"id": [k for k, _ in pairs], "v": [v for _, v in pairs]}))
+
+
+def _vals(df):
+    return {r["id"]: r["v"] for r in df.collect()}
+
+
+def test_merge_reads_and_rewrites_no_old_dir(spark, tmp_path):
+    """A merge into a two-dir table opens neither old dir (the merge
+    succeeds with both moved away), and its new dir holds exactly the
+    update rows."""
+    t = str(tmp_path / "tbl")
+    snap.commit(_df(spark, range(5)), t)
+    snap.commit(_df(spark, range(100, 105)), t)
+    upd = _upd(spark, [(1, -1.0), (103, -103.0), (999, -999.0)])
+    away = tmp_path / "away"
+    away.mkdir()
+    for d in ("snap-1", "snap-2"):
+        os.rename(os.path.join(t, "data", d), str(away / d))
+    try:
+        s3 = snap.merge_upsert(spark, upd, t, key="id")
+    finally:
+        for d in ("snap-1", "snap-2"):
+            os.rename(str(away / d), os.path.join(t, "data", d))
+    written = spark.read.parquet(os.path.join(t, "data/snap-3"))
+    assert sorted(map(tuple, written.collect())) == sorted(map(tuple, upd.collect()))
+    assert s3.rows == 3 and s3.lineage["rewritten_dirs"] == []
+    got = _vals(snap.read(spark, t))
+    assert len(got) == 11 and got[1] == -1.0 and got[103] == -103.0 and got[0] == 0.0
+
+
+def test_stacked_merges_newest_wins(spark, tmp_path):
+    """Two merges on one key: the newest value wins, the first merge's row
+    is deleted by the second, and each snapshot reads its own version."""
+    t = str(tmp_path / "tbl")
+    snap.commit(_df(spark, range(5)), t)
+    s2 = snap.merge_upsert(spark, _upd(spark, [(2, -2.0), (7, -7.0)]), t, key="id")
+    s3 = snap.merge_upsert(spark, _upd(spark, [(2, 22.0)]), t, key="id")
+    assert s3.delete_keys == {"data/snap-2": ["id"], "data/snap-3": ["id"]}
+    got = _vals(snap.read(spark, t))
+    assert got == {0: 0.0, 1: 1.0, 2: 22.0, 3: 3.0, 4: 4.0, 7: -7.0}
+    assert _vals(snap.read(spark, t, s2.snapshot_id))[2] == -2.0
+    ch = snap.read_changes(spark, t, s2.snapshot_id, s3.snapshot_id)
+    assert sorted((r["id"], r["v"], r["_change_type"]) for r in ch.collect()) == [
+        (2, -2.0, "delete"),
+        (2, 22.0, "insert"),
+    ]
+
+
+def test_rollback_across_merge_restores_old_row(spark, tmp_path):
+    """Rolling back to before a merge brings the old row back (the
+    rollback copies its target's deletes), and the CDC scan across the
+    rollback is the merge's changes reversed."""
+    t = str(tmp_path / "tbl")
+    s1 = snap.commit(_df(spark, range(4)), t)
+    s2 = snap.merge_upsert(spark, _upd(spark, [(1, -1.0), (9, -9.0)]), t, key="id")
+    s3 = snap.rollback(t, s1.snapshot_id)
+    assert s3.delete_keys == {} and s3.dirs == ["data/snap-1"]
+    assert _vals(snap.read(spark, t)) == {0: 0.0, 1: 1.0, 2: 2.0, 3: 3.0}
+    ch = snap.read_changes(spark, t, s2.snapshot_id, s3.snapshot_id)
+    assert sorted((r["id"], r["v"], r["_change_type"]) for r in ch.collect()) == [
+        (1, -1.0, "delete"),
+        (1, 1.0, "insert"),
+        (9, -9.0, "delete"),
+    ]
+    # rolling forward again copies the merge's deletes back
+    s4 = snap.rollback(t, s2.snapshot_id)
+    assert s4.delete_keys == s2.delete_keys
+    assert _vals(snap.read(spark, t))[1] == -1.0
+    assert snap.read_changes(spark, t, s2.snapshot_id, s4.snapshot_id).count() == 0
+
+
+def test_read_where_applies_deletes_of_pruned_merge_dir(spark, tmp_path):
+    """The merge moves a row's value out of the queried range: plan_scan
+    prunes the merge dir's file, yet its key still deletes the old
+    in-range row. Building the read launches no job."""
+    t = str(tmp_path / "tbl")
+    snap.commit(_df(spark, range(10)).coalesce(1), t)
+    snap.merge_upsert(spark, _upd(spark, [(3, 300.0)]).coalesce(1), t, key="id")
+    preds = {"v": (0.0, 9.0)}
+    kept, total = snap.plan_scan(t, preds)
+    assert total == 2 and [k.rsplit("/", 1)[0] for k in kept] == ["data/snap-1"]
+    sc = spark.sparkContext
+    sc.setJobGroup("merged-read-build", "merged read build")
+    try:
+        got = snap.read_where(spark, t, preds)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("merged-read-build")) == []
+    assert sorted(r["id"] for r in got.collect()) == [0, 1, 2, 4, 5, 6, 7, 8, 9]
+    assert _vals(snap.read_where(spark, t, {"v": (100.0, None)})) == {3: 300.0}
+
+
+def test_compact_folds_deletes(spark, tmp_path):
+    """Compaction writes the live rows only: the compacted snapshot has no
+    deletes, reads the same values, and profiles exactly again."""
+    t = str(tmp_path / "tbl")
+    snap.commit(_df(spark, range(6)), t)
+    snap.merge_upsert(spark, _upd(spark, [(0, 50.0), (5, -5.0)]), t, key="id")
+    before = _vals(snap.read(spark, t))
+    assert snap.table_profile(t) == {}
+    s3 = snap.compact(spark, t)
+    assert s3.delete_keys == {} and s3.rows == 6
+    assert _vals(snap.read(spark, t)) == before
+    prof = snap.table_profile(t)
+    assert prof["id"] == [0, 5, 0, 6]
+    assert prof["v"] == [-5.0, 50.0, 0, 6]
+
+
+def test_expire_and_compact_log_keep_delete_keys(spark, tmp_path):
+    """Dropping log entries keeps the surviving snapshots' deletes, so
+    the merged row still reads once, at its new value."""
+    t = str(tmp_path / "tbl")
+    snap.commit(_df(spark, range(3)), t)
+    snap.commit(_df(spark, range(3, 6)), t)
+    s3 = snap.merge_upsert(spark, _upd(spark, [(1, -1.0)]), t, key="id")
+    assert snap.compact_log(t, keep_last=1) == 2
+    assert snap.history(t)[-1].delete_keys == s3.delete_keys
+    assert snap.expire(t, keep_last=1) == []
+    assert snap.history(t)[-1].delete_keys == s3.delete_keys
+    got = snap.read(spark, t)
+    assert got.count() == 6 and _vals(got)[1] == -1.0
+    # and a later append carries the deletes forward
+    s4 = snap.commit(_df(spark, range(10, 12)), t)
+    assert s4.delete_keys == s3.delete_keys
+    assert _vals(snap.read(spark, t))[1] == -1.0
 
 
 def test_compact_preserves_rows_and_history(spark, tmp_path):
@@ -321,7 +453,7 @@ def test_read_changes_append_merge_compact(spark, tmp_path):
     assert rows == [(10, "v10", "insert"), (11, "v11", "insert")]
 
     # merge: updated key -> delete(old)+insert(new); new key -> insert;
-    # rewritten-but-unchanged survivors cancel out
+    # of the carried dir only the merge's keys are compared
     upd = spark.createDataFrame([(3, "V3"), (12, "v12")], "id bigint, val string")
     s3 = snap.merge_upsert(spark, upd, t, key="id")
     ch = snap.read_changes(spark, t, s2.snapshot_id, s3.snapshot_id)
@@ -454,7 +586,7 @@ def test_read_where_timestamps_and_merge(spark, tmp_path):
     assert total == 6 and 1 <= len(kept) <= 2
     got = snap.read_where(spark, t, {"ts": (lo, hi)})
     assert got.count() == 100
-    # after a merge the rewritten dir gets fresh stats; pruning stays exact
+    # after a merge the update dir has its own stats; pruning stays exact
     upd = spark.createDataFrame(
         [(5, base + dt.timedelta(minutes=5), 99.0)], "id bigint, ts timestamp, v double"
     )
@@ -469,21 +601,11 @@ def test_read_where_timestamps_and_merge(spark, tmp_path):
     assert kept_tt == kept
 
 
-def test_plan_scan_requires_bound(spark, tmp_path):
-    import pytest as _pytest
-
-    from acoustic_feature_extractor_spark.sources import snapshots as snap
-
-    t = str(tmp_path / "nob")
-    snap.commit(spark.range(5), t)
-    with _pytest.raises(ValueError, match="bound"):
-        snap.plan_scan(t, {"id": (None, None)})
-
-
 def test_table_profile_zero_scan(spark, tmp_path):
     """table_profile aggregates the log's per-file stats into per-column
     (min, max, nulls, rows) matching the real data — including nulls,
-    timestamps, and post-merge snapshots."""
+    timestamps, and post-merge snapshots once compacted (a merge's deletes
+    leave no exact profile until then)."""
     import datetime as dt
 
     from acoustic_feature_extractor_spark.sources import snapshots as snap
@@ -505,11 +627,14 @@ def test_table_profile_zero_scan(spark, tmp_path):
     assert prof["v"][:2] == [1.0, 199.0]  # 0 is null, so min is 1.0
     # timestamps come back in the log's order-preserving encoding
     assert prof["ts"][0] == {"ts": base.replace(tzinfo=dt.timezone.utc).timestamp()}
-    # a merge refreshes the profile (new max)
+    # a merge's deletes leave no exact profile; compacting restores it
+    # with the merge folded in (new max)
     upd = spark.createDataFrame(
         [(500, base + dt.timedelta(days=2), 999.0)], "id bigint, ts timestamp, v double"
     )
     snap.merge_upsert(spark, upd, t, key="id")
+    assert snap.table_profile(t) == {}
+    snap.compact(spark, t)
     prof2 = snap.table_profile(t)
     assert prof2["id"][1] == 500 and prof2["v"][1] == 999.0
     assert prof2["id"][3] == 201
@@ -843,17 +968,19 @@ def test_compact_keeps_evolved_columns(spark, tmp_path):
 
 
 def test_merge_upsert_into_evolved_table(spark, tmp_path):
-    """A merge whose hit dir predates the evolution reads its survivors
-    at the head's schema, so they union with the updates (it used to
-    fail with NUM_COLUMNS_MISMATCH). The CDC scan of that merge compares
-    the old-schema dir at the new schema too."""
+    """A merge of keys that live in a dir older than the evolution: the
+    read applies the deletes to that dir at the head's schema, so its
+    rows union with the updates column for column. The CDC scan of that
+    merge compares the old-schema dir at the new schema too."""
     t = str(tmp_path / "evolved")
     _evolved(spark, t)
     upd = spark.createDataFrame(
         [(1, -1.0, "u1"), (99, -99.0, None)], "k bigint, v double, extra string"
     )
     s3 = snap.merge_upsert(spark, upd, t, key="k")
-    assert s3.lineage["rewritten_dirs"] == ["data/snap-1"]
+    assert s3.lineage["rewritten_dirs"] == []
+    assert s3.dirs == ["data/snap-1", "data/snap-2", "data/snap-3"]
+    assert s3.rows == 2
     got = {r["k"]: (r["v"], r["extra"]) for r in snap.read(spark, t).collect()}
     assert len(got) == 10
     assert got[1] == (-1.0, "u1") and got[99] == (-99.0, None)
@@ -868,9 +995,10 @@ def test_merge_upsert_into_evolved_table(spark, tmp_path):
 
 
 def test_merge_upsert_survivors_from_two_older_schemas(spark, tmp_path):
-    """Hit dirs written under two older schemas, neither of them the
-    head's: merging their footer schemas would still lack the newest
-    column, so survivors are read at the logged head schema."""
+    """Merged keys live in dirs written under two older schemas, neither
+    of them the head's: merging their footer schemas would still lack the
+    newest column, so the rows that survive the deletes are read at the
+    logged head schema."""
     t = str(tmp_path / "evolved")
     _evolved(spark, t)
     snap.commit(
@@ -885,7 +1013,9 @@ def test_merge_upsert_survivors_from_two_older_schemas(spark, tmp_path):
         "k bigint, v double, extra string, n int",
     )
     s4 = snap.merge_upsert(spark, upd, t, key="k")
-    assert s4.lineage["rewritten_dirs"] == ["data/snap-1", "data/snap-2"]
+    assert s4.lineage["rewritten_dirs"] == []
+    assert s4.dirs == ["data/snap-1", "data/snap-2", "data/snap-3", "data/snap-4"]
+    assert s4.rows == 2
     got = {r["k"]: (r["extra"], r["n"]) for r in snap.read(spark, t).collect()}
     assert len(got) == 10
     assert got[1] == ("u1", 7) and got[11] == ("u11", 8)
@@ -948,3 +1078,64 @@ def test_single_schema_read_launches_no_job(spark, tmp_path):
     assert [d.schema.simpleString() for d in odd_dfs] == [odd.schema.simpleString()] * 3
     assert [sorted(r["a:b"] for r in d.collect()) for d in odd_dfs] == [[1, 2, 3], [1, 2], [3]]
     assert odd_dfs[2].first()["st"]["y z"] == "s3"
+
+
+def test_merge_across_evolve_append(spark, tmp_path):
+    """A merge, an evolve=True append, then a second merge of keys from
+    the base dir and from the first merge dir: the old-schema merge dir
+    is read at the new schema, its row is deleted by the second merge, and
+    the CDC scan compares column for column."""
+    t = str(tmp_path / "tbl")
+    snap.commit(
+        spark.createDataFrame([(i, float(i)) for i in range(4)], "k bigint, v double"), t
+    )
+    snap.merge_upsert(
+        spark, spark.createDataFrame([(1, -1.0)], "k bigint, v double"), t, key="k"
+    )
+    s3 = snap.commit(
+        spark.createDataFrame([(10, 10.0, "e")], "k bigint, v double, extra string"),
+        t,
+        evolve=True,
+    )
+    assert s3.delete_keys == {"data/snap-2": ["k"]}
+    upd = spark.createDataFrame(
+        [(1, -11.0, "u1"), (2, -2.0, "u2")], "k bigint, v double, extra string"
+    )
+    s4 = snap.merge_upsert(spark, upd, t, key="k")
+    got = {r["k"]: (r["v"], r["extra"]) for r in snap.read(spark, t).collect()}
+    assert got == {
+        0: (0.0, None), 1: (-11.0, "u1"), 2: (-2.0, "u2"), 3: (3.0, None), 10: (10.0, "e")
+    }
+    ch = snap.read_changes(spark, t, s3.snapshot_id, s4.snapshot_id)
+    rows = sorted((r["k"], r["v"], str(r["extra"]), r["_change_type"]) for r in ch.collect())
+    assert rows == [
+        (1, -11.0, "u1", "insert"),
+        (1, -1.0, "None", "delete"),
+        (2, -2.0, "u2", "insert"),
+        (2, 2.0, "None", "delete"),
+    ]
+
+
+def test_decimal_stats_prune(spark, tmp_path):
+    """Decimal columns carry stats — INT32-, INT64- and
+    FIXED_LEN_BYTE_ARRAY-backed alike, logged as exact ``{"dec": str}``
+    — so plan_scan prunes a decimal range and table_profile covers them."""
+    from decimal import Decimal
+
+    t = str(tmp_path / "dec")
+    df = spark.createDataFrame(
+        [(i, Decimal(i) / 4, Decimal(i) / 4, Decimal(i) / 4) for i in range(100)],
+        "id bigint, a decimal(5,2), d decimal(10,2), w decimal(22,2)",
+    ).repartitionByRange(4, "id")
+    s = snap.commit(df, t)
+    for rel, cols in s.stats.items():
+        got = spark.read.parquet(f"{t}/{rel}").agg(F.min("d"), F.max("d")).first()
+        for c in ("a", "d", "w"):
+            assert cols[c][:2] == [{"dec": str(got[0])}, {"dec": str(got[1])}], (c, cols)
+    preds = {"d": (Decimal("8.00"), Decimal("9.00"))}
+    kept, total = snap.plan_scan(t, preds)
+    assert total == 4 and len(kept) == 1
+    got = snap.read_where(spark, t, preds)
+    assert sorted(r["id"] for r in got.collect()) == list(range(32, 37))
+    assert snap.plan_scan(t, {"w": (Decimal("30"), None)})[0] == []
+    assert snap.table_profile(t)["a"] == [{"dec": "0.00"}, {"dec": "24.75"}, 0, 100]
