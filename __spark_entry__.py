@@ -894,7 +894,7 @@ def q_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless (count/sum/min/max decompose; avg finalizes from sum+n)."""
     ev = _t(spark, sf_dir, "events")
     hourly = rollup_ops.rollup(ev, 3600.0, by="user_id", value_col="value")
-    daily = rollup_ops.rollup_coarser(hourly, 86400.0, by="user_id")
+    daily = rollup_ops.rollup_coarser(hourly, 86400.0, by="user_id", fine_seconds=3600.0)
     return _rollup_export(daily, "user_id")
 
 
@@ -4496,7 +4496,6 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value_dec",
         ts_col="ts",
         tiebreak_col="event_id",
-        prior_weight=0.0,
         out_col="enc",
         chunk_seconds=172800.0,
     )

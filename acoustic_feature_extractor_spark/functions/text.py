@@ -114,8 +114,6 @@ def fingerprint(text: Column) -> Column:
 
 def tfidf_top_terms(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 5,
 ) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF.
@@ -129,11 +127,11 @@ def tfidf_top_terms(
     unavoidable for exact TF-IDF.
     """
     toks = df.select(
-        F.col(id_col), F.explode(whitespace_tokens(F.col(text_col))).alias("term")
+        F.col("doc_id"), F.explode(whitespace_tokens(F.col("text"))).alias("term")
     ).where(F.col("term") != "")
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    n_docs = df.select(F.countDistinct(id_col).alias("_n"))
+    n_docs = df.select(F.countDistinct("doc_id").alias("_n"))
     scored = (
         tf.join(dfreq, "term")
         .crossJoin(maybe_broadcast(n_docs))
@@ -142,19 +140,19 @@ def tfidf_top_terms(
             F.col("tf") * (F.log((F.col("_n") + 1) / (F.col("df") + 1)) + F.lit(1.0)),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("tfidf").desc(), F.col("term").asc())
+    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(id_col, "term", "rank", F.round("tfidf", 6).alias("tfidf"))
+        .select("doc_id", "term", "rank", F.round("tfidf", 6).alias("tfidf"))
     )
 
 
-def document_profile(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def document_profile(df: DataFrame) -> DataFrame:
     """Full text-analysis projection over a documents table."""
-    t = F.col(text_col)
+    t = F.col("text")
     return df.select(
-        id_col,
+        "doc_id",
         token_count(t).alias("n_tokens"),
         bpe_ish_token_count(t).alias("n_bpe_tokens"),
         F.round(punct_ratio(t), 6).alias("punct_ratio"),
@@ -224,8 +222,8 @@ def mean_word_length(text: Column) -> Column:
     )
 
 
-def top_gram_share(text: Column, w: int = 2) -> Column:
-    """Share of the document's w-grams taken by its most frequent w-gram
+def top_gram_share(text: Column) -> Column:
+    """Share of the document's word bigrams taken by its most frequent one
     (Gopher's top-n-gram repetition signal), as a pure Column expression.
 
     ``array_sort`` groups equal grams into runs, then ONE aggregate pass
@@ -235,7 +233,7 @@ def top_gram_share(text: Column, w: int = 2) -> Column:
     ``doc_quality`` query at sf0.1 on a 4-core host took 3.30 s median
     with the fold and 3.22 s with the grouped join (5 JVMs each, best of
     2 runs after a warm-up; the grouped side's quartiles 2.95-3.26 s).
-    Docs too short for a w-gram score 0.
+    Docs too short for a bigram score 0.
     """
     from acoustic_feature_extractor_spark.operators.dedup import (
         tokenize,
@@ -244,7 +242,7 @@ def top_gram_share(text: Column, w: int = 2) -> Column:
 
     toks = tokenize(text)
     g = F.array_sort(
-        F.when(F.size(toks) >= w, word_shingles(toks, w)).otherwise(
+        F.when(F.size(toks) >= 2, word_shingles(toks, 2)).otherwise(
             F.array().cast("array<string>")
         )
     )
@@ -299,8 +297,6 @@ def gopher_keep(text: Column, min_words: int = 50) -> Column:
 
 def gopher_filter(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_words: int = 50,
 ) -> DataFrame:
     """Apply the published Gopher quality thresholds; adds ``keep`` +
@@ -309,8 +305,8 @@ def gopher_filter(
     (:func:`top_gram_share`'s fold), is one projection — no exchange —
     so ``keep`` equals :func:`gopher_keep`.
     """
-    t = F.col(text_col)
-    sig = df.select(id_col, *[c.alias(n) for n, c in _gopher_signals(t).items()])
+    t = F.col("text")
+    sig = df.select("doc_id", *[c.alias(n) for n, c in _gopher_signals(t).items()])
     return sig.withColumn("keep", _gopher_gate({n: F.col(n) for n in sig.columns}, min_words))
 
 
@@ -346,9 +342,7 @@ def redact_pii(text: Column) -> Column:
     return out
 
 
-def pii_scrub(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """Per-doc PII audit + redacted text — pure projection, no shuffle.
 
     Counts are taken BEFORE redaction (the audit trail for "how much PII
@@ -356,9 +350,9 @@ def pii_scrub(
     map-only pass: it pipelines with the scan and writes back out with
     zero exchanges.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     return df.select(
-        id_col,
+        "doc_id",
         *pii_counts(t),
         redact_pii(t).alias("redacted"),
     )
@@ -405,8 +399,6 @@ def c4_page_keep(text: Column, kept: Column, min_lines: int = 3) -> Column:
 
 def c4_clean(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_line_words: int = 5,
     min_lines: int = 3,
 ) -> DataFrame:
@@ -423,13 +415,13 @@ def c4_clean(
     filter on ``keep``), so the pass stays a pure projection with zero
     exchanges at any corpus size.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     lines = _line_array(t)
     kept = c4_kept_lines(t, min_line_words)
     n_kept = F.size(kept)
     lorem, brace = _c4_page_tells(t)
     return df.select(
-        id_col,
+        "doc_id",
         F.size(lines).alias("n_lines"),
         n_kept.alias("kept_lines"),
         (F.size(lines) - n_kept).alias("dropped_lines"),
@@ -440,18 +432,13 @@ def c4_clean(
     )
 
 
-def bigram_logprob(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 1.0,
-) -> DataFrame:
+def bigram_logprob(df: DataFrame) -> DataFrame:
     """Per-document mean bigram log-probability under a model trained on
     the corpus itself — the distributed analog of the CCNet / Gopher
     LM-perplexity quality signal (public method; KenLM swapped for an
-    add-α bigram model the engine can train in two aggregations).
+    add-one bigram model the engine can train in two aggregations).
 
-    P(w2|w1) = (C(w1 w2) + α) / (C(w1) + α·V), V = distinct unigrams.
+    P(w2|w1) = (C(w1 w2) + 1) / (C(w1) + V), V = distinct unigrams.
     Output: (id, n_bigrams, avg_logprob, perplexity = exp(−avg)).
     High perplexity ⇒ the doc's word transitions are rare in the corpus
     (gibberish, boilerplate-free OCR noise) — the usual drop signal.
@@ -464,17 +451,17 @@ def bigram_logprob(
     (collisions merge two counts at 2^-64 per pair — noise for a
     quality score). One groupBy(id) closes the scan.
     """
-    toks = whitespace_tokens(F.col(text_col))
+    toks = whitespace_tokens(F.col("text"))
     n = F.size(toks)
-    uni = df.select(F.col(id_col), F.explode(toks).alias("_w")).select(
-        id_col, F.xxhash64("_w").alias("_h1")
+    uni = df.select(F.col("doc_id"), F.explode(toks).alias("_w")).select(
+        "doc_id", F.xxhash64("_w").alias("_h1")
     )
     m = n - 1
     z = F.arrays_zip(F.slice(toks, 1, m).alias("a"), F.slice(toks, 2, m).alias("b"))
     bi = df.where(n >= 2).select(
-        F.col(id_col), F.explode(z).alias("_z")
+        F.col("doc_id"), F.explode(z).alias("_z")
     ).select(
-        id_col,
+        "doc_id",
         F.xxhash64("_z.a").alias("_h1"),
         F.xxhash64("_z.a", "_z.b").alias("_hb"),
     )
@@ -488,17 +475,16 @@ def bigram_logprob(
         .withColumn(
             "_lp",
             F.log(
-                (F.col("_cb") + F.lit(float(alpha)))
-                / (F.col("_c1") + F.lit(float(alpha)) * F.col("_V"))
+                (F.col("_cb") + F.lit(1.0)) / (F.col("_c1") + F.col("_V"))
             ),
         )
     )
-    agg = scored.groupBy(id_col).agg(
+    agg = scored.groupBy("doc_id").agg(
         F.count("*").alias("n_bigrams"), F.avg("_lp").alias("avg_logprob")
     )
-    base = df.select(F.col(id_col))
-    return base.join(agg, id_col, "left").select(
-        id_col,
+    base = df.select(F.col("doc_id"))
+    return base.join(agg, "doc_id", "left").select(
+        "doc_id",
         F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
         F.col("avg_logprob"),
         F.exp(-F.col("avg_logprob")).alias("perplexity"),
@@ -552,9 +538,7 @@ def chunk_documents(
 
 def build_vocab(
     df: DataFrame,
-    text_col: str = "text",
     top_n: int = 1000,
-    min_count: int = 1,
 ) -> DataFrame:
     """Frequency-ranked corpus vocabulary: the ``top_n`` most frequent
     whitespace tokens as (term, term_id, count), ids dense 0..top_n-1 in
@@ -576,11 +560,10 @@ def build_vocab(
     if top_n < 1:
         raise ValueError(f"top_n must be >= 1, got {top_n}")
     counts = (
-        df.select(F.explode(whitespace_tokens(F.col(text_col))).alias("term"))
+        df.select(F.explode(whitespace_tokens(F.col("text"))).alias("term"))
         .where(F.col("term") != "")
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("count"))
-        .where(F.col("count") >= int(min_count))
     )
     ranked = topk_per_group(
         counts.withColumn("_g", F.lit(1)),
@@ -596,22 +579,20 @@ def build_vocab(
 def oov_stats(
     df: DataFrame,
     vocab: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document out-of-vocabulary profile against a ``build_vocab``
     table: (id, n_tokens, n_oov, oov_rate). The vocab side is top_n rows —
     broadcast left join, the corpus explode never shuffles on term; the
     per-doc reduce groups on the id the explode preserved."""
     toks = df.select(
-        F.col(id_col), F.explode(whitespace_tokens(F.col(text_col))).alias("term")
+        F.col("doc_id"), F.explode(whitespace_tokens(F.col("text"))).alias("term")
     ).where(F.col("term") != "")
     flagged = toks.join(
         F.broadcast(vocab.select("term", F.lit(True).alias("_inv"))),
         "term",
         "left",
     )
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum(F.when(F.col("_inv").isNull(), 1).otherwise(0)).alias("n_oov"),
         (

@@ -274,10 +274,7 @@ def asof_join_salted_jvm(
     on: str = "ts",
     by: str | list[str] = "conv_id",
     right_cols: Iterable[str] | None = None,
-    suffix: str = "_asof",
     chunk_seconds: float = 3600.0,
-    tolerance_seconds: float | None = None,
-    allow_exact_matches: bool = True,
 ) -> DataFrame:
     """Salted as-of join with ZERO Python — the union trick composed with
     the skew engine's two-phase carry (``skew.carry_across_chunks``).
@@ -300,13 +297,12 @@ def asof_join_salted_jvm(
     left_cols = left.columns
     u = _tag_union(left, {"row": right}, {"row": right_cols}, on, by_cols)
 
-    # sort key for "right visible to left at equal ts": right first under
-    # <= semantics, left first under strict <; _sk is numeric so the same
-    # order drives both the window and the chunk-last max_by
-    sk = F.col("_side") if allow_exact_matches else -F.col("_side")
+    # sort key for "right visible to left at equal ts" (<= semantics):
+    # right first; _sk is numeric so the same order drives both the window
+    # and the chunk-last max_by
     _sec = epoch_sec_fn(u, on)  # tz-independent; dtype-dispatched
     chunk = F.floor(_sec(F.col(on)) / F.lit(chunk_seconds)).cast("long")
-    u = u.withColumn(CHUNK_KEY, chunk_key(by_cols, chunk)).withColumn("_sk", sk)
+    u = u.withColumn(CHUNK_KEY, chunk_key(by_cols, chunk)).withColumn("_sk", F.col("_side"))
     # a chunk's state is its last right row in the window's (ts, side) order
     u = carry_across_chunks(
         u, lasts={"_carry": F.col("_r_row")}, order=F.struct(F.col(on), F.col("_sk"))
@@ -319,7 +315,7 @@ def asof_join_salted_jvm(
     local = F.last("_r_row", ignorenulls=True).over(w_local)
     filled = u.withColumn("_f_row", F.coalesce(local, F.col("_carry")))
     dist = _sec(F.col(on)) - _sec(F.col("_f_row._rts"))
-    return _emit_filled(filled, left_cols, right_cols, on, suffix, dist, tolerance_seconds)
+    return _emit_filled(filled, left_cols, right_cols, on, "_asof", dist, None)
 
 
 def resample_grid(
@@ -437,8 +433,6 @@ def align_sources(
     by: str = "conv_id",
     value_cols: list[list[str]] | None = None,
     mode: str = "min",  # min | max | first
-    error_time_length: float | None = None,
-    pad_value: float = 0.0,
 ) -> DataFrame:
     """Multi-source alignment (``SamplingData.collect`` analog,
     ``sampling_data.py:87-139``).
@@ -448,27 +442,21 @@ def align_sources(
     - ``min``  — truncate to the shortest source (inner span,
       ``sampling_data.py:105-110``): grid = first source's rows within
       every source's covered span.
-    - ``max``  — pad to the LONGEST source with ``pad_value``
+    - ``max``  — pad to the LONGEST source with zeros
       (``sampling_data.py:111-121``, numpy.pad zero fill): grid = the
       union of every source's (entity, ts) rows; every source is as-of
       joined on, and rows beyond a source's last timestamp (or before its
-      first) read ``pad_value``. All value columns come back suffixed
+      first) read 0. All value columns come back suffixed
       ``_s{i}`` (including source 0 — its own rows are a subset of the
       grid now).
     - ``first`` — the first source's grid, others as-of joined (left+fill).
 
-    ``error_time_length``: per-entity span tolerance — violating entities
-    are dropped here and surfaced by :func:`align_rejected_entities` (the
-    reference's assert, recast as a validation query).
+    Entities whose source spans diverge (the reference's assert) are
+    surfaced by :func:`align_rejected_entities`, a validation query.
     """
     assert len(sources) >= 2
     if value_cols is None:
         value_cols = [[c for c in s.columns if c not in (by, on)] for s in sources]
-
-    if error_time_length is not None:
-        spans = _source_spans(sources, on, by)
-        ok = spans.where(F.col("span_diff") <= F.lit(error_time_length)).select(by)
-        sources = [s.join(ok, by, "left_semi") for s in sources]
 
     if mode == "max":
         # The max-mode grid is exactly the UNION of every source's
@@ -533,7 +521,7 @@ def align_sources(
                     F.col(on) <= F.col(f"_end_{i}"), F.col(f"{c}_s{i}")
                 )
                 out = out.withColumn(
-                    f"{c}_s{i}", F.coalesce(capped, F.lit(pad_value))
+                    f"{c}_s{i}", F.coalesce(capped, F.lit(0.0))
                 )
         return out.drop(*[f"_end_{i}" for i in range(len(sources))])
 
@@ -563,9 +551,7 @@ def point_in_time_enrich(
     sources: dict[str, DataFrame],
     on: str = "ts",
     by: str | list[str] = "conv_id",
-    payload_cols: dict[str, list[str]] | None = None,
     tolerance_seconds: dict[str, float] | float | None = None,
-    allow_exact_matches: bool = True,
 ) -> DataFrame:
     """Feature-store point-in-time enrichment: as-of join K feature tables
     onto one spine in a SINGLE shuffle.
@@ -583,13 +569,14 @@ def point_in_time_enrich(
     a Spark plan).
 
     Same zero-leakage contract as :func:`asof_join` (a spine row can only
-    ever see source rows with ``on`` <= its own; strict ``<`` with
-    ``allow_exact_matches=False``), per-source ``tolerance_seconds``
+    ever see source rows with ``on`` <= its own), per-source
+    ``tolerance_seconds``
     (scalar applies to every source), and the same tie rule: sources must
     be unique per (by, on) — pre-aggregate duplicates, or the picked row
     among equal-timestamp duplicates is undefined.
 
     Returns every spine row plus, per source ``name``, its payload columns
+    (every column but ``by`` and ``on``)
     aliased ``{col}_{name}`` and the matched timestamp ``{on}_{name}``
     (null when nothing qualifies). Reference parity: this is the K-source
     generalization of the reference's per-stem feature gather
@@ -598,11 +585,10 @@ def point_in_time_enrich(
     """
     by_cols = [by] if isinstance(by, str) else list(by)
     names = list(sources)
-    if payload_cols is None:
-        payload_cols = {
-            n: [c for c in s.columns if c not in by_cols and c != on]
-            for n, s in sources.items()
-        }
+    payload_cols = {
+        n: [c for c in s.columns if c not in by_cols and c != on]
+        for n, s in sources.items()
+    }
     if not isinstance(tolerance_seconds, dict):
         tolerance_seconds = {n: tolerance_seconds for n in names}
     spine_cols = spine.columns
@@ -613,12 +599,10 @@ def point_in_time_enrich(
 
     u = _tag_union(spine, sources, payload_cols, on, by_cols)
 
-    # equal-ts rule identical to asof_join: sources first (visible) for
-    # inclusive semantics, spine first for strict <
-    side_order = F.col("_side").asc() if allow_exact_matches else F.col("_side").desc()
+    # equal-ts rule identical to asof_join: sources first (visible)
     w = (
         Window.partitionBy(*by_cols)
-        .orderBy(F.col(on).asc(), side_order)
+        .orderBy(F.col(on).asc(), F.col("_side").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     filled = u

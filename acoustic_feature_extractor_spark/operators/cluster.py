@@ -42,6 +42,10 @@ from pyspark.sql import functions as F
 from acoustic_feature_extractor_spark.plans.cache import tracked_persist
 from acoustic_feature_extractor_spark.plans.hints import maybe_broadcast
 
+# hash-min + pointer jumping bounds component diameter at ~2^rounds
+_MAX_ROUNDS = 30
+
+
 def _check_cols() -> list[F.Column]:
     # exact checksum even at 10^12 nodes x int64 ids (10^31 < 10^38)
     return [
@@ -50,20 +54,16 @@ def _check_cols() -> list[F.Column]:
     ]
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """(node, component) for every node in ``edges``; component = min id
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(node, component) for every node in the ``(id_a, id_b)`` ``edges``;
+    component = min id
     (numeric order for integer ids, the column's native order — e.g.
     lexicographic for strings — otherwise).
 
     Edges are treated as undirected; self-loops are ignored.  Raises if
-    no fixpoint is reached in ``max_iter`` rounds (with pointer jumping
-    that bounds component diameter at ~2^max_iter — unreachable for any
-    real duplicate graph).
+    no fixpoint is reached in ``_MAX_ROUNDS`` rounds (with pointer jumping
+    that bounds component diameter at ~2^30 — unreachable for any real
+    duplicate graph).
 
     Non-integer ids (string doc ids, UUIDs) run the same long-keyed loop
     over a surrogate-id mapping: hashing to long would silently merge
@@ -76,15 +76,15 @@ def connected_components(
     component, preserving the contract exactly.
     """
     int_types = ("tinyint", "smallint", "int", "bigint")
-    src_t = edges.schema[src].dataType.simpleString()
-    dst_t = edges.schema[dst].dataType.simpleString()
+    src_t = edges.schema["id_a"].dataType.simpleString()
+    dst_t = edges.schema["id_b"].dataType.simpleString()
     if src_t in int_types and dst_t in int_types:
         sym = edges.select(
-            F.col(src).cast("long").alias("n"), F.col(dst).cast("long").alias("m")
+            F.col("id_a").cast("long").alias("n"), F.col("id_b").cast("long").alias("m")
         )
-        return _cc_long(sym, max_iter).select("node", F.col("comp").alias("component"))
+        return _cc_long(sym).select("node", F.col("comp").alias("component"))
 
-    raw = edges.select(F.col(src).alias("n"), F.col(dst).alias("m"))
+    raw = edges.select(F.col("id_a").alias("n"), F.col("id_b").alias("m"))
     raw = (
         raw.union(raw.select(F.col("m").alias("n"), F.col("n").alias("m")))
         .where(F.col("n").isNotNull() & F.col("m").isNotNull() & (F.col("n") != F.col("m")))
@@ -103,7 +103,7 @@ def connected_components(
         .join(mapping.select(F.col("orig").alias("m"), F.col("_sid").alias("_sm")), "m")
         .select(F.col("_sn").alias("n"), F.col("_sm").alias("m"))
     )
-    labels = _cc_long(sym, max_iter)
+    labels = _cc_long(sym)
     raw.unpersist()
     lab = labels.join(
         mapping.select(F.col("_sid").alias("node"), "orig"), "node"
@@ -117,7 +117,7 @@ def connected_components(
     )
 
 
-def _cc_long(sym: DataFrame, max_iter: int) -> DataFrame:
+def _cc_long(sym: DataFrame) -> DataFrame:
     """Hash-min + pointer-jump loop over long-typed edges (n, m) —
     symmetrizes, dedups, iterates to fixpoint. Returns (node, comp)."""
     sym = (
@@ -147,7 +147,7 @@ def _cc_long(sym: DataFrame, max_iter: int) -> DataFrame:
     # EAGER: only an eager localCheckpoint rebases the logical plan on the
     # materialized RDD; eager=False keeps full lineage and re-plans an
     # exponentially growing tree every round.
-    for _ in range(max_iter):
+    for _ in range(_MAX_ROUNDS):
         # hash-min step: comp'(n) = min(comp(n), min over neighbours m of comp(m))
         nbmin = (
             sym.join(
@@ -179,20 +179,18 @@ def _cc_long(sym: DataFrame, max_iter: int) -> DataFrame:
         prev = cur
     sym.unpersist()
     if not converged:
-        raise RuntimeError(f"connected_components: no fixpoint within {max_iter} rounds")
+        raise RuntimeError(f"connected_components: no fixpoint within {_MAX_ROUNDS} rounds")
     return labels.select("node", "comp")
 
 
-def dedup_clusters(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
-    """(doc_id, cluster_id) for every doc in >= 1 duplicate pair.
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) for every doc in >= 1 (id_a, id_b) duplicate pair.
 
     cluster_id = min doc_id of the transitive component — the canonical
     survivor; ``doc_id != cluster_id`` rows are the deletions.  Compose
     with any pair generator from ``operators/dedup.py``.
     """
-    cc = connected_components(pairs, src=id_a, dst=id_b)
+    cc = connected_components(pairs)
     return cc.select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     )

@@ -43,7 +43,6 @@ def trailing_context(
     order_cols: tuple[str, ...] = ("turn_idx",),
     weight_col: str = "n_tokens",
     budget: int = 512,
-    out_prefix: str = "ctx_",
 ) -> DataFrame:
     """Per-turn trailing-context stats under a token budget, leak-free.
 
@@ -70,7 +69,7 @@ def trailing_context(
     - ``{p}tokens`` — their total weight (what the context costs)
     - ``{p}truncated`` — true iff at least one prior turn did NOT fit
     """
-    p = out_prefix
+    p = "ctx_"
     w_cum = (
         Window.partitionBy(entity_col)
         .orderBy(*order_cols)
@@ -111,15 +110,9 @@ def _lane_hash(content: Column, idx: Column) -> Column:
     return portable_mix(token_hash_portable(key))
 
 
-def sequence_fingerprint(
-    df: DataFrame,
-    entity_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    content_col: str = "text",
-    prefix_len: int | None = None,
-    out_col: str = "conv_fp",
-) -> DataFrame:
-    """Order-sensitive 62-bit fingerprint of each entity's turn sequence.
+def sequence_fingerprint(df: DataFrame) -> DataFrame:
+    """Order-sensitive 62-bit fingerprint ``conv_fp`` of each conversation's
+    turn sequence (``text`` at ``turn_idx``).
 
     fp = (Σ low31(h_i) mod M1) · 2^31 + (Σ high30(h_i) mod M2) where
     h_i = portable_mix(poly_hash(content_i ⊕ idx_i)). Because the
@@ -134,19 +127,12 @@ def sequence_fingerprint(
     (the reference's paired-accumulator trick, ``dedup.token_hash_portable``).
     Exactness: each lane sum grows by < 2^31 per turn, so int64 is exact
     up to 2^32 turns per entity; the mod is applied once at the end.
-
-    ``prefix_len`` fingerprints only turns with idx < prefix_len — the
-    shared-prefix detector (conversations seeded with the same system
-    prompt / first exchanges form one prefix family).
     """
-    d = df
-    if prefix_len is not None:
-        d = d.where(F.col(idx_col) < int(prefix_len))
-    h = _lane_hash(F.col(content_col), F.col(idx_col))
+    h = _lane_hash(F.col("text"), F.col("turn_idx"))
     lane1 = F.sum(h.bitwiseAND(F.lit(_MASK31)))
     lane2 = F.sum(F.shiftright(h, 31))
     fp = F.shiftleft(lane1 % F.lit(_M1), 31) + (lane2 % F.lit(_M2))
-    return d.groupBy(entity_col).agg(fp.alias(out_col))
+    return df.groupBy("conv_id").agg(fp.alias("conv_fp"))
 
 
 def dedup_conversations(

@@ -51,9 +51,7 @@ def word_shingles(tokens: Column, w: int = 3) -> Column:
     return F.when(n < w, F.array(F.array_join(tokens, " "))).otherwise(joined)
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep the min-id representative of each exact-duplicate group.
 
     Group key = (md5, length) — 128+ bits. A 64-bit key alone is not
@@ -63,20 +61,18 @@ def exact_dedup(
     """
     winners = (
         df.select(
-            F.md5(F.col(text_col)).alias("_h"),
-            F.length(text_col).alias("_hl"),
-            F.col(id_col),
+            F.md5(F.col("text")).alias("_h"),
+            F.length("text").alias("_hl"),
+            F.col("doc_id"),
         )
         .groupBy("_h", "_hl")
-        .agg(F.min(id_col).alias(id_col))
+        .agg(F.min("doc_id").alias("doc_id"))
     )
-    return df.join(winners.select(id_col), id_col, "left_semi")
+    return df.join(winners.select("doc_id"), "doc_id", "left_semi")
 
 
 def _shingle_table(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     w: int,
     max_doc_freq: int | float | None = None,
     distinct: bool = True,
@@ -94,9 +90,9 @@ def _shingle_table(
     driver-side ``count()`` job just to size the threshold.
     """
     sh = df.select(
-        F.col(id_col),
-        F.explode(word_shingles(tokenize(F.col(text_col)), w)).alias("_sh"),
-    ).select(id_col, F.xxhash64("_sh").alias("shingle"))
+        F.col("doc_id"),
+        F.explode(word_shingles(tokenize(F.col("text")), w)).alias("_sh"),
+    ).select("doc_id", F.xxhash64("_sh").alias("shingle"))
     if distinct:
         sh = sh.distinct()
     if max_doc_freq is not None:
@@ -126,8 +122,6 @@ def _shingle_table(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     w: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int | float | None = None,
@@ -146,11 +140,11 @@ def ngram_jaccard_pairs(
     array row per doc, never an exploded re-join). Output
     (id_a, id_b, jaccard) with id_a < id_b.
     """
-    sh = _shingle_table(df, text_col, id_col, w, max_doc_freq)
+    sh = _shingle_table(df, w, max_doc_freq)
     # one row per doc: sorted shingle-set array + its prefix. Persisted:
     # both prefix-join sides and both verify sides read it.
     doc = (
-        sh.groupBy(id_col)
+        sh.groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("shingle")).alias("_set"))
         .withColumn("_n", F.size("_set"))
         .withColumn(
@@ -170,12 +164,12 @@ def ngram_jaccard_pairs(
     )
     doc = tracked_persist(doc)
     a = doc.select(
-        F.col(id_col).alias("id_a"),
+        F.col("doc_id").alias("id_a"),
         F.col("_n").alias("_na"),
         F.explode("_pfx").alias("shingle"),
     )
     b = doc.select(
-        F.col(id_col).alias("id_b"),
+        F.col("doc_id").alias("id_b"),
         F.col("_n").alias("_nb"),
         F.explode("_pfx").alias("shingle"),
     )
@@ -200,11 +194,11 @@ def ngram_jaccard_pairs(
     # static broadcast while provably small, AQE/shuffle join at scale.
     j = (
         cand.join(
-            maybe_broadcast(doc.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_sa"))),
+            maybe_broadcast(doc.select(F.col("doc_id").alias("id_a"), F.col("_set").alias("_sa"))),
             "id_a",
         )
         .join(
-            maybe_broadcast(doc.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_sb"))),
+            maybe_broadcast(doc.select(F.col("doc_id").alias("id_b"), F.col("_set").alias("_sb"))),
             "id_b",
         )
         .withColumn("_i", F.size(F.array_intersect("_sa", "_sb")))
@@ -216,11 +210,9 @@ def ngram_jaccard_pairs(
     return j.select("id_a", "id_b", "jaccard")
 
 
-def _signatures_from_shingles(
-    sh: DataFrame, id_col: str, num_hashes: int, seed: int
-) -> DataFrame:
+def _signatures_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
     """Signature aggregation over an existing (id, shingle) table."""
-    rnd = __import__("random").Random(seed)
+    rnd = __import__("random").Random(42)
     coeffs = [(rnd.randrange(1, _P), rnd.randrange(0, _P)) for _ in range(num_hashes)]
     # fold hash into [0, p) first so a*x+b stays within long-safe range via
     # pmod arithmetic (python ints in literals are exact; Spark longs may
@@ -239,16 +231,16 @@ def _signatures_from_shingles(
         a31, b31 = ai % 2147483647, bi % 2147483647
         # _x < 2^31 and a31 < 2^31 keep the product below 2^62: exact int64
         aggs.append(F.expr(f"min((_x * {a31} + {b31}) % {_P}) AS _m{i}"))
-    g = sh.groupBy(id_col).agg(*aggs)
+    g = sh.groupBy("doc_id").agg(*aggs)
     return g.select(
-        id_col, F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("signature")
+        "doc_id", F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("signature")
     )
 
 
-def _band_table(sig: DataFrame, id_col: str, bands: int, r: int) -> DataFrame:
+def _band_table(sig: DataFrame, bands: int, r: int) -> DataFrame:
     """(id, band, band_hash) rows: one xxhash64 per signature slice."""
     return sig.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -258,23 +250,20 @@ def _band_table(sig: DataFrame, id_col: str, bands: int, r: int) -> DataFrame:
                 ),
             )
         ).alias("_b"),
-    ).select(id_col, "_b.band", "_b.bh")
+    ).select("doc_id", "_b.band", "_b.bh")
 
 
-def _doc_sets(sh: DataFrame, id_col: str) -> DataFrame:
+def _doc_sets(sh: DataFrame) -> DataFrame:
     """One row per doc: sorted array of distinct shingle hashes."""
-    return sh.groupBy(id_col).agg(F.array_sort(F.collect_set("shingle")).alias("_set"))
+    return sh.groupBy("doc_id").agg(F.array_sort(F.collect_set("shingle")).alias("_set"))
 
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     w: int = 3,
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.8,
-    seed: int = 42,
 ) -> DataFrame:
     """MinHash → band buckets → candidate pairs → exact-Jaccard verify.
 
@@ -291,15 +280,15 @@ def minhash_lsh_pairs(
     # distinct shuffle would be pure overhead. Lifetime: tracked —
     # long-lived callers release via plans.cache.release_persisted()
     # (bench.py clearCache()s, the big hammer).
-    sh = tracked_persist(_shingle_table(df, text_col, id_col, w, distinct=False))
+    sh = tracked_persist(_shingle_table(df, w, distinct=False))
     # one row per doc (num_hashes longs): persisted because the band
     # self-join below references it on BOTH sides — without the cache the
     # whole signature aggregation (the pipeline's most expensive stage)
     # executes twice
-    sig = tracked_persist(_signatures_from_shingles(sh, id_col, num_hashes, seed))
-    banded = _band_table(sig, id_col, bands, r)
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "bh")
-    b_ = banded.select(F.col(id_col).alias("id_b"), "band", "bh")
+    sig = tracked_persist(_signatures_from_shingles(sh, num_hashes))
+    banded = _band_table(sig, bands, r)
+    a = banded.select(F.col("doc_id").alias("id_a"), "band", "bh")
+    b_ = banded.select(F.col("doc_id").alias("id_b"), "band", "bh")
     cand = (
         a.join(b_, ["band", "bh"])
         .where(F.col("id_a") < F.col("id_b"))
@@ -315,12 +304,12 @@ def minhash_lsh_pairs(
     # answer. The array table carries one row per doc (estimate-gated
     # broadcast; a shuffle join at 10^9 docs still moves each set once,
     # not |doc| times).
-    doc_sets = _doc_sets(sh, id_col)
+    doc_sets = _doc_sets(sh)
     j = cand.join(
-        maybe_broadcast(doc_sets.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_sa"))),
+        maybe_broadcast(doc_sets.select(F.col("doc_id").alias("id_a"), F.col("_set").alias("_sa"))),
         "id_a",
     ).join(
-        maybe_broadcast(doc_sets.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_sb"))),
+        maybe_broadcast(doc_sets.select(F.col("doc_id").alias("id_b"), F.col("_set").alias("_sb"))),
         "id_b",
     )
     j = j.withColumn("_i", F.size(F.array_intersect("_sa", "_sb")))
@@ -393,8 +382,6 @@ def portable_mix(h: Column) -> Column:
 
 def simhash(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     bits: int = 64,
     hash_fn=None,
 ) -> DataFrame:
@@ -407,7 +394,7 @@ def simhash(
     """
     hash_fn = hash_fn or (lambda c: F.xxhash64(c))
     tok = df.select(
-        F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("_t")
+        F.col("doc_id"), F.explode(tokenize(F.col("text"))).alias("_t")
     ).withColumn("_h", hash_fn(F.col("_t")))
     # SWAR bit-plane accumulation: instead of `bits` conditional ±1 sums
     # (one agg buffer + CASE per bit per row), accumulate 32 planes —
@@ -430,7 +417,7 @@ def simhash(
     for k in range(n_planes):
         plane = F.shiftright(F.col("_h"), k).bitwiseAND(F.lit(lane_mask))
         aggs.append(F.try_sum(plane).alias(f"_p{k}"))
-    g = tok.groupBy(id_col).agg(*aggs)
+    g = tok.groupBy("doc_id").agg(*aggs)
     # ONE F.expr string for the vote/assembly, not a python loop of
     # Column.bitwiseOR calls: chaining `bits` Columns costs ~8 py4j round
     # trips per bit (~1.5s of driver latency per plan build); a flat SQL
@@ -445,14 +432,12 @@ def simhash(
         )
     fp = F.expr(" + ".join(terms))
     return g.select(
-        id_col, F.when(F.col("_n") <= max_tokens, fp).alias("simhash")
+        "doc_id", F.when(F.col("_n") <= max_tokens, fp).alias("simhash")
     )
 
 
 def simhash_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
     bits: int = 64,
     hash_fn=None,
@@ -475,7 +460,7 @@ def simhash_pairs(
     # one row per doc: persisted because the pigeonhole self-join below
     # references the fingerprint table on both sides — without the cache
     # the whole token-explode aggregation executes twice
-    s = tracked_persist(simhash(df, text_col, id_col, bits=bits, hash_fn=hash_fn))
+    s = tracked_persist(simhash(df, bits=bits, hash_fn=hash_fn))
     # static chunk list (shiftright needs a literal bit count)
     chunk_structs = [
         F.struct(
@@ -487,10 +472,10 @@ def simhash_pairs(
         for ci, (o, w) in enumerate(offsets)
     ]
     chunks = s.select(
-        id_col, "simhash", F.explode(F.array(*chunk_structs)).alias("_c")
-    ).select(id_col, "simhash", "_c.chunk", "_c.ch")
-    a = chunks.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("_sa"), "chunk", "ch")
-    b = chunks.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("_sb"), "chunk", "ch")
+        "doc_id", "simhash", F.explode(F.array(*chunk_structs)).alias("_c")
+    ).select("doc_id", "simhash", "_c.chunk", "_c.ch")
+    a = chunks.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("_sa"), "chunk", "ch")
+    b = chunks.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("_sb"), "chunk", "ch")
     return (
         a.join(b, ["chunk", "ch"])
         .where(F.col("id_a") < F.col("id_b"))
@@ -503,8 +488,6 @@ def simhash_pairs(
 def contamination_pairs(
     train: DataFrame,
     bench: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     w: int = 8,
     min_shared: int = 1,
 ) -> DataFrame:
@@ -524,11 +507,11 @@ def contamination_pairs(
     that counts shared shingles only sees matching rows (rare by
     construction at w=8).
     """
-    t = _shingle_table(train, text_col, id_col, w).withColumnRenamed(
-        id_col, "train_id"
+    t = _shingle_table(train, w).withColumnRenamed(
+        "doc_id", "train_id"
     )
-    b = _shingle_table(bench, text_col, id_col, w).withColumnRenamed(
-        id_col, "bench_id"
+    b = _shingle_table(bench, w).withColumnRenamed(
+        "doc_id", "bench_id"
     )
     hits = (
         t.join(maybe_broadcast(b), "shingle")
@@ -540,7 +523,7 @@ def contamination_pairs(
 
 
 def positional_windows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", w: int = 8
+    df: DataFrame, w: int = 8
 ) -> DataFrame:
     """(id, pos, whash): every w-token window with its 0-based token
     position. Docs shorter than ``w`` produce no rows (a truncated
@@ -561,7 +544,7 @@ def positional_windows(
     gcd(11, 64) = 1) and per-pair collision odds stay 2^-64, the same
     birthday exposure any 64-bit window key has.
     """
-    toks = tokenize(F.col(text_col))
+    toks = tokenize(F.col("text"))
     harr = F.transform(toks, lambda t: F.xxhash64(t))
     n = F.size(toks)
     m = n - (w - 1)
@@ -582,17 +565,14 @@ def positional_windows(
     hashes = F.transform(z, _combine)
     return (
         df.where(n >= w)
-        .select(F.col(id_col), F.posexplode(hashes).alias("pos", "whash"))
+        .select(F.col("doc_id"), F.posexplode(hashes).alias("pos", "whash"))
     )
 
 
 def duplicated_spans(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     w: int = 8,
     min_count: int = 2,
-    persist_windows: bool = True,
 ) -> DataFrame:
     """Maximal duplicated token spans — exact substring-level dedup
     (the suffix-array pass of Lee et al. 2022, "Deduplicating Training
@@ -616,37 +596,33 @@ def duplicated_spans(
     hit positions (≤ doc length, bounded by the corpus max-doc-tokens
     cap), never the corpus.
 
-    ``persist_windows``: the window table feeds both the count and the
-    join-back, so by default it is persisted (tracked — see
-    ``plans.cache``) rather than built twice; it is ~3 longs per token
-    (MEMORY_AND_DISK, spills — the suffix-array analog materializes
-    5× the corpus). Pass False to trade recompute for storage on
-    scans too large to spill comfortably.
+    The window table feeds both the count and the join-back, so it is
+    persisted (tracked — see ``plans.cache``) rather than built twice; it
+    is ~3 longs per token (MEMORY_AND_DISK, spills — the suffix-array
+    analog materializes 5× the corpus).
     """
-    win = positional_windows(df, text_col, id_col, w)
-    if persist_windows:
-        win = tracked_persist(win)
+    win = tracked_persist(positional_windows(df, w))
     hot = (
         win.groupBy("whash")
         .agg(F.count("*").alias("_n"))
         .where(F.col("_n") >= F.lit(min_count))
         .select("whash")
     )
-    hits = win.join(maybe_broadcast(hot), "whash").select(id_col, "pos")
-    w_doc = Window.partitionBy(id_col).orderBy("pos")
+    hits = win.join(maybe_broadcast(hot), "whash").select("doc_id", "pos")
+    w_doc = Window.partitionBy("doc_id").orderBy("pos")
     brk = F.when(
         F.col("pos") - F.lag("pos").over(w_doc) == 1, F.lit(0)
     ).otherwise(F.lit(1))
     run = F.sum(brk).over(w_doc.rowsBetween(Window.unboundedPreceding, 0))
     return (
         hits.withColumn("_run", run)
-        .groupBy(id_col, "_run")
+        .groupBy("doc_id", "_run")
         .agg(
             F.min("pos").alias("span_start"),
             (F.max("pos") + F.lit(w - 1)).alias("span_end"),
         )
         .select(
-            id_col,
+            "doc_id",
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start") + 1).alias("span_tokens"),
@@ -656,8 +632,6 @@ def duplicated_spans(
 
 def span_dup_stats(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     w: int = 8,
     min_count: int = 2,
 ) -> DataFrame:
@@ -665,16 +639,16 @@ def span_dup_stats(
     n_spans, dup_ratio). Spans are maximal and non-overlapping by
     construction, so dup_tokens = Σ span_tokens. Docs with no spans get
     zeros — use ``dup_ratio`` as a drop/trim threshold."""
-    spans = duplicated_spans(df, text_col, id_col, w, min_count)
-    agg = spans.groupBy(id_col).agg(
+    spans = duplicated_spans(df, w, min_count)
+    agg = spans.groupBy("doc_id").agg(
         F.sum("span_tokens").alias("dup_tokens"),
         F.count("*").alias("n_spans"),
     )
     base = df.select(
-        F.col(id_col), F.size(tokenize(F.col(text_col))).alias("total_tokens")
+        F.col("doc_id"), F.size(tokenize(F.col("text"))).alias("total_tokens")
     )
-    return base.join(agg, id_col, "left").select(
-        id_col,
+    return base.join(agg, "doc_id", "left").select(
+        "doc_id",
         "total_tokens",
         F.coalesce("dup_tokens", F.lit(0)).alias("dup_tokens"),
         F.coalesce("n_spans", F.lit(0)).alias("n_spans"),
@@ -687,8 +661,6 @@ def span_dup_stats(
 
 def cut_duplicated_spans(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     w: int = 8,
     min_count: int = 2,
 ) -> DataFrame:
@@ -713,11 +685,11 @@ def cut_duplicated_spans(
     exactly one extra join (cut ranges per doc, size-gated broadcast)
     and a per-token filter HOF bounded by max doc length.
     """
-    spans = duplicated_spans(df, text_col, id_col, w, min_count)
-    toks = tokenize(F.col(text_col))
-    docs_t = df.select(F.col(id_col), toks.alias("_tk"))
+    spans = duplicated_spans(df, w, min_count)
+    toks = tokenize(F.col("text"))
+    docs_t = df.select(F.col("doc_id"), toks.alias("_tk"))
     sp = (
-        spans.join(docs_t, id_col)
+        spans.join(docs_t, "doc_id")
         .withColumn(
             "_content",
             F.xxhash64(
@@ -729,18 +701,18 @@ def cut_duplicated_spans(
         )
         .drop("_tk", "span_tokens")
     )
-    w_k = Window.partitionBy("_content").orderBy(id_col, "span_start")
+    w_k = Window.partitionBy("_content").orderBy("doc_id", "span_start")
     cuts = (
         sp.withColumn("_rk", F.row_number().over(w_k))
         .where(F.col("_rk") > 1)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.collect_list(F.struct("span_start", "span_end")).alias("_cuts")
         )
     )
-    orig_toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    base = df.select(F.col(id_col), orig_toks.alias("_tk"))
-    out = base.join(maybe_broadcast(cuts), id_col, "left")
+    orig_toks = F.split(F.trim(F.col("text")), r"\s+")
+    base = df.select(F.col("doc_id"), orig_toks.alias("_tk"))
+    out = base.join(maybe_broadcast(cuts), "doc_id", "left")
     kept = F.filter(
         "_tk",
         lambda t, i: F.coalesce(
@@ -752,7 +724,7 @@ def cut_duplicated_spans(
         ),
     )
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_join(kept, " ").alias("clean_text"),
         (F.size("_tk") - F.size(kept)).alias("removed_tokens"),
         F.size("_tk").alias("total_tokens"),

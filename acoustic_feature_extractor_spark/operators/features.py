@@ -70,7 +70,6 @@ def assemble_context_onehot(
     duration_col: str | None = None,
     accent_cols: tuple[str, str] | None = None,
     include_label_id: bool = False,
-    out_col: str = "features",
 ) -> DataFrame:
     """Per-row feature vector: onehot(label) ++ onehot(prev) ++ onehot(next)
     [++ (label_id,)] [++ (duration, prev_duration, next_duration)]
@@ -119,13 +118,12 @@ def assemble_context_onehot(
                 F.coalesce(F.col(end_c).cast("boolean").cast("double"), F.lit(0.0)),
             )
         )
-    return df.withColumn(out_col, F.concat(*parts))
+    return df.withColumn("features", F.concat(*parts))
 
 
 def assemble_feature_vector(
     df: DataFrame,
     features: list[str],
-    out_col: str = "features",
     impute: float | None = None,
     null_count_col: str | None = "n_null",
 ):
@@ -153,7 +151,7 @@ def assemble_feature_vector(
         arr = F.array(*[F.coalesce(c, F.lit(float(impute))) for c in cols])
     else:
         arr = F.array(*cols)
-    out = df.withColumn(out_col, arr)
+    out = df.withColumn("features", arr)
     if null_count_col is not None:
         n_null = sum(
             (F.when(c.isNull(), 1).otherwise(0) for c in cols), F.lit(0)

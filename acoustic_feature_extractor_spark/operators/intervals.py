@@ -73,8 +73,6 @@ def mask_from_spans(
     spans: DataFrame,
     key: str = "conv_id",
     ts: str = "ts",
-    start_col: str = "start_ts",
-    end_col: str = "end_ts",
     mask_col: str = "in_span",
 ) -> DataFrame:
     """Flag frames covered by any span (``extract_silence_from_phoneme.py:28-33``).
@@ -87,7 +85,7 @@ def mask_from_spans(
     would fail the job).
     """
     sp = spans.select(
-        F.col(key).alias("_k"), F.col(start_col).alias("_s"), F.col(end_col).alias("_e")
+        F.col(key).alias("_k"), F.col("start_ts").alias("_s"), F.col("end_ts").alias("_e")
     )
     covered = (
         frames.join(
@@ -112,16 +110,10 @@ def overlap_join(
     l_end: str = "end_ts",
     r_start: str = "start_ts",
     r_end: str = "end_ts",
-    bucket_seconds: float | None = None,
     suffix: str = "_r",
 ) -> DataFrame:
-    """Interval overlap join: pairs with ``l_start < r_end AND r_start < l_end``.
-
-    With ``bucket_seconds`` set, both sides explode into coarse time
-    buckets and the join becomes an equi-join on (key, bucket) + overlap
-    filter + dedup — the scale path for non-broadcastable sides (bounds
-    shuffle fan-out by interval length / bucket size).
-    """
+    """Interval overlap join: pairs with ``l_start < r_end AND r_start < l_end``
+    — an equi-join on ``key`` plus the overlap filter."""
     rs = right_spans.select(
         F.col(key),
         *[
@@ -133,21 +125,7 @@ def overlap_join(
     cond_overlap = (F.col(l_start) < F.col(f"{r_end}{suffix}")) & (
         F.col(f"{r_start}{suffix}") < F.col(l_end)
     )
-    if bucket_seconds is None:
-        return left_spans.join(rs, key, "inner").where(cond_overlap)
-
-    def buckets(s_col: str, e_col: str):
-        return F.explode(
-            F.sequence(
-                F.floor(F.col(s_col).cast("double") / bucket_seconds).cast("long"),
-                F.floor(F.col(e_col).cast("double") / bucket_seconds).cast("long"),
-            )
-        ).alias("_bkt")
-
-    lb = left_spans.select("*", buckets(l_start, l_end))
-    rb = rs.select("*", buckets(f"{r_start}{suffix}", f"{r_end}{suffix}"))
-    out = lb.join(rb, [key, "_bkt"], "inner").where(cond_overlap).drop("_bkt")
-    return out.dropDuplicates()
+    return left_spans.join(rs, key, "inner").where(cond_overlap)
 
 
 def adjust_boundaries_to_idle(
@@ -155,8 +133,6 @@ def adjust_boundaries_to_idle(
     idle_runs: DataFrame,
     key: str = "conv_id",
     min_span_seconds: float = 0.0,
-    idle_start: str = "start_ts",
-    idle_end: str = "end_ts",
 ) -> DataFrame:
     """Snap span starts/ends onto overlapping idle-run edges
     (``extract_silence_expanded_label.py:30-61`` semantics, recast):
@@ -187,11 +163,11 @@ def adjust_boundaries_to_idle(
     else:
         back = lambda c: c  # noqa: E731 — numeric in, numeric out
     s, e = to_sec(F.col("start_ts")), to_sec(F.col("end_ts"))
-    ir_sec = epoch_sec_fn(idle_runs, idle_start)
+    ir_sec = epoch_sec_fn(idle_runs, "start_ts")
     ir = idle_runs.select(
         F.col(key),
-        ir_sec(F.col(idle_start)).alias("_is"),
-        ir_sec(F.col(idle_end)).alias("_ie"),
+        ir_sec(F.col("start_ts")).alias("_is"),
+        ir_sec(F.col("end_ts")).alias("_ie"),
     )
     # idle runs scale with the conversation count — estimate-gated hint
     j = spans.join(maybe_broadcast(ir), key, "left")

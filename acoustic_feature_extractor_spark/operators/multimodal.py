@@ -24,14 +24,14 @@ from pyspark.sql import functions as F
 FEATURE_DIM = 8
 
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def attach_binary_payload(df: DataFrame) -> DataFrame:
     """Make a media table out of a text table (sandbox fixture): payload =
     utf-8 bytes, metadata derived from length. Deterministic."""
-    n = F.length(F.col(text_col))
+    n = F.length(F.col("text"))
     return df.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         F.lit("image").alias("kind"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
         F.struct(
             (n % 640).cast("int").alias("width"),
             (n % 480).cast("int").alias("height"),
@@ -146,7 +146,7 @@ def decode_stub(payload: bytes, kind: str, fake: bool) -> list[float]:
     ]
 
 
-def extract_media_features(df: DataFrame, fake: bool = True, batch_note_col: bool = False) -> DataFrame:
+def extract_media_features(df: DataFrame, fake: bool = True) -> DataFrame:
     """Arrow-batched media featurization over ``mapInPandas``.
 
     Output: (media_id, kind, n_bytes, features array<double>). The kernel

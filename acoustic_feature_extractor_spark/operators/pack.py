@@ -15,16 +15,14 @@ pipeline: pretraining batches are built by packing documents into
   runs as an O(#packs log n) searchsorted loop per bucket inside an
   Arrow-batched ``applyInPandas`` (never per-row Python over documents).
 
-Scale shape: the corpus is hash-bucketed (``xxhash64(id) % n_buckets``);
-packing is deterministic and independent per bucket, so the bucket is the
-unit of parallelism, resume, and shard output — no global sort, no driver
-state. At 10^9 documents pick n_buckets ≈ cluster cores × 4; each bucket's
-pack ids are disambiguated by the bucket id.
+Scale shape: the corpus is hash-bucketed (``xxhash64(id) % 64``, or the
+caller's ``bucket`` expression); packing is deterministic and independent
+per bucket, so the bucket is the unit of parallelism, resume, and shard
+output — no global sort, no driver state. Each bucket's pack ids are
+disambiguated by the bucket id.
 """
 
 from __future__ import annotations
-
-from typing import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -32,14 +30,12 @@ from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 
-def _bucketed(
-    df: DataFrame, id_col: str, n_buckets: int, bucket: Column | None = None
-) -> DataFrame:
+def _bucketed(df: DataFrame, id_col: str, bucket: Column | None = None) -> DataFrame:
     # non-negative bucket: pmod, not %, for negative hash values. Callers
     # needing an engine-portable layout (e.g. the DuckDB oracle) pass an
     # explicit bucket expression instead of the xxhash64 default.
     if bucket is None:
-        bucket = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_buckets))
+        bucket = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(64))
     return df.withColumn("bucket", bucket.cast("long"))
 
 
@@ -48,7 +44,6 @@ def pack_concat(
     tokens_col: str = "n_tokens",
     id_col: str = "doc_id",
     capacity: int = 2048,
-    n_buckets: int = 64,
     bucket: "Column | None" = None,
 ) -> DataFrame:
     """Concat-and-chunk packing (documents may straddle sequence cuts).
@@ -59,7 +54,7 @@ def pack_concat(
     split across). One shuffle (the per-bucket order window); everything
     else is column math.
     """
-    d = _bucketed(df, id_col, n_buckets, bucket).withColumn(
+    d = _bucketed(df, id_col, bucket).withColumn(
         "_n", F.col(tokens_col).cast("long")
     )
     w = (
@@ -111,7 +106,6 @@ def pack_greedy(
     tokens_col: str = "n_tokens",
     id_col: str = "doc_id",
     capacity: int = 2048,
-    n_buckets: int = 64,
     bucket: "Column | None" = None,
 ) -> DataFrame:
     """Next-fit packing without straddling (one doc never spans two packs).
@@ -120,7 +114,7 @@ def pack_greedy(
     ``pack_pos`` (0-based position inside the pack). Deterministic: docs
     are processed in ``id_col`` order within their hash bucket.
     """
-    d = _bucketed(df, id_col, n_buckets, bucket).select(
+    d = _bucketed(df, id_col, bucket).select(
         "bucket",
         F.col(id_col).cast("long").alias(id_col),
         F.col(tokens_col).cast("long").alias(tokens_col),
@@ -159,13 +153,11 @@ def pack_utilization(
     packed: DataFrame,
     tokens_col: str = "n_tokens",
     capacity: int = 2048,
-    pack_cols: Iterable[str] = ("bucket", "pack_id"),
 ) -> DataFrame:
     """Per-pack fill report for :func:`pack_greedy` output: token total,
     doc count, utilization fraction (``> 1`` marks an over-capacity doc's
     overflow pack)."""
-    pack_cols = list(pack_cols)
-    return packed.groupBy(*pack_cols).agg(
+    return packed.groupBy("bucket", "pack_id").agg(
         F.sum(tokens_col).alias("pack_tokens"),
         F.count("*").alias("n_docs"),
         F.round(F.sum(tokens_col) / F.lit(float(capacity)), 6).alias("utilization"),

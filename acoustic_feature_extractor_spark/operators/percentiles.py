@@ -41,29 +41,23 @@ def percentile_report(
     value_col: str,
     qs: list[float] | None = None,
     exact: bool = True,
-    group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Long-form (q, value) percentile table, exact or approx."""
     qs = qs if qs is not None else [0.0, 0.001, 0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 0.999, 1.0]
     arr = F.array(*[F.lit(float(q)) for q in qs])
     fn = "percentile" if exact else "percentile_approx"
     agg = F.expr(f"{fn}({value_col}, array({','.join(str(float(q)) for q in qs)}))").alias("_vals")
-    g = df.groupBy(*group_cols).agg(agg) if group_cols else df.agg(agg)
-    return g.select(
-        *(group_cols or []),
+    return df.agg(agg).select(
         F.explode(F.arrays_zip(arr.alias("q"), F.col("_vals").alias("value"))).alias("_z"),
-    ).select(*(group_cols or []), F.col("_z.q").alias("q"), F.col("_z.value").alias("value"))
+    ).select(F.col("_z.q").alias("q"), F.col("_z.value").alias("value"))
 
 
-def value_bounds(
-    d: DataFrame, value_col: str, num_partitions: int | None = None
-) -> list[float]:
+def value_bounds(d: DataFrame, value_col: str) -> list[float]:
     """Sorted chunk boundaries for ``value_col``: its approximate
-    ``i/n`` quantiles, ``n`` = ``num_partitions`` or the session's shuffle
-    partitions. 0.01 relative error: the bounds only balance the chunking
+    ``i/n`` quantiles, ``n`` = the session's shuffle partitions. 0.01 relative error: the bounds only balance the chunking
     (never a result), so a loose sketch is free accuracy-wise and cheaper
     to merge."""
-    n = num_partitions or int(d.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = int(d.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     fractions = [i / n for i in range(1, n)]
     if not fractions:
         return []
@@ -76,8 +70,6 @@ def weighted_percentile(
     value_col: str,
     weight_col: str,
     qs: list[float],
-    group_cols: list[str] | None = None,
-    num_partitions: int | None = None,
     chunk_bounds: list[float] | None = None,
 ) -> DataFrame:
     """Exact weighted percentile, fully distributed (``extract_f0_range.py:113-150``).
@@ -86,7 +78,7 @@ def weighted_percentile(
     (shifted to start at 0 via ``cw - w``), the percentile at fraction q is
     the linear interpolation of value over the *normalized mid-cumulative*
     weight grid ``(cw - w/2) / total``, i.e. numpy.interp(q, mids, values)
-    — edge-clamped. Output: one row per (group ×) q.
+    — edge-clamped. Output: one row per q.
 
     Scale shape — NO single-partition stage anywhere: the global sorted
     cumsum is a range-partitioned sort + chunk-local cumsum + tiny
@@ -96,14 +88,11 @@ def weighted_percentile(
     naive ``Window.orderBy(value)`` with no partition key would move the
     full value set into ONE task — this never does.
 
-    Ties: callers must pre-aggregate weights per distinct (group, value)
+    Ties: callers must pre-aggregate weights per distinct value
     (as the reference effectively does by histogramming) so cumsum order
     over equal values cannot differ between runs/engines.
     """
-    gcols = group_cols or []
-    d = df.select(
-        *gcols, F.col(value_col).alias("_v"), F.col(weight_col).cast("double").alias("_w")
-    )
+    d = df.select(F.col(value_col).alias("_v"), F.col(weight_col).cast("double").alias("_w"))
     # Chunk id must be a DETERMINISTIC function of the row, never
     # spark_partition_id(): the plan below re-executes this lineage in
     # several branches (offsets, totals, first-row stitch), and a physical
@@ -111,26 +100,19 @@ def weighted_percentile(
     # could describe a different partitioning than the fact rows. Instead:
     # driver-collected approx-quantile boundaries become literals, and the
     # chunk is "how many boundaries <= value" — pure column math, identical
-    # in every branch. Grouped calls use the SAME global value bounds:
-    # any monotone chunking of _v splits every group's sorted order into
-    # contiguous runs, so the per-(group, chunk) offset/stitch machinery
-    # below is exact for groups too — and a mega-group no longer sorts in
-    # ONE task (the old _pid = 0 behavior). Groups whose values cluster
-    # inside one global chunk still degrade to a single run, but never
-    # worse than the ungrouped chunk width.
+    # in every branch.
     if chunk_bounds is not None:
         # caller-supplied bounds (e.g. the iterative-refinement loop
         # reuses round 1's bounds every round): skips the sketch scan.
         # Any sorted list is CORRECT — bounds only balance chunk sizes.
         bounds = sorted(set(chunk_bounds))
     else:
-        bounds = value_bounds(d, "_v", num_partitions)
+        bounds = value_bounds(d, "_v")
     # log-depth codegen'd CASE tree, not a linear interpreted HOF —
     # at 2048 cluster partitions the per-row cost is 11 comparisons,
     # not 2047 interpreted lambda steps
-    # chunk_key keeps a NULL group: it joins back like any other
     d = d.withColumn(
-        CHUNK_KEY, chunk_key(gcols, searchsorted("_v", [float(b) for b in bounds]))
+        CHUNK_KEY, chunk_key([], searchsorted("_v", [float(b) for b in bounds]))
     )
     w_local = Window.partitionBy(CHUNK_KEY).orderBy("_v")
     w_local_cum = w_local.rowsBetween(Window.unboundedPreceding, 0)
@@ -143,7 +125,7 @@ def weighted_percentile(
     # long-lived driver calls plans.cache.release_persisted() at stage
     # boundaries (bench.py clearCache()s between queries).
     d = tracked_persist(d)
-    # tiny per-(group, chunk) summary -> exclusive prefix offsets + totals
+    # tiny per-chunk summary -> exclusive prefix offsets + totals
     d = carry_across_chunks(
         d,
         sums={"_off": F.sum("_w"), "_roff": F.count("*")},
@@ -160,7 +142,7 @@ def weighted_percentile(
         "_next_v_l", F.lead("_v").over(w_local)
     )
     firsts = d.where(F.col("_lrn") == 1).select(
-        *gcols, CHUNK_KEY, F.col("_mid").alias("_f_mid"), F.col("_v").alias("_f_v")
+        CHUNK_KEY, F.col("_mid").alias("_f_mid"), F.col("_v").alias("_f_v")
     )
     w_nextp = chunk_window(firsts)
     nexts = firsts.select(
@@ -199,8 +181,8 @@ def weighted_percentile(
         )
     )
     return (
-        seg.select(*gcols, ql.alias("q"), interp.alias("value"))
-        .groupBy(*gcols, "q")
+        seg.select(ql.alias("q"), interp.alias("value"))
+        .groupBy("q")
         .agg(F.min("value").alias("value"))
     )
 
@@ -212,7 +194,6 @@ def quantile_bin(
     tiebreak_cols: list[str] | None = None,
     group_cols: list[str] | None = None,
     out_col: str = "bin",
-    num_partitions: int | None = None,
     chunk_bounds: list[float] | None = None,
 ) -> DataFrame:
     """Exact equal-frequency binning (quantile discretization): row with
@@ -238,7 +219,7 @@ def quantile_bin(
     if chunk_bounds is not None:
         bounds = sorted(set(chunk_bounds))
     else:
-        bounds = value_bounds(d, value_col, num_partitions)
+        bounds = value_bounds(d, value_col)
     # name (not Column) so the CASE tree parses as ONE F.expr string
     d = d.withColumn("_vd", F.col(value_col).cast("double")).withColumn(
         CHUNK_KEY, chunk_key(gcols, searchsorted("_vd", [float(b) for b in bounds]))
@@ -259,8 +240,6 @@ def histogram_vote_filter(
     weight_col: str | None = None,
     n_bins: int = 100,
     min_mass: float = 0.003,
-    log_space: bool = True,
-    group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Drop rows in low-mass histogram bins (``extract_f0_range.py:204-213``).
 
@@ -268,18 +247,15 @@ def histogram_vote_filter(
     bins with mass ≥ ``min_mass`` of the total. Two tiny aggregates + one
     broadcast join back — the fact table shuffles zero times.
     """
-    gcols = group_cols or []
-    if log_space:
-        # log bins are only defined for positive values; non-positive rows
-        # are dropped up front (F.log would yield null and the null-skipping
-        # least() would silently dump them into the TOP bin)
-        df = df.where(F.col(value_col) > 0)
-    v = F.log(F.col(value_col)) if log_space else F.col(value_col)
+    # log bins are only defined for positive values; non-positive rows
+    # are dropped up front (F.log would yield null and the null-skipping
+    # least() would silently dump them into the TOP bin)
+    df = df.where(F.col(value_col) > 0)
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    d = df.withColumn("_lv", v).withColumn("_w", w)
-    rng = d.groupBy(*gcols).agg(F.min("_lv").alias("_lo"), F.max("_lv").alias("_hi"))
-    d = d.join(maybe_broadcast(rng), gcols) if gcols else d.crossJoin(maybe_broadcast(rng))
-    # constant-valued group: every row in bin 0 (bare division by the zero
+    d = df.withColumn("_lv", F.log(F.col(value_col))).withColumn("_w", w)
+    rng = d.agg(F.min("_lv").alias("_lo"), F.max("_lv").alias("_hi"))
+    d = d.crossJoin(maybe_broadcast(rng))
+    # constant-valued input: every row in bin 0 (bare division by the zero
     # width would abort under ANSI mode)
     width = (F.col("_hi") - F.col("_lo")) / n_bins
     bin_col = F.when(
@@ -291,12 +267,14 @@ def histogram_vote_filter(
         )
     )
     d = d.withColumn("_bin", bin_col)
-    mass = d.groupBy(*gcols, "_bin").agg(F.sum("_w").alias("_m"))
-    total = d.groupBy(*gcols).agg(F.sum("_w").alias("_t"))
+    mass = d.groupBy("_bin").agg(F.sum("_w").alias("_m"))
+    total = d.agg(F.sum("_w").alias("_t"))
     keep = (
-        mass.join(maybe_broadcast(total), gcols) if gcols else mass.crossJoin(maybe_broadcast(total))
-    ).where(F.col("_m") / F.col("_t") >= min_mass).select(*gcols, "_bin")
-    out = d.join(maybe_broadcast(keep), gcols + ["_bin"], "left_semi")
+        mass.crossJoin(maybe_broadcast(total))
+        .where(F.col("_m") / F.col("_t") >= min_mass)
+        .select("_bin")
+    )
+    out = d.join(maybe_broadcast(keep), ["_bin"], "left_semi")
     return out.drop("_lv", "_w", "_lo", "_hi", "_bin")
 
 

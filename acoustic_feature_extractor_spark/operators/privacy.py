@@ -34,14 +34,13 @@ def k_anonymize(
     quasi_cols: list[str],
     k: int,
     mode: str = "suppress",
-    redacted: str = "*",
 ) -> DataFrame:
     """Enforce k-anonymity on ``quasi_cols``.
 
     mode="suppress": DROP rows whose quasi-identifier group has < k rows
     (the release loses the long tail but every surviving row hides among
     >= k peers). mode="redact": KEEP every row but replace the quasi
-    values of under-k groups with ``redacted`` (string quasi columns
+    values of under-k groups with ``"*"`` (string quasi columns
     only — the redacted rows collapse into one large anonymous group).
     Either way the output satisfies: every distinct quasi tuple that still
     carries real values appears >= k times.
@@ -58,7 +57,7 @@ def k_anonymize(
         out = out.withColumn(
             c,
             F.when(F.col("_gn") >= k, F.col(c).cast("string")).otherwise(
-                F.lit(redacted)
+                F.lit("*")
             ),
         )
     return out.drop("_gn")

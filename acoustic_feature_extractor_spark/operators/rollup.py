@@ -93,8 +93,6 @@ def rollup(
     bucket_seconds: float,
     by: str | list[str],
     value_col: str,
-    ts: str = "ts",
-    bucket_col: str = "bucket",
 ) -> DataFrame:
     """Per-(entity, bucket) summary: n / sum / min / max / first_ts /
     last_ts, plus ``avg`` finalized from sum & n. All decomposable, so the
@@ -102,15 +100,15 @@ def rollup(
     by_cols = [by] if isinstance(by, str) else list(by)
     v = F.col(value_col)
     return (
-        df.withColumn(bucket_col, time_bucket(ts, bucket_seconds))
-        .groupBy(*by_cols, bucket_col)
+        df.withColumn("bucket", time_bucket("ts", bucket_seconds))
+        .groupBy(*by_cols, "bucket")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(v).alias("sum_v"),
             F.min(v).alias("min_v"),
             F.max(v).alias("max_v"),
-            F.min(ts).alias("first_ts"),
-            F.max(ts).alias("last_ts"),
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
         )
         .withColumn("avg_v", F.col("sum_v") / F.col("n"))
     )
@@ -122,10 +120,7 @@ def rollup_apply_changes(
     bucket_seconds: float,
     by: str | list[str],
     value_col: str,
-    ts: str = "ts",
-    bucket_col: str = "bucket",
     fact: DataFrame | None = None,
-    change_type_col: str = "_change_type",
 ) -> DataFrame:
     """Incremental materialized-view maintenance: fold a CDC change set
     (``snapshots.read_changes`` output — rows tagged insert/delete) into an
@@ -156,20 +151,20 @@ def rollup_apply_changes(
     from acoustic_feature_extractor_spark.plans.hints import maybe_broadcast
 
     by_cols = [by] if isinstance(by, str) else list(by)
-    keys = [*by_cols, bucket_col]
-    is_ins = F.col(change_type_col) == F.lit("insert")
+    keys = [*by_cols, "bucket"]
+    is_ins = F.col("_change_type") == F.lit("insert")
     v = F.col(value_col)
 
     delta = (
-        changes.withColumn(bucket_col, time_bucket(ts, bucket_seconds))
+        changes.withColumn("bucket", time_bucket("ts", bucket_seconds))
         .groupBy(*keys)
         .agg(
             F.sum(F.when(is_ins, 1).otherwise(-1)).alias("_dn"),
             F.sum(F.when(is_ins, v).otherwise(-v)).alias("_dsum"),
             F.min(F.when(is_ins, v)).alias("_ins_min"),
             F.max(F.when(is_ins, v)).alias("_ins_max"),
-            F.min(F.when(is_ins, F.col(ts))).alias("_ins_first"),
-            F.max(F.when(is_ins, F.col(ts))).alias("_ins_last"),
+            F.min(F.when(is_ins, F.col("ts"))).alias("_ins_first"),
+            F.max(F.when(is_ins, F.col("ts"))).alias("_ins_last"),
             F.max(F.when(~is_ins, 1).otherwise(0)).alias("_has_del"),
         )
     )
@@ -207,7 +202,7 @@ def rollup_apply_changes(
             delta.where(F.col("_has_del") == 1).select(*keys)
         )
         dirty_fact = (
-            fact.withColumn(bucket_col, time_bucket(ts, bucket_seconds))
+            fact.withColumn("bucket", time_bucket("ts", bucket_seconds))
             .join(dirty_keys, keys, "semi")
         )
         # re-aggregate exactly the dirty groups from current fact rows;
@@ -219,8 +214,8 @@ def rollup_apply_changes(
                 F.sum(v).alias("sum_v"),
                 F.min(v).alias("min_v"),
                 F.max(v).alias("max_v"),
-                F.min(ts).alias("first_ts"),
-                F.max(ts).alias("last_ts"),
+                F.min("ts").alias("first_ts"),
+                F.max("ts").alias("last_ts"),
             )
             .withColumn("avg_v", F.col("sum_v") / F.col("n"))
         )
@@ -234,7 +229,6 @@ def rollup_coarser(
     fine: DataFrame,
     bucket_seconds: float,
     by: str | list[str],
-    bucket_col: str = "bucket",
     fine_seconds: float | None = None,
 ) -> DataFrame:
     """Re-aggregate a finer rollup to a coarser grain WITHOUT touching the
@@ -252,7 +246,7 @@ def rollup_coarser(
             )
     by_cols = [by] if isinstance(by, str) else list(by)
     return (
-        fine.withColumn("_cb", time_bucket(bucket_col, bucket_seconds))
+        fine.withColumn("_cb", time_bucket("bucket", bucket_seconds))
         .groupBy(*by_cols, "_cb")
         .agg(
             F.sum("n").alias("n"),
@@ -262,7 +256,7 @@ def rollup_coarser(
             F.min("first_ts").alias("first_ts"),
             F.max("last_ts").alias("last_ts"),
         )
-        .withColumnRenamed("_cb", bucket_col)
+        .withColumnRenamed("_cb", "bucket")
         .withColumn("avg_v", F.col("sum_v") / F.col("n"))
     )
 

@@ -25,7 +25,6 @@ def stratified_entity_sample(
     df: DataFrame,
     max_entities: int,
     key: str = "conv_id",
-    num_chunks: int | None = None,
 ) -> DataFrame:
     """Keep ≤ max_entities keys, evenly spaced over the sorted key space.
 
@@ -41,7 +40,7 @@ def stratified_entity_sample(
     if n <= max_entities:
         return df
     spark = df.sparkSession
-    n_chunks = num_chunks or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_chunks = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # boundary keys: deterministic hash-strided sample, any spacing works
     stride = max(2, n // n_chunks)
     bounds = sorted(
@@ -81,15 +80,13 @@ def hash_split(
     key_col: str,
     fractions: dict[str, float],
     seed: int = 0,
-    split_col: str = "split",
-    resolution: int = 1_000_000,
 ) -> DataFrame:
     """Deterministic GROUP-AWARE train/val/test split.
 
     Every row sharing ``key_col`` (a conversation, a user, a document
     family) lands in the same split — `df.randomSplit` is row-level and
     `sampleBy` is neither key-consistent nor engine-portable.  The bucket
-    is the portable hash of ``"<key>:<seed>"`` mod ``resolution``;
+    is the portable hash of ``"<key>:<seed>"`` mod 10^6;
     ``fractions`` (insertion-ordered, summing to ~1) become cumulative
     bucket thresholds.  Pure projection: no shuffle, no state.
     """
@@ -105,17 +102,17 @@ def hash_split(
                 F.concat(F.col(key_col).cast("string"), F.lit(f":{seed}"))
             )
         ),
-        F.lit(resolution),
+        F.lit(1_000_000),
     )
     items = list(fractions.items())
     expr = None
     acc = 0.0
     for name, frac in items[:-1]:
         acc += frac / total
-        cond = bucket < F.lit(int(round(acc * resolution)))
+        cond = bucket < F.lit(int(round(acc * 1_000_000)))
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     expr = F.lit(items[-1][0]) if expr is None else expr.otherwise(items[-1][0])
-    return df.withColumn(split_col, expr)
+    return df.withColumn("split", expr)
 
 
 def balanced_sample(
@@ -209,15 +206,14 @@ def mixture_rates(
     df: DataFrame,
     group_col: str,
     temperature: float = 1.0,
-    target_rows: int | None = None,
 ) -> DataFrame:
     """Temperature-scaled mixture rates per group (the T5 / Pile
     source-mixing rule, public): group weight ∝ n^temperature, so
     T=1 reproduces natural proportions and T→0 flattens toward uniform.
 
     Output: (group, n_rows, rate) where ``rate`` is the expected copies
-    per row — ``(n^T / Σ n^T) · target / n``. ``target_rows`` defaults
-    to the input row count (rebalance while preserving corpus size).
+    per row — ``(n^T / Σ n^T) · N / n`` with N the input row count
+    (rebalance while preserving corpus size).
     Rates > 1 mean upsampling (small sources), < 1 downsampling.
 
     Scale shape: one map-side-combined count per group plus a
@@ -231,16 +227,13 @@ def mixture_rates(
     tot = counts.agg(
         F.sum("_w").alias("_tw"), F.sum("n_rows").alias("_tn")
     )
-    tgt = (
-        F.lit(float(target_rows)) if target_rows is not None else F.col("_tn").cast("double")
-    )
     return (
         counts.crossJoin(F.broadcast(tot))  # tot is literally one row
         .select(
             group_col,
             "n_rows",
             (
-                (F.col("_w") / F.col("_tw")) * tgt / F.col("n_rows").cast("double")
+                (F.col("_w") / F.col("_tw")) * F.col("_tn").cast("double") / F.col("n_rows").cast("double")
             ).alias("rate"),
         )
     )
@@ -251,10 +244,7 @@ def mixture_sample(
     group_col: str,
     id_col: str,
     temperature: float = 1.0,
-    target_rows: int | None = None,
     seed: int = 0,
-    max_copies: int = 64,
-    resolution: int = 1_000_000_000,
 ) -> DataFrame:
     """Deterministic temperature mixing: each row is kept ``floor(rate)``
     times plus one more with probability ``frac(rate)``, decided by the
@@ -262,8 +252,8 @@ def mixture_sample(
     no ``rand()``. Output rows carry ``copy`` (1-based replica index), so
     downstream shuffles (``shard_shuffle``) can spread replicas.
 
-    Expected output size = ``target_rows`` (default: input size). Rates
-    are clamped to ``max_copies`` — a tiny group under aggressive
+    Expected output size = the input size. Rates are clamped to 64
+    copies — a tiny group under aggressive
     flattening could otherwise explode a single row thousands of times;
     the clamp bounds per-row fan-out (and the violation is visible in
     :func:`mixture_rates` output, which reports the unclamped rate).
@@ -278,19 +268,19 @@ def mixture_sample(
     )
     from acoustic_feature_extractor_spark.plans.hints import maybe_broadcast
 
-    rates = mixture_rates(df, group_col, temperature, target_rows)
+    rates = mixture_rates(df, group_col, temperature)
     d = df.join(maybe_broadcast(rates.select(group_col, "rate")), group_col)
-    rate = F.least(F.col("rate"), F.lit(float(max_copies)))
+    rate = F.least(F.col("rate"), F.lit(64.0))
     hv = F.pmod(
         portable_mix(
             token_hash_portable(
                 F.concat(F.col(id_col).cast("string"), F.lit(f":{seed}"))
             )
         ),
-        F.lit(resolution),
+        F.lit(1_000_000_000),
     )
     base = F.floor(rate).cast("int")
-    extra = (hv.cast("double") < (rate - F.floor(rate)) * F.lit(float(resolution))).cast("int")
+    extra = (hv.cast("double") < (rate - F.floor(rate)) * F.lit(1e9)).cast("int")
     d = d.withColumn("_nc", base + extra).where(F.col("_nc") > 0)
     return (
         d.withColumn("copy", F.explode(F.sequence(F.lit(1), F.col("_nc"))))
@@ -305,7 +295,6 @@ def weighted_sample(
     key_col: str,
     group_cols: list[str] | None = None,
     seed: int = 0,
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement, k rows per group, one pass,
     deterministic — Efraimidis & Spirakis (2006) A-ES: each row draws
@@ -354,13 +343,13 @@ def weighted_sample(
     if group_cols:
         out = topk_per_group(
             scored, group_cols, [F.col("_es_key").desc(), F.col(key_col).asc()],
-            k=int(k), rank_col=rank_col,
+            k=int(k),
         )
     else:
         out = topk_per_group(
             scored.withColumn("_g", F.lit(1)), "_g",
             [F.col("_es_key").desc(), F.col(key_col).asc()],
-            k=int(k), rank_col=rank_col,
+            k=int(k),
         ).drop("_g")
     return out.drop("_es_key")
 

@@ -27,7 +27,6 @@ def sessionize(
     key: str = "conv_id",
     ts: str = "ts",
     order: str = "turn_idx",
-    session_col: str = "session_id",
 ) -> DataFrame:
     """session_id = running count of gaps > threshold (0-based per key).
 
@@ -41,7 +40,7 @@ def sessionize(
     gap = sec - F.lag(sec).over(w)
     is_new = F.when(gap > gap_seconds, 1).otherwise(0)
     run = Window.partitionBy(key).orderBy(order).rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(session_col, F.sum(is_new).over(run).cast("int"))
+    return df.withColumn("session_id", F.sum(is_new).over(run).cast("int"))
 
 
 def split_at_keypoints(
@@ -71,7 +70,6 @@ def run_boundaries(
     mask_col: str,
     key: str = "conv_id",
     order: str = "turn_idx",
-    run_col: str = "run_id",
 ) -> DataFrame:
     """Assign run ids to maximal constant-mask runs and flag change points.
 
@@ -85,7 +83,7 @@ def run_boundaries(
     is_change = F.when(prev.isNull() | (prev != F.col(mask_col)), 1).otherwise(0)
     run = Window.partitionBy(key).orderBy(order).rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn("is_change", is_change.cast("boolean")).withColumn(
-        run_col, F.sum(is_change).over(run).cast("int")
+        "run_id", F.sum(is_change).over(run).cast("int")
     )
 
 

@@ -44,24 +44,20 @@ def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_self: bool = False,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors per query (brute force, broadcast queries).
+    """Exact top-k cosine neighbors per query (brute force, broadcast
+    queries); a query is never its own neighbor.
 
     Output: (query_id, neighbor_id, rank) — rank 1..k by cosine desc,
     neighbor_id asc tiebreak (deterministic).
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("_qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").cast("array<double>").alias("_qv")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("_cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").cast("array<double>").alias("_cv")
     )
-    j = c.crossJoin(maybe_broadcast(q))
-    if not include_self:
-        j = j.where(F.col("query_id") != F.col("neighbor_id"))
+    j = c.crossJoin(maybe_broadcast(q)).where(F.col("query_id") != F.col("neighbor_id"))
     scored = j.withColumn("_cos", cosine(F.col("_qv"), F.col("_cv")))
     w = Window.partitionBy("query_id").orderBy(F.col("_cos").desc(), F.col("neighbor_id").asc())
     return (
@@ -71,7 +67,7 @@ def cosine_topk(
     )
 
 
-def _hyperplane(dim: int, plane: int, seed: int) -> list[float]:
+def _hyperplane(dim: int, plane: int) -> list[float]:
     """Deterministic pseudo-random hyperplane weights in [-1, 1).
 
     Pure arithmetic (same mix as datagen) so the projection is reproducible
@@ -79,14 +75,12 @@ def _hyperplane(dim: int, plane: int, seed: int) -> list[float]:
     """
     mix, mod = 2654435761, 2147483647
     return [
-        (((plane * 10_007 + d + seed) * mix) % mod) / (mod / 2.0) - 1.0
+        (((plane * 10_007 + d + 42) * mix) % mod) / (mod / 2.0) - 1.0
         for d in range(dim)
     ]
 
 
-def lsh_bucket(
-    vec: str, dim: int, n_planes: int = 8, seed: int = 42
-) -> Column:
+def lsh_bucket(vec: str, dim: int, n_planes: int = 8) -> Column:
     """Random-hyperplane LSH bucket id (int in [0, 2^n_planes)).
 
     ``vec`` is a column NAME: the whole projection is ONE parsed F.expr
@@ -95,7 +89,7 @@ def lsh_bucket(
     """
     terms = []
     for p in range(n_planes):
-        vals = ", ".join(f"{w!r}d" for w in _hyperplane(dim, p, seed))
+        vals = ", ".join(f"{w!r}d" for w in _hyperplane(dim, p))
         proj = (
             f"aggregate(zip_with({vec}, array({vals}), (x, y) -> x * y), "
             "0d, (acc, v) -> acc + v)"
@@ -112,9 +106,6 @@ def cosine_topk_lsh(
     dim: int,
     k: int = 5,
     n_planes: int = 6,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     probe_hamming: int = 0,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket.
@@ -130,9 +121,9 @@ def cosine_topk_lsh(
     touched once per probed bucket via the equi-join.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-    ).withColumn("_bkt", lsh_bucket("_qv", dim, n_planes, seed))
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("_qv"),
+    ).withColumn("_bkt", lsh_bucket("_qv", dim, n_planes))
     if probe_hamming > 0:
         masks = [
             m for m in range(1 << n_planes) if bin(m).count("1") <= probe_hamming
@@ -144,9 +135,9 @@ def cosine_topk_lsh(
             ),
         )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_cv"),
-    ).withColumn("_bkt", lsh_bucket("_cv", dim, n_planes, seed))
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("_cv"),
+    ).withColumn("_bkt", lsh_bucket("_cv", dim, n_planes))
     j = c.join(maybe_broadcast(q), "_bkt").where(F.col("query_id") != F.col("neighbor_id"))
     scored = j.withColumn("_cos", cosine(F.col("_qv"), F.col("_cv")))
     w = Window.partitionBy("query_id").orderBy(F.col("_cos").desc(), F.col("neighbor_id").asc())
@@ -193,10 +184,7 @@ def cosine_topk_ivf(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    n_centroids: int = 16,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """Approximate top-k via IVF (inverted-file) coarse quantization.
@@ -206,9 +194,10 @@ def cosine_topk_ivf(
     ``/root/reference/src/extractor/extract_f0_range.py:177-184``); every
     corpus vector is assigned to its nearest centroid (its inverted list),
     and a query scans only its ``n_probe`` nearest lists. ``n_probe =
-    n_centroids`` degrades gracefully to exact brute force (tests pin
-    this). Pass ``centroids`` to reuse a cached set across calls —
-    repeated invocations then cost zero extra jobs.
+    len(centroids)`` degrades gracefully to exact brute force (tests pin
+    this). Pass ``centroids`` (from :func:`pick_centroids`) to reuse a
+    cached set across calls — repeated invocations then cost zero extra
+    jobs; without them the call picks 16.
 
     Scale shape: the corpus is partitioned by centroid id (at rest:
     partition the table by ``_cid``), a query touches n_probe/n_centroids
@@ -217,17 +206,16 @@ def cosine_topk_ivf(
     count(), no global row_number).
     """
     if centroids is None:
-        centroids = pick_centroids(corpus, n_centroids, id_col, vec_col)
-    n_centroids = len(centroids)
-    n_probe = min(n_probe, n_centroids)
+        centroids = pick_centroids(corpus)
+    n_probe = min(n_probe, len(centroids))
 
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("_cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").cast("array<double>").alias("_cv")
     ).withColumn(
         "_cid", F.element_at(_nearest_centroid_cols("_cv", centroids, 1), 1)
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("_qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").cast("array<double>").alias("_qv")
     ).withColumn(
         "_cid",
         F.explode(_nearest_centroid_cols("_qv", centroids, n_probe)),
@@ -245,15 +233,13 @@ def cosine_topk_ivf(
 def pick_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Deterministic pseudo-random centroid pick — ONE distributed
     TakeOrdered job (hash order spreads picks over the corpus). Factored
     out so an index build and later query sessions share one set."""
     picked = (
-        corpus.select(id_col, F.col(vec_col).cast("array<double>").alias("_v"))
-        .orderBy(F.xxhash64(F.col(id_col).cast("string")), F.col(id_col))
+        corpus.select("vec_id", F.col("embedding").cast("array<double>").alias("_v"))
+        .orderBy(F.xxhash64(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(n_centroids)
         .collect()
     )
@@ -264,8 +250,6 @@ def ivf_index_write(
     corpus: DataFrame,
     path: str,
     centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Materialize the IVF inverted lists AT REST: the corpus is written
     partitioned by nearest-centroid id (``_cid=<i>/`` directories). At
@@ -274,8 +258,8 @@ def ivf_index_write(
     filter below prunes whole partition directories at planning time.
     """
     c = corpus.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-    ).withColumn("_cid", F.element_at(_nearest_centroid_cols(vec_col, centroids, 1), 1))
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("embedding")
+    ).withColumn("_cid", F.element_at(_nearest_centroid_cols("embedding", centroids, 1), 1))
     c.write.partitionBy("_cid").mode("overwrite").parquet(path)
 
 
@@ -286,8 +270,6 @@ def cosine_topk_ivf_at_rest(
     centroids: list[list[float]],
     k: int = 5,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Query a materialized IVF index with PARTITION PRUNING: queries are
     assigned their n_probe nearest lists, and the corpus scan carries an
@@ -298,14 +280,14 @@ def cosine_topk_ivf_at_rest(
     """
     n_probe = min(n_probe, len(centroids))
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("_qv"),
     ).withColumn("_cid", F.explode(_nearest_centroid_cols("_qv", centroids, n_probe)))
     probed = sorted({r["_cid"] for r in q.select("_cid").distinct().collect()})
     c = (
         spark.read.parquet(path)
         .where(F.col("_cid").isin(probed))  # partition-pruned scan
-        .select("_cid", F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
+        .select("_cid", F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv"))
     )
     j = c.join(maybe_broadcast(q), "_cid").where(F.col("query_id") != F.col("neighbor_id"))
     scored = j.withColumn("_cos", cosine(F.col("_qv"), F.col("_cv")))
@@ -320,9 +302,6 @@ def cosine_topk_ivf_at_rest(
 def embedding_neardup_exact(
     df: DataFrame,
     threshold: float = 0.45,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    method: str = "numpy",  # "numpy" (Arrow-batched matmul) | "jvm"
     max_driver_rows: int = 200_000,
 ) -> DataFrame:
     """Exact embedding-cosine near-dup pairs (broadcast self-join verify).
@@ -333,88 +312,68 @@ def embedding_neardup_exact(
     scans the corpus once. Use :func:`embedding_neardup_pairs` (LSH
     blocking) when the corpus is too large for the O(n²) verify.
 
-    ``method="numpy"``: each corpus partition multiplies its normalized
-    block against the broadcast normalized matrix with one BLAS matmul
-    inside ``mapInPandas``. The broadcast matrix is built on the driver,
-    so this path is gated by ``max_driver_rows`` — it is a small-corpus
-    VERIFY primitive, not the scale path. For the distributed exact
-    all-pairs plan (no driver materialization at any size) use
-    :func:`embedding_neardup_blocked`. ``method="jvm"`` keeps everything
-    in Catalyst expressions (no Python) for environments where that
-    matters more than speed.
+    Each corpus partition multiplies its normalized block against the
+    broadcast normalized matrix with one BLAS matmul inside
+    ``mapInPandas``. The broadcast matrix is built on the driver, so this
+    path is gated by ``max_driver_rows`` — it is a small-corpus VERIFY
+    primitive, not the scale path. For the distributed exact all-pairs
+    plan (no driver materialization at any size) use
+    :func:`embedding_neardup_blocked`.
     """
-    if method == "numpy":
-        import numpy as np
-        import pandas as pd
-        from typing import Iterator
+    from typing import Iterator
 
-        n = df.count()
-        assert n <= max_driver_rows, (
-            f"embedding_neardup_exact(method='numpy') materializes the corpus "
-            f"on the driver: {n} rows > max_driver_rows={max_driver_rows}. "
-            f"Use embedding_neardup_blocked (distributed block matmul) instead."
-        )
-        id_dt = df.schema[id_col].dataType.simpleString()
-        rows = df.select(id_col, F.col(vec_col).cast("array<double>")).collect()
-        # id dtype follows the input schema (object for strings/decimals)
-        ids = np.array([r[0] for r in rows])
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = np.inf  # zero vectors match nothing
-        unit = mat / norms
-        spark = df.sparkSession
-        b_ids = spark.sparkContext.broadcast(ids)
-        b_unit = spark.sparkContext.broadcast(unit)
-        thr = float(threshold)
+    import numpy as np
+    import pandas as pd
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            all_ids, all_unit = b_ids.value, b_unit.value
-            for pdf in batches:
-                block = np.array(list(pdf["_v"]), dtype=np.float64)
-                bn = np.linalg.norm(block, axis=1, keepdims=True)
-                bn[bn == 0] = np.inf
-                block = block / bn
-                sims = block @ all_unit.T  # (batch, corpus)
-                bi, ci = np.nonzero(sims >= thr)
-                lid = pdf["_id"].to_numpy()[bi]
-                rid = all_ids[ci]
-                keep = lid < rid
-                yield pd.DataFrame(
-                    {
-                        "id_a": lid[keep],
-                        "id_b": rid[keep],
-                        "cos_sim": np.round(sims[bi, ci][keep], 6),
-                    }
-                )
-
-        return df.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        ).mapInPandas(kernel, schema=f"id_a {id_dt}, id_b {id_dt}, cos_sim double")
-    # pre-normalize ONCE per row: higher-order-function expressions are
-    # interpreted (not codegen'd), so recomputing both norms per PAIR
-    # multiplies the dominant cost by ~3x on the O(n^2) join
-    v = F.col(vec_col).cast("array<double>")
-    norm = l2norm(v)
-    unit = F.when(norm != 0.0, F.transform(v, lambda x: x / norm))
-    a = df.select(F.col(id_col).alias("id_a"), unit.alias("_ua"))
-    b = df.select(F.col(id_col).alias("id_b"), unit.alias("_ub"))
-    return (
-        a.crossJoin(maybe_broadcast(b))
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", dot(F.col("_ua"), F.col("_ub")))
-        .where(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
+    n = df.count()
+    assert n <= max_driver_rows, (
+        f"embedding_neardup_exact materializes the corpus on the driver: "
+        f"{n} rows > max_driver_rows={max_driver_rows}. "
+        "Use embedding_neardup_blocked (distributed block matmul) instead."
     )
+    id_dt = df.schema["vec_id"].dataType.simpleString()
+    rows = df.select("vec_id", F.col("embedding").cast("array<double>")).collect()
+    # id dtype follows the input schema (object for strings/decimals)
+    ids = np.array([r[0] for r in rows])
+    mat = np.array([r[1] for r in rows], dtype=np.float64)
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    norms[norms == 0] = np.inf  # zero vectors match nothing
+    unit = mat / norms
+    spark = df.sparkSession
+    b_ids = spark.sparkContext.broadcast(ids)
+    b_unit = spark.sparkContext.broadcast(unit)
+    thr = float(threshold)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        all_ids, all_unit = b_ids.value, b_unit.value
+        for pdf in batches:
+            block = np.array(list(pdf["_v"]), dtype=np.float64)
+            bn = np.linalg.norm(block, axis=1, keepdims=True)
+            bn[bn == 0] = np.inf
+            block = block / bn
+            sims = block @ all_unit.T  # (batch, corpus)
+            bi, ci = np.nonzero(sims >= thr)
+            lid = pdf["_id"].to_numpy()[bi]
+            rid = all_ids[ci]
+            keep = lid < rid
+            yield pd.DataFrame(
+                {
+                    "id_a": lid[keep],
+                    "id_b": rid[keep],
+                    "cos_sim": np.round(sims[bi, ci][keep], 6),
+                }
+            )
+
+    return df.select(
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("_v"),
+    ).mapInPandas(kernel, schema=f"id_a {id_dt}, id_b {id_dt}, cos_sim double")
 
 
 def embedding_neardup_blocked(
     df: DataFrame,
     threshold: float = 0.45,
     n_blocks: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_cell_vecs: int | None = None,
 ) -> DataFrame:
     """Distributed EXACT all-pairs cosine near-dup — block-matrix self-join.
 
@@ -426,39 +385,22 @@ def embedding_neardup_blocked(
     tasks, and shuffle volume is O(n·d·B) (each block replicated B times),
     tunable against task memory.
 
-    ``max_cell_vecs`` decouples the Arrow 2 GB cell cap from ``n_blocks``
-    (VERDICT r2 #8): when set, each hash block is further hash-split into
-    sub-chunks of ~``max_cell_vecs`` expected vectors each (one count()
-    job sizes the split), and the pairing runs over the composite
-    (block, sub) chunk key with the same upper-triangle ordering — output
-    identical by construction, every Arrow cell bounded at
-    ~max_cell_vecs·dim·8 bytes regardless of corpus size. The split is a
-    hash expectation, not a hard bound (binomial spread ~sqrt); size the
-    target with that headroom (e.g. 64 MB target under a 2 GB cap).
-
     Same output contract as :func:`embedding_neardup_exact`:
     (id_a, id_b, cos_sim) with id_a < id_b, cos ≥ threshold; zero-norm
     vectors match nothing. Tests pin frame equality between the two.
     """
-    import math
     from typing import Iterator
 
     import numpy as np
     import pandas as pd
 
-    n_chunks = n_blocks
-    if max_cell_vecs is not None:
-        n_rows = df.count()
-        n_sub = max(1, math.ceil(n_rows / n_blocks / max_cell_vecs))
-        n_chunks = n_blocks * n_sub
-
-    id_dt = df.schema[id_col].dataType.simpleString()
+    id_dt = df.schema["vec_id"].dataType.simpleString()
     src = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").cast("array<double>").alias("_v"),
     ).withColumn(
         "_blk",
-        F.pmod(F.xxhash64(F.col("_id").cast("string")), F.lit(n_chunks)).cast("int"),
+        F.pmod(F.xxhash64(F.col("_id").cast("string")), F.lit(n_blocks)).cast("int"),
     )
 
     pack_schema = f"_blk int, _ids array<{id_dt}>, _vecs array<array<double>>"
@@ -525,26 +467,19 @@ def embedding_neardup_pairs(
     dim: int,
     threshold: float = 0.95,
     n_planes: int = 6,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bands: int = 1,
-    max_block: int = 4096,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via multi-band LSH bucketing
-    + vectorized verify.
+    """Embedding-cosine near-duplicate pairs via LSH bucketing +
+    vectorized verify.
 
-    Candidate generation: ``bands`` independent random-hyperplane codes
-    (band b reuses :func:`lsh_bucket` with seed ``seed + 1000·b``) — a
-    pair is verified if it collides in ANY band, so recall is
-    ``1 - (1 - p^planes)^bands`` with ``p = 1 - θ/π``; pick few planes +
-    more bands for low thresholds, more planes for tight near-dup
-    thresholds. Verify: one ``applyInPandas`` per (band, bucket) group —
+    Candidate generation: one random-hyperplane code (:func:`lsh_bucket`)
+    — a pair is verified if it collides, so recall is ``p^planes`` with
+    ``p = 1 - θ/π``; fewer planes for low thresholds, more planes for
+    tight near-dup thresholds. Verify: one ``applyInPandas`` per bucket —
     L2-normalize the bucket's matrix once and take the blocked
     upper-triangle matmul (BLAS), ~100× the throughput of per-pair
-    interpreted array expressions; ``max_block`` caps the in-memory score
+    interpreted array expressions; 4096-row blocks cap the in-memory score
     block so a hot bucket degrades to more blocks, not more memory.
-    Cross-band duplicate pairs collapse in a final groupBy. Zero-norm
+    A final groupBy canonicalizes the pairs. Zero-norm
     vectors never pass a positive threshold (same contract as
     :func:`cosine`'s NULL).
 
@@ -558,19 +493,11 @@ def embedding_neardup_pairs(
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     v = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
+        F.col("vec_id").alias("_id"), F.col("embedding").cast("array<double>").alias("_v")
     )
-    parts = [
-        v.withColumn("_band", F.lit(b)).withColumn(
-            "_bkt", lsh_bucket("_v", dim, n_planes, seed + 1000 * b)
-        )
-        for b in range(int(bands))
-    ]
-    bucketed = parts[0]
-    for p in parts[1:]:
-        bucketed = bucketed.unionByName(p)
+    bucketed = v.withColumn("_band", F.lit(0)).withColumn("_bkt", lsh_bucket("_v", dim, n_planes))
 
-    id_dt = df.schema[id_col].dataType
+    id_dt = df.schema["vec_id"].dataType
     out_schema = StructType(
         [
             StructField("id_a", id_dt),
@@ -589,10 +516,10 @@ def embedding_neardup_pairs(
         norms = np.sqrt((g * g).sum(axis=1))
         g = g / np.where(norms == 0.0, 1.0, norms)[:, None]
         out_a, out_b, out_s = [], [], []
-        for i0 in range(0, n, max_block):
-            gi = g[i0 : i0 + max_block]
-            for j0 in range(i0, n, max_block):
-                s = gi @ g[j0 : j0 + max_block].T
+        for i0 in range(0, n, 4096):
+            gi = g[i0 : i0 + 4096]
+            for j0 in range(i0, n, 4096):
+                s = gi @ g[j0 : j0 + 4096].T
                 ii, jj = np.nonzero(s >= threshold)
                 keep = (ii + i0) < (jj + j0)  # strict upper triangle
                 if not keep.any():
@@ -617,23 +544,18 @@ def embedding_neardup_pairs(
     )
 
 
-def label_centroids(
-    corpus: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    spherical: bool = True,
-) -> DataFrame:
+def label_centroids(corpus: DataFrame) -> DataFrame:
     """Per-label mean embedding, fully distributed: ``posexplode →
     groupBy(label, dim).avg`` (map-side partial sums — each task ships
     labels×dim partials, never corpus rows), then the dim rows fold back
     into one ``array<double>`` per label (``collect_list`` is dim-sized
     per group, bounded by construction). Nothing lands on the driver, so
     the label space may be arbitrarily large (e.g. dedup-cluster ids).
-    ``spherical`` unit-normalizes each centroid (cosine convention; zero
-    vectors stay zero)."""
+    Each centroid is unit-normalized (cosine convention; zero vectors stay
+    zero)."""
     d = corpus.select(
-        F.col(label_col).alias("_lbl"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
+        F.col("label").alias("_lbl"),
+        F.col("embedding").cast("array<double>").alias("_v"),
     )
     cent = (
         d.select("_lbl", F.posexplode("_v").alias("_dim", "_x"))
@@ -647,26 +569,19 @@ def label_centroids(
             ).alias("_c")
         )
     )
-    if spherical:
-        n = l2norm(F.col("_c"))
-        cent = cent.select(
-            "_lbl",
-            F.when(
-                n != 0.0, F.transform("_c", lambda x: x / n)
-            ).otherwise(F.col("_c")).alias("_c"),
-        )
-    return cent
+    n = l2norm(F.col("_c"))
+    return cent.select(
+        "_lbl",
+        F.when(n != 0.0, F.transform("_c", lambda x: x / n)).otherwise(F.col("_c")).alias("_c"),
+    )
 
 
 def embedding_label_outliers(
     corpus: DataFrame,
     threshold: float = 0.5,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Semantic-outlier / mislabel scoring: cosine similarity of every
-    vector to its OWN label's centroid; rows under ``threshold`` flag as
+    vector to its OWN ``label``'s centroid; rows under ``threshold`` flag as
     outliers (the standard embedding-space curation gate — drop or
     re-review points far from their cluster).
 
@@ -681,14 +596,14 @@ def embedding_label_outliers(
     first (persisting is the caller's call: at full scale the input is a
     scan and pinning it would be harmful).
     """
-    cents = label_centroids(corpus, label_col, vec_col, spherical=True)
+    cents = label_centroids(corpus)
     scored = corpus.join(
-        maybe_broadcast(cents), F.col(label_col) == F.col("_lbl"), "left"
+        maybe_broadcast(cents), F.col("label") == F.col("_lbl"), "left"
     )
-    sim = cosine(F.col(vec_col).cast("array<double>"), F.col("_c"))
+    sim = cosine(F.col("embedding").cast("array<double>"), F.col("_c"))
     return scored.select(
-        id_col,
-        label_col,
+        "vec_id",
+        "label",
         sim.alias("cos_centroid"),
         F.coalesce(sim < F.lit(float(threshold)), F.lit(True)).alias("is_outlier"),
     )
@@ -771,24 +686,21 @@ def pq_train(
     m: int = 8,
     pq_k: int = 16,
     n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    normalize: bool = True,
     residual_of: list[list[float]] | None = None,
 ) -> list[list[list[float]]]:
     """Train per-subspace codebooks (m × pq_k × dim/m): deterministic
     hash-pick init, then ``n_iter`` L2 Lloyd rounds per subspace. Each
     round is one partial/final aggregate whose shuffle carries pq_k ×
     sublen partial sums per task — never corpus rows; the driver only
-    holds the codebook matrices. ``normalize`` trains on unit vectors
-    (cosine convention — encode with the same flag).
+    holds the codebook matrices. It trains on unit vectors (cosine
+    convention, as :func:`pq_encode` encodes).
 
     ``residual_of``: train on RESIDUALS ``x − c(x)`` against these coarse
     centroids (Jégou et al.'s IVFADC): residual vectors are far more
     concentrated than raw ones, so the same (m, pq_k) budget quantizes
     with less error — use with ``cosine_topk_ivfpq(residual=True)``."""
     dim = len(
-        corpus.select(F.col(vec_col).cast("array<double>").alias("_v"))
+        corpus.select(F.col("embedding").cast("array<double>").alias("_v"))
         .limit(1)
         .collect()[0]["_v"]
     )
@@ -796,10 +708,9 @@ def pq_train(
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     ln = dim // m
     base = corpus.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
+        F.col("vec_id").alias("_id"), F.col("embedding").cast("array<double>").alias("_v")
     )
-    if normalize:
-        base = base.withColumn("_v", _unit_vec("_v"))
+    base = base.withColumn("_v", _unit_vec("_v"))
     if residual_of is not None:
         cm = _centroid_matrix_sql(residual_of)
         base = base.withColumn(
@@ -847,24 +758,18 @@ def pq_train(
 def pq_encode(
     df: DataFrame,
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codes_col: str = "codes",
-    normalize: bool = True,
 ) -> DataFrame:
-    """(id, codes) — each vector compressed to its m sub-centroid ids
+    """(vec_id, codes) — each unit vector compressed to its m sub-centroid ids
     (array<int>). This is the at-rest ANN representation: for dim=64
     doubles → 8 ints, a 16× shrink before bit-packing. One map-only
     projection, no shuffle."""
     ln = len(codebooks[0][0])
-    v = F.col(vec_col).cast("array<double>")
-    out = df.select(F.col(id_col), v.alias("_v"))
-    if normalize:
-        out = out.withColumn("_v", _unit_vec("_v"))
+    out = df.select(F.col("vec_id"), F.col("embedding").cast("array<double>").alias("_v"))
+    out = out.withColumn("_v", _unit_vec("_v"))
     code_exprs = ", ".join(
         _pq_code_sql("_v", cb, j * ln + 1, ln) for j, cb in enumerate(codebooks)
     )
-    return out.select(id_col, F.expr(f"array({code_exprs})").alias(codes_col))
+    return out.select("vec_id", F.expr(f"array({code_exprs})").alias("codes"))
 
 
 def _pq_lut_sql(vec: str, codebooks: list[list[list[float]]]) -> str:
@@ -889,8 +794,6 @@ def cosine_topk_ivfpq(
     m: int = 8,
     pq_k: int = 16,
     refine_factor: int | None = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
     codebooks: list[list[list[float]]] | None = None,
     residual: bool = False,
@@ -930,14 +833,12 @@ def cosine_topk_ivfpq(
     query), the shortlist re-rank touches k·refine vectors per query. Pass
     ``centroids``/``codebooks`` to reuse a trained index across calls."""
     if centroids is None:
-        centroids = pick_centroids(corpus, n_centroids, id_col, vec_col)
+        centroids = pick_centroids(corpus, n_centroids)
     if codebooks is None:
         codebooks = pq_train(
             corpus,
             m=m,
             pq_k=pq_k,
-            id_col=id_col,
-            vec_col=vec_col,
             residual_of=centroids if residual else None,
         )
     n_probe = min(n_probe, len(centroids))
@@ -951,8 +852,8 @@ def cosine_topk_ivfpq(
         _pq_code_sql("_cu", cb, j * ln + 1, ln) for j, cb in enumerate(codebooks)
     )
     cvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("_cv"),
     )
     cand = cvec.withColumn(
         "_cid", F.element_at(_nearest_centroid_cols("_cv", centroids, 1), 1)
@@ -967,8 +868,8 @@ def cosine_topk_ivfpq(
     )
     q = (
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("_qv"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").cast("array<double>").alias("_qv"),
         )
         .withColumn("_qu", _unit_vec("_qv"))
         .withColumn("_lut", F.expr(_pq_lut_sql("_qu", codebooks)))
@@ -1010,8 +911,8 @@ def cosine_topk_ivfpq(
         .select("query_id", "neighbor_id")
     )
     qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("_qv"),
     )
     exact = (
         short.join(cvec, "neighbor_id")
@@ -1032,8 +933,6 @@ def ivf_index_append(
     new_vectors: DataFrame,
     path: str,
     centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Fold NEW vectors into an existing at-rest IVF index WITHOUT a
     rebuild: the batch is assigned to lists with the SAME frozen
@@ -1045,6 +944,6 @@ def ivf_index_append(
     assignment function and require a rebuild, exactly like IVF libraries
     at rest (FAISS's add vs train split — public API semantics)."""
     c = new_vectors.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-    ).withColumn("_cid", F.element_at(_nearest_centroid_cols(vec_col, centroids, 1), 1))
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("embedding")
+    ).withColumn("_cid", F.element_at(_nearest_centroid_cols("embedding", centroids, 1), 1))
     c.write.partitionBy("_cid").mode("append").parquet(path)

@@ -43,21 +43,18 @@ def distinct_rollup(
     bucket_seconds: float,
     by: str | list[str],
     value_col: str,
-    ts: str = "ts",
-    bucket_col: str = "bucket",
-    lgk: int = 14,
 ) -> DataFrame:
-    """Per-(entity, bucket) HLL sketch of ``value_col`` plus the row count:
-    (by…, bucket, n, sketch). The sketch column is binary-at-rest — write
+    """Per-(entity, bucket) HLL sketch (lgk 14) of ``value_col`` plus the
+    row count: (by…, bucket, n, sketch). The sketch column is binary-at-rest — write
     it with the rollup and every coarser distinct question skips the fact
     table forever."""
     by_cols = [by] if isinstance(by, str) else list(by)
     return (
-        df.withColumn(bucket_col, time_bucket(ts, bucket_seconds))
-        .groupBy(*by_cols, bucket_col)
+        df.withColumn("bucket", time_bucket("ts", bucket_seconds))
+        .groupBy(*by_cols, "bucket")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.hll_sketch_agg(F.col(value_col), F.lit(int(lgk))).alias("sketch"),
+            F.hll_sketch_agg(F.col(value_col), F.lit(14)).alias("sketch"),
         )
     )
 
@@ -66,7 +63,6 @@ def distinct_coarser(
     fine: DataFrame,
     bucket_seconds: float,
     by: str | list[str],
-    bucket_col: str = "bucket",
     fine_seconds: float | None = None,
 ) -> DataFrame:
     """Merge a finer distinct-rollup to a coarser grain WITHOUT touching
@@ -82,21 +78,19 @@ def distinct_coarser(
             )
     by_cols = [by] if isinstance(by, str) else list(by)
     return (
-        fine.withColumn("_cb", time_bucket(bucket_col, bucket_seconds))
+        fine.withColumn("_cb", time_bucket("bucket", bucket_seconds))
         .groupBy(*by_cols, "_cb")
         .agg(
             F.sum("n").alias("n"),
             F.hll_union_agg(F.col("sketch")).alias("sketch"),
         )
-        .withColumnRenamed("_cb", bucket_col)
+        .withColumnRenamed("_cb", "bucket")
     )
 
 
-def with_estimate(
-    df: DataFrame, sketch_col: str = "sketch", out_col: str = "distinct_est"
-) -> DataFrame:
+def with_estimate(df: DataFrame) -> DataFrame:
     """Finalize: append the distinct estimate (long) from the sketch."""
-    return df.withColumn(out_col, F.hll_sketch_estimate(F.col(sketch_col)))
+    return df.withColumn("distinct_est", F.hll_sketch_estimate(F.col("sketch")))
 
 
 # ---------------------------------------------------------------------------
@@ -129,8 +123,6 @@ def hist_rollup(
     lo: float,
     hi: float,
     bins: int = 64,
-    ts: str = "ts",
-    bucket_col: str = "bucket",
 ) -> DataFrame:
     """Per-(entity, bucket) histogram sketch of ``value_col``:
     (by…, bucket, n, hist). Out-of-domain values clamp into the edge bins
@@ -148,9 +140,9 @@ def hist_rollup(
         F.lit(int(bins) - 1),
     )
     grouped = (
-        df.withColumn(bucket_col, time_bucket(ts, bucket_seconds))
+        df.withColumn("bucket", time_bucket("ts", bucket_seconds))
         .withColumn("_bin", bin_)
-        .groupBy(*by_cols, bucket_col)
+        .groupBy(*by_cols, "bucket")
         .agg(
             F.count(F.lit(1)).alias("n"),
             *[
@@ -161,7 +153,7 @@ def hist_rollup(
     )
     return grouped.select(
         *by_cols,
-        bucket_col,
+        "bucket",
         "n",
         F.array(*[f"_h{i}" for i in range(int(bins))]).alias("hist"),
     )
@@ -171,7 +163,6 @@ def hist_coarser(
     fine: DataFrame,
     bucket_seconds: float,
     by: str | list[str],
-    bucket_col: str = "bucket",
     fine_seconds: float | None = None,
 ) -> DataFrame:
     """Merge a finer histogram rollup to a coarser grain without touching
@@ -187,7 +178,7 @@ def hist_coarser(
             )
     by_cols = [by] if isinstance(by, str) else list(by)
     return (
-        fine.withColumn("_cb", time_bucket(bucket_col, bucket_seconds))
+        fine.withColumn("_cb", time_bucket("bucket", bucket_seconds))
         .select(*by_cols, "_cb", "n", F.posexplode("hist").alias("_i", "_c"))
         .groupBy(*by_cols, "_cb", "_i")
         .agg(F.sum("_c").alias("_c"))
@@ -203,7 +194,7 @@ def hist_coarser(
         .withColumn(
             "n", F.aggregate("hist", F.lit(0).cast("long"), lambda a, c: a + c)
         )
-        .withColumnRenamed("_cb", bucket_col)
+        .withColumnRenamed("_cb", "bucket")
     )
 
 
@@ -216,9 +207,6 @@ def hist_apply_changes(
     lo: float,
     hi: float,
     bins: int = 64,
-    ts: str = "ts",
-    bucket_col: str = "bucket",
-    change_type_col: str = "_change_type",
 ) -> DataFrame:
     """Incremental maintenance of a histogram rollup from a CDC change set
     (``snapshots.read_changes`` output) — and unlike the min/max rollup
@@ -233,9 +221,9 @@ def hist_apply_changes(
     if not hi > lo:
         raise ValueError(f"need hi > lo, got [{lo}, {hi})")
     by_cols = [by] if isinstance(by, str) else list(by)
-    keys = [*by_cols, bucket_col]
+    keys = [*by_cols, "bucket"]
     w = (float(hi) - float(lo)) / int(bins)
-    sign = _change_sign(change_type_col)
+    sign = _change_sign("_change_type")
     bin_ = F.least(
         F.greatest(
             F.floor((F.col(value_col) - F.lit(float(lo))) / F.lit(w)), F.lit(0)
@@ -243,7 +231,7 @@ def hist_apply_changes(
         F.lit(int(bins) - 1),
     )
     delta = (
-        changes.withColumn(bucket_col, time_bucket(ts, bucket_seconds))
+        changes.withColumn("bucket", time_bucket("ts", bucket_seconds))
         .withColumn("_bin", bin_)
         .withColumn("_sgn", sign)
         .groupBy(*keys)
@@ -369,8 +357,6 @@ def freq_rollup(
     bucket_seconds: float,
     by: str | list[str],
     item_col: str,
-    ts: str = "ts",
-    bucket_col: str = "bucket",
 ) -> DataFrame:
     """EXACT per-(entity, bucket, item) frequency base table
     (by…, bucket, item, cnt) — one fact-table groupBy with map-side
@@ -379,9 +365,9 @@ def freq_rollup(
     :func:`topk_compress`."""
     by_cols = [by] if isinstance(by, str) else list(by)
     return (
-        df.withColumn(bucket_col, time_bucket(ts, bucket_seconds))
+        df.withColumn("bucket", time_bucket("ts", bucket_seconds))
         .groupBy(
-            *by_cols, bucket_col, F.col(item_col).cast("string").alias("item")
+            *by_cols, "bucket", F.col(item_col).cast("string").alias("item")
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -393,8 +379,6 @@ def topk_rollup(
     by: str | list[str],
     item_col: str,
     capacity: int = 64,
-    ts: str = "ts",
-    bucket_col: str = "bucket",
 ) -> DataFrame:
     """Per-(entity, bucket) Misra-Gries frequency summary of ``item_col``:
     (by…, bucket, n, err, items: array<struct<item,cnt>> sorted by cnt desc /
@@ -406,10 +390,10 @@ def topk_rollup(
     if capacity < 1:
         raise ValueError(f"capacity must be >= 1, got {capacity}")
     return topk_compress(
-        freq_rollup(df, bucket_seconds, by, item_col, ts, bucket_col),
+        freq_rollup(df, bucket_seconds, by, item_col),
         by,
         int(capacity),
-        bucket_col,
+        "bucket",
     )
 
 
@@ -418,7 +402,6 @@ def topk_coarser(
     bucket_seconds: float,
     by: str | list[str],
     capacity: int,
-    bucket_col: str = "bucket",
     fine_seconds: float | None = None,
 ) -> DataFrame:
     """Merge a finer top-k rollup to a coarser grain WITHOUT touching the
@@ -435,8 +418,8 @@ def topk_coarser(
                 f"width {fine_seconds}s — fine buckets would straddle coarse ones"
             )
     by_cols = [by] if isinstance(by, str) else list(by)
-    keys = [*by_cols, bucket_col]
-    coarse = fine.withColumn("_cb", time_bucket(bucket_col, bucket_seconds))
+    keys = [*by_cols, "bucket"]
+    coarse = fine.withColumn("_cb", time_bucket("bucket", bucket_seconds))
     ckeys = [*by_cols, "_cb"]
     group_tot = coarse.groupBy(*ckeys).agg(
         F.sum("err").alias("err_in"), F.sum("n").alias("n")
@@ -454,14 +437,13 @@ def topk_coarser(
         "left",
     )
     out = _mg_compress(per_item, ckeys, int(capacity))
-    return out.withColumnRenamed("_cb", bucket_col)
+    return out.withColumnRenamed("_cb", "bucket")
 
 
 def topk_finalize(
     df: DataFrame,
     k: int,
     by: str | list[str],
-    bucket_col: str = "bucket",
 ) -> DataFrame:
     """Explode a top-k summary into ranked rows
     (by…, bucket, rank, item, cnt_lb, cnt_ub): ``cnt_lb`` is the stored
@@ -472,12 +454,12 @@ def topk_finalize(
     by_cols = [by] if isinstance(by, str) else list(by)
     return df.select(
         *by_cols,
-        bucket_col,
+        "bucket",
         "err",
         F.posexplode(F.slice("items", 1, int(k))).alias("_i", "_s"),
     ).select(
         *by_cols,
-        bucket_col,
+        "bucket",
         (F.col("_i") + 1).cast("long").alias("rank"),
         F.col("_s.item").alias("item"),
         F.col("_s.cnt").alias("cnt_lb"),
@@ -491,8 +473,6 @@ def hist_quantiles(
     lo: float,
     hi: float,
     bins: int = 64,
-    hist_col: str = "hist",
-    n_col: str = "n",
 ) -> DataFrame:
     """Finalize: append one estimate column ``q<pct>`` per requested
     quantile, interpolated uniformly inside the crossing bin — the
@@ -506,7 +486,7 @@ def hist_quantiles(
     query before this shape."""
     w = (float(hi) - float(lo)) / int(bins)
     cum = F.expr(
-        f"aggregate({hist_col}, CAST(array() AS ARRAY<BIGINT>), "
+        "aggregate(hist, CAST(array() AS ARRAY<BIGINT>), "
         f"(acc, x) -> array_append(acc, "
         f"x + if(size(acc) = 0, 0L, acc[size(acc) - 1])))"
     )
@@ -514,19 +494,19 @@ def hist_quantiles(
     for q in qs:
         if not 0.0 < q <= 1.0:
             raise ValueError(f"quantile {q} outside (0, 1]")
-        t = F.col(n_col).cast("double") * F.lit(float(q))
+        t = F.col("n").cast("double") * F.lit(float(q))
         idx = F.array_position(
             F.transform(F.col("_cum"), lambda c: c.cast("double") >= t), F.lit(True)
         ).cast("int")
         prev = F.when(idx > 1, F.element_at("_cum", idx - 1)).otherwise(
             F.lit(0)
         ).cast("double")
-        cnt = F.element_at(hist_col, idx).cast("double")
+        cnt = F.element_at("hist", idx).cast("double")
         est = F.lit(float(lo)) + F.lit(w) * (
             (idx - 1).cast("double") + (t - prev) / cnt
         )
         name = f"q{str(q).replace('0.', '').replace('.', '_')}"
-        out = out.withColumn(name, F.when(F.col(n_col) > 0, est))
+        out = out.withColumn(name, F.when(F.col("n") > 0, est))
     return out.drop("_cum")
 
 
@@ -558,15 +538,13 @@ def psi_from_hists(
     cur: DataFrame,
     by: str | list[str],
     bins: int,
-    eps: float = 1e-6,
-    hist_col: str = "hist",
 ) -> DataFrame:
     """Population Stability Index computed FROM histogram sketches instead
     of raw facts — the incremental-drift story: keep the reference window's
     ``hist_rollup`` at rest, maintain the current window's histogram with
     ``hist_apply_changes`` (IO ∝ CDC change set), and re-score drift each
     batch WITHOUT ever re-reading either fact table. Same Laplace
-    smoothing and per-bin ``(p−q)·ln(p/q)`` term as
+    smoothing (ε = 1e-6) and per-bin ``(p−q)·ln(p/q)`` term as
     ``stats.population_stability`` (sum terms per group for the scalar
     PSI; the per-bin table keeps drift locatable), but over the sketch's
     pinned equi-width bins rather than reference quantiles.
@@ -579,14 +557,14 @@ def psi_from_hists(
     Everything is rollup-sized: the fact tables never enter the plan.
     """
     by_cols = [by] if isinstance(by, str) else list(by)
-    r = _hist_side(ref, "ref", by_cols, bins, hist_col, "psi_from_hists")
-    c = _hist_side(cur, "cur", by_cols, bins, hist_col, "psi_from_hists")
+    r = _hist_side(ref, "ref", by_cols, bins, "hist", "psi_from_hists")
+    c = _hist_side(cur, "cur", by_cols, bins, "hist", "psi_from_hists")
     keys = [*by_cols, "_bin0"]
     out = r.join(c, keys, "full").fillna(0, subset=["n_ref", "n_cur"])
     tot_r = F.sum("n_ref").over(Window.partitionBy(*by_cols))
     tot_c = F.sum("n_cur").over(Window.partitionBy(*by_cols))
-    p = (F.col("n_ref") + F.lit(float(eps))) / (tot_r + F.lit(float(eps) * bins))
-    q = (F.col("n_cur") + F.lit(float(eps))) / (tot_c + F.lit(float(eps) * bins))
+    p = (F.col("n_ref") + F.lit(1e-6)) / (tot_r + F.lit(1e-6 * bins))
+    q = (F.col("n_cur") + F.lit(1e-6)) / (tot_c + F.lit(1e-6 * bins))
     return out.select(
         *by_cols,
         (F.col("_bin0") + 1).alias("bin"),
@@ -603,8 +581,6 @@ def ks_from_hists(
     cur: DataFrame,
     by: str | list[str],
     bins: int,
-    hist_col: str = "hist",
-    out_col: str = "ks",
 ) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov distance from histogram sketches:
     ``D = max_b |ECDF_ref(b) − ECDF_cur(b)|`` over the shared equi-width
@@ -628,8 +604,8 @@ def ks_from_hists(
     sketch-sized data; the fact tables never enter the plan.
     """
     by_cols = [by] if isinstance(by, str) else list(by)
-    r = _hist_side(ref, "ref", by_cols, bins, hist_col, "ks_from_hists")
-    c = _hist_side(cur, "cur", by_cols, bins, hist_col, "ks_from_hists")
+    r = _hist_side(ref, "ref", by_cols, bins, "hist", "ks_from_hists")
+    c = _hist_side(cur, "cur", by_cols, bins, "hist", "ks_from_hists")
     keys = [*by_cols, "_bin0"]
     out = r.join(c, keys, "full").fillna(0, subset=["n_ref", "n_cur"])
     grp = Window.partitionBy(*by_cols)
@@ -651,17 +627,15 @@ def ks_from_hists(
         .agg(
             F.sum("n_ref").alias("n_ref"),
             F.sum("n_cur").alias("n_cur"),
-            F.max("_gap").alias(out_col),
+            F.max("_gap").alias("ks"),
         )
     )
 
 
-def drift_from_counts(
-    ref: list[int], cur: list[int], eps: float = 1e-6
-) -> tuple[float, float | None]:
+def drift_from_counts(ref: list[int], cur: list[int]) -> tuple[float, float | None]:
     """``(psi, ks)`` of two bin-count lists, scored on the driver for when
     both histograms are already there (one pinned in lineage, one
-    collected): the math of :func:`psi_from_hists` (Laplace ``eps``, the
+    collected): the math of :func:`psi_from_hists` (Laplace ε = 1e-6, the
     summed per-bin ``(p−q)·ln(p/q)``) and :func:`ks_from_hists` (the max
     ECDF gap; ``None`` when either side totals zero) without shipping the
     counts back into Spark. Raises on a width mismatch, as their in-plan
@@ -674,8 +648,8 @@ def drift_from_counts(
     tot_r, tot_c = sum(ref), sum(cur)
     psi = 0.0
     for n_r, n_c in zip(ref, cur):
-        p = (n_r + eps) / (tot_r + eps * bins)
-        q = (n_c + eps) / (tot_c + eps * bins)
+        p = (n_r + 1e-6) / (tot_r + 1e-6 * bins)
+        q = (n_c + 1e-6) / (tot_c + 1e-6 * bins)
         psi += (p - q) * math.log(p / q)
     if tot_r == 0 or tot_c == 0:
         return psi, None
@@ -694,9 +668,6 @@ def freq_apply_changes(
     bucket_seconds: float,
     by: str | list[str],
     item_col: str,
-    ts: str = "ts",
-    bucket_col: str = "bucket",
-    change_type_col: str = "_change_type",
 ) -> DataFrame:
     """Incremental maintenance of the EXACT per-item frequency base (the
     finest grain under ``topk_rollup``) from a CDC change set
@@ -717,11 +688,11 @@ def freq_apply_changes(
     from acoustic_feature_extractor_spark.plans.hints import maybe_broadcast
 
     by_cols = [by] if isinstance(by, str) else list(by)
-    keys = [*by_cols, bucket_col, "item"]
-    sign = _change_sign(change_type_col)
+    keys = [*by_cols, "bucket", "item"]
+    sign = _change_sign("_change_type")
     delta = (
-        changes.withColumn(bucket_col, time_bucket(ts, bucket_seconds))
-        .groupBy(*by_cols, bucket_col, F.col(item_col).cast("string").alias("item"))
+        changes.withColumn("bucket", time_bucket("ts", bucket_seconds))
+        .groupBy(*by_cols, "bucket", F.col(item_col).cast("string").alias("item"))
         .agg(F.sum(sign).alias("_d"))
         .where(F.col("_d") != 0)
     )
@@ -778,37 +749,28 @@ def topk_compress(
 # applies. Buckets come from Kirsch-Mitzenmacher double hashing of the
 # SQL-portable polynomial (one interpreted fold per row; per-depth lanes
 # are pure arithmetic) — deterministic in any engine, which is what lets
-# the DuckDB oracle recompute the sketch AND the estimate exactly
-# (pass hash_fn for xxhash64 in production; same downstream math).
+# the DuckDB oracle recompute the sketch AND the estimate exactly.
 
 
-def _cms_lanes(item, width: int, hash_fn=None) -> tuple:
+def _cms_lanes(item, width: int) -> tuple:
     """The two Kirsch-Mitzenmacher hash lanes (b1, b2), each in
     [0, width): bucket_d = (b1 + d*b2) mod width. b2 comes from mixing
     the polynomial fold's two packed 31-bit accumulators with their
     halves SWAPPED — an independent avalanche of the same base state,
-    replayed identically in the DuckDB oracle. With ``hash_fn`` (e.g.
-    xxhash64 for production) the lanes are two tagged calls — builtin
-    hashes are codegen-cheap."""
+    replayed identically in the DuckDB oracle."""
     from acoustic_feature_extractor_spark.operators.dedup import (
         portable_mix,
         token_hash_portable,
     )
 
-    if hash_fn is not None:
-        u1 = hash_fn(F.concat(F.lit("a:"), item.cast("string")))
-        u2 = hash_fn(F.concat(F.lit("b:"), item.cast("string")))
-    else:
-        base = token_hash_portable(item.cast("string"))
-        swapped = F.shiftright(base, 31) + F.shiftleft(
-            base.bitwiseAND(F.lit((1 << 31) - 1)), 31
-        )
-        u1 = portable_mix(base)
-        u2 = portable_mix(swapped)
+    base = token_hash_portable(item.cast("string"))
+    swapped = F.shiftright(base, 31) + F.shiftleft(base.bitwiseAND(F.lit((1 << 31) - 1)), 31)
+    u1 = portable_mix(base)
+    u2 = portable_mix(swapped)
     return F.pmod(u1, F.lit(int(width))), F.pmod(u2, F.lit(int(width)))
 
 
-def _with_cms_pairs(df: DataFrame, item, depth: int, width: int, hash_fn=None):
+def _with_cms_pairs(df: DataFrame, item, depth: int, width: int):
     """Project the lanes as REAL COLUMNS first, then build the per-depth
     (d, bucket) structs from column references in a second projection.
     The polynomial fold is an interpreted higher-order function, outside
@@ -816,7 +778,7 @@ def _with_cms_pairs(df: DataFrame, item, depth: int, width: int, hash_fn=None):
     every array element re-evaluates it per depth per row (measured 1.6×
     on the bench table); the column barrier pins it to twice per row
     total, with per-depth buckets pure codegen arithmetic."""
-    b1, b2 = _cms_lanes(item, width, hash_fn)
+    b1, b2 = _cms_lanes(item, width)
     d2 = df.withColumn("_cms_b1", b1).withColumn("_cms_b2", b2)
     pairs = F.array(
         *[
@@ -832,8 +794,8 @@ def _with_cms_pairs(df: DataFrame, item, depth: int, width: int, hash_fn=None):
     return d2, pairs
 
 
-def _cms_bucket(item, d: int, width: int, hash_fn=None):
-    b1, b2 = _cms_lanes(item, width, hash_fn)
+def _cms_bucket(item, d: int, width: int):
+    b1, b2 = _cms_lanes(item, width)
     return F.pmod(b1 + d * b2, F.lit(int(width))).cast("long")
 
 
@@ -843,7 +805,6 @@ def cms_rollup(
     by: str | list[str] | None = None,
     depth: int = 4,
     width: int = 256,
-    hash_fn=None,
 ) -> DataFrame:
     """Per-group count-min sketch of ``item_col``: long-form rows
     (by..., d, bucket, cnt). ONE pass over the facts: the depth
@@ -854,7 +815,7 @@ def cms_rollup(
     """
     by_cols = [by] if isinstance(by, str) else list(by or [])
     item = F.col(item_col)
-    src, pairs = _with_cms_pairs(df.where(item.isNotNull()), item, depth, width, hash_fn)
+    src, pairs = _with_cms_pairs(df.where(item.isNotNull()), item, depth, width)
     return (
         src.select(*by_cols, F.explode(pairs).alias("_db"))
         .groupBy(*by_cols, F.col("_db.d").alias("d"), F.col("_db.bucket").alias("bucket"))
@@ -879,28 +840,23 @@ def cms_estimate(
     cms: DataFrame,
     items: DataFrame,
     item_col: str,
-    by: str | list[str] | None = None,
     width: int = 256,
     depth: int = 4,
-    hash_fn=None,
-    out_col: str = "freq_est",
 ) -> DataFrame:
-    """Point-frequency estimates for ``items`` (one row per queried item
-    [* group]): min over the sketch's depth rows of the counter each hash
-    lands in — never under the truth; items the sketch never saw can
-    still report small positive counts (collision mass). The probe is a
+    """Point-frequency estimates for ``items`` (one row per queried item):
+    min over the sketch's depth rows of the counter each hash lands in —
+    never under the truth; items the sketch never saw can still report
+    small positive counts (collision mass). The probe is a
     broadcast-friendly equi-join on (d, bucket): |items| * depth rows
     against the counter table, no fact-table access. A missing (d,
     bucket) cell means zero occurrences hashed there, so the min (and the
     estimate) is 0 — kept via the coalesce, not dropped by the join."""
-    by_cols = [by] if isinstance(by, str) else list(by or [])
-    item = F.col(item_col)
-    src, pairs = _with_cms_pairs(items, item, depth, width, hash_fn)
-    probes = src.select(
-        *by_cols, item_col, F.explode(pairs).alias("_db")
-    ).select(*by_cols, item_col, F.col("_db.d").alias("d"), F.col("_db.bucket").alias("bucket"))
-    j = probes.join(cms, on=[*by_cols, "d", "bucket"], how="left")
+    src, pairs = _with_cms_pairs(items, F.col(item_col), depth, width)
+    probes = src.select(item_col, F.explode(pairs).alias("_db")).select(
+        item_col, F.col("_db.d").alias("d"), F.col("_db.bucket").alias("bucket")
+    )
+    j = probes.join(cms, on=["d", "bucket"], how="left")
     return (
-        j.groupBy(*by_cols, item_col)
-        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).cast("long").alias(out_col))
+        j.groupBy(item_col)
+        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).cast("long").alias("freq_est"))
     )

@@ -7,8 +7,7 @@ Reference parity targets:
 - linear stat conversion ``F0.convert``
   (``/root/reference/src/acoustic_feature_extractor/data/f0.py:92-126``):
   ``x' = (tv/iv)·(x − im) + tm`` where (im, iv) are input mean/std-like
-  stats and (tm, tv) targets, applied only to valid entries (invalid stay
-  untouched/zero).
+  stats and (tm, tv) targets; here always the z-score (tm = 0, tv = 1).
 - grouped summaries (``analyze_ebur128.py:31-56``).
 
 Catalyst plans partial+final HashAggregate automatically (the reference's
@@ -42,60 +41,36 @@ def corpus_aggs(value: str | Column) -> list[Column]:
 def corpus_stats(
     df: DataFrame,
     value_col: str,
-    valid_col: str | None = None,
     group_cols: list[str] | None = None,
 ) -> DataFrame:
-    """mean / var_pop / stddev_pop / count over valid rows, optionally grouped."""
-    src = df.where(F.col(valid_col)) if valid_col else df
+    """mean / var_pop / stddev_pop / count, optionally grouped."""
     aggs = corpus_aggs(value_col)
     if group_cols:
-        return src.groupBy(*group_cols).agg(*aggs)
-    return src.agg(*aggs)
+        return df.groupBy(*group_cols).agg(*aggs)
+    return df.agg(*aggs)
 
 
-def normalize(
-    df: DataFrame,
-    value_col: str,
-    stats: DataFrame,
-    target_mean: float = 0.0,
-    target_var: float = 1.0,
-    valid_col: str | None = None,
-    group_cols: list[str] | None = None,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Linear conversion ``x' = (tv/iv)·(x − im) + tm`` (``f0.py:119-123``).
+def normalize(df: DataFrame, value_col: str, stats: DataFrame) -> DataFrame:
+    """Z-score ``{value_col}_norm = (x − im) / iv``: the reference's linear
+    conversion ``x' = (tv/iv)·(x − im) + tm`` (``f0.py:119-123``) at
+    ``tm = 0``, ``tv = 1``.
 
-    ``stats`` is the tiny output of :func:`corpus_stats` — broadcast-joined
-    (grouped) or cross-broadcast (global, 1 row). ``tv``/``iv`` are
-    standard-deviation-like scales: the reference passes ``var`` fields that
-    its formula treats as scales; we use stddev_pop for z-score semantics
-    and keep the reference's exact formula shape. Invalid rows pass through
-    unchanged (``f0.py:117-124`` masks on vuv).
+    ``stats`` is the tiny 1-row output of :func:`corpus_stats`,
+    cross-broadcast into the projection. ``iv`` is stddev_pop: the
+    reference passes ``var`` fields that its formula treats as scales.
     """
-    out_col = out_col or f"{value_col}_norm"
-    sel = stats.select(
-        *(group_cols or []),
-        F.col("mean").alias("_im"),
-        F.col("stddev").alias("_iv"),
-    )
-    if group_cols:
-        j = df.join(maybe_broadcast(sel), group_cols, "left")
-    else:
-        j = df.crossJoin(maybe_broadcast(sel))
-    import math
-
-    tv = math.sqrt(target_var)
-    # constant-valued group => stddev 0: every value IS the mean, so the
-    # normalized value is target_mean (a bare division would abort the job
-    # under Spark 4's default ANSI mode)
+    sel = stats.select(F.col("mean").alias("_im"), F.col("stddev").alias("_iv"))
+    # constant-valued column => stddev 0: every value IS the mean, so the
+    # normalized value is 0 (a bare division would abort the job under
+    # Spark 4's default ANSI mode)
     converted = F.when(
-        F.col("_iv") != 0.0,
-        (F.lit(tv) / F.col("_iv")) * (F.col(value_col) - F.col("_im"))
-        + F.lit(target_mean),
-    ).otherwise(F.lit(float(target_mean)))
-    if valid_col:
-        converted = F.when(F.col(valid_col), converted).otherwise(F.col(value_col))
-    return j.withColumn(out_col, converted).drop("_im", "_iv")
+        F.col("_iv") != 0.0, (F.lit(1.0) / F.col("_iv")) * (F.col(value_col) - F.col("_im"))
+    ).otherwise(F.lit(0.0))
+    return (
+        df.crossJoin(maybe_broadcast(sel))
+        .withColumn(f"{value_col}_norm", converted)
+        .drop("_im", "_iv")
+    )
 
 
 def winsorize(
@@ -104,9 +79,9 @@ def winsorize(
     q_lo: float = 0.05,
     q_hi: float = 0.95,
     group_cols: list[str] | None = None,
-    out_col: str | None = None,
 ) -> DataFrame:
-    """Clip ``value_col`` to its exact [q_lo, q_hi] percentile bounds.
+    """Clip ``value_col`` to its exact [q_lo, q_hi] percentile bounds, as
+    ``{value_col}_w``.
 
     The outlier-capping stage of a feature pipeline (the reference trims
     by percentile range before computing statistics,
@@ -117,7 +92,6 @@ def winsorize(
     table is one row (global) or one per group — broadcast back, fact
     table shuffles zero times in the global case.
     """
-    out_col = out_col or f"{value_col}_w"
     aggs = [
         F.expr(f"percentile({value_col}, {float(q_lo)})").alias("_lo"),
         F.expr(f"percentile({value_col}, {float(q_hi)})").alias("_hi"),
@@ -129,7 +103,7 @@ def winsorize(
         bounds = df.agg(*aggs)
         j = df.crossJoin(maybe_broadcast(bounds))
     clipped = F.least(F.greatest(F.col(value_col), F.col("_lo")), F.col("_hi"))
-    return j.withColumn(out_col, clipped).drop("_lo", "_hi")
+    return j.withColumn(f"{value_col}_w", clipped).drop("_lo", "_hi")
 
 
 def all_same_filter(
@@ -152,13 +126,10 @@ def robust_outliers(
     df: DataFrame,
     value_col: str,
     group_cols: list[str] | None = None,
-    threshold: float = 3.5,
-    z_col: str = "robust_z",
-    flag_col: str = "is_outlier",
 ) -> DataFrame:
     """Median/MAD outlier scoring (Iglewicz-Hoaglin modified z-score):
-    ``z = 0.6745 * (x - median) / MAD``, outlier when ``|z| > threshold``
-    (3.5 is the published default). Robust where the mean/std z-score is
+    ``z = 0.6745 * (x - median) / MAD`` in ``robust_z``, ``is_outlier`` when
+    ``|z| > 3.5`` (the published threshold). Robust where the mean/std z-score is
     not: a handful of corrupt 10^9-length documents cannot drag the
     center or the scale.
 
@@ -180,11 +151,11 @@ def robust_outliers(
         F.col("_mad") > 0,
         F.lit(0.6745) * (F.col(value_col) - F.col("_med")) / F.col("_mad"),
     )
-    d = d.withColumn(z_col, z)
-    flag = F.when(F.col("_mad") > 0, F.abs(F.col(z_col)) > F.lit(float(threshold))).otherwise(
+    d = d.withColumn("robust_z", z)
+    flag = F.when(F.col("_mad") > 0, F.abs(F.col("robust_z")) > F.lit(3.5)).otherwise(
         F.col("_ad") > 0
     )
-    return d.withColumn(flag_col, flag).drop("_med", "_mad", "_ad")
+    return d.withColumn("is_outlier", flag).drop("_med", "_mad", "_ad")
 
 
 def population_stability(

@@ -21,8 +21,8 @@ Scale shapes (all pure Catalyst — zero Python in any path):
   ~1000 half-lives; instead each (key, time-chunk) computes a local decayed
   prefix with chunk-anchored exponents (bounded by the chunk width), and
   chunk totals — one tiny row per (key, chunk) — are decayed across chunks
-  with a bounded-lookback fold (contributions older than ``max_back``
-  chunks are below 2^-128 of a chunk total: under double ulp at any
+  with a bounded-lookback fold (contributions older than 128 half-lives
+  of the longest horizon are below 2^-128 of a chunk total: under double ulp at any
   reportable precision, and *mathematically* under any 6-decimal rounding).
 - ``past_target_encode``: expanding strictly-past category statistics.
   Categories are the ultimate hot keys (``role`` has ~5 values over the
@@ -39,6 +39,7 @@ order places it.
 
 from __future__ import annotations
 
+import math
 from datetime import datetime
 
 from pyspark.sql import Column, DataFrame
@@ -64,33 +65,6 @@ def _t_us(ts_col: str) -> Column:
     frames. NTZ arithmetic: ``unix_micros(cast("timestamp"))`` localized
     the wall time in the session timezone (r4 non-UTC gate)."""
     return ntz_epoch_us(ts_col)
-
-
-def _trailing_frame(
-    df: DataFrame,
-    key: str,
-    ts_col: str,
-    chunk_seconds: float | None,
-    carry_seconds: float | None,
-) -> tuple[DataFrame, WindowSpec]:
-    """``df`` with the ``_tus`` order key, and the (key, _tus) window spec
-    of a trailing RANGE frame. With ``chunk_seconds`` the key is
-    time-chunk salted: rows in the trailing ``carry_seconds`` of a chunk
-    also serve the next chunk's look-back (``skew.carry_rows``); they
-    contribute there but never emit (:func:`_emit_trailing`)."""
-    d = df.withColumn("_tus", _t_us(ts_col))
-    if chunk_seconds is None:
-        return d, Window.partitionBy(key).orderBy("_tus")
-    d = carry_rows(
-        d, [key], F.col("_tus"), int(chunk_seconds * US), int(carry_seconds * US)
-    )
-    return d, Window.partitionBy(key, CHUNK_KEY).orderBy("_tus")
-
-
-def _emit_trailing(out: DataFrame, chunk_seconds: float | None) -> DataFrame:
-    if chunk_seconds is not None:
-        out = keep_own_chunk(out).drop(CHUNK_KEY)
-    return out.drop("_tus")
 
 
 def trailing_time_window(
@@ -123,7 +97,14 @@ def trailing_time_window(
             f"chunk_seconds={chunk_seconds} must cover the longest trailing "
             f"window {w_max}s — a carry row only reaches the adjacent chunk"
         )
-    out, spec = _trailing_frame(df, key, ts_col, chunk_seconds, w_max)
+    out = df.withColumn("_tus", _t_us(ts_col))
+    if chunk_seconds is None:
+        spec = Window.partitionBy(key).orderBy("_tus")
+    else:
+        # rows in the trailing w_max of a chunk also serve the next chunk's
+        # look-back (skew.carry_rows); they contribute there but never emit
+        out = carry_rows(out, [key], F.col("_tus"), int(chunk_seconds * US), int(w_max * US))
+        spec = Window.partitionBy(key, CHUNK_KEY).orderBy("_tus")
     cols: list[Column] = []
     for w_s in window_seconds:
         frame = spec.rangeBetween(-int(w_s * US), hi)
@@ -139,7 +120,10 @@ def trailing_time_window(
             if a == "count":
                 agg_col = agg_col.cast("long")
             cols.append(agg_col.alias(f"{value_col}_{a}_{tag}s"))
-    return _emit_trailing(out.select("*", *cols), chunk_seconds)
+    out = out.select("*", *cols)
+    if chunk_seconds is not None:
+        out = keep_own_chunk(out).drop(CHUNK_KEY)
+    return out.drop("_tus")
 
 
 def time_decayed_sum(
@@ -152,7 +136,6 @@ def time_decayed_sum(
     out_col: str | None = None,
     strict_past: bool = True,
     chunk_half_lives: int = 32,
-    max_back: int | None = None,
 ) -> DataFrame:
     """Exact exponentially-decayed sum of the key's past values:
     ``sum_i v_i * 2^(-(t - t_i)/half_life)`` over rows strictly earlier in
@@ -171,9 +154,9 @@ def time_decayed_sum(
        C/hl ≤ ``chunk_half_lives`` — ``2**x`` stays in range.
     2. per-(key, chunk) totals anchored at the chunk END (one tiny row per
        chunk, one column per horizon) are folded across the previous
-       ``max_back`` PRESENT chunks with explicit ``2^(-(Δchunk-1)·C/hl)``
-       factors. ``max_back`` defaults to ≥128 half-lives of the LONGEST
-       horizon; present chunks farther back contribute < 2^-128 of a chunk
+       PRESENT chunks that span 128 half-lives of the LONGEST horizon,
+       with explicit ``2^(-(Δchunk-1)·C/hl)`` factors; present chunks
+       farther back contribute < 2^-128 of a chunk
        total — below double ulp of any result that survives 6-decimal
        rounding.
 
@@ -197,11 +180,8 @@ def time_decayed_sum(
     )
     c_s = min(hls) * chunk_half_lives  # chunk width in seconds
     k_exps = [c_s / h for h in hls]  # chunk width in each horizon's half-lives
-    if max_back is None:
-        # ≥128 half-lives of the longest horizon (≈ most chunks needed)
-        import math
-
-        max_back = max(1, math.ceil(128 * max(hls) / c_s))
+    # ≥128 half-lives of the longest horizon (≈ most chunks needed)
+    max_back = max(1, math.ceil(128 * max(hls) / c_s))
     two = F.lit(2.0)
     d = df.withColumn("_t", _t_us(ts_col) / F.lit(float(US)))
     d = d.withColumn(
@@ -298,17 +278,14 @@ def past_target_encode(
     target_col: str,
     ts_col: str = "ts",
     tiebreak_col: str = "turn_idx",
-    prior: float = 0.0,
-    prior_weight: float = 0.0,
     out_col: str = "target_enc",
     chunk_seconds: float | None = 3600.0,
 ) -> DataFrame:
-    """Leakage-free categorical target encoding: for each row, the smoothed
-    mean of ``target_col`` over all STRICTLY earlier rows (global
-    (ts, tiebreak) order) of the same category —
-    ``(past_sum + prior_weight·prior) / (past_count + prior_weight)``.
-    With ``prior_weight = 0`` rows with no history get NULL (never a
-    fabricated value). Adds ``{out}`` and ``{out}_n`` (the past count).
+    """Leakage-free categorical target encoding: for each row, the mean of
+    ``target_col`` over all STRICTLY earlier rows (global (ts, tiebreak)
+    order) of the same category, ``past_sum / past_count``. Rows with no
+    history get NULL (never a fabricated value). Adds ``{out}`` and
+    ``{out}_n`` (the past count).
 
     Zero temporal leakage by construction: the frame ends at -1, so the
     row's own target — and anything later — never feeds its encoding; ties
@@ -322,7 +299,6 @@ def past_target_encode(
     asserts it) with tasks bounded by chunk width. ``chunk_seconds=None``
     falls back to the plain single-partition-per-category window.
     """
-    pw = float(prior_weight)
     d = df.withColumn("_t", _t_us(ts_col))
     # typed zero: a DECIMAL target keeps EXACT (order-independent) sums all
     # the way through the two-phase merge — callers needing bit-identical
@@ -334,8 +310,7 @@ def past_target_encode(
     pcnt = F.count(target_col).over(w).cast("long")
     if chunk_seconds is not None:
         psum, pcnt = psum + F.col("_osum"), pcnt + F.col("_ocnt")
-    denom = pcnt + F.lit(pw)
-    enc = F.when(denom > 0, (psum + F.lit(pw * prior)) / denom)
+    enc = F.when(pcnt > 0, psum / pcnt.cast("double"))
     out = d.withColumn(out_col, enc).withColumn(f"{out_col}_n", pcnt)
     return out.drop("_t", CHUNK_KEY, "_osum", "_ocnt")
 
@@ -389,7 +364,6 @@ def temporal_split(
     test_start,
     ts_col: str = "ts",
     embargo_seconds: float = 0.0,
-    out_col: str = "split",
 ) -> DataFrame:
     """Purged time-based train/test split: rows before
     ``test_start - embargo`` are ``train``, rows at/after ``test_start``
@@ -412,7 +386,7 @@ def temporal_split(
     ts = F.col(ts_col).cast("timestamp_ntz")
     emb_lo = start - F.make_interval(secs=F.lit(float(embargo_seconds)))
     return df.withColumn(
-        out_col,
+        "split",
         F.when(ts >= start, F.lit("test"))
         .when(ts >= emb_lo, F.lit("embargo"))
         .otherwise(F.lit("train")),
@@ -424,8 +398,6 @@ def time_series_folds(
     ts_col: str = "ts",
     n_folds: int = 5,
     embargo_seconds: float = 0.0,
-    fold_col: str = "fold",
-    role_col: str = "role",
 ) -> DataFrame:
     """Expanding-window K-fold cross-validation assignment with an
     embargo purge (the leak-free CV split for temporal features —
@@ -472,25 +444,25 @@ def time_series_folds(
         F.transform(
             F.sequence(F.lit(2), F.lit(n_folds)),
             lambda f: F.struct(
-                f.alias(fold_col),
+                f.alias("fold"),
                 F.when(F.col("_tile") == f, F.lit("valid"))
                 .when(
                     F.col("_tsec")
                     <= F.element_at(F.col("_cuts"), f - F.lit(1)) - emb,
                     F.lit("train"),
                 )
-                .alias(role_col),
+                .alias("role"),
             ),
         ),
-        lambda m: m[role_col].isNotNull(),
+        lambda m: m["role"].isNotNull(),
     )
     out = (
         j.withColumn("_tile", tile)
         .withColumn("_m", F.explode(memberships))
         .select(
             *df.columns,
-            F.col(f"_m.{fold_col}").alias(fold_col),
-            F.col(f"_m.{role_col}").alias(role_col),
+            F.col("_m.fold").alias("fold"),
+            F.col("_m.role").alias("role"),
         )
     )
     return out
@@ -504,7 +476,6 @@ def cusum_scores(
     ref: DataFrame,
     k: float = 0.5,
     h: float = 5.0,
-    eps: float = 1e-12,
 ) -> DataFrame:
     """Two-sided CUSUM change-point scores per entity series — Page (1954),
     the sequential drift detector that flags a sustained mean shift of
@@ -553,7 +524,7 @@ def cusum_scores(
     # fail loudly on a flat reference instead of emitting inf scores
     base = base.withColumn(
         "_sg",
-        F.when(F.col("_sg") > F.lit(float(eps)), F.col("_sg")).otherwise(
+        F.when(F.col("_sg") > F.lit(1e-12), F.col("_sg")).otherwise(
             F.raise_error(
                 F.concat(
                     F.lit("cusum_scores: degenerate reference sigma "),
@@ -594,7 +565,6 @@ def time_decayed_mean(
     out_col: str | None = None,
     strict_past: bool = True,
     chunk_half_lives: int = 32,
-    max_back: int | None = None,
 ) -> DataFrame:
     """Exponentially-weighted mean of the key's past values — the EWMA
     feature-store staple: ``decayed_sum(v) / decayed_sum(1)``. Both
@@ -608,13 +578,13 @@ def time_decayed_mean(
     d = time_decayed_sum(
         df, value_col, half_life_seconds, key, ts_col, tiebreak_col,
         out_col=num, strict_past=strict_past,
-        chunk_half_lives=chunk_half_lives, max_back=max_back,
+        chunk_half_lives=chunk_half_lives,
     )
     d = d.withColumn("_one", F.lit(1.0))
     d = time_decayed_sum(
         d, "_one", half_life_seconds, key, ts_col, tiebreak_col,
         out_col=den, strict_past=strict_past,
-        chunk_half_lives=chunk_half_lives, max_back=max_back,
+        chunk_half_lives=chunk_half_lives,
     )
     return d.withColumn(
         out,
@@ -629,7 +599,6 @@ def rolling_trend(
     value_col: str,
     window_rows: int,
     strict_past: bool = True,
-    out_col: str = "trend",
 ) -> DataFrame:
     """Per-entity least-squares TREND (slope) of ``value_col`` over the
     trailing ``window_rows`` observations, regressed on the integer
@@ -671,7 +640,7 @@ def rolling_trend(
     denom = (n * sxx - sx * sx).cast("double")
     slope = (n.cast("double") * sxy - sx.cast("double") * sy) / denom
     return df.withColumn(
-        out_col, F.when((n >= 2) & (denom > 0), slope)
+        "trend", F.when((n >= 2) & (denom > 0), slope)
     )
 
 
@@ -714,11 +683,7 @@ def seasonal_baseline(
     slot_seconds: float = 3600.0,
     period_seconds: float = 86400.0,
     tiebreak_col: str | None = None,
-    window_occurrences: int | None = None,
     strict_past: bool = True,
-    slot_col: str = "slot",
-    out_col: str = "seasonal_mean",
-    count_col: str = "n_slot_past",
 ) -> DataFrame:
     """Leak-free SEASONAL baseline: the trailing mean of ``value_col``
     over this entity's PAST observations in the SAME phase slot
@@ -738,33 +703,26 @@ def seasonal_baseline(
     per-entity window.
 
     ``strict_past`` excludes the current row (zero temporal leakage,
-    the default); ``window_occurrences`` bounds the frame to the last k
-    same-slot observations instead of the full expanding history.
-    Emits the slot, the count of past same-slot observations, and their
+    the default). Emits the slot, the count of past same-slot observations, and their
     mean (NULL when no past — never 0/0).
     """
     by_cols = [by] if isinstance(by, str) else list(by)
     upper = -1 if strict_past else 0
-    lower = (
-        Window.unboundedPreceding
-        if window_occurrences is None
-        else -(int(window_occurrences) - (0 if strict_past else 1))
-    )
     order = [F.col(ts_col)] + (
         [F.col(tiebreak_col)] if tiebreak_col is not None else []
     )
     slot = seasonal_slot(ts_col, slot_seconds, period_seconds)
     w = (
-        Window.partitionBy(*by_cols, slot_col)
+        Window.partitionBy(*by_cols, "slot")
         .orderBy(*order)
-        .rowsBetween(lower, upper)
+        .rowsBetween(Window.unboundedPreceding, upper)
     )
     y = F.col(value_col).cast("double")
     n = F.count(y).over(w)
     return (
-        df.withColumn(slot_col, slot)
-        .withColumn(count_col, n)
-        .withColumn(out_col, F.when(n > 0, F.sum(y).over(w) / n))
+        df.withColumn("slot", slot)
+        .withColumn("n_slot_past", n)
+        .withColumn("seasonal_mean", F.when(n > 0, F.sum(y).over(w) / n))
     )
 
 
@@ -776,7 +734,6 @@ def rolling_autocorr(
     lag: int = 1,
     window_rows: int = 16,
     strict_past: bool = True,
-    out_col: str = "autocorr",
 ) -> DataFrame:
     """Per-entity lag-``lag`` AUTOCORRELATION of ``value_col`` over the
     trailing ``window_rows`` observations — "is this conversation's
@@ -824,7 +781,7 @@ def rolling_autocorr(
     vz = nd * szz - sz * sz
     r = (nd * syz - sy * sz) / F.sqrt(vy * vz)
     return src.withColumn(
-        out_col, F.when((n >= 2) & (vy > 0) & (vz > 0), r)
+        "autocorr", F.when((n >= 2) & (vy > 0) & (vz > 0), r)
     ).drop("_p")
 
 
@@ -834,8 +791,6 @@ def time_since_event(
     key: str = "conv_id",
     ts_col: str = "ts",
     out_col: str = "since_s",
-    chunk_seconds: float | None = None,
-    max_lookback_seconds: float | None = None,
 ) -> DataFrame:
     """Seconds since the entity's most recent STRICTLY-PAST row where
     ``mark`` holds (NULL before the first such row) — the
@@ -850,31 +805,12 @@ def time_since_event(
     stack). The reference's analog is frame-relative position lookups in
     one loaded array (``sampling_data.py:29-42``); here the "array" is a
     10^12-row table and the lookup is a frame.
-
-    ``chunk_seconds`` (requires ``max_lookback_seconds``) time-chunk-salts
-    mega-entities exactly like :func:`trailing_time_window`: rows in the
-    trailing lookback of a chunk are carried into the next, so recency is
-    exact up to ``max_lookback_seconds`` (older marks report NULL — the
-    caller declared them irrelevant by picking the horizon).
     """
-    if chunk_seconds is not None and (
-        max_lookback_seconds is None or max_lookback_seconds > chunk_seconds
-    ):
-        raise ValueError(
-            "chunked time_since_event needs max_lookback_seconds <= "
-            f"chunk_seconds (got {max_lookback_seconds} vs {chunk_seconds})"
-            " — a carry row only reaches the adjacent chunk"
-        )
-    out, spec = _trailing_frame(df, key, ts_col, chunk_seconds, max_lookback_seconds)
-    lo = (
-        Window.unboundedPreceding
-        if max_lookback_seconds is None
-        else -int(max_lookback_seconds * US)
-    )
-    frame = spec.rangeBetween(lo, -1)
+    out = df.withColumn("_tus", _t_us(ts_col))
+    frame = Window.partitionBy(key).orderBy("_tus").rangeBetween(Window.unboundedPreceding, -1)
     last_us = F.max(F.when(mark, F.col("_tus"))).over(frame)
     out = out.withColumn(out_col, (F.col("_tus") - last_us) / F.lit(float(US)))
-    return _emit_trailing(out, chunk_seconds)
+    return out.drop("_tus")
 
 
 def future_outcomes(

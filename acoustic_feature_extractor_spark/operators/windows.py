@@ -35,7 +35,6 @@ def with_context_features(
     key: str = "conv_id",
     order: str = "turn_idx",
     defaults: dict[str, object] | None = None,
-    offsets: tuple[int, ...] = (1,),
 ) -> DataFrame:
     """Add prev_/next_ columns for each requested column.
 
@@ -48,35 +47,13 @@ def with_context_features(
     out = df
     for col in cols:
         default = defaults.get(col)
-        for off in offsets:
-            prev = F.lag(col, off).over(w)
-            nxt = F.lead(col, off).over(w)
-            if default is not None:
-                prev = F.coalesce(prev, F.lit(default))
-                nxt = F.coalesce(nxt, F.lit(default))
-            suffix = "" if off == 1 else str(off)
-            out = out.withColumn(f"prev{suffix}_{col}", prev).withColumn(
-                f"next{suffix}_{col}", nxt
-            )
+        prev = F.lag(col).over(w)
+        nxt = F.lead(col).over(w)
+        if default is not None:
+            prev = F.coalesce(prev, F.lit(default))
+            nxt = F.coalesce(nxt, F.lit(default))
+        out = out.withColumn(f"prev_{col}", prev).withColumn(f"next_{col}", nxt)
     return out
-
-
-def rolling_frame(
-    frame_length: int, centered: bool = True
-) -> tuple[int, int]:
-    """rowsBetween bounds replicating the reference's centering.
-
-    ``degenerate`` center-pads by ``frame_length//2`` on the left and
-    ``frame_length - 1 - frame_length//2`` on the right
-    (``sampling_data.py:150-158``), i.e. frame *i* covers source rows
-    ``[i - L//2, i + L - 1 - L//2]``.
-    """
-    if centered:
-        lo = -(frame_length // 2)
-        hi = frame_length - 1 - frame_length // 2
-    else:
-        lo, hi = 0, frame_length - 1
-    return lo, hi
 
 
 def degenerate(
@@ -87,9 +64,13 @@ def degenerate(
     aggs: tuple[str, ...] = DEGENERATE_AGGS,
     key: str = "conv_id",
     order: str = "turn_idx",
-    centered: bool = True,
 ) -> DataFrame:
     """Rolling min/max/mean/median over a centered frame, then hop-downsample.
+
+    The frame centers as the reference pads: ``frame_length//2`` rows on the
+    left and ``frame_length - 1 - frame_length//2`` on the right
+    (``sampling_data.py:150-158``), i.e. frame *i* covers source rows
+    ``[i - L//2, i + L - 1 - L//2]``.
 
     ``hop_length > 1`` keeps every hop-th row (output rate = rate/hop, the
     reference's ``sampling_data.py:172-175``). Median is exact
@@ -99,8 +80,8 @@ def degenerate(
     ``pad_value`` semantics in tests (shrunken windows equal the reference
     when padding_value participates; see tests/test_windows.py).
     """
-    lo, hi = rolling_frame(frame_length, centered)
-    w = ordered_window(key, order).rowsBetween(lo, hi)
+    lo = -(frame_length // 2)
+    w = ordered_window(key, order).rowsBetween(lo, frame_length - 1 + lo)
     exprs: dict[str, Column] = {}
     for a in aggs:
         if a == "min":
@@ -127,7 +108,6 @@ def pad_segments_to_max(
     key: str = "conv_id",
     segment_col: str = "session_id",
     order: str = "turn_idx",
-    pad_value: float | None = None,
 ) -> DataFrame:
     """Pad every segment of an entity to the entity's max segment length
     (W7 — ``SamplingData.pad`` / length alignment,
@@ -135,8 +115,7 @@ def pad_segments_to_max(
 
     The reference pads shorter sources to the longest with an estimated
     padding value taken from the sequence edge; here the pad value is the
-    segment's LAST value (edge-consensus analog) unless ``pad_value`` is
-    given. Output rows: ``(key, segment, pos, value, is_pad)`` where
+    segment's LAST value (edge-consensus analog). Output rows: ``(key, segment, pos, value, is_pad)`` where
     ``pos`` is the 0-based position inside the segment — all segments of an
     entity end up the same length.
 
@@ -153,14 +132,13 @@ def pad_segments_to_max(
     )
     w_key = Window.partitionBy(key)
     sizes = sizes.withColumn("_max_n", F.max("_n").over(w_key))
-    fill = F.lit(pad_value) if pad_value is not None else F.col("_pad_v")
     pads = (
         sizes.where(F.col("_n") < F.col("_max_n"))
         .select(
             key,
             segment_col,
             F.explode(F.sequence(F.col("_n"), F.col("_max_n") - 1)).alias("_pos"),
-            fill.alias(value_col),
+            F.col("_pad_v").alias(value_col),
         )
         .withColumn("is_pad", F.lit(True))
     )
@@ -175,8 +153,6 @@ def topk_per_group(
     group: str | list[str],
     order_by: list,
     k: int,
-    salt: int = 32,
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Exact top-k per group, two-phase salted — the scale-safe form of
     ``row_number().over(partitionBy(group)) <= k``.
@@ -186,19 +162,19 @@ def topk_per_group(
     tasks). Phase 1 ranks inside (group, salt-bucket) — same shuffle
     volume, but task size is bounded by the bucket — and keeps each
     bucket's top k. Phase 2 re-ranks the survivors per group: at most
-    ``salt × k`` rows per group, a tiny window. The union of per-bucket
+    ``32 × k`` rows per group, a tiny window. The union of per-bucket
     top-k provably contains the global top-k (any global winner is also a
     winner inside its own bucket), so the result is EXACT — provided
     ``order_by`` is a TOTAL order (add unique tie-break columns; with
     ties the local prune could otherwise drop a row an arbitrary global
     tie-pick would have kept).
 
-    The salt is ``spark_partition_id()``: free (no hash evaluation), and
+    The salt is ``spark_partition_id() % 32``: free (no hash evaluation), and
     any assignment whatsoever yields the same final result, so plan
     determinism is not required of it.
     """
     groups = [group] if isinstance(group, str) else list(group)
-    d = df.withColumn("_salt", F.spark_partition_id() % F.lit(max(int(salt), 1)))
+    d = df.withColumn("_salt", F.spark_partition_id() % 32)
     w1 = Window.partitionBy(*groups, "_salt").orderBy(*order_by)
     local = (
         d.withColumn("_lr", F.row_number().over(w1))
@@ -207,7 +183,7 @@ def topk_per_group(
     )
     w2 = Window.partitionBy(*groups).orderBy(*order_by)
     return (
-        local.withColumn(rank_col, F.row_number().over(w2))
-        .where(F.col(rank_col) <= k)
+        local.withColumn("rank", F.row_number().over(w2))
+        .where(F.col("rank") <= k)
         .drop("_salt")
     )

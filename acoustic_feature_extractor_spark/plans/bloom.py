@@ -41,12 +41,12 @@ DEFAULT_N_BITS = 1 << 20
 DEFAULT_K = 5
 
 
-def _hash_pos(cols: list[str], i: int, seed: int, n_bits: int) -> Column:
+def _hash_pos(cols: list[str], i: int, n_bits: int) -> Column:
     """Bit position i of the composite key: xxhash64 over the key columns
     with a per-probe seed column appended (k independent-enough hashes
     from one family), folded into [0, n_bits)."""
     return F.pmod(
-        F.xxhash64(*[F.col(c) for c in cols], F.lit(seed + i)), F.lit(int(n_bits))
+        F.xxhash64(*[F.col(c) for c in cols], F.lit(42 + i)), F.lit(int(n_bits))
     ).cast("long")
 
 
@@ -55,7 +55,6 @@ def key_bitmap_words(
     on: str | list[str],
     n_bits: int = DEFAULT_N_BITS,
     k: int = DEFAULT_K,
-    seed: int = 42,
 ) -> list[int]:
     """Fold the key set into bloom-bitmap words (python list, len
     ``n_bits/64``). One distributed pass: explode each key to its k bit
@@ -69,7 +68,7 @@ def key_bitmap_words(
         raise ValueError(f"need at least one probe hash, got k={k}")
     on_cols = [on] if isinstance(on, str) else list(on)
     pos = F.explode(
-        F.array(*[_hash_pos(on_cols, i, seed, n_bits) for i in range(int(k))])
+        F.array(*[_hash_pos(on_cols, i, n_bits) for i in range(int(k))])
     ).alias("_pos")
     words = (
         keys.select(pos)
@@ -95,7 +94,6 @@ def bloom_prefilter(
     on: str | list[str],
     n_bits: int = DEFAULT_N_BITS,
     k: int = DEFAULT_K,
-    seed: int = 42,
 ) -> DataFrame:
     """Rows of ``fact`` whose key MIGHT be in ``keys`` (superset of the
     exact semi join; false positives only, never false negatives — the
@@ -113,7 +111,7 @@ def bloom_prefilter(
     aligned = keys.select(
         *[F.col(c).cast(fact.schema[c].dataType).alias(c) for c in on_cols]
     )
-    words = key_bitmap_words(aligned, on_cols, n_bits=n_bits, k=k, seed=seed)
+    words = key_bitmap_words(aligned, on_cols, n_bits=n_bits, k=k)
     spark = fact.sparkSession
     bitmap = spark.createDataFrame([(words,)], "_bloom array<bigint>")
     probed = fact.crossJoin(F.broadcast(bitmap))
@@ -123,7 +121,7 @@ def bloom_prefilter(
     pred = None
     for i in range(int(k)):
         probed = probed.withColumn(
-            f"_bp{i}", _hash_pos(on_cols, i, seed, n_bits).cast("int")
+            f"_bp{i}", _hash_pos(on_cols, i, n_bits).cast("int")
         )
         test = F.expr(
             f"(shiftrightunsigned(element_at(_bloom, "
@@ -139,7 +137,6 @@ def bloom_semi_join(
     on: str | list[str],
     n_bits: int = DEFAULT_N_BITS,
     k: int = DEFAULT_K,
-    seed: int = 42,
 ) -> DataFrame:
     """EXACT semi join with a bloom prefilter: identical rows to
     ``fact.join(keys, on, "semi")``, but the shuffle into the exact join
@@ -147,5 +144,5 @@ def bloom_semi_join(
     of the whole fact side. The exact join scrubs the false positives, so
     correctness never depends on the bitmap."""
     on_cols = [on] if isinstance(on, str) else list(on)
-    pre = bloom_prefilter(fact, keys, on_cols, n_bits=n_bits, k=k, seed=seed)
+    pre = bloom_prefilter(fact, keys, on_cols, n_bits=n_bits, k=k)
     return pre.join(keys.select(*on_cols).distinct(), on_cols, "semi")

@@ -60,13 +60,11 @@ def estimated_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def maybe_broadcast(
-    df: DataFrame, max_bytes: int = DEFAULT_BROADCAST_CAP
-) -> DataFrame:
+def maybe_broadcast(df: DataFrame) -> DataFrame:
     """``F.broadcast(df)`` iff the optimizer's size estimate is at most
-    ``max_bytes``; the unmodified plan (AQE decides) otherwise or when no
-    estimate exists."""
+    ``DEFAULT_BROADCAST_CAP``; the unmodified plan (AQE decides) otherwise
+    or when no estimate exists."""
     est = estimated_size_bytes(df)
-    if est is not None and est <= max_bytes:
+    if est is not None and est <= DEFAULT_BROADCAST_CAP:
         return F.broadcast(df)
     return df

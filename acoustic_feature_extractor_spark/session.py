@@ -23,27 +23,25 @@ def _default_driver_mem() -> str:
 def get_spark(
     app_name: str = "afe_spark",
     cores: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
     ``cores`` may be an int (→ ``local[n]``), ``"*"``, or None (env
-    ``SPARK_GRAFT_CPUS`` or all cores). ``shuffle_partitions`` defaults to
-    2× cores — enough tasks for AQE to coalesce, not the 200 default that
-    over-parallelizes local runs. The driver heap is ``SPARK_DRIVER_MEM``
-    or, unset, half of the host's memory.
+    ``SPARK_GRAFT_CPUS`` or all cores). Shuffle partitions are 2× cores
+    (at least 8) — enough tasks for AQE to coalesce, not the 200 default
+    that over-parallelizes local runs; ``extra_conf`` overrides any
+    setting. The driver heap is ``SPARK_DRIVER_MEM`` or, unset, half of
+    the host's memory.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS") or (os.cpu_count() or 4)
     n_cores = os.cpu_count() or 4 if cores == "*" else int(cores)
-    if shuffle_partitions is None:
-        shuffle_partitions = max(2 * n_cores, 8)
 
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(2 * n_cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

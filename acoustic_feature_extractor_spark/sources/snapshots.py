@@ -534,15 +534,11 @@ def _planner_index(table_path: str) -> dict:
     return idx
 
 
-def plan_scan(
-    table_path: str,
-    preds: dict,
-    snapshot_id: int | None = None,
-) -> tuple[list[str], int]:
+def plan_scan(table_path: str, preds: dict) -> tuple[list[str], int]:
     """File-level min/max pruning plan for the conjunctive ranges ``preds``
     (column name → ``(lo, hi)``, ``lo <= col <= hi``; either bound may be
     None, not both): the kept file list (relative paths) and the total
-    file count at that snapshot. Driver-side metadata only — no job, no
+    file count at the current snapshot. Driver-side metadata only — no job, no
     footer reads (stats come from the log; each data dir is written by
     exactly one snapshot, whose entry carries its files' stats).
 
@@ -575,7 +571,7 @@ def plan_scan(
         if lo is None and hi is None:
             raise ValueError(f"predicate on {c!r} needs at least one bound")
     idx = _planner_index(table_path)
-    target = _snapshot(idx["snaps"], snapshot_id)
+    target = idx["snaps"][-1]
     stats = idx["stats"]
     keys = {
         c: (
@@ -649,7 +645,6 @@ def read_where(
     spark: SparkSession,
     table_path: str,
     preds: dict,
-    snapshot_id: int | None = None,
 ) -> DataFrame:
     """Conjunctive-range read with file-level data skipping: open ONLY the
     files :func:`plan_scan` keeps for ``preds``, then apply every residual
@@ -663,8 +658,8 @@ def read_where(
     snapshot's logged schema, with every merge's deletes applied (a merge
     dir whose files were pruned still deletes, :func:`_scan`); an empty
     keep-set returns an empty frame with that schema."""
-    kept, _ = plan_scan(table_path, preds, snapshot_id=snapshot_id)
-    tgt = _snapshot(_planner_index(table_path)["snaps"], snapshot_id)
+    kept, _ = plan_scan(table_path, preds)
+    tgt = _planner_index(table_path)["snaps"][-1]
     df = _scan(spark, table_path, tgt, kept or tgt.dirs)
     if not kept:
         df = df.limit(0)
@@ -677,8 +672,8 @@ def read_where(
     return df
 
 
-def table_profile(table_path: str, snapshot_id: int | None = None) -> dict:
-    """Table-level column profile — ``{col: [min, max, n_nulls, n_rows]}``
+def table_profile(table_path: str) -> dict:
+    """Current table-level column profile — ``{col: [min, max, n_nulls, n_rows]}``
     — aggregated ENTIRELY from the snapshot log's per-file stats: zero
     data scan, zero footer reads, O(files) driver work. The
     warehouse-monitoring primitive (schema-drift checks, freshness/nullity
@@ -698,7 +693,7 @@ def table_profile(table_path: str, snapshot_id: int | None = None) -> dict:
     deleted, and only a scan could tell which. :func:`compact` folds the
     deletes and restores an exact profile."""
     idx = _planner_index(table_path)
-    target = _snapshot(idx["snaps"], snapshot_id)
+    target = idx["snaps"][-1]
     if target.delete_keys:
         return {}
     stats = idx["stats"]
@@ -915,12 +910,7 @@ def merge_upsert(
     return snap
 
 
-def compact(
-    spark: SparkSession,
-    table_path: str,
-    partitions: int | None = None,
-    lineage: dict | None = None,
-) -> Snapshot:
+def compact(spark: SparkSession, table_path: str) -> Snapshot:
     """Small-file compaction: rewrite the CURRENT snapshot's live rows
     into one dir and publish a ``compact`` snapshot (row-for-row identical
     — verified by observation — so readers see no data change, just fewer,
@@ -928,30 +918,25 @@ def compact(
     compacted snapshot has no ``delete_keys``. Old dirs stay until
     :func:`expire`, so time travel across the compaction keeps working.
 
-    Default sizing needs no shuffle: the merged-scan partitioning already
-    targets ``spark.sql.files.maxPartitionBytes`` per split, so writing it
-    straight back emits files of about that size. Pass ``partitions`` to
-    force a specific output file count (adds one exchange).
+    Sizing needs no shuffle: the merged-scan partitioning already targets
+    ``spark.sql.files.maxPartitionBytes`` per split, so writing it straight
+    back emits files of about that size.
     """
     with _writer_lock(table_path):
         snaps = _load_log(table_path)
         if not snaps:
             raise FileNotFoundError(f"no snapshots at {table_path}")
         head = snaps[-1]
-        if len(head.dirs) <= 1 and partitions is None:
-            # one dir and no explicit file-count request: nothing to merge.
-            # With partitions= the single dir may still hold many small
-            # files (a wide write), so the rewrite proceeds.
-            return head
+        if len(head.dirs) <= 1:
+            return head  # one dir: nothing to merge
         sid = head.snapshot_id + 1
         rel = f"data/snap-{sid}"
         # the live rows at the logged schema: merges' deletes apply, and
         # dirs written before an evolve=True append surface its columns as
         # NULL instead of an arbitrary footer's schema dropping them
         old = _scan(spark, table_path, head, head.dirs)
-        df = old if partitions is None else old.repartition(partitions)
         obs = Observation(f"snap_rows_{sid}")
-        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        old.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite"
         ).parquet(os.path.join(table_path, rel))
         rows = int(obs.get["rows"])
@@ -970,7 +955,7 @@ def compact(
             rows=rows,
             schema=head.schema,
             wall_ts=round(time.time(), 3),
-            lineage={**(lineage or {}), "compacted_dirs": list(head.dirs)},
+            lineage={"compacted_dirs": list(head.dirs)},
             stats=_collect_file_stats(table_path, rel),
         )
         _publish_log(table_path, snaps + [snap])

@@ -77,7 +77,6 @@ def streaming_interval_join(
     by: str = "conv_id",
     max_lag_seconds: float = 300.0,
     watermark: str | None = "10 minutes",
-    suffix: str = "_r",
 ) -> DataFrame:
     """Stream-stream trailing-window join: each left row picks up every
     right row with the same ``by`` key whose event time falls in
@@ -97,18 +96,18 @@ def streaming_interval_join(
     freshness).
 
     Right payload columns come back suffixed; the right event time is
-    ``{on}{suffix}``.
+    ``{on}_r``.
     """
     lag = float(max_lag_seconds)
     payload = [c for c in right.columns if c != by]
     l = left.withWatermark(on, watermark) if watermark is not None else left
     r = right.select(
         F.col(by).alias("_r_by"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in payload],
+        *[F.col(c).alias(f"{c}_r") for c in payload],
     )
     if watermark is not None:
-        r = r.withWatermark(f"{on}{suffix}", watermark)
-    rts = F.col(f"{on}{suffix}")
+        r = r.withWatermark(f"{on}_r", watermark)
+    rts = F.col(f"{on}_r")
     cond = (
         (F.col(by) == F.col("_r_by"))
         & (rts >= F.col(on) - F.expr(f"INTERVAL '{lag}' SECOND"))
@@ -122,7 +121,6 @@ def streaming_asof_enrich(
     dim_intervals: DataFrame,
     on: str = "ts",
     by: str = "conv_id",
-    suffix: str = "_dim",
 ) -> DataFrame:
     """Enrich each streamed row with the dimension row as of its own
     timestamp (backward as-of, ``<=``): join on entity + validity range.
@@ -133,13 +131,13 @@ def streaming_asof_enrich(
     payload = [c for c in dim_intervals.columns if c not in (by, on, "_valid_to")]
     d = dim_intervals.select(
         F.col(by).alias("_d_by"),
-        F.col(on).alias(f"{on}{suffix}"),
+        F.col(on).alias(f"{on}_dim"),
         F.col("_valid_to"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in payload],
+        *[F.col(c).alias(f"{c}_dim") for c in payload],
     )
     cond = (
         (stream[by] == d["_d_by"])
-        & (stream[on] >= d[f"{on}{suffix}"])
+        & (stream[on] >= d[f"{on}_dim"])
         & (d["_valid_to"].isNull() | (stream[on] < d["_valid_to"]))
     )
     return stream.join(d, cond, "left").drop("_d_by", "_valid_to")

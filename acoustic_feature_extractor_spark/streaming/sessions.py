@@ -19,8 +19,6 @@ def streaming_session_agg(
     stream: DataFrame,
     gap_seconds: float = 300.0,
     watermark: str | None = "10 minutes",
-    key: str = "conv_id",
-    ts: str = "ts",
 ) -> DataFrame:
     """Per-(key, session_window) turn counts with late-data watermarking.
 
@@ -30,13 +28,13 @@ def streaming_session_agg(
     session). ``watermark=None`` skips the watermark (complete-mode
     sinks / TIMESTAMP_NTZ feeds, as in ``streaming_rollup``).
     """
-    src = stream.withWatermark(ts, watermark) if watermark is not None else stream
+    src = stream.withWatermark("ts", watermark) if watermark is not None else stream
     return (
-        src.groupBy(F.session_window(F.col(ts), f"{int(gap_seconds)} seconds"), F.col(key))
+        src.groupBy(F.session_window(F.col("ts"), f"{int(gap_seconds)} seconds"), F.col("conv_id"))
         .agg(
             F.count("*").alias("n_turns"),
-            F.min(ts).alias("session_start"),
-            F.max(ts).alias("session_end"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
         )
     )
 
@@ -44,9 +42,6 @@ def streaming_session_agg(
 def streaming_rollup(
     stream: DataFrame,
     bucket_seconds: float,
-    by: str = "user_id",
-    value_col: str = "value",
-    ts: str = "ts",
     watermark: str | None = "10 minutes",
 ) -> DataFrame:
     """Streaming twin of ``operators/rollup.rollup``: per-(entity,
@@ -63,21 +58,21 @@ def streaming_rollup(
     instead of being silently truncated."""
     if not bucket_seconds > 0:
         raise ValueError(f"bucket_seconds must be > 0, got {bucket_seconds}")
-    v = F.col(value_col)
-    w = F.window(F.col(ts), f"{int(round(float(bucket_seconds) * 1e6))} microseconds")
-    src = stream.withWatermark(ts, watermark) if watermark is not None else stream
+    v = F.col("value")
+    w = F.window(F.col("ts"), f"{int(round(float(bucket_seconds) * 1e6))} microseconds")
+    src = stream.withWatermark("ts", watermark) if watermark is not None else stream
     return (
-        src.groupBy(F.col(by), w.alias("_w"))
+        src.groupBy(F.col("user_id"), w.alias("_w"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(v).alias("sum_v"),
             F.min(v).alias("min_v"),
             F.max(v).alias("max_v"),
-            F.min(ts).alias("first_ts"),
-            F.max(ts).alias("last_ts"),
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
         )
         .select(
-            by,
+            "user_id",
             F.col("_w.start").alias("bucket"),
             "n",
             "sum_v",
@@ -95,9 +90,7 @@ def streaming_distinct_rollup(
     bucket_seconds: float,
     by: str = "user_id",
     value_col: str = "value",
-    ts: str = "ts",
     watermark: str | None = "10 minutes",
-    lgk: int = 14,
 ) -> DataFrame:
     """Streaming twin of ``operators/sketches.distinct_rollup``: per-
     (entity, bucket) HLL sketches over a live feed. The emitted schema is
@@ -108,14 +101,14 @@ def streaming_distinct_rollup(
     Sketch state is bounded: one ~lgk-sized buffer per open (entity,
     bucket), evicted at the watermark."""
     w = F.window(
-        F.col(ts), f"{int(round(float(bucket_seconds) * 1e6))} microseconds"
+        F.col("ts"), f"{int(round(float(bucket_seconds) * 1e6))} microseconds"
     )
-    src = stream.withWatermark(ts, watermark) if watermark is not None else stream
+    src = stream.withWatermark("ts", watermark) if watermark is not None else stream
     return (
         src.groupBy(F.col(by), w.alias("_w"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.hll_sketch_agg(F.col(value_col), F.lit(int(lgk))).alias("sketch"),
+            F.hll_sketch_agg(F.col(value_col), F.lit(14)).alias("sketch"),
         )
         .select(by, F.col("_w.start").alias("bucket"), "n", "sketch")
     )
@@ -127,9 +120,6 @@ def streaming_hist_rollup(
     lo: float,
     hi: float,
     bins: int = 64,
-    by: str = "user_id",
-    value_col: str = "value",
-    ts: str = "ts",
     watermark: str | None = "10 minutes",
 ) -> DataFrame:
     """Streaming twin of ``operators/sketches.hist_rollup``: per-(entity,
@@ -143,18 +133,18 @@ def streaming_hist_rollup(
     w_bin = (float(hi) - float(lo)) / int(bins)
     bin_ = F.least(
         F.greatest(
-            F.floor((F.col(value_col) - F.lit(float(lo))) / F.lit(w_bin)), F.lit(0)
+            F.floor((F.col("value") - F.lit(float(lo))) / F.lit(w_bin)), F.lit(0)
         ),
         F.lit(int(bins) - 1),
     )
     w = F.window(
-        F.col(ts), f"{int(round(float(bucket_seconds) * 1e6))} microseconds"
+        F.col("ts"), f"{int(round(float(bucket_seconds) * 1e6))} microseconds"
     )
     src = stream.withColumn("_bin", bin_)
     if watermark is not None:
-        src = src.withWatermark(ts, watermark)
+        src = src.withWatermark("ts", watermark)
     return (
-        src.groupBy(F.col(by), w.alias("_w"))
+        src.groupBy(F.col("user_id"), w.alias("_w"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             *[
@@ -163,7 +153,7 @@ def streaming_hist_rollup(
             ],
         )
         .select(
-            by,
+            "user_id",
             F.col("_w.start").alias("bucket"),
             "n",
             F.array(*[f"_h{i}" for i in range(int(bins))]).alias("hist"),
@@ -174,9 +164,6 @@ def streaming_hist_rollup(
 def streaming_state_fill(
     stream: DataFrame,
     value_col: str = "tool",
-    key: str = "conv_id",
-    ts: str = "ts",
-    timeout_seconds: int = 0,
 ):
     """Custom stateful operator via ``applyInPandasWithState``: streaming
     forward-fill of the latest non-null ``value_col`` per entity — the
@@ -191,7 +178,7 @@ def streaming_state_fill(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    out_schema = f"{key} string, {ts} timestamp, {value_col} string, filled string"
+    out_schema = f"conv_id string, ts timestamp, {value_col} string, filled string"
     state_schema = "last string"
 
     def fn(key_tuple, pdfs, state: GroupState):
@@ -204,21 +191,21 @@ def streaming_state_fill(
         frames = [pdf for pdf in pdfs if len(pdf)]
         if not frames:
             state.update((last,))
-            yield pd.DataFrame(columns=[key, ts, value_col, "filled"])
+            yield pd.DataFrame(columns=["conv_id", "ts", value_col, "filled"])
             return
-        pdf = pd.concat(frames).sort_values(ts, kind="mergesort")
+        pdf = pd.concat(frames).sort_values("ts", kind="mergesort")
         s = pdf[value_col].ffill()
         if last is not None:
             s = s.fillna(last)
         if len(s) and not pd.isna(s.iloc[-1]):
             last = s.iloc[-1]
-        pdf = pdf[[key, ts, value_col]].copy()
+        pdf = pdf[["conv_id", "ts", value_col]].copy()
         pdf["filled"] = s
         state.update((last,))
         yield pdf
 
     return (
-        stream.groupBy(key)
+        stream.groupBy("conv_id")
         .applyInPandasWithState(
             fn,
             outputStructType=out_schema,
@@ -234,23 +221,19 @@ def streaming_turn_rate(
     window: str = "5 minutes",
     slide: str = "1 minute",
     watermark: str | None = "10 minutes",
-    ts: str = "ts",
 ) -> DataFrame:
     """Sliding-window turn-rate aggregate (ops dashboard shape).
     ``watermark=None`` skips the watermark (complete-mode sinks /
     TIMESTAMP_NTZ feeds, as in ``streaming_rollup``)."""
-    src = stream.withWatermark(ts, watermark) if watermark is not None else stream
+    src = stream.withWatermark("ts", watermark) if watermark is not None else stream
     return (
-        src.groupBy(F.window(F.col(ts), window, slide))
+        src.groupBy(F.window(F.col("ts"), window, slide))
         .agg(F.count("*").alias("n_turns"))
     )
 
 
 def streaming_trailing_context(
     stream: DataFrame,
-    key: str = "conv_id",
-    idx_col: str = "turn_idx",
-    weight_col: str = "n_tokens",
     budget: int = 512,
 ):
     """Streaming twin of ``operators/context.trailing_context``: per-turn
@@ -275,11 +258,11 @@ def streaming_trailing_context(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     out_schema = (
-        f"{key} string, {idx_col} int, ctx_turns bigint, ctx_tokens bigint, "
+        "conv_id string, turn_idx int, ctx_turns bigint, ctx_tokens bigint, "
         "ctx_truncated boolean"
     )
     state_schema = "cum long, n long, base long, cums array<long>"
-    cols = [key, idx_col, "ctx_turns", "ctx_tokens", "ctx_truncated"]
+    cols = ["conv_id", "turn_idx", "ctx_turns", "ctx_tokens", "ctx_truncated"]
 
     def fn(key_tuple, pdfs, state: GroupState):
         if state.exists:
@@ -292,8 +275,8 @@ def streaming_trailing_context(
             state.update((cum0, n0, base, [int(x) for x in prior]))
             yield pd.DataFrame(columns=cols)
             return
-        pdf = pd.concat(frames).sort_values(idx_col, kind="mergesort")
-        w = pdf[weight_col].to_numpy(dtype="int64")
+        pdf = pd.concat(frames).sort_values("turn_idx", kind="mergesort")
+        w = pdf["n_tokens"].to_numpy(dtype="int64")
         cums_new = cum0 + np.cumsum(w)
         all_cums = np.concatenate([prior, cums_new])
         pos = np.arange(len(prior), len(prior) + len(w))
@@ -306,8 +289,8 @@ def streaming_trailing_context(
         truncated = (n0 + np.arange(len(w))) > n_ctx
         out = pd.DataFrame(
             {
-                key: pdf[key].to_numpy(),
-                idx_col: pdf[idx_col].to_numpy(),
+                "conv_id": pdf["conv_id"].to_numpy(),
+                "turn_idx": pdf["turn_idx"].to_numpy(),
                 "ctx_turns": n_ctx.astype("int64"),
                 "ctx_tokens": tok.astype("int64"),
                 "ctx_truncated": truncated,
@@ -331,7 +314,7 @@ def streaming_trailing_context(
         )
         yield out
 
-    return stream.groupBy(key).applyInPandasWithState(
+    return stream.groupBy("conv_id").applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,
@@ -340,12 +323,7 @@ def streaming_trailing_context(
     )
 
 
-def streaming_conv_fingerprint(
-    stream: DataFrame,
-    key: str = "conv_id",
-    idx_col: str = "turn_idx",
-    content_col: str = "text",
-):
+def streaming_conv_fingerprint(stream: DataFrame):
     """Streaming conversation fingerprints — free, BECAUSE of the batch
     design: ``operators/context.sequence_fingerprint`` is a commutative
     sum of position-salted portable hashes, so the streaming twin is a
@@ -358,13 +336,13 @@ def streaming_conv_fingerprint(
     unbounded per-key buffers."""
     from ..operators.context import _M1, _M2, _MASK31, _lane_hash
 
-    h = _lane_hash(F.col(content_col), F.col(idx_col))
-    g = stream.groupBy(key).agg(
+    h = _lane_hash(F.col("text"), F.col("turn_idx"))
+    g = stream.groupBy("conv_id").agg(
         F.sum(h.bitwiseAND(F.lit(_MASK31))).alias("_l1"),
         F.sum(F.shiftright(h, 31)).alias("_l2"),
     )
     fp = F.shiftleft(F.col("_l1") % F.lit(_M1), 31) + (F.col("_l2") % F.lit(_M2))
-    return g.select(key, fp.alias("conv_fp"))
+    return g.select("conv_id", fp.alias("conv_fp"))
 
 
 def streaming_cusum(
@@ -373,9 +351,6 @@ def streaming_cusum(
     sigma: float,
     k: float = 0.5,
     h: float = 5.0,
-    key: str = "conv_id",
-    ts: str = "ts",
-    value_col: str = "value",
 ):
     """Streaming twin of ``operators/temporal.cusum_scores``: two-sided
     CUSUM drift scores per entity with the (S⁺, S⁻) water marks carried
@@ -409,7 +384,7 @@ def streaming_cusum(
     if sigma <= 0:
         raise ValueError(f"sigma must be > 0, got {sigma}")
     out_schema = (
-        f"{key} string, {ts} timestamp, {value_col} double, "
+        "conv_id string, ts timestamp, value double, "
         "s_pos double, s_neg double, alarm boolean"
     )
     state_schema = "sp double, sn double"
@@ -426,21 +401,21 @@ def streaming_cusum(
         if not frames:
             state.update((sp, sn))
             yield pd.DataFrame(
-                columns=[key, ts, value_col, "s_pos", "s_neg", "alarm"]
+                columns=["conv_id", "ts", "value", "s_pos", "s_neg", "alarm"]
             )
             return
-        pdf = pd.concat(frames).sort_values(ts, kind="mergesort")
-        z = (pdf[value_col].to_numpy(dtype=float) - mu_f) / sg_f
+        pdf = pd.concat(frames).sort_values("ts", kind="mergesort")
+        z = (pdf["value"].to_numpy(dtype=float) - mu_f) / sg_f
         s_pos = _fold(z - k_f, sp)
         s_neg = _fold(-z - k_f, sn)
-        out = pdf[[key, ts, value_col]].copy()
+        out = pdf[["conv_id", "ts", "value"]].copy()
         out["s_pos"] = s_pos
         out["s_neg"] = s_neg
         out["alarm"] = (s_pos > h_f) | (s_neg > h_f)
         state.update((float(s_pos[-1]), float(s_neg[-1])))
         yield out
 
-    return stream.groupBy(key).applyInPandasWithState(
+    return stream.groupBy("conv_id").applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,
@@ -449,17 +424,10 @@ def streaming_cusum(
     )
 
 
-def streaming_seasonal_baseline(
-    stream: DataFrame,
-    key: str = "conv_id",
-    ts: str = "ts",
-    value_col: str = "value",
-    slot_seconds: float = 3600.0,
-    period_seconds: float = 86400.0,
-):
+def streaming_seasonal_baseline(stream: DataFrame):
     """Streaming twin of ``operators/temporal.seasonal_baseline``: each
     arriving turn is scored against the entity's trailing mean at the
-    SAME phase slot (hour-of-day by default), strictly past, with every
+    SAME hour-of-day slot, strictly past, with every
     slot's running (count, sum) carried across micro-batches in
     GroupState.
 
@@ -493,13 +461,13 @@ def streaming_seasonal_baseline(
 
     from acoustic_feature_extractor_spark.operators.temporal import seasonal_slot
 
-    n_slots = int(round(float(period_seconds) / float(slot_seconds)))
+    n_slots = 24
     out_schema = (
-        f"{key} string, slot int, {ts} timestamp, {value_col} double, "
+        "conv_id string, slot int, ts timestamp, value double, "
         "n_slot_past bigint, seasonal_mean double"
     )
     state_schema = "ns array<bigint>, ss array<double>"
-    cols = [key, "slot", ts, value_col]
+    cols = ["conv_id", "slot", "ts", "value"]
 
     def fn(key_tuple, pdfs, state: GroupState):
         if state.exists:
@@ -514,9 +482,9 @@ def streaming_seasonal_baseline(
             state.update((ns.tolist(), ss.tolist()))
             yield pd.DataFrame(columns=cols + ["n_slot_past", "seasonal_mean"])
             return
-        pdf = pd.concat(frames).sort_values(ts, kind="mergesort")
+        pdf = pd.concat(frames).sort_values("ts", kind="mergesort")
         slot = pdf["slot"].to_numpy(dtype=np.int64)
-        v = pdf[value_col].to_numpy(dtype=float)
+        v = pdf["value"].to_numpy(dtype=float)
         ok = ~np.isnan(v)
         # strict past PER SLOT: prefix count/sum excluding the current
         # row (groupby-cumsum follows the ts-sorted row order), plus the
@@ -535,9 +503,9 @@ def streaming_seasonal_baseline(
         yield out
 
     slotted = stream.withColumn(
-        "slot", seasonal_slot(ts, slot_seconds, period_seconds)
+        "slot", seasonal_slot("ts", 3600.0, 86400.0)
     )
-    return slotted.groupBy(key).applyInPandasWithState(
+    return slotted.groupBy("conv_id").applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,
@@ -549,9 +517,6 @@ def streaming_seasonal_baseline(
 def streaming_time_since_event(
     stream: DataFrame,
     mark_col: str,
-    key: str = "conv_id",
-    ts: str = "ts",
-    out_col: str = "since_s",
 ):
     """Streaming twin of ``operators/temporal.time_since_event``: seconds
     since the entity's most recent STRICTLY-PAST row where the (upstream,
@@ -581,7 +546,7 @@ def streaming_time_since_event(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     out_schema = (
-        f"{key} string, {ts} timestamp, {mark_col} boolean, {out_col} double"
+        f"conv_id string, ts timestamp, {mark_col} boolean, since_s double"
     )
     state_schema = "last_us long, prev_us long"
 
@@ -590,15 +555,15 @@ def streaming_time_since_event(
         frames = [pdf for pdf in pdfs if len(pdf)]
         if not frames:
             state.update((l1, l2))
-            yield pd.DataFrame(columns=[key, ts, mark_col, out_col])
+            yield pd.DataFrame(columns=["conv_id", "ts", mark_col, "since_s"])
             return
-        pdf = pd.concat(frames).sort_values(ts, kind="mergesort")
-        out = pdf[[key, ts, mark_col]].copy()
+        pdf = pd.concat(frames).sort_values("ts", kind="mergesort")
+        out = pdf[["conv_id", "ts", mark_col]].copy()
         res = np.full(len(pdf), np.nan)
-        ok = pdf[ts].notna().to_numpy()
+        ok = pdf["ts"].notna().to_numpy()
         if ok.any():
             sub = pdf.loc[ok]
-            us = sub[ts].astype("int64").to_numpy() // 1000  # ns -> µs, exact
+            us = sub["ts"].astype("int64").to_numpy() // 1000  # ns -> µs, exact
             mk = sub[mark_col].fillna(False).to_numpy(dtype=bool)
             # all mark-time arithmetic stays in int64 (exact over the full
             # timestamp range — no 2^53 float bound, matching the batch
@@ -642,10 +607,10 @@ def streaming_time_since_event(
                 state.update((None, None))
         else:
             state.update((l1, l2))
-        out[out_col] = res
+        out["since_s"] = res
         yield out
 
-    return stream.groupBy(key).applyInPandasWithState(
+    return stream.groupBy("conv_id").applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,

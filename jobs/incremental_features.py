@@ -34,8 +34,7 @@ job is the INCREMENTAL twin a 10^12-turn deployment actually runs hourly:
 Cost per increment: the delta is found from metadata and profiled in one
 aggregate, the feature recompute covers only the touched conversations,
 and the merge checks their keys and writes their rows: it reads and
-rewrites no existing feature dir (``rewritten_dirs`` stays empty). The
-history read of the touched conversations still scans the whole source.
+rewrites no existing feature dir. The history read of the touched conversations still scans the whole source.
 
 Emits one JSON line: rows upserted, touched conversations, processed
 source snapshot, drift PSI vs the pinned window, and whether the run
@@ -207,7 +206,6 @@ def main(argv: list[str] | None = None) -> int:
         lineage["drift_ks"] = round(drift_ks, 6)
     if not feat_hist:
         out = snap.commit(feats, args.features, lineage=lineage)
-        rewritten: list[str] = []
     else:
         out = snap.merge_upsert(
             spark,
@@ -216,7 +214,6 @@ def main(argv: list[str] | None = None) -> int:
             key=["conv_id", "turn_idx"],
             lineage=lineage,
         )
-        rewritten = out.lineage["rewritten_dirs"]
 
     print(
         json.dumps(
@@ -225,7 +222,6 @@ def main(argv: list[str] | None = None) -> int:
                 "source_snapshot": head.snapshot_id,
                 "rows_written": out.rows,
                 "touched_convs": n_touched,
-                "rewritten_dirs": rewritten,
                 "drift_psi": None if drift_psi is None else round(drift_psi, 6),
                 "drift_ks": None if drift_ks is None else round(drift_ks, 6),
                 "wall_s": round(time.perf_counter() - t0, 3),

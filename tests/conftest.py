@@ -1,10 +1,18 @@
 from __future__ import annotations
 
+import contextlib
+import importlib.util
+import io
+import json
 import os
 
 import pytest
 
 from acoustic_feature_extractor_spark.session import get_spark
+
+
+SHUFFLE_PARTITIONS = os.environ.get("AFE_TEST_SHUFFLE_PARTITIONS", "8")
+JOBS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
 
 
 @pytest.fixture(scope="session")
@@ -14,7 +22,7 @@ def spark():
     s = get_spark(
         app_name="afe_spark_tests",
         cores=8,
-        shuffle_partitions=int(os.environ.get("AFE_TEST_SHUFFLE_PARTITIONS", "8")),
+        extra_conf={"spark.sql.shuffle.partitions": SHUFFLE_PARTITIONS},
     )
     yield s
 
@@ -31,3 +39,26 @@ def turn_features_df(spark):
     from acoustic_feature_extractor_spark.datagen import generate_turn_features
 
     return generate_turn_features(spark, n_convs=40).cache()
+
+
+@pytest.fixture
+def run_job(spark):
+    """``run_job(name, argv) -> (rc, line)``: call ``jobs/<name>.py``'s
+    ``main(argv)`` in this process, on the shared session, and parse the
+    JSON line it prints last. The job's ``get_spark`` resets the session's
+    shuffle partitions, so the suite's value is restored after each call."""
+
+    def run(name: str, argv: list[str]) -> tuple[int, dict]:
+        spec = importlib.util.spec_from_file_location(name, os.path.join(JOBS, f"{name}.py"))
+        job = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(job)
+        out = io.StringIO()
+        try:
+            with contextlib.redirect_stdout(out):
+                rc = job.main(argv)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", SHUFFLE_PARTITIONS)
+        line = [l for l in out.getvalue().splitlines() if l.startswith("{")][-1]
+        return rc, json.loads(line)
+
+    return run

@@ -65,10 +65,13 @@ def test_long_chain_converges_log_rounds(spark):
     assert set(got.values()) == {0} and len(got) == 64
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, monkeypatch):
+    from acoustic_feature_extractor_spark.operators import cluster
+
+    monkeypatch.setattr(cluster, "_MAX_ROUNDS", 1)
     df = spark.createDataFrame([(i, i + 1) for i in range(20)], "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(df, max_iter=1)
+        connected_components(df)
 
 
 def test_dedup_clusters_column_contract(spark):

@@ -2,38 +2,26 @@
 
 from __future__ import annotations
 
-import json
 import os
-import subprocess
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-JOB = os.path.join(REPO, "jobs", "curate_corpus.py")
 DOCS = "/root/testdata/sf0.001/documents.parquet"
 
 
-def _run(args: list[str]) -> dict:
-    out = subprocess.run(
-        [sys.executable, JOB, *args],
-        capture_output=True,
-        text=True,
-        check=True,
-        cwd=REPO,
-        env=dict(os.environ, SPARK_GRAFT_CPUS="4"),
-    )
-    line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
+@pytest.fixture
+def curate(run_job):
+    """Run the job in-process; return its JSON line."""
+    return lambda args: run_job("curate_corpus", args)[1]
 
 
 @pytest.mark.slow
-def test_fused_equals_staged_and_contracts(tmp_path, spark):
+def test_fused_equals_staged_and_contracts(tmp_path, spark, curate):
     fused = str(tmp_path / "fused")
     staged = str(tmp_path / "staged")
-    m1 = _run(["--input", DOCS, "--output", fused, "--shards", "4"])
-    m2 = _run(
+    m1 = curate(["--input", DOCS, "--output", fused, "--shards", "4"])
+    m2 = curate(
         ["--input", DOCS, "--output", staged, "--shards", "4", "--checkpoint-stages"]
     )
 
@@ -67,11 +55,11 @@ def test_fused_equals_staged_and_contracts(tmp_path, spark):
 
 
 @pytest.mark.slow
-def test_staged_resume_skips_completed(tmp_path):
+def test_staged_resume_skips_completed(tmp_path, curate):
     out = str(tmp_path / "o")
-    m1 = _run(["--input", DOCS, "--output", out, "--checkpoint-stages", "--shards", "4"])
+    m1 = curate(["--input", DOCS, "--output", out, "--checkpoint-stages", "--shards", "4"])
     assert len(m1["stages"]) == 5
-    m2 = _run(
+    m2 = curate(
         [
             "--input",
             DOCS,
@@ -89,8 +77,8 @@ def test_staged_resume_skips_completed(tmp_path):
     ]
 
     # mismatched parameters must refuse to resume
-    with pytest.raises(subprocess.CalledProcessError):
-        _run(
+    with pytest.raises(SystemExit, match="argument mismatch"):
+        curate(
             [
                 "--input",
                 DOCS,
@@ -105,7 +93,30 @@ def test_staged_resume_skips_completed(tmp_path):
 
 
 @pytest.mark.slow
-def test_c4_stage(tmp_path, spark):
+def test_fused_resume_skips_finished_write(tmp_path, spark, curate):
+    """A --resume of a finished fused run leaves curated/ as it is and
+    records the curated write once."""
+    from acoustic_feature_extractor_spark.plans.lineage import RunManifest
+
+    out = str(tmp_path / "o")
+    args = ["--input", DOCS, "--output", out, "--shards", "4"]
+    curated = os.path.join(out, "curated")
+
+    def written():  # file names change on any rewrite
+        files = sorted(os.path.join(d, f) for d, _, fs in os.walk(curated) for f in fs)
+        return files, sorted(map(tuple, spark.read.parquet(curated).collect()))
+
+    m1 = curate(args)
+    before = written()
+    m2 = curate([*args, "--resume"])
+    assert m2["stages"] == m1["stages"]
+    manifest = RunManifest.load(os.path.join(out, "_manifest"))
+    assert [p["partition"] for p in manifest.partitions] == ["curated"]
+    assert written() == before
+
+
+@pytest.mark.slow
+def test_c4_stage(tmp_path, spark, curate):
     """--c4 prepends the C4 cleaning stage: it drops/trims docs BEFORE
     dedup, fused ≡ staged holds, and every surviving line satisfies the
     line rules (terminal punctuation, ≥ min words, no javascript)."""
@@ -123,9 +134,9 @@ def test_c4_stage(tmp_path, spark):
 
     fused = str(tmp_path / "fused")
     staged = str(tmp_path / "staged")
-    m1 = _run(["--input", src, "--output", fused, "--shards", "4", "--c4",
+    m1 = curate(["--input", src, "--output", fused, "--shards", "4", "--c4",
                "--c4-min-lines", "1"])
-    m2 = _run(["--input", src, "--output", staged, "--shards", "4", "--c4",
+    m2 = curate(["--input", src, "--output", staged, "--shards", "4", "--c4",
                "--c4-min-lines", "1", "--checkpoint-stages"])
 
     n_docs = spark.read.parquet(src).count()
@@ -150,7 +161,7 @@ def test_c4_stage(tmp_path, spark):
 
 
 @pytest.mark.slow
-def test_cut_spans_stage(tmp_path, spark):
+def test_cut_spans_stage(tmp_path, spark, curate):
     """--cut-spans adds the substring pass: fused ≡ staged still holds,
     the span_cut stage drops no DOCS (it trims text), and duplicated
     mass shrinks."""
@@ -158,8 +169,8 @@ def test_cut_spans_stage(tmp_path, spark):
 
     fused = str(tmp_path / "fused")
     staged = str(tmp_path / "staged")
-    m1 = _run(["--input", DOCS, "--output", fused, "--shards", "4", "--cut-spans"])
-    m2 = _run(
+    m1 = curate(["--input", DOCS, "--output", fused, "--shards", "4", "--cut-spans"])
+    m2 = curate(
         ["--input", DOCS, "--output", staged, "--shards", "4", "--cut-spans",
          "--checkpoint-stages"]
     )

@@ -11,14 +11,13 @@ from pyspark.sql import functions as F
 
 
 def test_normalize_constant_group(spark):
-    """stddev 0 (constant group) maps every value to target_mean, not a
+    """stddev 0 (a constant column) maps every value to 0, not a
     DIVIDE_BY_ZERO abort (Spark 4 ANSI default)."""
     from acoustic_feature_extractor_spark.operators.stats import corpus_stats, normalize
 
-    df = spark.createDataFrame(pd.DataFrame({"g": ["a"] * 4, "v": [7.0] * 4}))
-    st = corpus_stats(df, "v", group_cols=["g"])
-    out = normalize(df, "v", st, target_mean=5.0, group_cols=["g"]).collect()
-    assert all(r["v_norm"] == 5.0 for r in out)
+    df = spark.createDataFrame(pd.DataFrame({"v": [7.0] * 4}))
+    out = normalize(df, "v", corpus_stats(df, "v")).collect()
+    assert all(r["v_norm"] == 0.0 for r in out)
 
 
 def test_flagship_constant_text_len(spark):

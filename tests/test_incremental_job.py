@@ -3,32 +3,17 @@ recompute, merge-on-read upsert, pinned normalization stats."""
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from acoustic_feature_extractor_spark.sources import snapshots as snap
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-JOB = os.path.join(REPO, "jobs", "incremental_features.py")
 
-
-def _run(args: list[str]) -> dict:
-    out = subprocess.run(
-        [sys.executable, JOB, *args],
-        capture_output=True,
-        text=True,
-        check=True,
-        cwd=REPO,
-        env=dict(os.environ, SPARK_GRAFT_CPUS="4"),
-    )
-    line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
+@pytest.fixture
+def increment(run_job):
+    """Run the job in-process; return ``(rc, JSON line)``."""
+    return lambda args: run_job("incremental_features", args)
 
 
 def _frame(spark, table):
@@ -40,7 +25,7 @@ def _frame(spark, table):
 
 
 @pytest.mark.slow
-def test_incremental_equals_full_with_pinned_stats(tmp_path, spark, transcripts):
+def test_incremental_equals_full_with_pinned_stats(tmp_path, spark, transcripts, increment):
     """Two source waves (new turns on old convs + brand-new convs): the
     incremental features must equal a full recompute under the FIRST
     wave's pinned stats, untouched convs must not be rewritten, and a
@@ -55,8 +40,8 @@ def test_incremental_equals_full_with_pinned_stats(tmp_path, spark, transcripts)
     wave2 = t.exceptAll(wave1)
 
     snap.commit(wave1, src)
-    m1 = _run(["--source", src, "--features", feat])
-    assert not m1["noop"] and m1["source_snapshot"] == 1
+    rc1, m1 = increment(["--source", src, "--features", feat])
+    assert rc1 == 0 and not m1["noop"] and m1["source_snapshot"] == 1
 
     stats_row = corpus_stats(
         wave1.withColumn("text_len", F.length("text").cast("double")), "text_len"
@@ -76,11 +61,12 @@ def test_incremental_equals_full_with_pinned_stats(tmp_path, spark, transcripts)
 
     # wave 2 lands; only its convs recompute, stats stay wave-1-pinned
     snap.commit(wave2, src)
-    m2 = _run(["--source", src, "--features", feat])
-    assert not m2["noop"] and m2["source_snapshot"] == 2
+    rc2, m2 = increment(["--source", src, "--features", feat])
+    assert rc2 == 0 and not m2["noop"] and m2["source_snapshot"] == 2
     n_convs = t.select("conv_id").distinct().count()
     assert 0 < m2["touched_convs"] < n_convs  # some convs were untouched
-    assert m2["rewritten_dirs"] == []  # merge-on-read rewrites no dir
+    # merge-on-read rewrites no dir: the merge adds one beside the first
+    assert snap.history(feat)[-1].dirs == ["data/snap-1", "data/snap-2"]
 
     got2 = _frame(spark, feat)
     exp2 = (
@@ -114,26 +100,13 @@ def test_incremental_equals_full_with_pinned_stats(tmp_path, spark, transcripts)
 
     # no new source data -> no-op, no new snapshot
     before = snap.current_snapshot_id(feat)
-    m3 = _run(["--source", src, "--features", feat])
-    assert m3["noop"]
+    rc3, m3 = increment(["--source", src, "--features", feat])
+    assert rc3 == 0 and m3["noop"]
     assert snap.current_snapshot_id(feat) == before
 
 
-def _run_rc(args: list[str]) -> tuple[int, dict]:
-    out = subprocess.run(
-        [sys.executable, JOB, *args],
-        capture_output=True,
-        text=True,
-        check=False,
-        cwd=REPO,
-        env=dict(os.environ, SPARK_GRAFT_CPUS="4"),
-    )
-    line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-    return out.returncode, json.loads(line)
-
-
 @pytest.mark.slow
-def test_incremental_drift_gate(tmp_path, spark, transcripts):
+def test_incremental_drift_gate(tmp_path, spark, transcripts, increment):
     """Every increment scores its delta's text_len distribution against
     the histogram pinned at the first run: a same-distribution wave
     reports a small PSI; a drastically shifted wave trips --max-psi (rc 2,
@@ -151,12 +124,12 @@ def test_incremental_drift_gate(tmp_path, spark, transcripts):
     )
 
     snap.commit(wave1, src)
-    m1 = _run(["--source", src, "--features", feat])
-    assert m1["drift_psi"] is None  # first run PINS the window
+    rc1, m1 = increment(["--source", src, "--features", feat])
+    assert rc1 == 0 and m1["drift_psi"] is None  # first run PINS the window
     assert snap.history(feat)[0].lineage["text_len_hist"]
 
     snap.commit(wave2, src)
-    rc2, m2 = _run_rc(
+    rc2, m2 = increment(
         ["--source", src, "--features", feat, "--max-psi", "0.25", "--max-ks", "0.4"]
     )
     assert rc2 == 0 and m2["drift_psi"] is not None
@@ -165,7 +138,7 @@ def test_incremental_drift_gate(tmp_path, spark, transcripts):
 
     snap.commit(wave3, src)
     before = snap.current_snapshot_id(feat)
-    rc3, m3 = _run_rc(["--source", src, "--features", feat, "--max-psi", "0.25"])
+    rc3, m3 = increment(["--source", src, "--features", feat, "--max-psi", "0.25"])
     assert rc3 == 2 and m3["failed"] == "drift_gate"
     assert m3["drift_psi"] > 0.25
     assert snap.current_snapshot_id(feat) == before  # gate blocked the commit
@@ -173,12 +146,12 @@ def test_incremental_drift_gate(tmp_path, spark, transcripts):
     # the KS bar alone (no PSI bar) also catches the shifted wave — the
     # " x"*400 suffix pushes most of the delta's mass to higher bins, a
     # large worst-case CDF gap
-    rc3b, m3b = _run_rc(["--source", src, "--features", feat, "--max-ks", "0.4"])
+    rc3b, m3b = increment(["--source", src, "--features", feat, "--max-ks", "0.4"])
     assert rc3b == 2 and m3b["failed"] == "drift_gate"
     assert m3b["drift_ks"] > 0.4
     assert snap.current_snapshot_id(feat) == before
 
-    rc4, m4 = _run_rc(["--source", src, "--features", feat])  # monitor-only
+    rc4, m4 = increment(["--source", src, "--features", feat])  # monitor-only
     assert rc4 == 0 and m4["drift_psi"] > 0.25
     assert snap.history(feat)[-1].lineage["drift_psi"] == round(m4["drift_psi"], 6)
     assert snap.history(feat)[-1].lineage["drift_ks"] == round(m4["drift_ks"], 6)
@@ -194,17 +167,11 @@ def test_incremental_drift_gate(tmp_path, spark, transcripts):
 INCREMENT_JOB_BUDGET = 10
 
 
-def test_increment_job_budget(tmp_path, spark, transcripts, capsys):
+def test_increment_job_budget(tmp_path, spark, transcripts, increment):
     """One in-process increment that merges into the first run's dir
     stays within its Spark-job budget, writes only the touched
     conversations' rows into one new dir, and reports the touched
     conversations and the drift it scored."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location("incremental_features", JOB)
-    job = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(job)
-
     src = str(tmp_path / "src")
     feat = str(tmp_path / "feat")
     t = transcripts.where(F.col("conv_id") < "conv000033")
@@ -212,25 +179,19 @@ def test_increment_job_budget(tmp_path, spark, transcripts, capsys):
     wave2 = t.exceptAll(wave1)
     touched = wave2.select("conv_id").distinct().count()
     argv = ["--source", src, "--features", feat]
-    # the job's get_spark re-applies its runtime settings to this session
-    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     sc = spark.sparkContext
     group = "increment-job-budget"
+    snap.commit(wave1, src)
+    assert increment(argv)[0] == 0
+    snap.commit(wave2, src)
+    sc.setJobGroup(group, "one increment")
     try:
-        snap.commit(wave1, src)
-        assert job.main(argv) == 0
-        snap.commit(wave2, src)
-        sc.setJobGroup(group, "one increment")
-        try:
-            assert job.main(argv) == 0
-        finally:
-            sc.setJobGroup(None, None)
+        rc, out = increment(argv)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
-    out = json.loads([l for l in capsys.readouterr().out.splitlines() if l.startswith("{")][-1])
+        sc.setJobGroup(None, None)
+    assert rc == 0
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert n_jobs <= INCREMENT_JOB_BUDGET, f"{n_jobs} jobs"
-    assert out["rewritten_dirs"] == []
     head = snap.history(feat)[-1]
     assert head.dirs == ["data/snap-1", "data/snap-2"]
     assert head.rows == out["rows_written"] == t.join(

@@ -10,7 +10,6 @@ from acoustic_feature_extractor_spark.operators.intervals import (
     adjust_boundaries_to_idle,
     expand_spans_to_grid,
     mask_from_spans,
-    overlap_join,
 )
 
 
@@ -50,21 +49,6 @@ def test_mask_from_spans(spark):
     )
     out = mask_from_spans(frames, spans).orderBy("ts").toPandas()
     assert out["in_span"].tolist() == [False, True, True, False, False]
-
-
-def test_overlap_join_bucketed_equals_plain(spark):
-    rows_l = [("k", i, float(i * 10), float(i * 10 + 15)) for i in range(20)]
-    rows_r = [("k", i, float(i * 7 + 3), float(i * 7 + 9)) for i in range(25)]
-    l = spark.createDataFrame(pd.DataFrame(rows_l, columns=["conv_id", "lid", "start_s", "end_s"]))
-    r = spark.createDataFrame(pd.DataFrame(rows_r, columns=["conv_id", "rid", "start_s", "end_s"]))
-    plain = overlap_join(l, r, l_start="start_s", l_end="end_s", r_start="start_s", r_end="end_s")
-    bucketed = overlap_join(
-        l, r, l_start="start_s", l_end="end_s", r_start="start_s", r_end="end_s",
-        bucket_seconds=12.0,
-    )
-    ps = sorted((x["lid"], x["rid_r"]) for x in plain.collect())
-    bs = sorted((x["lid"], x["rid_r"]) for x in bucketed.collect())
-    assert ps == bs and len(ps) > 0
 
 
 def test_adjust_boundaries_contiguity(spark):

@@ -1,5 +1,6 @@
 """Every top-level definition in the package is reached from a job, a query
-or a tool.
+or a tool, and every keyword option of a public package function is set by
+one.
 
 A plain-Python static scan, no Spark session. It parses the non-test roots
 (``jobs/``, ``tools/``, ``jobbench/``, ``bench.py``, ``__spark_entry__.py``)
@@ -12,6 +13,13 @@ caller that serves a job, a query or a tool.
 
 ``KEPT`` lists the few unreached definitions that stay, each with its
 reason; what a kept definition calls counts as reached.
+
+The option scan matches calls by function name. An option (a parameter
+with a default) counts as set when some call in a root or in package code
+names it, passes it by position, or forwards ``*args``/``**kwargs``; calls
+in ``tests/`` do not count. An option no such call sets is a value its
+callers never change: fold it into the function. ``KEPT_OPTIONS`` lists the
+few that stay, each with its reason.
 """
 
 from __future__ import annotations
@@ -31,6 +39,20 @@ KEPT = {
     f"{PKG}.operators.context.sequence_fingerprint": "batch reference for the streaming fingerprint",
     f"{PKG}.plans.pipeline.adaptive_salt_above": "the skew threshold the run manifest will freeze",
     f"{PKG}.sources.snapshots.compact": "writes the log's compact snapshots; merge-on-read deletes fold through it",
+}
+
+KEPT_OPTIONS = {
+    f"{PKG}.sources.snapshots.commit(evolve)": "additive schema evolution, a pinned table-format contract",
+    f"{PKG}.datagen.generate_turn_features(n_convs)": "sizes the KEPT tests/test_parity.py fixture",
+    f"{PKG}.datagen.generate_turn_features(seed)": "seeds the KEPT tests/test_parity.py fixture",
+    f"{PKG}.operators.similarity.embedding_neardup_exact(threshold)": "the KEPT exact reference runs at the threshold of the path it checks",
+    f"{PKG}.operators.similarity.embedding_neardup_exact(max_driver_rows)": "the KEPT exact reference's driver-memory cap, a deployment setting",
+    f"{PKG}.plans.pipeline.adaptive_salt_above(chunk_rows)": "option of the KEPT skew threshold",
+    f"{PKG}.plans.pipeline.adaptive_salt_above(straggler_factor)": "option of the KEPT skew threshold",
+    f"{PKG}.plans.pipeline.adaptive_salt_above(key)": "option of the KEPT skew threshold",
+    f"{PKG}.plans.bloom.bloom_semi_join(n_bits)": "bitmap size, a deployment setting that grows with the key set",
+    f"{PKG}.plans.bloom.bloom_semi_join(k)": "probe-hash count, a deployment setting chosen with n_bits",
+    f"{PKG}.sources.layout.zorder_layout(bits)": "z-order resolution, a deployment setting bounded by the column count",
 }
 
 _DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -183,6 +205,41 @@ def unreached(root: Path = ROOT, kept: tuple[str, ...] = ()) -> set[str]:
     }
 
 
+def unset_options(root: Path = ROOT) -> set[str]:
+    """``module.func(option)`` for every keyword option of a public package
+    function that no call in a root or in package code sets."""
+    mods = _load(root)
+    calls: dict[str, list[ast.Call]] = {}
+    for m in mods.values():
+        for node in ast.walk(m.tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls.setdefault(name, []).append(node)
+    unset = set()
+    for name, m in mods.items():
+        if name.startswith("<root>."):
+            continue
+        for fn in m.tree.body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or fn.name.startswith("_"):
+                continue
+            a = fn.args
+            pos = [p.arg for p in a.posonlyargs + a.args]
+            options = pos[len(pos) - len(a.defaults):]
+            options += [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            done: set[str] = set()
+            for call in calls.get(fn.name, []):
+                if any(isinstance(x, ast.Starred) for x in call.args) or any(
+                    k.arg is None for k in call.keywords
+                ):
+                    done.update(options)
+                    break
+                done.update(k.arg for k in call.keywords)
+                done.update(pos[: len(call.args)])
+            unset |= {f"{name}.{fn.name}({o})" for o in options if o not in done}
+    return unset
+
+
 def test_every_package_definition_is_reached():
     dead = sorted(unreached(kept=tuple(KEPT)))
     assert not dead, "reached only from tests or from other dead code:\n  " + "\n  ".join(dead)
@@ -191,3 +248,13 @@ def test_every_package_definition_is_reached():
 def test_kept_names_exist_and_are_still_unreached():
     # an entry that gained a caller, or whose definition is gone, is stale
     assert set(KEPT) <= unreached()
+
+
+def test_every_keyword_option_is_set():
+    unset = sorted(unset_options() - set(KEPT_OPTIONS))
+    assert not unset, "set only by tests, if at all; fold into the value callers use:\n  " + "\n  ".join(unset)
+
+
+def test_kept_options_exist_and_are_still_unset():
+    # an entry that gained a setter, or whose option is gone, is stale
+    assert set(KEPT_OPTIONS) <= unset_options()

@@ -98,7 +98,7 @@ def test_pack_greedy_distributed_matches_reference(spark):
     rng = np.random.RandomState(11)
     ns = rng.randint(1, 180, size=400).tolist()
     df = _docs(spark, ns)
-    out = pack_greedy(df, capacity=CAP, n_buckets=4).orderBy("bucket", "doc_id")
+    out = pack_greedy(df, capacity=CAP).orderBy("bucket", "doc_id")
     pdf = out.toPandas()
     # per bucket, the distributed result equals the straight-line reference
     for b, grp in pdf.groupby("bucket"):
@@ -129,9 +129,9 @@ def test_pack_greedy_capacity_invariant(spark):
 def test_pack_greedy_deterministic_across_partitionings(spark):
     ns = list(np.random.RandomState(5).randint(1, 150, size=120))
     df = _docs(spark, ns)
-    a = pack_greedy(df, capacity=CAP, n_buckets=3).orderBy("doc_id").collect()
+    a = pack_greedy(df, capacity=CAP).orderBy("doc_id").collect()
     b = (
-        pack_greedy(df.repartition(7), capacity=CAP, n_buckets=3)
+        pack_greedy(df.repartition(7), capacity=CAP)
         .orderBy("doc_id")
         .collect()
     )

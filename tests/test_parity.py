@@ -41,19 +41,10 @@ def test_resample_parity(spark, turn_features_df):
 
 def test_normalize_parity(spark, turn_features_df):
     """Spark normalization == reference convert formula on valid entries."""
-    st = corpus_stats(turn_features_df, "feature", valid_col="valid")
-    out = (
-        normalize(turn_features_df, "feature", st, target_mean=0.0, target_var=1.0,
-                  valid_col="valid")
-        .orderBy("conv_id", "turn_idx")
-        .toPandas()
-    )
-    valid_all = out[out["valid"]]["feature"].to_numpy()
-    im, iv = valid_all.mean(), valid_all.std()
-    expected = np.where(
-        out["valid"], (1.0 / iv) * (out["feature"] - im), out["feature"]
-    )
-    assert np.allclose(out["feature_norm"].to_numpy(), expected)
+    valid = turn_features_df.where("valid")
+    out = normalize(valid, "feature", corpus_stats(valid, "feature")).toPandas()
+    im, iv = out["feature"].mean(), out["feature"].std(ddof=0)
+    assert np.allclose(out["feature_norm"], (1.0 / iv) * (out["feature"] - im))
 
 
 def test_fill_parity(spark, turn_features_df):

@@ -40,25 +40,6 @@ def test_weighted_percentile_matches_numpy(spark):
         assert np.isclose(got[q], _np_weighted_percentile(v, w, q), rtol=1e-9), q
 
 
-def test_weighted_percentile_grouped(spark):
-    rng = np.random.RandomState(22)
-    rows = []
-    for g in ["x", "y", None]:  # a NULL group is a group, not dropped
-        v = np.unique(rng.rand(80) * 50)
-        for vi in v:
-            rows.append((g, float(vi), float(rng.rand() + 0.1)))
-    pdf = pd.DataFrame(rows, columns=["g", "v", "w"])
-    df = spark.createDataFrame(pdf)
-    got = weighted_percentile(df, "v", "w", [0.5], group_cols=["g"]).collect()
-    assert sorted(str(r["g"]) for r in got) == ["None", "x", "y"]
-    for r in got:
-        sub = pdf[pdf.g.isna()] if r["g"] is None else pdf[pdf.g == r["g"]]
-        assert np.isclose(
-            r["value"], _np_weighted_percentile(sub.v.to_numpy(), sub.w.to_numpy(), 0.5),
-            rtol=1e-9,
-        )
-
-
 def test_percentile_report_matches_numpy(spark):
     rng = np.random.RandomState(23)
     v = rng.rand(500) * 100
@@ -109,18 +90,20 @@ def test_weighted_percentile_partition_invariance(spark):
     mids = (np.cumsum(sw) - sw / 2) / sw.sum()
     qs = [0.0, 0.1, 0.5, 0.9, 1.0]
     expected = np.interp(qs, mids, sv)
-    for n_part in (1, 3, 64):
+    for n_chunks in (1, 3, 64):
+        bounds = list(np.quantile(v, np.arange(1, n_chunks) / n_chunks))
         got = {
             r["q"]: r["value"]
-            for r in weighted_percentile(df, "v", "w", qs, num_partitions=n_part).collect()
+            for r in weighted_percentile(df, "v", "w", qs, chunk_bounds=bounds).collect()
         }
         np.testing.assert_allclose([got[q] for q in qs], expected, rtol=1e-9)
 
 
 def test_weighted_percentile_grouped_multichunk(spark):
-    """Grouped + chunked: global value bounds split every group across
-    chunks; per-(group, chunk) offsets and the cross-chunk bracketing
-    stitch must still reproduce numpy.interp per group exactly."""
+    """Three value sets of different scales over one set of bounds: the
+    bounds split each set across chunks (or leave it in one), and the
+    per-chunk offsets and the cross-chunk bracketing stitch must still
+    reproduce numpy.interp exactly."""
     rng = np.random.RandomState(17)
     rows = []
     for g, scale in (("a", 10.0), ("b", 1000.0), ("c", 3.0)):
@@ -134,19 +117,18 @@ def test_weighted_percentile_grouped_multichunk(spark):
     qs = [0.0, 0.1, 0.5, 0.9, 1.0]
     # explicit bounds force multi-chunk groups regardless of data layout
     bounds = [1.0, 2.0, 5.0, 50.0, 500.0]
-    got = {
-        (r["g"], r["q"]): r["value"]
-        for r in weighted_percentile(
-            df, "v", "w", qs, group_cols=["g"], chunk_bounds=bounds
-        ).collect()
-    }
     for g, grp in pdf.groupby("g"):
+        sub = df.where(df.g == g)
+        got = {
+            r["q"]: r["value"]
+            for r in weighted_percentile(sub, "v", "w", qs, chunk_bounds=bounds).collect()
+        }
         grp = grp.sort_values("v")
         cw = grp["w"].cumsum()
         mids = (cw - grp["w"] / 2) / grp["w"].sum()
         for q in qs:
             want = float(np.interp(q, mids, grp["v"]))
-            assert abs(got[(g, q)] - want) < 1e-9, (g, q, got[(g, q)], want)
+            assert abs(got[q] - want) < 1e-9, (g, q, got[q], want)
 
 
 def test_quantile_bin_matches_rank_formula(spark):

@@ -139,12 +139,11 @@ def test_sessionize_matches_pandas(spark, seed, gap):
     seed=st.integers(0, 10_000),
     n=st.integers(1, 200),
     k=st.integers(1, 6),
-    salt=st.integers(1, 5),
 )
 @settings(**_SETTINGS)
-def test_topk_per_group_property(spark, seed, n, k, salt):
+def test_topk_per_group_property(spark, seed, n, k):
     """Salted two-phase top-k == pandas nsmallest-by-total-order for any
-    random input, k, and salt width."""
+    random input and k."""
     import pyspark.sql.functions as F
 
     from acoustic_feature_extractor_spark.operators.windows import topk_per_group
@@ -163,7 +162,6 @@ def test_topk_per_group_property(spark, seed, n, k, salt):
             "g",
             [F.col("v").desc(), F.col("id")],
             k=k,
-            salt=salt,
         )
         .orderBy("g", "rank")
         .toPandas()
@@ -369,29 +367,25 @@ def _slotted_events(draw):
             "v": rng.randn(n),
         }
     )
-    k = draw(st.sampled_from([None, 1, 3]))
-    return pdf, k
+    return pdf
 
 
 @given(_slotted_events())
 @settings(**_SETTINGS)
 def test_seasonal_baseline_matches_pandas(spark, data):
     """seasonal_baseline against an O(n²) pandas oracle on random inputs:
-    strictly-past same-hour-slot mean, optional last-k bound."""
+    strictly-past same-hour-slot mean."""
     from acoustic_feature_extractor_spark.operators.temporal import (
         seasonal_baseline,
     )
 
-    pdf, k = data
+    pdf = data
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame(pdf).withColumn(
         "ts", F.col("ts").cast("timestamp_ntz")
     )
-    out = seasonal_baseline(
-        df, by="g", ts_col="ts", value_col="v",
-        tiebreak_col="eid", window_occurrences=k,
-    )
+    out = seasonal_baseline(df, by="g", ts_col="ts", value_col="v", tiebreak_col="eid")
     got = {
         r["eid"]: (r["n_slot_past"], r["seasonal_mean"]) for r in out.collect()
     }
@@ -403,9 +397,7 @@ def test_seasonal_baseline_matches_pandas(spark, data):
                 (pdf["ts"] < row["ts"])
                 | ((pdf["ts"] == row["ts"]) & (pdf["eid"] < row["eid"]))
             )
-        ].sort_values(["ts", "eid"])
-        if k is not None:
-            past = past.tail(k)
+        ]
         n, mean = got[row["eid"]]
         assert n == len(past)
         if len(past) == 0:

@@ -63,13 +63,14 @@ def test_ivf_full_probe_equals_bruteforce(spark):
     from acoustic_feature_extractor_spark.operators.similarity import (
         cosine_topk,
         cosine_topk_ivf,
+        pick_centroids,
     )
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = e.where(F.col("vec_id") < 5)
     exact = cosine_topk(q, e, k=5).orderBy("query_id", "rank").collect()
     ivf = (
-        cosine_topk_ivf(q, e, k=5, n_centroids=4, n_probe=4)
+        cosine_topk_ivf(q, e, k=5, n_probe=4, centroids=pick_centroids(e, n_centroids=4))
         .orderBy("query_id", "rank")
         .collect()
     )
@@ -82,6 +83,7 @@ def test_ivf_partial_probe_recall(spark):
     from acoustic_feature_extractor_spark.operators.similarity import (
         cosine_topk,
         cosine_topk_ivf,
+        pick_centroids,
     )
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -92,7 +94,9 @@ def test_ivf_partial_probe_recall(spark):
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk_ivf(q, e, k=5, n_centroids=8, n_probe=3).collect()
+        for r in cosine_topk_ivf(
+            q, e, k=5, n_probe=3, centroids=pick_centroids(e, n_centroids=8)
+        ).collect()
     }
     # partial probe: meaningful overlap with the exact answer, full row count
     assert len(approx) == len(exact)
@@ -124,33 +128,6 @@ def test_blocked_neardup_equals_broadcast_exact(spark):
         assert set(got) == set(exact), n_blocks
         for k in exact:
             assert np.isclose(got[k], exact[k], atol=1e-6), (n_blocks, k)
-
-
-def test_blocked_neardup_max_cell_vecs(spark):
-    """max_cell_vecs forces multi-row sub-chunked blocks (here: 80 vecs /
-    2 blocks / 5-vec cells -> 16 chunks) — output must be identical to the
-    broadcast exact path (VERDICT r2 #8: the Arrow 2 GB cell cap must not
-    dictate n_blocks)."""
-    from acoustic_feature_extractor_spark.operators.similarity import (
-        embedding_neardup_blocked,
-        embedding_neardup_exact,
-    )
-
-    df, _ = _emb(spark, n=80, seed=13)
-    exact = {
-        (r["id_a"], r["id_b"]): r["cos_sim"]
-        for r in embedding_neardup_exact(df, threshold=0.2).collect()
-    }
-    assert exact
-    got = {
-        (r["id_a"], r["id_b"]): r["cos_sim"]
-        for r in embedding_neardup_blocked(
-            df, threshold=0.2, n_blocks=2, max_cell_vecs=5
-        ).collect()
-    }
-    assert set(got) == set(exact)
-    for k in exact:
-        assert np.isclose(got[k], exact[k], atol=1e-6), k
 
 
 def test_exact_neardup_driver_cap(spark):

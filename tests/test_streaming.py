@@ -173,12 +173,16 @@ def test_streaming_rollup_matches_batch(spark, transcripts):
     src_df = (
         transcripts.limit(2000)
         .where(F.col("ts").isNotNull())
-        .select("conv_id", "ts", F.length("text").cast("double").alias("value"))
+        .select(
+            F.col("conv_id").alias("user_id"),
+            "ts",
+            F.length("text").cast("double").alias("value"),
+        )
     )
     want = sorted(
         map(
             tuple,
-            rollup(src_df, 600.0, by="conv_id", value_col="value").collect(),
+            rollup(src_df, 600.0, by="user_id", value_col="value").collect(),
         )
     )
 
@@ -186,9 +190,7 @@ def test_streaming_rollup_matches_batch(spark, transcripts):
         src = f"{d}/in"
         src_df.write.parquet(src)
         stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-        agg = streaming_rollup(
-            stream, 600.0, by="conv_id", value_col="value", watermark="1 hour"
-        )
+        agg = streaming_rollup(stream, 600.0, watermark="1 hour")
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -356,7 +358,7 @@ def test_streaming_sketch_rollups_merge_with_batch(spark):
         )
         stream2 = spark.readStream.schema(schema).parquet(src)
         dq = (
-            streaming_distinct_rollup(stream2, 3600.0, value_col="visitor", lgk=12)
+            streaming_distinct_rollup(stream2, 3600.0, value_col="visitor")
             .writeStream.outputMode("complete")
             .format("memory")
             .queryName("hll_stream")
@@ -545,7 +547,7 @@ def test_streaming_conv_fingerprint_matches_batch(spark, transcripts):
             got = spark.sql("SELECT * FROM fp_out").toPandas()
         finally:
             q.stop()
-    exp = sequence_fingerprint(t, "conv_id", "turn_idx", "text").toPandas()
+    exp = sequence_fingerprint(t).toPandas()
     m = got.merge(exp, on="conv_id", suffixes=("_s", "_b"))
     assert len(m) == len(exp)
     assert (m["conv_fp_s"] == m["conv_fp_b"]).all()

@@ -197,8 +197,6 @@ def test_past_target_encode_matches_bruteforce(spark):
             "value",
             ts_col="ts",
             tiebreak_col="event_id",
-            prior=5.0,
-            prior_weight=10.0,
             chunk_seconds=900.0,
         )
         .orderBy("event_id")
@@ -213,14 +211,14 @@ def test_past_target_encode_matches_bruteforce(spark):
                 lambda b: (b.ts.timestamp(), b.event_id) < (t, row.event_id), axis=1
             )
         ]
-        exp = (past.value.sum() + 10.0 * 5.0) / (len(past) + 10.0)
+        exp = past.value.sum() / len(past) if len(past) else np.nan
         assert r.target_enc_n == len(past)
         np.testing.assert_allclose(r.target_enc, exp, rtol=1e-12)
 
 
 def test_past_target_encode_chunked_equals_plain(spark):
     df, _ = _events(spark, seed=19, n_rows=500)
-    kw = dict(ts_col="ts", tiebreak_col="event_id", prior=1.0, prior_weight=3.0)
+    kw = dict(ts_col="ts", tiebreak_col="event_id")
     plain = (
         past_target_encode(df, "cat", "value", chunk_seconds=None, **kw)
         .orderBy("event_id")
@@ -241,7 +239,7 @@ def test_past_target_encode_no_history_null_without_prior(spark):
     df, _ = _events(spark)
     got = (
         past_target_encode(
-            df, "cat", "value", ts_col="ts", tiebreak_col="event_id", prior_weight=0.0
+            df, "cat", "value", ts_col="ts", tiebreak_col="event_id"
         )
         .where(F.col("target_enc_n") == 0)
         .toPandas()
@@ -545,7 +543,7 @@ def test_time_decayed_mean_bruteforce(spark):
     assert all(abs(v - 5.0) < 1e-12 for i, v in outc.items() if v is not None)
 
 
-def _seasonal_brute(rows, slot_of, k=None):
+def _seasonal_brute(rows, slot_of):
     """O(n^2) oracle: strict-past same-slot mean per row."""
     out = {}
     for g, ts, eid, v in rows:
@@ -558,8 +556,6 @@ def _seasonal_brute(rows, slot_of, k=None):
                 and (ts2, e2) < (ts, eid)
             ]
         )
-        if k is not None:
-            past = past[-k:]
         vals = [v2 for _, _, v2 in past if v2 is not None]
         out[(g, eid)] = (
             len(vals),
@@ -591,23 +587,19 @@ def test_seasonal_baseline_matches_bruteforce(spark):
                 )
                 eid += 1
     df = spark.createDataFrame(rows, "g string, ts timestamp_ntz, eid int, v double")
-    for k in (None, 3):
-        out = seasonal_baseline(
-            df, by="g", ts_col="ts", value_col="v",
-            tiebreak_col="eid", window_occurrences=k,
-        )
-        got = {
-            (r["g"], r["eid"]): (r["n_slot_past"], r["seasonal_mean"])
-            for r in out.collect()
-        }
-        want = _seasonal_brute(rows, lambda t: t.hour, k=k)
-        for key, (n, mean) in want.items():
-            gn, gm = got[key]
-            assert gn == n, (key, k)
-            if mean is None:
-                assert gm is None, (key, k)
-            else:
-                assert abs(gm - mean) < 1e-9, (key, k)
+    out = seasonal_baseline(df, by="g", ts_col="ts", value_col="v", tiebreak_col="eid")
+    got = {
+        (r["g"], r["eid"]): (r["n_slot_past"], r["seasonal_mean"])
+        for r in out.collect()
+    }
+    want = _seasonal_brute(rows, lambda t: t.hour)
+    for key, (n, mean) in want.items():
+        gn, gm = got[key]
+        assert gn == n, key
+        if mean is None:
+            assert gm is None, key
+        else:
+            assert abs(gm - mean) < 1e-9, key
 
 
 def test_seasonal_baseline_leak_free(spark):
@@ -768,39 +760,6 @@ def test_time_since_event_bruteforce(spark):
             assert got == pytest.approx(exp), (r.event_id, got, exp)
 
 
-def test_time_since_event_chunked_equals_plain(spark):
-    from acoustic_feature_extractor_spark.operators.temporal import time_since_event
-
-    df, _ = _events(spark)
-    mark = F.col("cat") == "c0"
-    plain = time_since_event(
-        df, mark, key="user_id", ts_col="ts", max_lookback_seconds=900.0
-    )
-    chunked = time_since_event(
-        df,
-        mark,
-        key="user_id",
-        ts_col="ts",
-        chunk_seconds=1800.0,
-        max_lookback_seconds=900.0,
-    )
-    a = plain.orderBy("event_id").toPandas()
-    b = chunked.orderBy("event_id").toPandas()[a.columns]
-    pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
-
-
-def test_time_since_event_chunk_guard(spark):
-    from acoustic_feature_extractor_spark.operators.temporal import time_since_event
-
-    df, _ = _events(spark)
-    with pytest.raises(ValueError, match="max_lookback_seconds"):
-        time_since_event(df, F.lit(True), chunk_seconds=100.0)
-    with pytest.raises(ValueError, match="max_lookback_seconds"):
-        time_since_event(
-            df, F.lit(True), chunk_seconds=100.0, max_lookback_seconds=200.0
-        )
-
-
 def test_future_outcomes_bruteforce(spark):
     from acoustic_feature_extractor_spark.operators.temporal import future_outcomes
 
@@ -842,13 +801,7 @@ def test_chunked_carry_pre_epoch_timestamps(spark):
     """Spark's % takes the dividend's sign: a pre-1970 timestamp gets a
     negative remainder, so the old carry predicate never fired and the
     chunked plan silently diverged from the plain one. skew.carry_rows uses
-    pmod; chunked must equal plain on both operators for negative-µs
-    data."""
-    from acoustic_feature_extractor_spark.operators.temporal import (
-        time_since_event,
-        trailing_time_window,
-    )
-
+    pmod; chunked must equal plain for negative-µs data."""
     rows = []
     base = dt.datetime(1969, 12, 31, 18, 0, tzinfo=dt.timezone.utc)  # pre-epoch
     for i in range(120):
@@ -866,17 +819,6 @@ def test_chunked_carry_pre_epoch_timestamps(spark):
     pd.testing.assert_frame_equal(plain_t.reset_index(drop=True),
                                   chunk_t.reset_index(drop=True))
 
-    mark = F.col("cat") == "c0"
-    plain_s = time_since_event(
-        df, mark, key="user_id", ts_col="ts", max_lookback_seconds=900.0
-    ).orderBy("event_id").toPandas()
-    chunk_s = time_since_event(
-        df, mark, key="user_id", ts_col="ts",
-        chunk_seconds=1800.0, max_lookback_seconds=900.0,
-    ).orderBy("event_id").toPandas()[plain_s.columns]
-    pd.testing.assert_frame_equal(plain_s.reset_index(drop=True),
-                                  chunk_s.reset_index(drop=True))
-
 
 def test_chunked_keeps_null_timestamp_rows(spark):
     """A NULL-ts row joins no RANGE frame, but it must still EMIT: the
@@ -886,10 +828,7 @@ def test_chunked_keeps_null_timestamp_rows(spark):
     rows: it is one entity, as in the plain window. Pinned for every
     chunked operator: same rows, same values, frame-for-frame (time decay,
     which has no plain path, against its docstring formula)."""
-    from acoustic_feature_extractor_spark.operators.temporal import (
-        expanding_distinct_count,
-        time_since_event,
-    )
+    from acoustic_feature_extractor_spark.operators.temporal import expanding_distinct_count
 
     rows = []
     for i in range(60):
@@ -915,16 +854,6 @@ def test_chunked_keeps_null_timestamp_rows(spark):
         trailing_time_window(df, "value", [900.0], key="user_id", ts_col="ts"),
         trailing_time_window(
             df, "value", [900.0], key="user_id", ts_col="ts", chunk_seconds=1800.0
-        ),
-    )
-    mark = F.col("cat") == "c0"
-    same(
-        time_since_event(
-            df, mark, key="user_id", ts_col="ts", max_lookback_seconds=900.0
-        ),
-        time_since_event(
-            df, mark, key="user_id", ts_col="ts",
-            chunk_seconds=1800.0, max_lookback_seconds=900.0,
         ),
     )
     kw = dict(ts_col="ts", tiebreak_col="event_id")

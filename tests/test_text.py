@@ -97,14 +97,6 @@ def test_build_vocab_ranking_and_ids(spark):
     assert len(v) == 4
 
 
-def test_build_vocab_min_count(spark):
-    from acoustic_feature_extractor_spark.functions.text import build_vocab
-
-    docs = spark.createDataFrame([(1, "x x y")], "doc_id int, text string")
-    v = build_vocab(docs, top_n=10, min_count=2).collect()
-    assert [(r["term"], r["term_id"]) for r in v] == [("x", 0)]
-
-
 def test_oov_stats(spark):
     from acoustic_feature_extractor_spark.functions.text import build_vocab, oov_stats
 

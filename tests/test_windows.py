@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from acoustic_feature_extractor_spark.operators.windows import (
     degenerate,
-    rolling_frame,
     with_context_features,
 )
 
@@ -32,7 +31,6 @@ def test_degenerate_matches_pandas_rolling(spark):
     got = out.orderBy("conv_id", "turn_idx").toPandas()
     for k, g in pdf.groupby("conv_id"):
         gg = got[got.conv_id == k].reset_index(drop=True)
-        lo, hi = rolling_frame(5)
         # pandas centered rolling with min_periods=1 == shrunken edge windows
         r = g["v"].rolling(window=5, center=True, min_periods=1)
         np.testing.assert_allclose(gg["v_mean"], r.mean().to_numpy())
@@ -63,14 +61,6 @@ def test_context_features_boundaries(spark):
     assert a.loc[0, "prev_v"] == -1.0
     assert a.loc[len(a) - 1, "next_v"] == -1.0
     np.testing.assert_allclose(a.loc[1:, "prev_v"], pa.loc[: len(pa) - 2, "v"])
-
-
-def test_context_offsets(spark):
-    df, pdf = _pdf(spark, n=10)
-    out = with_context_features(df, ["v"], offsets=(2,))
-    got = out.where(F.col("conv_id") == "a").orderBy("turn_idx").toPandas()
-    pa = pdf[pdf.conv_id == "a"].reset_index(drop=True)
-    np.testing.assert_allclose(got.loc[2:, "prev2_v"], pa.loc[: len(pa) - 3, "v"])
 
 
 def test_pad_segments_to_max(spark):
