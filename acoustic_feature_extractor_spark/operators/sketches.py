@@ -632,30 +632,32 @@ def ks_from_hists(
     )
 
 
-def drift_from_counts(ref: list[int], cur: list[int]) -> tuple[float, float | None]:
+def drift_from_counts(
+    ref: list[int], cur: list[int]
+) -> tuple[float | None, float | None]:
     """``(psi, ks)`` of two bin-count lists, scored on the driver for when
     both histograms are already there (one pinned in lineage, one
     collected): the math of :func:`psi_from_hists` (Laplace ε = 1e-6, the
     summed per-bin ``(p−q)·ln(p/q)``) and :func:`ks_from_hists` (the max
-    ECDF gap; ``None`` when either side totals zero) without shipping the
-    counts back into Spark. Raises on a width mismatch, as their in-plan
-    check does."""
+    ECDF gap) without shipping the counts back into Spark. Both are
+    ``None`` when either side totals zero: an empty side has no
+    distribution, and its smoothed PSI would be a large number that says
+    nothing (an empty increment is not drift). Raises on a width
+    mismatch, as their in-plan check does."""
     if len(ref) != len(cur):
         raise ValueError(
             f"drift_from_counts: ref hist width {len(ref)} != cur hist width {len(cur)}"
         )
     bins = len(ref)
     tot_r, tot_c = sum(ref), sum(cur)
-    psi = 0.0
+    if tot_r == 0 or tot_c == 0:
+        return None, None
+    psi = ks = 0.0
+    cum_r = cum_c = 0
     for n_r, n_c in zip(ref, cur):
         p = (n_r + 1e-6) / (tot_r + 1e-6 * bins)
         q = (n_c + 1e-6) / (tot_c + 1e-6 * bins)
         psi += (p - q) * math.log(p / q)
-    if tot_r == 0 or tot_c == 0:
-        return psi, None
-    ks = 0.0
-    cum_r = cum_c = 0
-    for n_r, n_c in zip(ref, cur):
         cum_r += n_r
         cum_c += n_c
         ks = max(ks, abs(cum_r / tot_r - cum_c / tot_c))

@@ -76,9 +76,7 @@ def degenerate(
     reference's ``sampling_data.py:172-175``). Median is exact
     (``percentile(col, 0.5)``) — matches ``numpy.median`` on the window.
     Edge windows shrink instead of reading padding rows; the reference pads
-    with a constant — callers needing exact parity at edges use
-    ``pad_value`` semantics in tests (shrunken windows equal the reference
-    when padding_value participates; see tests/test_windows.py).
+    with a constant.
     """
     lo = -(frame_length // 2)
     w = ordered_window(key, order).rowsBetween(lo, frame_length - 1 + lo)

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -33,33 +34,39 @@ def get_spark(
     that over-parallelizes local runs; ``extra_conf`` overrides any
     setting. The driver heap is ``SPARK_DRIVER_MEM`` or, unset, half of
     the host's memory.
-    """
-    if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS") or (os.cpu_count() or 4)
-    n_cores = os.cpu_count() or 4 if cores == "*" else int(cores)
 
-    builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(2 * n_cores, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # int64-micros timestamps (not legacy INT96): footer min/max stats
-        # exist, so snapshot-log data skipping can prune on time columns
-        # (INT96 carries no statistics); also Iceberg's required physical
-        # type, keeping written files spec-compatible
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+    A session that is already running gets only ``extra_conf``: the
+    defaults above would reset its caller's runtime settings (shuffle
+    partitions, AQE, timezone) whenever a job is called in-process.
+    """
+    builder = SparkSession.builder
+    if SparkContext._active_spark_context is None:
+        if cores is None:
+            cores = os.environ.get("SPARK_GRAFT_CPUS") or (os.cpu_count() or 4)
+        n_cores = os.cpu_count() or 4 if cores == "*" else int(cores)
+
+        builder = (
+            builder.master(f"local[{cores}]")
+            .appName(app_name)
+            .config("spark.sql.shuffle.partitions", str(max(2 * n_cores, 8)))
+            .config("spark.sql.adaptive.enabled", "true")
+            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+            .config("spark.sql.adaptive.skewJoin.enabled", "true")
+            .config("spark.sql.session.timeZone", "UTC")
+            # int64-micros timestamps (not legacy INT96): footer min/max
+            # stats exist, so snapshot-log data skipping can prune on time
+            # columns (INT96 carries no statistics); also Iceberg's required
+            # physical type, keeping written files spec-compatible
+            .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+            .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+            .config(
+                "spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+            )
+            .config("spark.ui.enabled", "false")
+            .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         )
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

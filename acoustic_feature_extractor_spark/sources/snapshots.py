@@ -28,7 +28,9 @@ directories that make up the table at that version:
   equality deletes: it writes only the updated rows into a new dir and
   records that dir's key columns in the snapshot's ``delete_keys``. A
   read drops every row of an OLDER dir whose key the merge dir holds
-  (:func:`_scan`); no old byte is read or rewritten by the merge.
+  (:func:`_scan`); no old byte is read or rewritten by the merge. The
+  same write checks that the keys are unique and non-NULL, and a refused
+  merge removes its dir before the log is touched.
 - COMPACT (:func:`compact`) rewrites the current dir set into one
   right-sized dir, folding the merges' deletes into the data,
   metadata-published like any commit; history intact.
@@ -66,7 +68,7 @@ import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -835,8 +837,8 @@ def merge_upsert(
     drops out and a new key is an insert. The merge reads no old data dir
     and rewrites none (``rewritten_dirs`` is always empty), so its IO is
     O(updates) however large the table; :func:`compact` folds the deletes
-    into the data. One aggregate checks the keys, one write stores the
-    updates.
+    into the data. One write stores the updates, and the write checks
+    their keys: it refuses NULL or duplicate keys before publishing.
     Publishes atomically like every other commit; time travel to the
     pre-merge snapshot still works.
     """
@@ -852,46 +854,37 @@ def merge_upsert(
                 f"merge schema mismatch: table has {head_simple}, "
                 f"updates have {updates.schema.simpleString()}"
             )
-        # the updates plan is consumed twice (key checks, write) — pin it
-        # so an expensive upstream (e.g. the incremental feature
-        # recompute) executes once
-        updates = updates.persist()
-        try:
-            # NULL keys never match an equi-join: the old row would survive
-            # AND the update would insert — a silent duplicate. Duplicate
-            # keys make the upsert ambiguous. Both checks share one groupBy
-            # job (group keys surface the key columns, so the null
-            # predicate evaluates on the grouped output) — merges are the
-            # inner loop of every incremental-maintenance path.
-            null_pred = F.lit(False)
-            for k in key_cols:
-                null_pred = null_pred | F.col(k).isNull()
-            row = (
-                updates.groupBy(*key_cols)
-                .agg(F.count(F.lit(1)).alias("_c"))
-                .agg(
-                    F.max(F.when(null_pred, F.lit(1)).otherwise(F.lit(0))).alias(
-                        "_has_null"
-                    ),
-                    F.max("_c").alias("_max_c"),
-                )
-                .collect()[0]
-            )
-            if row["_has_null"]:
+        sid = head.snapshot_id + 1
+        rel = f"data/snap-{sid}"
+        out = os.path.join(table_path, rel)
+        # NULL keys never match an equi-join: the old row would survive
+        # AND the update would insert — a silent duplicate. Duplicate keys
+        # make the upsert ambiguous. The write checks both: a per-key row
+        # count window feeds the write's Observation, so the check sees
+        # exactly the rows written (one execution of ``updates``, no cache)
+        # and costs no exchange when ``updates`` is already clustered by a
+        # prefix of the key, as ``turn_features`` output is. A refused
+        # merge deletes its dir before anything is published.
+        null_key = F.lit(False)
+        for k in key_cols:
+            null_key = null_key | F.col(k).isNull()
+        obs = Observation(f"snap_rows_{sid}")
+        updates.withColumn(
+            "_kc", F.count(F.lit(1)).over(Window.partitionBy(*key_cols))
+        ).observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.max("_kc").alias("max_kc"),
+            F.max(null_key).alias("has_null"),
+        ).drop("_kc").write.mode("overwrite").parquet(out)
+        m = obs.get
+        if m["has_null"] or (m["max_kc"] or 0) > 1:
+            shutil.rmtree(out, ignore_errors=True)
+            if m["has_null"]:
                 raise ValueError(
                     "updates carry NULL key values — upsert cannot match them"
                 )
-            if (row["_max_c"] or 0) > 1:
-                raise ValueError("updates carry duplicate keys — upsert is ambiguous")
-
-            sid = head.snapshot_id + 1
-            rel = f"data/snap-{sid}"
-            obs = Observation(f"snap_rows_{sid}")
-            updates.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(table_path, rel))
-        finally:
-            updates.unpersist()
+            raise ValueError("updates carry duplicate keys — upsert is ambiguous")
         snap = Snapshot(
             snapshot_id=sid,
             parent_id=head.snapshot_id,
@@ -899,7 +892,7 @@ def merge_upsert(
             dirs=[*head.dirs, rel],
             # rows = rows THIS snapshot wrote (commit()'s convention; total
             # table size is a read-side question, not snapshot metadata)
-            rows=int(obs.get["rows"]),
+            rows=int(m["rows"]),
             schema=head.schema,
             wall_ts=round(time.time(), 3),
             lineage={**(lineage or {}), "rewritten_dirs": []},

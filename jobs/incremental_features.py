@@ -33,8 +33,11 @@ job is the INCREMENTAL twin a 10^12-turn deployment actually runs hourly:
 
 Cost per increment: the delta is found from metadata and profiled in one
 aggregate, the feature recompute covers only the touched conversations,
-and the merge checks their keys and writes their rows: it reads and
-rewrites no existing feature dir. The history read of the touched conversations still scans the whole source.
+and the merge writes their rows in one job that also checks their keys
+(the recompute's output is already clustered by conversation, so the
+check adds no exchange and no cache): it reads and rewrites no existing
+feature dir. The history read of the touched conversations still scans
+the whole source.
 
 Emits one JSON line: rows upserted, touched conversations, processed
 source snapshot, drift PSI vs the pinned window, and whether the run
@@ -164,12 +167,13 @@ def main(argv: list[str] | None = None) -> int:
         hist = full.join(delta.select("conv_id").distinct(), "conv_id", "left_semi")
         if ref_hist:
             # PSI + KS of the DELTA vs the pinned training window, both
-            # scored on the driver from the same two 16-bin count lists
+            # scored on the driver from the same two 16-bin count lists;
+            # an empty delta scores None on both and passes either gate
             drift_psi, drift_ks = drift_from_counts(ref_hist, cur_hist)
             tripped = None
-            if args.max_psi is not None and drift_psi > args.max_psi:
+            if None not in (args.max_psi, drift_psi) and drift_psi > args.max_psi:
                 tripped = {"drift_psi": round(drift_psi, 6), "max_psi": args.max_psi}
-            elif args.max_ks is not None and (drift_ks or 0.0) > args.max_ks:
+            elif None not in (args.max_ks, drift_ks) and drift_ks > args.max_ks:
                 tripped = {"drift_ks": round(drift_ks, 6), "max_ks": args.max_ks}
             if tripped is not None:
                 print(

@@ -45,19 +45,16 @@ def turn_features_df(spark):
 def run_job(spark):
     """``run_job(name, argv) -> (rc, line)``: call ``jobs/<name>.py``'s
     ``main(argv)`` in this process, on the shared session, and parse the
-    JSON line it prints last. The job's ``get_spark`` resets the session's
-    shuffle partitions, so the suite's value is restored after each call."""
+    JSON line it prints last. The job's ``get_spark`` returns the running
+    session with its settings as they are."""
 
     def run(name: str, argv: list[str]) -> tuple[int, dict]:
         spec = importlib.util.spec_from_file_location(name, os.path.join(JOBS, f"{name}.py"))
         job = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(job)
         out = io.StringIO()
-        try:
-            with contextlib.redirect_stdout(out):
-                rc = job.main(argv)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", SHUFFLE_PARTITIONS)
+        with contextlib.redirect_stdout(out):
+            rc = job.main(argv)
         line = [l for l in out.getvalue().splitlines() if l.startswith("{")][-1]
         return rc, json.loads(line)
 

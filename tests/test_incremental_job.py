@@ -157,14 +157,16 @@ def test_incremental_drift_gate(tmp_path, spark, transcripts, increment):
     assert snap.history(feat)[-1].lineage["drift_ks"] == round(m4["drift_ks"], 6)
 
 
-# Spark jobs one increment launches on the tiny table below: 3 for the
-# delta profile, 6 for the merge's fused key check over the recomputed
-# features and 1 for the write of the updates, measured with this
-# suite's 8 shuffle partitions. No job reads an old data dir (the merge
-# writes only the updates), none infers a parquet schema (the snapshot
-# log records it) and none scores drift (the driver does, from the two
-# 16-bin count lists).
-INCREMENT_JOB_BUDGET = 10
+# Spark jobs one increment launches on the tiny table below, measured
+# with this suite's 8 shuffle partitions: 3 for the delta profile, 2 for
+# the touched-key side of the semi-join, 1 for the history scan and its
+# exchange, and 1 for the window plus the write, which also checks the
+# keys (the recomputed features are already clustered by conversation,
+# so the check needs no cache and no exchange of its own). No job reads
+# an old data dir (the merge writes only the updates), none infers a
+# parquet schema (the snapshot log records it) and none scores drift
+# (the driver does, from the two 16-bin count lists).
+INCREMENT_JOB_BUDGET = 7
 
 
 def test_increment_job_budget(tmp_path, spark, transcripts, increment):
@@ -199,4 +201,24 @@ def test_increment_job_budget(tmp_path, spark, transcripts, increment):
     ).count()
     assert out["touched_convs"] == touched and out["source_snapshot"] == 2
     assert out["drift_psi"] is not None and out["drift_ks"] is not None
+    assert snap.read(spark, feat).count() == t.count()
+
+
+def test_empty_append_passes_drift_gate(tmp_path, spark, transcripts, increment):
+    """An increment over a 0-row source append (an empty micro-batch
+    landed by ``snapshot_sink``) has no distribution to score: PSI and KS
+    are None, ``--max-psi`` passes, and the merge writes 0 rows."""
+    src = str(tmp_path / "src")
+    feat = str(tmp_path / "feat")
+    t = transcripts.where(F.col("conv_id") < "conv000005")
+    argv = ["--source", src, "--features", feat]
+    snap.commit(t, src)
+    assert increment(argv)[0] == 0
+    snap.commit(t.limit(0), src)
+    rc, out = increment([*argv, "--max-psi", "0.25"])
+    assert rc == 0 and out["source_snapshot"] == 2
+    assert out["rows_written"] == 0 and out["touched_convs"] == 0
+    assert out["drift_psi"] is None and out["drift_ks"] is None
+    head = snap.history(feat)[-1]
+    assert head.rows == 0 and "drift_psi" not in head.lineage
     assert snap.read(spark, feat).count() == t.count()

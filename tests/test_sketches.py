@@ -611,8 +611,9 @@ def test_ks_from_hists_one_sided_and_identical(spark):
 
 def test_drift_from_counts_matches_spark_scoring(spark):
     """The driver-side PSI/KS agrees with psi_from_hists/ks_from_hists to
-    rel 1e-12 on random 16-bin pairs; a zero-total side has KS None and
-    the same smoothed PSI; a width mismatch raises."""
+    rel 1e-12 on random 16-bin pairs; a zero-total side has no
+    distribution, so both scores are None (KS is NULL in Spark too); a
+    width mismatch raises."""
     import random
 
     import pytest as _pytest
@@ -642,10 +643,10 @@ def test_drift_from_counts_matches_spark_scoring(spark):
     ks = {r["g"]: r["ks"] for r in ks_from_hists(ref, cur, by="g", bins=16).collect()}
     for g, (r, c) in pairs.items():
         psi, d = drift_from_counts(r, c)
-        assert psi == _pytest.approx(sum(terms[g][b] for b in sorted(terms[g])), rel=1e-12), g
         if g.startswith("empty"):
-            assert d is None and ks[g] is None
+            assert psi is None and d is None and ks[g] is None
         else:
+            assert psi == _pytest.approx(sum(terms[g][b] for b in sorted(terms[g])), rel=1e-12), g
             assert d == _pytest.approx(ks[g], rel=1e-12), g
     with _pytest.raises(ValueError, match="width"):
         drift_from_counts([1] * 16, [1] * 15)

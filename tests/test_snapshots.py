@@ -116,20 +116,40 @@ def test_merge_upsert_merge_on_read(spark, tmp_path):
 
 
 def test_merge_upsert_guards(spark, tmp_path):
+    """Bad keys are refused by the merge's own write: its dir is removed
+    and the log still ends at the previous snapshot."""
+
+    def refused(table, updates, key, match):
+        hist = snap.history(table)
+        with pytest.raises(ValueError, match=match):
+            snap.merge_upsert(spark, updates, table, key=key)
+        assert not os.path.exists(os.path.join(table, "data", "snap-2"))
+        assert snap.history(table) == hist
+
     t = str(tmp_path / "tbl")
     snap.commit(_df(spark, range(3)), t)
     dup = spark.createDataFrame(pd.DataFrame({"id": [1, 1], "v": [0.0, 1.0]}))
-    with pytest.raises(ValueError, match="duplicate keys"):
-        snap.merge_upsert(spark, dup, t, key="id")
+    refused(t, dup, "id", "duplicate keys")
     other = spark.createDataFrame(pd.DataFrame({"x": [1]}))
-    with pytest.raises(ValueError, match="schema mismatch"):
-        snap.merge_upsert(spark, other, t, key="x")
+    refused(t, other, "x", "schema mismatch")
     # NULL keys can never equi-join: refusing beats silently duplicating
     nulls = spark.createDataFrame(
         pd.DataFrame({"id": pd.array([None], dtype="Int64"), "v": [0.0]})
     )
-    with pytest.raises(ValueError, match="NULL key"):
-        snap.merge_upsert(spark, nulls, t, key="id")
+    refused(t, nulls, "id", "NULL key")
+
+    # updates already clustered by a prefix of the key, as turn_features
+    # output is: the key-count window needs no exchange, and still sees
+    # the duplicate
+    t2 = str(tmp_path / "tbl2")
+    rows = pd.DataFrame({"id": [1, 1, 2, 3], "idx": [0, 1, 0, 0], "v": [0.0] * 4})
+    snap.commit(spark.createDataFrame(rows), t2)
+    dup2 = (
+        spark.createDataFrame(rows.iloc[[0, 1, 1, 3]])
+        .repartition("id")
+        .sortWithinPartitions("id", "idx")
+    )
+    refused(t2, dup2, ["id", "idx"], "duplicate keys")
 
 
 def test_merge_upsert_pure_insert(spark, tmp_path):
@@ -292,26 +312,16 @@ def test_compact_preserves_rows_and_history(spark, tmp_path):
     assert snap.compact(spark, t).snapshot_id == s4.snapshot_id
 
 
-def test_job_snapshot_resume_equals_single_shot(tmp_path, spark):
+def test_job_snapshot_resume_equals_single_shot(tmp_path, spark, run_job):
     """--snapshots mode: crash-resume driven by the snapshot LOG (drop the
     last two committed snapshots = the data those buckets wrote is gone
     from every reader's view) must reproduce the single-shot run exactly."""
     import json as _json
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    job = os.path.join(repo, "jobs", "run_turn_features.py")
 
     def run(args):
-        out = subprocess.run(
-            [sys.executable, job, *args],
-            capture_output=True, text=True, check=True, cwd=repo,
-            env=dict(os.environ, SPARK_GRAFT_CPUS="4"),
-        )
-        return _json.loads(
-            [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-        )
+        rc, out = run_job("run_turn_features", args)
+        assert rc == 0
+        return out
 
     single = str(tmp_path / "single")
     resumed = str(tmp_path / "resumed")

@@ -3,32 +3,23 @@ operators, dedup across waves, exactly-once snapshots."""
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
-
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from acoustic_feature_extractor_spark.sources import snapshots as snap
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-JOB = os.path.join(REPO, "jobs", "stream_curate.py")
 
+@pytest.fixture
+def run(run_job):
+    """Run the job in-process; return its JSON line."""
 
-def _run(args: list[str]) -> dict:
-    out = subprocess.run(
-        [sys.executable, JOB, *args],
-        capture_output=True,
-        text=True,
-        check=True,
-        cwd=REPO,
-        env=dict(os.environ, SPARK_GRAFT_CPUS="4"),
-    )
-    line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
+    def call(args: list[str]) -> dict:
+        rc, out = run_job("stream_curate", args)
+        assert rc == 0
+        return out
+
+    return call
 
 
 def _docs(spark, ids_texts):
@@ -54,14 +45,14 @@ LOREM = "lorem ipsum " + GOOD
 
 
 @pytest.mark.slow
-def test_stream_curate_drain_gates_and_exactly_once(tmp_path, spark):
+def test_stream_curate_drain_gates_and_exactly_once(tmp_path, spark, run):
     src = str(tmp_path / "in")
     table = str(tmp_path / "curated")
 
     wave1 = [(0, GOOD), (1, GOOD), (2, SHORT), (3, LOREM)]  # 1 dups 0
     _docs(spark, wave1).write.mode("append").parquet(src)
-    m1 = _run(["--input", src, "--output", table, "--drain", "--c4",
-               "--min-words", "10"])
+    m1 = run(["--input", src, "--output", table, "--drain", "--c4",
+              "--min-words", "10"])
     got1 = snap.read(spark, table).collect()
     # only the GOOD text survives: its dup is dropped by the stream dedup,
     # SHORT fails the C4/Gopher gates, LOREM fails the page gate
@@ -80,8 +71,8 @@ def test_stream_curate_drain_gates_and_exactly_once(tmp_path, spark):
         "Quality gates run as pure projections over the stream."
     )
     _docs(spark, [(10, GOOD), (11, NEW)]).write.mode("append").parquet(src)
-    m2 = _run(["--input", src, "--output", table, "--drain", "--c4",
-               "--min-words", "10"])
+    m2 = run(["--input", src, "--output", table, "--drain", "--c4",
+              "--min-words", "10"])
     got2 = snap.read(spark, table).collect()
     texts = sorted(r["text"].split("\n")[0] for r in got2)
     assert len(got2) == 2  # GOOD replay deduped; NEW admitted
@@ -93,13 +84,13 @@ def test_stream_curate_drain_gates_and_exactly_once(tmp_path, spark):
 
     # a third drain with nothing new commits nothing
     before = snap.current_snapshot_id(table)
-    _run(["--input", src, "--output", table, "--drain", "--c4",
-          "--min-words", "10"])
+    run(["--input", src, "--output", table, "--drain", "--c4",
+         "--min-words", "10"])
     assert snap.current_snapshot_id(table) == before
 
 
 @pytest.mark.slow
-def test_stream_curate_gate_matches_batch_operators(tmp_path, spark):
+def test_stream_curate_gate_matches_batch_operators(tmp_path, spark, run):
     """The streamed keep-decision must equal the batch c4_clean +
     gopher_filter composition on the same docs (no dups here, so
     dedup is a no-op and the gates are the only effect)."""
@@ -117,8 +108,8 @@ def test_stream_curate_gate_matches_batch_operators(tmp_path, spark):
     table = str(tmp_path / "curated")
     d = _docs(spark, rows)
     d.write.parquet(src)
-    _run(["--input", src, "--output", table, "--drain", "--c4",
-          "--min-words", "5", "--c4-min-lines", "1"])
+    run(["--input", src, "--output", table, "--drain", "--c4",
+         "--min-words", "5", "--c4-min-lines", "1"])
     got_ids = sorted(
         r["doc_id"] for r in snap.read(spark, table).collect()
     ) if snap.history(table) else []

@@ -3,30 +3,23 @@
 from __future__ import annotations
 
 import glob
-import json
 import os
 import shutil
-import subprocess
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-JOB = os.path.join(REPO, "jobs", "stream_turn_features.py")
 
+@pytest.fixture
+def run(run_job):
+    """Run the job in-process; return its JSON line."""
 
-def _run(args: list[str]) -> dict:
-    out = subprocess.run(
-        [sys.executable, JOB, *args],
-        capture_output=True,
-        text=True,
-        check=True,
-        cwd=REPO,
-        env=dict(os.environ, SPARK_GRAFT_CPUS="4"),
-    )
-    line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
+    def call(args: list[str]) -> dict:
+        rc, out = run_job("stream_turn_features", args)
+        assert rc == 0
+        return out
+
+    return call
 
 
 def _stage(df, incoming: str, name: str) -> None:
@@ -40,7 +33,7 @@ def _stage(df, incoming: str, name: str) -> None:
 
 
 @pytest.mark.slow
-def test_stream_job_drain_resume_dedup(tmp_path, spark):
+def test_stream_job_drain_resume_dedup(tmp_path, spark, run):
     from acoustic_feature_extractor_spark.datagen import generate_transcripts
 
     incoming = str(tmp_path / "incoming")
@@ -62,18 +55,18 @@ def test_stream_job_drain_resume_dedup(tmp_path, spark):
     n1, n2 = b1.count(), b2_new.count()
 
     _stage(b1, incoming, "b1")
-    m1 = _run(["--input", incoming, "--output", out, "--drain"])
+    m1 = run(["--input", incoming, "--output", out, "--drain"])
     assert m1["sink_rows"] == n1
 
     # re-run with nothing new: checkpoint resume must emit ZERO rows
-    m1b = _run(["--input", incoming, "--output", out, "--drain"])
+    m1b = run(["--input", incoming, "--output", out, "--drain"])
     assert m1b["sink_rows"] == 0
 
     # second wave: new rows plus exact duplicates of 20 of them (same
     # micro-batch, same event time) — duplicates must be dropped
     dups = b2_new.orderBy("conv_id", "turn_idx").limit(20)
     _stage(b2_new.unionByName(dups), incoming, "b2")
-    m2 = _run(["--input", incoming, "--output", out, "--drain"])
+    m2 = run(["--input", incoming, "--output", out, "--drain"])
     assert m2["sink_rows"] == n2
 
     sink = spark.read.parquet(os.path.join(out, "features"))
@@ -84,7 +77,7 @@ def test_stream_job_drain_resume_dedup(tmp_path, spark):
 
 
 @pytest.mark.slow
-def test_stream_job_asof_enrichment(tmp_path, spark):
+def test_stream_job_asof_enrichment(tmp_path, spark, run):
     """--dimension: every streamed row carries the dimension payload as
     of its own timestamp (batch as-of join is the oracle)."""
     from acoustic_feature_extractor_spark.datagen import generate_transcripts
@@ -122,7 +115,7 @@ def test_stream_job_asof_enrichment(tmp_path, spark):
     dim.write.parquet(dim_path)
 
     _stage(t, incoming, "b1")
-    _run(["--input", incoming, "--output", out, "--drain", "--dimension", dim_path])
+    run(["--input", incoming, "--output", out, "--drain", "--dimension", dim_path])
 
     sink = spark.read.parquet(os.path.join(out, "features"))
     got = {
