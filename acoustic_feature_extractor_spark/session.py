@@ -35,6 +35,18 @@ def get_spark(
     setting. The driver heap is ``SPARK_DRIVER_MEM`` or, unset, half of
     the host's memory.
 
+    Python call-site capture is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+    every ``Column`` function call looks up the active session, reads
+    ``spark.sql.stackTracesInDataFrameContext``, walks the Python stack
+    and sets and clears ``PySparkCurrentOrigin``, all over py4j: one
+    ``jobs/incremental_features.py`` increment on a 1,000-conversation
+    source makes 1,798 py4j calls with it and 678 without. An error then
+    lacks only its "DataFrame query context" (the Python file and line
+    that built the failing expression); its message, error class and JVM
+    stack are unchanged. PySpark reads the setting once per process, at
+    the first ``Column`` function call.
+
     A session that is already running gets only ``extra_conf``: the
     defaults above would reset its caller's runtime settings (shuffle
     partitions, AQE, timezone) whenever a job is called in-process.
@@ -66,6 +78,7 @@ def get_spark(
             )
             .config("spark.ui.enabled", "false")
             .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+            .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

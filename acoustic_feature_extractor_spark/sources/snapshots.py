@@ -65,6 +65,7 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
 
@@ -825,7 +826,7 @@ def merge_upsert(
     updates: DataFrame,
     table_path: str,
     key: str | list[str],
-    lineage: dict | None = None,
+    lineage: dict | Callable[[], dict] | None = None,
 ) -> Snapshot:
     """Merge-on-read MERGE: upsert ``updates`` by key, writing ONLY the
     updates (Iceberg v2's equality deletes, with the update dir as its own
@@ -841,6 +842,13 @@ def merge_upsert(
     their keys: it refuses NULL or duplicate keys before publishing.
     Publishes atomically like every other commit; time travel to the
     pre-merge snapshot still works.
+
+    ``lineage`` is a dict, or a zero-argument callable that returns one.
+    The callable runs after the write and its key check and before the
+    log is published, so it can read an ``Observation`` the caller put on
+    ``updates`` (the metrics of the one execution that wrote them) and
+    veto the merge: if it raises, the new dir is removed, the log is left
+    as it was, and the exception propagates.
     """
     key_cols = [key] if isinstance(key, str) else list(key)
     with _writer_lock(table_path):
@@ -885,6 +893,12 @@ def merge_upsert(
                     "updates carry NULL key values — upsert cannot match them"
                 )
             raise ValueError("updates carry duplicate keys — upsert is ambiguous")
+        if callable(lineage):
+            try:
+                lineage = lineage()
+            except BaseException:
+                shutil.rmtree(out, ignore_errors=True)
+                raise
         snap = Snapshot(
             snapshot_id=sid,
             parent_id=head.snapshot_id,

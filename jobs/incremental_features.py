@@ -9,8 +9,10 @@ job is the INCREMENTAL twin a 10^12-turn deployment actually runs hourly:
    snapshot id it processed. The delta = exactly the data dirs appended
    since — resolved from snapshot metadata, zero scanning.
 3. Window features depend on whole conversations, so the job recomputes
-   the full history of only the conversations TOUCHED by the delta (a
-   semi-join; with conv-bucketed layout this is a pruned read) and
+   the full history of only the conversations TOUCHED by the delta: the
+   rows of the dirs already processed whose ``conv_id`` the delta holds
+   (a semi-join; with conv-bucketed layout this is a pruned read), plus
+   the delta's rows with a non-NULL ``conv_id``, tagged as the delta's.
    :func:`~acoustic_feature_extractor_spark.sources.snapshots.merge_upsert`'s
    merge-on-read merge writes just those rows into one new feature dir,
    whose keys delete the old rows on read.
@@ -22,22 +24,29 @@ job is the INCREMENTAL twin a 10^12-turn deployment actually runs hourly:
    by truncating the features table and rerunning.
 5. Every increment SELF-MONITORS drift: the first run also pins a
    fixed-range 16-bin histogram of the normalized signal (text_len) in
-   lineage, and each later increment bins the DELTA the same way, in the
-   one aggregate that also counts its conversations. PSI and KS are then
-   scored on the driver from the two count lists
-   (``sketches.drift_from_counts``, the math of ``psi_from_hists`` /
-   ``ks_from_hists``): the scoring runs no Spark job. Both land
-   in the JSON line and in the commit lineage; ``--max-psi`` / ``--max-ks``
-   turn them into a gate (a drifted drop fails the job instead of
-   silently poisoning the features table with stale normalization).
+   lineage, and each later increment bins the delta rows it featurizes
+   the same way (a row with a NULL ``conv_id`` touches no conversation
+   and is not scored). The merge's write does the binning: one
+   ``Observation`` on the written frame holds the 16 bin counts and the
+   touched-conversation count. PSI and KS are then scored on the driver
+   from the two count lists (``sketches.drift_from_counts``, the math of
+   ``psi_from_hists`` / ``ks_from_hists``): the scoring runs no Spark
+   job. Both land in the JSON line and in the commit lineage;
+   ``--max-psi`` / ``--max-ks`` turn them into a gate (a drifted drop
+   fails the job instead of silently poisoning the features table with
+   stale normalization). The gate decides after the write and before the
+   commit is published, through ``merge_upsert``'s callable ``lineage``;
+   a refused increment removes its written dir and leaves the features
+   table as it was.
 
-Cost per increment: the delta is found from metadata and profiled in one
-aggregate, the feature recompute covers only the touched conversations,
-and the merge writes their rows in one job that also checks their keys
-(the recompute's output is already clustered by conversation, so the
-check adds no exchange and no cache): it reads and rewrites no existing
-feature dir. The history read of the touched conversations still scans
-the whole source.
+Cost per increment: one Spark query, 4 jobs. The delta is found from
+metadata; 2 jobs collect and broadcast its distinct keys, 1 scans the
+touched conversations' history into the exchange, and 1 runs the
+windows and the merge's write, which also checks the keys and profiles
+the delta (the recompute's output is already clustered and sorted by
+conversation, so neither adds an exchange, a sort or a cache). It reads
+and rewrites no existing feature dir. The history read of the touched
+conversations still scans the whole source.
 
 Emits one JSON line: rows upserted, touched conversations, processed
 source snapshot, drift PSI vs the pinned window, and whether the run
@@ -54,7 +63,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import Observation, Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+
+class DriftGate(Exception):
+    """An increment's delta drifted past ``--max-psi`` or ``--max-ks``;
+    ``args[0]`` holds the tripped statistic and its bar."""
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -129,95 +144,119 @@ def main(argv: list[str] | None = None) -> int:
             "is undefined; truncate the features table and rerun full"
         )
     new_dirs = [d for d in head.dirs if d not in old_dirs]
-    full = snap.read(spark, args.source)
 
     # fixed-range drift-sketch domain for text_len (chars): pinned once,
     # every later increment bins identically (same at-rest contract as
     # sketches.hist_rollup)
     _H_LO, _H_HI, _H_BINS = 0.0, 1024.0, 16
     w_bin = (_H_HI - _H_LO) / _H_BINS
-    text_bin = F.least(
-        F.greatest(
-            F.floor((F.length("text").cast("double") - F.lit(_H_LO)) / F.lit(w_bin)),
-            F.lit(0),
-        ),
-        F.lit(_H_BINS - 1),
-    )
 
-    def _profile(df, *aggs):
-        """One aggregate over ``df``: its text_len histogram and ``aggs``."""
-        row = df.agg(
-            *[F.count(F.when(text_bin == i, 1)).alias(f"_h{i}") for i in range(_H_BINS)],
-            *aggs,
-        ).first()
-        return [int(row[f"_h{i}"]) for i in range(_H_BINS)], row
+    def bin_counts(text_len, where=F.lit(True)):
+        """The 16 bin counts of ``text_len`` over the rows ``where`` holds."""
+        b = F.least(
+            F.greatest(F.floor((text_len - F.lit(_H_LO)) / F.lit(w_bin)), F.lit(0)),
+            F.lit(_H_BINS - 1),
+        )
+        return [F.count(F.when(where & (b == i), 1)).alias(f"_h{i}") for i in range(_H_BINS)]
 
-    drift_psi = None
-    drift_ks = None
-    if feat_hist:
-        stats = feat_hist[0].lineage["stats"]
-        ref_hist = feat_hist[0].lineage.get("text_len_hist")
-        # one aggregate over the delta gives its histogram and its
-        # conversation count
-        delta = snap.read(spark, args.source, dirs=new_dirs)
-        cur_hist, row = _profile(delta, F.count_distinct("conv_id").alias("_convs"))
-        n_touched = int(row["_convs"])
-        # full history of ONLY the touched conversations (windows need
-        # whole convs; everything untouched keeps its existing feature rows)
-        hist = full.join(delta.select("conv_id").distinct(), "conv_id", "left_semi")
-        if ref_hist:
-            # PSI + KS of the DELTA vs the pinned training window, both
-            # scored on the driver from the same two 16-bin count lists;
-            # an empty delta scores None on both and passes either gate
-            drift_psi, drift_ks = drift_from_counts(ref_hist, cur_hist)
-            tripped = None
-            if None not in (args.max_psi, drift_psi) and drift_psi > args.max_psi:
-                tripped = {"drift_psi": round(drift_psi, 6), "max_psi": args.max_psi}
-            elif None not in (args.max_ks, drift_ks) and drift_ks > args.max_ks:
-                tripped = {"drift_ks": round(drift_ks, 6), "max_ks": args.max_ks}
-            if tripped is not None:
-                print(
-                    json.dumps(
-                        {
-                            "noop": False,
-                            "failed": "drift_gate",
-                            "source_snapshot": head.snapshot_id,
-                            **tripped,
-                        }
-                    )
-                )
-                return 2
-    else:
+    def lineage(stats, ref_hist, drift_psi=None, drift_ks=None) -> dict:
+        out = {
+            "source_snapshot": head.snapshot_id,
+            "stats": stats,
+            "text_len_hist": ref_hist,
+            "job": "incremental_features",
+        }
+        if drift_psi is not None:
+            out["drift_psi"] = round(drift_psi, 6)
+        if drift_ks is not None:
+            out["drift_ks"] = round(drift_ks, 6)
+        return out
+
+    if not feat_hist:
         # first run: every conversation is new. One aggregate pins the
         # corpus stats and the drift histogram together
-        ref_hist, row = _profile(full, *corpus_aggs(F.length("text").cast("double")))
+        full = snap.read(spark, args.source)
+        text_len = F.length("text").cast("double")
+        row = full.agg(*bin_counts(text_len), *corpus_aggs(text_len)).first()
+        ref_hist = [int(row[f"_h{i}"]) for i in range(_H_BINS)]
         stats = {"mean": float(row["mean"]), "stddev": float(row["stddev"])}
         n_touched = full.select(F.count_distinct("conv_id")).first()[0]
         hist = full.where(F.col("conv_id").isNotNull())  # as the semi-join would
-
-    feats = turn_features(
-        hist, gap_seconds=gap, rolling=args.rolling, frozen_stats=stats
-    )
-    lineage = {
-        "source_snapshot": head.snapshot_id,
-        "stats": stats,
-        "text_len_hist": ref_hist,
-        "job": "incremental_features",
-    }
-    if drift_psi is not None:
-        lineage["drift_psi"] = round(drift_psi, 6)
-    if drift_ks is not None:
-        lineage["drift_ks"] = round(drift_ks, 6)
-    if not feat_hist:
-        out = snap.commit(feats, args.features, lineage=lineage)
-    else:
-        out = snap.merge_upsert(
-            spark,
-            feats,
-            args.features,
-            key=["conv_id", "turn_idx"],
-            lineage=lineage,
+        feats = turn_features(
+            hist, gap_seconds=gap, rolling=args.rolling, frozen_stats=stats
         )
+        out = snap.commit(feats, args.features, lineage=lineage(stats, ref_hist))
+    else:
+        stats = feat_hist[0].lineage["stats"]
+        ref_hist = feat_hist[0].lineage.get("text_len_hist")
+        # full history of ONLY the touched conversations (windows need
+        # whole convs; everything untouched keeps its existing feature
+        # rows): their rows in the dirs already processed, read at the
+        # head's schema, plus the delta's keyed rows, tagged `_delta`
+        delta = snap.read(spark, args.source, dirs=new_dirs)
+        old = snap.read(spark, args.source, dirs=[d for d in head.dirs if d in old_dirs])
+        hist = (
+            old.join(delta.select("conv_id").distinct(), "conv_id", "left_semi")
+            .withColumn("_delta", F.lit(False))
+            .unionByName(
+                delta.where(F.col("conv_id").isNotNull()).withColumn("_delta", F.lit(True))
+            )
+        )
+        feats = turn_features(
+            hist, gap_seconds=gap, rolling=args.rolling, frozen_stats=stats
+        )
+        # the merge's write profiles the delta: one Observation at the
+        # root of the written frame counts the touched conversations (the
+        # first turn of each; turn_features output is already clustered
+        # and sorted by (conv_id, turn_idx), so the window adds no
+        # exchange and no sort) and bins the delta rows' text_len
+        obs = Observation("increment_profile")
+        first = F.row_number().over(Window.partitionBy("conv_id").orderBy("turn_idx")) == 1
+        feats = (
+            feats.withColumn("_first", first)
+            .observe(
+                obs,
+                F.count_if("_first").alias("_convs"),
+                *bin_counts(F.col("text_len"), F.col("_delta")),
+            )
+            .drop("_first", "_delta")
+        )
+
+        def scored() -> dict:
+            """The increment's lineage, or :class:`DriftGate` when the
+            delta's PSI or KS vs the pinned window passes its bar. PSI and
+            KS are scored on the driver from the same two 16-bin count
+            lists; an empty delta scores None on both and passes."""
+            m = obs.get
+            cur_hist = [int(m[f"_h{i}"]) for i in range(_H_BINS)]
+            drift_psi, drift_ks = drift_from_counts(ref_hist, cur_hist) if ref_hist else (None, None)
+            if None not in (args.max_psi, drift_psi) and drift_psi > args.max_psi:
+                raise DriftGate({"drift_psi": round(drift_psi, 6), "max_psi": args.max_psi})
+            if None not in (args.max_ks, drift_ks) and drift_ks > args.max_ks:
+                raise DriftGate({"drift_ks": round(drift_ks, 6), "max_ks": args.max_ks})
+            return lineage(stats, ref_hist, drift_psi, drift_ks)
+
+        try:
+            out = snap.merge_upsert(
+                spark,
+                feats,
+                args.features,
+                key=["conv_id", "turn_idx"],
+                lineage=scored,
+            )
+        except DriftGate as gate:
+            print(
+                json.dumps(
+                    {
+                        "noop": False,
+                        "failed": "drift_gate",
+                        "source_snapshot": head.snapshot_id,
+                        **gate.args[0],
+                    }
+                )
+            )
+            return 2
+        n_touched = int(obs.get["_convs"])
 
     print(
         json.dumps(
@@ -226,8 +265,8 @@ def main(argv: list[str] | None = None) -> int:
                 "source_snapshot": head.snapshot_id,
                 "rows_written": out.rows,
                 "touched_convs": n_touched,
-                "drift_psi": None if drift_psi is None else round(drift_psi, 6),
-                "drift_ks": None if drift_ks is None else round(drift_ks, 6),
+                "drift_psi": out.lineage.get("drift_psi"),
+                "drift_ks": out.lineage.get("drift_ks"),
                 "wall_s": round(time.perf_counter() - t0, 3),
             }
         )

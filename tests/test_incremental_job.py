@@ -3,6 +3,8 @@ recompute, merge-on-read upsert, pinned normalization stats."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -110,10 +112,21 @@ def test_incremental_drift_gate(tmp_path, spark, transcripts, increment):
     """Every increment scores its delta's text_len distribution against
     the histogram pinned at the first run: a same-distribution wave
     reports a small PSI; a drastically shifted wave trips --max-psi (rc 2,
-    nothing committed) and still lands in monitor-only mode with the PSI
-    recorded in lineage."""
+    nothing committed: the gate refuses inside the merge, after its
+    write, and removes the written dir) and still lands in monitor-only
+    mode with the PSI recorded in lineage."""
     src = str(tmp_path / "src")
     feat = str(tmp_path / "feat")
+
+    def refused(argv):
+        hist = snap.history(feat)
+        rc, out = increment(argv)
+        assert rc == 2 and out["failed"] == "drift_gate"
+        assert snap.history(feat) == hist
+        assert sorted(os.listdir(os.path.join(feat, "data"))) == sorted(
+            d.split("/", 1)[1] for d in hist[-1].dirs
+        )
+        return out
     t = transcripts
     wave1 = t.where(F.col("conv_id") < "conv000030")
     wave2 = t.where(
@@ -137,19 +150,14 @@ def test_incremental_drift_gate(tmp_path, spark, transcripts, increment):
     assert m2["drift_ks"] is not None and m2["drift_ks"] < 0.4
 
     snap.commit(wave3, src)
-    before = snap.current_snapshot_id(feat)
-    rc3, m3 = increment(["--source", src, "--features", feat, "--max-psi", "0.25"])
-    assert rc3 == 2 and m3["failed"] == "drift_gate"
+    m3 = refused(["--source", src, "--features", feat, "--max-psi", "0.25"])
     assert m3["drift_psi"] > 0.25
-    assert snap.current_snapshot_id(feat) == before  # gate blocked the commit
 
     # the KS bar alone (no PSI bar) also catches the shifted wave — the
     # " x"*400 suffix pushes most of the delta's mass to higher bins, a
     # large worst-case CDF gap
-    rc3b, m3b = increment(["--source", src, "--features", feat, "--max-ks", "0.4"])
-    assert rc3b == 2 and m3b["failed"] == "drift_gate"
+    m3b = refused(["--source", src, "--features", feat, "--max-ks", "0.4"])
     assert m3b["drift_ks"] > 0.4
-    assert snap.current_snapshot_id(feat) == before
 
     rc4, m4 = increment(["--source", src, "--features", feat])  # monitor-only
     assert rc4 == 0 and m4["drift_psi"] > 0.25
@@ -158,15 +166,17 @@ def test_incremental_drift_gate(tmp_path, spark, transcripts, increment):
 
 
 # Spark jobs one increment launches on the tiny table below, measured
-# with this suite's 8 shuffle partitions: 3 for the delta profile, 2 for
-# the touched-key side of the semi-join, 1 for the history scan and its
-# exchange, and 1 for the window plus the write, which also checks the
-# keys (the recomputed features are already clustered by conversation,
-# so the check needs no cache and no exchange of its own). No job reads
-# an old data dir (the merge writes only the updates), none infers a
-# parquet schema (the snapshot log records it) and none scores drift
-# (the driver does, from the two 16-bin count lists).
-INCREMENT_JOB_BUDGET = 7
+# with this suite's 8 shuffle partitions: 2 for the touched-key side of
+# the semi-join (the delta's distinct keys, then their broadcast), 1 for
+# the history scan and its exchange, and 1 for the window plus the
+# write, which also checks the keys and profiles the delta (one
+# Observation counts the touched conversations and bins the delta's
+# text_len; the recomputed features are already clustered by
+# conversation, so neither needs a cache or an exchange of its own). No
+# job reads an old data dir (the merge writes only the updates), none
+# infers a parquet schema (the snapshot log records it) and none scores
+# drift (the driver does, from the two 16-bin count lists).
+INCREMENT_JOB_BUDGET = 4
 
 
 def test_increment_job_budget(tmp_path, spark, transcripts, increment):
@@ -221,4 +231,26 @@ def test_empty_append_passes_drift_gate(tmp_path, spark, transcripts, increment)
     assert out["drift_psi"] is None and out["drift_ks"] is None
     head = snap.history(feat)[-1]
     assert head.rows == 0 and "drift_psi" not in head.lineage
+    assert snap.read(spark, feat).count() == t.count()
+
+
+def test_null_key_append_scores_no_drift(tmp_path, spark, transcripts, increment):
+    """Drift is scored over the rows the increment featurizes. A source
+    append whose every ``conv_id`` is NULL touches no conversation: the
+    job writes 0 rows, and PSI and KS are None however far the dropped
+    rows' text_len is from the pinned window, so ``--max-psi`` passes."""
+    src = str(tmp_path / "src")
+    feat = str(tmp_path / "feat")
+    t = transcripts.where(F.col("conv_id") < "conv000005")
+    argv = ["--source", src, "--features", feat]
+    snap.commit(t, src)
+    assert increment(argv)[0] == 0
+    orphans = t.withColumn("conv_id", F.lit(None).cast("string")).withColumn(
+        "text", F.concat(F.col("text"), F.lit(" x" * 400))
+    )
+    snap.commit(orphans, src)
+    rc, out = increment([*argv, "--max-psi", "0.25"])
+    assert rc == 0 and out["source_snapshot"] == 2
+    assert out["touched_convs"] == 0 and out["rows_written"] == 0
+    assert out["drift_psi"] is None and out["drift_ks"] is None
     assert snap.read(spark, feat).count() == t.count()

@@ -1,4 +1,5 @@
-"""Session sizing follows the host it runs on."""
+"""Session defaults: sizing follows the host it runs on, and call-site
+capture is off."""
 
 from __future__ import annotations
 
@@ -34,3 +35,13 @@ def test_running_session_keeps_its_settings(spark):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
+
+
+def test_call_site_capture_off(spark):
+    """The suite's session runs with PySpark's per-call Python call-site
+    capture off: building a plan makes no ``PySparkCurrentOrigin``
+    round trips."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()

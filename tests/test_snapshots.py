@@ -152,6 +152,34 @@ def test_merge_upsert_guards(spark, tmp_path):
     refused(t2, dup2, ["id", "idx"], "duplicate keys")
 
 
+def test_merge_upsert_callable_lineage(spark, tmp_path):
+    """A callable ``lineage`` runs after the write, so it can read an
+    Observation on the updates; its dict lands in the snapshot. If it
+    raises, the merge's dir is removed, the log is unchanged and the
+    exception propagates."""
+    from pyspark.sql import Observation
+
+    t = str(tmp_path / "tbl")
+    snap.commit(_df(spark, range(3)), t)
+    obs = Observation("upd")
+    upd = _df(spark, [1, 7]).observe(obs, F.sum("v").alias("s"))
+    s2 = snap.merge_upsert(spark, upd, t, key="id", lineage=lambda: {"s": obs.get["s"]})
+    assert s2.lineage == {"s": 8.0, "rewritten_dirs": []}
+    assert snap.history(t)[-1].lineage == s2.lineage
+
+    class Veto(Exception):
+        pass
+
+    def veto():
+        raise Veto("refused")
+
+    hist = snap.history(t)
+    with pytest.raises(Veto, match="refused"):
+        snap.merge_upsert(spark, _df(spark, [2]), t, key="id", lineage=veto)
+    assert not os.path.exists(os.path.join(t, "data", "snap-3"))
+    assert snap.history(t) == hist
+
+
 def test_merge_upsert_pure_insert(spark, tmp_path):
     """No matched keys: every existing dir is carried by reference and the
     new dir holds exactly the inserts."""
