@@ -330,7 +330,7 @@ def commit(
     df: DataFrame,
     table_path: str,
     operation: str = "append",
-    lineage: dict | None = None,
+    lineage: dict | Callable[[], dict] | None = None,
     evolve: bool = False,
 ) -> Snapshot:
     """Write ``df`` as a new snapshot and publish it. Returns the entry.
@@ -338,6 +338,12 @@ def commit(
     Data lands under ``data/snap-<id>/`` BEFORE the log is replaced, so a
     failure at any point leaves the table readable at its previous
     snapshot.
+
+    ``lineage`` is a dict, or a zero-argument callable that returns one.
+    As in :func:`merge_upsert`, the callable runs after the write and
+    before the publish, so it can read an ``Observation`` the caller put
+    on ``df``; if it raises, the new dir is removed and the log is left as
+    it was.
 
     ``evolve=True`` permits ADDITIVE schema evolution on append (new
     columns; every existing column must keep its exact type — the
@@ -363,10 +369,15 @@ def commit(
                 )
         sid = (parent.snapshot_id + 1) if parent else 1
         rel = f"data/snap-{sid}"
+        out = os.path.join(table_path, rel)
         obs = Observation(f"snap_rows_{sid}")
-        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(
-            os.path.join(table_path, rel)
-        )
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(out)
+        if callable(lineage):
+            try:
+                lineage = lineage()
+            except BaseException:
+                shutil.rmtree(out, ignore_errors=True)
+                raise
         extends = operation == "append" and parent is not None
         dirs = [*parent.dirs, rel] if extends else [rel]
         snap = Snapshot(

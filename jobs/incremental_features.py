@@ -151,13 +151,13 @@ def main(argv: list[str] | None = None) -> int:
     _H_LO, _H_HI, _H_BINS = 0.0, 1024.0, 16
     w_bin = (_H_HI - _H_LO) / _H_BINS
 
-    def bin_counts(text_len, where=F.lit(True)):
-        """The 16 bin counts of ``text_len`` over the rows ``where`` holds."""
-        b = F.least(
-            F.greatest(F.floor((text_len - F.lit(_H_LO)) / F.lit(w_bin)), F.lit(0)),
-            F.lit(_H_BINS - 1),
-        )
-        return [F.count(F.when(where & (b == i), 1)).alias(f"_h{i}") for i in range(_H_BINS)]
+    def bin_counts(text_len: str, where: str = "true"):
+        """The array ``_hist`` of the 16 bin counts of the SQL expression
+        ``text_len`` over the rows ``where`` holds: one aggregate column,
+        built by one parse."""
+        b = f"least(greatest(floor(({text_len} - {_H_LO}D) / {w_bin}D), 0), {_H_BINS - 1})"
+        bins = ", ".join(f"count_if({where} AND {b} = {i})" for i in range(_H_BINS))
+        return F.expr(f"array({bins}) AS _hist")
 
     def lineage(stats, ref_hist, drift_psi=None, drift_ks=None) -> dict:
         out = {
@@ -177,8 +177,8 @@ def main(argv: list[str] | None = None) -> int:
         # corpus stats and the drift histogram together
         full = snap.read(spark, args.source)
         text_len = F.length("text").cast("double")
-        row = full.agg(*bin_counts(text_len), *corpus_aggs(text_len)).first()
-        ref_hist = [int(row[f"_h{i}"]) for i in range(_H_BINS)]
+        row = full.agg(bin_counts("CAST(length(text) AS DOUBLE)"), *corpus_aggs(text_len)).first()
+        ref_hist = row["_hist"]
         stats = {"mean": float(row["mean"]), "stddev": float(row["stddev"])}
         n_touched = full.select(F.count_distinct("conv_id")).first()[0]
         hist = full.where(F.col("conv_id").isNotNull())  # as the semi-join would
@@ -217,7 +217,7 @@ def main(argv: list[str] | None = None) -> int:
             .observe(
                 obs,
                 F.count_if("_first").alias("_convs"),
-                *bin_counts(F.col("text_len"), F.col("_delta")),
+                bin_counts("text_len", "_delta"),
             )
             .drop("_first", "_delta")
         )
@@ -228,7 +228,7 @@ def main(argv: list[str] | None = None) -> int:
             KS are scored on the driver from the same two 16-bin count
             lists; an empty delta scores None on both and passes."""
             m = obs.get
-            cur_hist = [int(m[f"_h{i}"]) for i in range(_H_BINS)]
+            cur_hist = m["_hist"]
             drift_psi, drift_ks = drift_from_counts(ref_hist, cur_hist) if ref_hist else (None, None)
             if None not in (args.max_psi, drift_psi) and drift_psi > args.max_psi:
                 raise DriftGate({"drift_psi": round(drift_psi, 6), "max_psi": args.max_psi})

@@ -14,39 +14,48 @@ per-partition lineage + metrics"):
 - the conversation space is split into ``--buckets`` hash buckets
   (``pmod(xxhash64(conv_id), K)``); conversations never straddle buckets,
   so every engine op (windows, sessionization, fill, as-of) is exact
-  within a bucket — the bucket is the unit of work, checkpointing, and
-  resume.
+  within a bucket — the bucket is the unit of checkpointing and resume.
 - one staging scan reads the input once: a map-only write (no shuffle)
-  saves it as ``<output>/_staging/_bucket=<b>/``, and bucket *b* reads
-  only its own directory. An ``Observation`` on that write yields the
-  corpus statistics of ``length(text)`` (the ``corpus_stats``
-  aggregates) and the staged row count without a job of their own; both
-  are frozen into the manifest (``_frozen_stats``, ``_staged_rows``) so
-  resumed buckets normalize against identical stats (no leakage between
-  restart and original run). A bucket no conversation hashes to is
-  recorded with 0 rows.
-- the pending buckets run concurrently, from a thread pool of
-  ``defaultParallelism`` threads (PySpark's pinned-thread mode keeps each
-  thread's Spark jobs apart). Each writes ``<output>/bucket=<i>/``; only
-  after that write commits is its row count + wall time recorded in
-  ``<output>/_manifest/manifest.json`` (the reference's
-  ``arguments.json`` provenance generalized, see ``plans/lineage.py``),
-  and the manifest saved, under one lock. A killed run loses at most the
-  in-flight buckets. Per-bucket ``seconds`` overlap, so they sum to more
-  than the run's wall time.
+  saves it as ``<output>/_staging/_bucket=<b>/``. An ``Observation`` on
+  that write yields the corpus statistics of ``length(text)`` (the
+  ``corpus_stats`` aggregates) and the staged row count without a job of
+  their own; both are frozen into the manifest (``_frozen_stats``,
+  ``_staged_rows``) so resumed buckets normalize against identical stats
+  (no leakage between restart and original run). A bucket no
+  conversation hashes to has no staging dir and is recorded with 0 rows.
+- the pending buckets run in waves, the unit of work. Walking them in
+  bucket order, a wave closes when the next bucket's staged bytes (read
+  from the file system, no job) would push it past one read split per
+  core: ``defaultParallelism × spark.sql.files.maxPartitionBytes``. A
+  bucket larger than that is a wave of its own. Each wave is one Spark
+  query: it reads its buckets' staging dirs (``_bucket`` arrives as the
+  partition column), builds ``turn_features`` once, and one write commits
+  every bucket of the wave as ``<output>/bucket=<i>/`` (dynamic partition
+  overwrite: ``_manifest``, ``_staging`` and the buckets of other waves
+  are left alone, a stale dir of a wave's own bucket is replaced). An
+  ``Observation`` on that write counts each bucket's rows. Only after
+  the write commits are the wave's buckets recorded, each with its rows
+  and the wave's wall time, in ``<output>/_manifest/manifest.json`` (the
+  reference's ``arguments.json`` provenance generalized, see
+  ``plans/lineage.py``), and the manifest saved. Waves run one after
+  another, each on every core through Spark's tasks, so a killed run
+  loses at most the wave in flight: about one read split per core of
+  staged input, or a single bucket.
 - ``--resume`` skips buckets already present in the manifest (the
   Iceberg-snapshot analog for the parquet backend). It re-stages only
   when buckets are pending and ``_staging/_SUCCESS`` is missing, and the
-  frozen stats always win over re-observed ones. ``_staging`` is deleted
-  once every bucket is recorded.
+  frozen stats always win over re-observed ones. ``_staging``, and any
+  ``.spark-staging-*`` dir a killed wave left behind, is deleted once
+  every bucket is recorded.
 - the run exits non-zero when the recorded bucket rows, resumed ones
   included, do not sum to ``_staged_rows``.
-- ``--snapshots`` commits each bucket as an append snapshot instead. The
-  snapshot log is single-writer, so its commits are serialized under the
-  same lock, and that mode gains only the overlap of plan building.
+- ``--snapshots`` commits each wave as one append snapshot instead, with
+  lineage ``{"buckets": {"bucket=<i>": rows, ...}, "run_id": ...}``;
+  resume reads the committed buckets from the log.
 
-The final metrics line (one JSON object on stdout) reports per-bucket
-lineage and aggregate turns/sec.
+The final metrics line (one JSON object on stdout) reports the rows
+written, the waves run and aggregate turns/sec; the manifest holds the
+per-bucket lineage.
 """
 
 from __future__ import annotations
@@ -56,14 +65,13 @@ import json
 import os
 import shutil
 import sys
-import threading
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql.types import IntegerType, StructField, StructType  # noqa: E402
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -77,7 +85,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--snapshots",
         action="store_true",
-        help="commit each bucket as an append snapshot into <output>/features "
+        help="commit each wave as an append snapshot into <output>/features "
         "(snapshot-log checkpointing: resume reads the committed-bucket set "
         "from the log, so a crash between data write and manifest save can "
         "never double-write or skip a bucket) instead of bucket=<i>/ dirs",
@@ -126,15 +134,13 @@ def main(argv: list[str] | None = None) -> int:
         from acoustic_feature_extractor_spark.sources import snapshots as snaplog
 
         # the snapshot LOG is the source of truth for completed buckets:
-        # an entry exists iff that bucket's data committed atomically. Keep
+        # an entry exists iff its wave's data committed atomically. Keep
         # the lineage the log still vouches for, and the empty buckets,
         # which commit nothing; a bucket whose commit landed but whose
         # manifest save was lost is recorded from the log.
-        logged = (
-            {s.lineage.get("bucket"): s.rows for s in snaplog.history(snap_table)}
-            if args.resume
-            else {}
-        )
+        logged = {}
+        for s in snaplog.history(snap_table) if args.resume else []:
+            logged.update(s.lineage.get("buckets", {}))
         manifest.partitions = [
             p for p in manifest.partitions if p["partition"] in logged or p["rows"] == 0
         ]
@@ -149,41 +155,64 @@ def main(argv: list[str] | None = None) -> int:
     ):
         frozen = {**_stage(t, staging, args.buckets), **frozen}
     manifest.args.update(frozen)
+    # staged bytes per pending bucket: a listing, no Spark job. A bucket
+    # no conversation hashes to has no staging dir: nothing to write
+    sizes = {}
+    for b in pending:
+        n = _staged_bytes(os.path.join(staging, f"_bucket={b}"))
+        if n is None:
+            manifest.record_partition(f"bucket={b}", rows=0, seconds=0.0)
+        else:
+            sizes[b] = n
     manifest.save(manifest_dir)
 
-    stats, schema, lock = frozen["_frozen_stats"], t.schema, threading.Lock()
-
-    def run_bucket(b: int) -> int:
-        pid = f"bucket={b}"
+    # one read split per core: a wave fills the cores without a straggling
+    # second round of splits
+    budget = spark.sparkContext.defaultParallelism * (
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
+    waves = _waves(sizes, budget)
+    stats = frozen["_frozen_stats"]
+    # the input's schema plus the partition column: no footer-reading job
+    # per wave (a copy: StructType.add mutates t.schema)
+    schema = StructType([*t.schema.fields, StructField("_bucket", IntegerType())])
+    total_rows = 0
+    for n, wave in enumerate(waves):
         t0 = time.perf_counter()
-        src = os.path.join(staging, f"_bucket={b}")
-        rows = 0  # no conversation hashes to this bucket: nothing to write
-        if os.path.isdir(src):
-            # the input's schema: no footer-reading job per bucket
-            part = spark.read.schema(schema).parquet(src)
-            feats = turn_features(part, gap_seconds=args.gap_seconds, frozen_stats=stats)
-            if args.snapshots:
-                with lock:  # the snapshot log is single-writer
-                    rows = snaplog.commit(
-                        feats, snap_table, lineage={"bucket": pid, "run_id": run_id}
-                    ).rows
-            else:
-                # row count via Observation on the write itself — re-reading
-                # the fresh output would double the job's I/O at scale
-                obs = Observation(f"rows_{pid}")
-                feats.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(args.output, pid))
-                rows = int(obs.get["rows"])
-        with lock:  # recorded only after its write committed
-            manifest.record_partition(pid, rows=rows, seconds=round(time.perf_counter() - t0, 3))
-            manifest.save(manifest_dir)
-        return rows
-
-    threads = max(1, min(len(pending), spark.sparkContext.defaultParallelism))
-    with ThreadPoolExecutor(max_workers=threads) as pool:
-        total_rows = sum(pool.map(run_bucket, pending))
+        part = (
+            spark.read.schema(schema)
+            .option("basePath", staging)
+            .parquet(*(os.path.join(staging, f"_bucket={b}") for b in wave))
+        )
+        feats = turn_features(part, gap_seconds=args.gap_seconds, frozen_stats=stats)
+        # per-bucket row counts via Observation on the write itself —
+        # re-reading the fresh output would double the job's I/O at scale
+        obs = Observation(f"rows_wave_{n}")
+        feats = feats.observe(
+            obs, *(F.expr(f"count_if(_bucket = {b}) AS `bucket={b}`") for b in wave)
+        )
+        if args.snapshots:
+            snaplog.commit(
+                feats.drop("_bucket"),
+                snap_table,
+                lineage=lambda: {"buckets": _rows(obs), "run_id": run_id},
+            )
+        else:
+            # dynamic: the overwrite replaces only this wave's bucket dirs
+            feats.withColumnRenamed("_bucket", "bucket").write.partitionBy("bucket").mode(
+                "overwrite"
+            ).option("partitionOverwriteMode", "dynamic").parquet(args.output)
+        counts = _rows(obs)
+        seconds = round(time.perf_counter() - t0, 3)
+        for pid, r in counts.items():  # recorded only after the write committed
+            manifest.record_partition(pid, rows=r, seconds=seconds)
+        manifest.save(manifest_dir)
+        total_rows += sum(counts.values())
     shutil.rmtree(staging, ignore_errors=True)
+    with os.scandir(args.output) as it:  # left by a wave killed mid-write
+        for e in it:
+            if e.name.startswith(".spark-staging-"):
+                shutil.rmtree(e.path, ignore_errors=True)
 
     recorded = sum(p["rows"] for p in manifest.partitions)
     if recorded != frozen["_staged_rows"]:
@@ -202,6 +231,7 @@ def main(argv: list[str] | None = None) -> int:
                 "run_id": run_id,
                 "buckets": args.buckets,
                 "skipped": len(done),
+                "waves": len(waves),
                 "rows_written": total_rows,
                 "seconds": round(wall, 3),
                 "rows_per_sec": round(total_rows / wall, 1) if wall > 0 else None,
@@ -209,6 +239,36 @@ def main(argv: list[str] | None = None) -> int:
         )
     )
     return 0
+
+
+def _staged_bytes(path: str) -> int | None:
+    """Bytes of the data files under one bucket's staging dir, or ``None``
+    when no conversation hashed to the bucket (no dir)."""
+    try:
+        with os.scandir(path) as it:
+            return sum(e.stat().st_size for e in it if e.is_file() and e.name[0] not in "._")
+    except FileNotFoundError:
+        return None
+
+
+def _waves(sizes: dict[int, int], budget: int) -> list[list[int]]:
+    """Pack the buckets of ``sizes`` (bucket -> staged bytes), in bucket
+    order, into runs whose bytes stay within ``budget``; a bucket larger
+    than ``budget`` is a run of its own."""
+    waves: list[list[int]] = []
+    held = 0
+    for b, n in sorted(sizes.items()):
+        if not waves or held + n > budget:
+            waves.append([])
+            held = 0
+        waves[-1].append(b)
+        held += n
+    return waves
+
+
+def _rows(obs: Observation) -> dict:
+    """``{"bucket=<i>": rows}`` from a wave's write ``Observation``."""
+    return {pid: int(v) for pid, v in obs.get.items()}
 
 
 def _stage(t, staging: str, buckets: int) -> dict:

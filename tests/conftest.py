@@ -59,3 +59,23 @@ def run_job(spark):
         return rc, json.loads(line)
 
     return run
+
+
+@pytest.fixture
+def bucket_waves(spark):
+    """``with bucket_waves():`` shrinks ``run_turn_features``' wave budget
+    (``defaultParallelism × spark.sql.files.maxPartitionBytes``) below one
+    small bucket's staged bytes, so each bucket runs as a wave of its own,
+    and restores the setting on exit."""
+    key = "spark.sql.files.maxPartitionBytes"
+
+    @contextlib.contextmanager
+    def per_bucket():
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "1k")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, prev)
+
+    return per_bucket

@@ -180,6 +180,27 @@ def test_merge_upsert_callable_lineage(spark, tmp_path):
     assert snap.history(t) == hist
 
 
+def test_commit_callable_lineage(spark, tmp_path):
+    """``commit`` takes the same callable ``lineage`` as ``merge_upsert``:
+    it reads an Observation on the written frame, and a raise removes the
+    new dir and leaves the log as it was."""
+    from pyspark.sql import Observation
+
+    t = str(tmp_path / "tbl")
+    obs = Observation("rows")
+    df = _df(spark, range(4)).observe(obs, F.count_if(F.col("id") > 1).alias("n"))
+    s1 = snap.commit(df, t, lineage=lambda: {"n": obs.get["n"]})
+    assert s1.lineage == {"n": 2} and snap.history(t)[-1].lineage == s1.lineage
+
+    def veto():
+        raise RuntimeError("refused")
+
+    with pytest.raises(RuntimeError, match="refused"):
+        snap.commit(_df(spark, [9]), t, lineage=veto)
+    assert not os.path.exists(os.path.join(t, "data", "snap-2"))
+    assert snap.history(t) == [s1]
+
+
 def test_merge_upsert_pure_insert(spark, tmp_path):
     """No matched keys: every existing dir is carried by reference and the
     new dir holds exactly the inserts."""
@@ -340,10 +361,10 @@ def test_compact_preserves_rows_and_history(spark, tmp_path):
     assert snap.compact(spark, t).snapshot_id == s4.snapshot_id
 
 
-def test_job_snapshot_resume_equals_single_shot(tmp_path, spark, run_job):
+def test_job_snapshot_resume_equals_single_shot(tmp_path, spark, run_job, bucket_waves):
     """--snapshots mode: crash-resume driven by the snapshot LOG (drop the
-    last two committed snapshots = the data those buckets wrote is gone
-    from every reader's view) must reproduce the single-shot run exactly."""
+    last two committed snapshots = the data those waves wrote is gone
+    from every reader's view) must reproduce the one-wave run exactly."""
     import json as _json
 
     def run(args):
@@ -354,7 +375,11 @@ def test_job_snapshot_resume_equals_single_shot(tmp_path, spark, run_job):
     single = str(tmp_path / "single")
     resumed = str(tmp_path / "resumed")
     r1 = run(["--generate", "30", "--output", single, "--buckets", "4", "--snapshots"])
-    run(["--generate", "30", "--output", resumed, "--buckets", "4", "--snapshots"])
+    assert r1["waves"] == 1
+    # one snapshot per wave, and each bucket its own wave: four snapshots
+    with bucket_waves():
+        r2 = run(["--generate", "30", "--output", resumed, "--buckets", "4", "--snapshots"])
+    assert r2["waves"] == 4
 
     # simulate the crash: the last two snapshots never committed
     table = os.path.join(resumed, "features")
@@ -368,7 +393,7 @@ def test_job_snapshot_resume_equals_single_shot(tmp_path, spark, run_job):
         ["--generate", "30", "--output", resumed, "--buckets", "4",
          "--snapshots", "--resume"]
     )
-    assert r3["skipped"] == 2
+    assert r3["skipped"] == 2 and r3["waves"] == 1
 
     a = snap.read(spark, os.path.join(single, "features")).orderBy(
         "conv_id", "turn_idx"
@@ -381,10 +406,12 @@ def test_job_snapshot_resume_equals_single_shot(tmp_path, spark, run_job):
     np.testing.assert_allclose(
         a["text_len_z"].to_numpy(), b["text_len_z"].to_numpy(), rtol=1e-12
     )
-    # the log carries per-bucket lineage for all four buckets
-    assert {s.lineage["bucket"] for s in snap.history(table)} == {
-        f"bucket={i}" for i in range(4)
-    }
+    # the log carries per-bucket lineage for all four buckets, each once
+    logged = [pid for s in snap.history(table) for pid in s.lineage["buckets"]]
+    assert sorted(logged) == [f"bucket={i}" for i in range(4)]
+    assert sum(
+        n for s in snap.history(table) for n in s.lineage["buckets"].values()
+    ) == r1["rows_written"]
 
 
 def test_streaming_snapshot_sink_exactly_once(spark, tmp_path):
