@@ -372,12 +372,7 @@ def commit(
         out = os.path.join(table_path, rel)
         obs = Observation(f"snap_rows_{sid}")
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(out)
-        if callable(lineage):
-            try:
-                lineage = lineage()
-            except BaseException:
-                shutil.rmtree(out, ignore_errors=True)
-                raise
+        lineage = _resolve_lineage(lineage, out)
         extends = operation == "append" and parent is not None
         dirs = [*parent.dirs, rel] if extends else [rel]
         snap = Snapshot(
@@ -394,6 +389,18 @@ def commit(
         )
         _publish_log(table_path, snaps + [snap])
     return snap
+
+
+def _resolve_lineage(lineage: dict | Callable[[], dict] | None, out: str) -> dict | None:
+    """``lineage``, called when it is a callable; if the call raises, the
+    new snapshot dir ``out`` is removed before the exception propagates."""
+    if not callable(lineage):
+        return lineage
+    try:
+        return lineage()
+    except BaseException:
+        shutil.rmtree(out, ignore_errors=True)
+        raise
 
 
 def _snapshot(snaps: list[Snapshot], snapshot_id: int | None) -> Snapshot:
@@ -904,12 +911,7 @@ def merge_upsert(
                     "updates carry NULL key values — upsert cannot match them"
                 )
             raise ValueError("updates carry duplicate keys — upsert is ambiguous")
-        if callable(lineage):
-            try:
-                lineage = lineage()
-            except BaseException:
-                shutil.rmtree(out, ignore_errors=True)
-                raise
+        lineage = _resolve_lineage(lineage, out)
         snap = Snapshot(
             snapshot_id=sid,
             parent_id=head.snapshot_id,

@@ -37,10 +37,13 @@ per-partition lineage + metrics"):
   the write commits are the wave's buckets recorded, each with its rows
   and the wave's wall time, in ``<output>/_manifest/manifest.json`` (the
   reference's ``arguments.json`` provenance generalized, see
-  ``plans/lineage.py``), and the manifest saved. Waves run one after
-  another, each on every core through Spark's tasks, so a killed run
-  loses at most the wave in flight: about one read split per core of
-  staged input, or a single bucket.
+  ``plans/lineage.py``), and the manifest saved. Two waves
+  (``WAVES_IN_FLIGHT``) run at once, so the next wave's plan and scan use
+  the cores that one wave's straggling window tasks and commit leave
+  idle; run one after another, several waves were slower than one query
+  per bucket from a thread pool. A killed run loses at most the waves in
+  flight: two, each about one read split per core of staged input, or a
+  single bucket.
 - ``--resume`` skips buckets already present in the manifest (the
   Iceberg-snapshot analog for the parquet backend). It re-stages only
   when buckets are pending and ``_staging/_SUCCESS`` is missing, and the
@@ -50,8 +53,12 @@ per-partition lineage + metrics"):
 - the run exits non-zero when the recorded bucket rows, resumed ones
   included, do not sum to ``_staged_rows``.
 - ``--snapshots`` commits each wave as one append snapshot instead, with
-  lineage ``{"buckets": {"bucket=<i>": rows, ...}, "run_id": ...}``;
-  resume reads the committed buckets from the log.
+  lineage ``{"buckets": {"bucket=<i>": rows, ...}, "run_id": ...}``. Its
+  waves run one at a time: the log is single-writer, and a commit holds
+  the writer lock through its data write. Resume reads the committed
+  buckets from the log, whose older entries may name one bucket each
+  (``{"bucket": "bucket=<i>"}``, its rows the snapshot's); it refuses a
+  log entry that names no bucket.
 
 The final metrics line (one JSON object on stdout) reports the rows
 written, the waves run and aggregate turns/sec; the manifest holds the
@@ -66,12 +73,17 @@ import os
 import shutil
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql.types import IntegerType, StructField, StructType  # noqa: E402
+
+# waves run at once: the next wave's build, plan and scan use the cores
+# that one wave's straggling window tasks and commit leave idle
+WAVES_IN_FLIGHT = 2
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -140,7 +152,15 @@ def main(argv: list[str] | None = None) -> int:
         # manifest save was lost is recorded from the log.
         logged = {}
         for s in snaplog.history(snap_table) if args.resume else []:
-            logged.update(s.lineage.get("buckets", {}))
+            if "buckets" in s.lineage:
+                logged.update(s.lineage["buckets"])
+            elif "bucket" in s.lineage:  # a log written before the waves: one bucket each
+                logged[s.lineage["bucket"]] = s.rows
+            else:
+                raise SystemExit(
+                    f"--resume: snapshot {s.snapshot_id} of {snap_table} names no "
+                    f"bucket; rerun with a fresh --output"
+                )
         manifest.partitions = [
             p for p in manifest.partitions if p["partition"] in logged or p["rows"] == 0
         ]
@@ -166,8 +186,6 @@ def main(argv: list[str] | None = None) -> int:
             sizes[b] = n
     manifest.save(manifest_dir)
 
-    # one read split per core: a wave fills the cores without a straggling
-    # second round of splits
     budget = spark.sparkContext.defaultParallelism * (
         spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     )
@@ -176,8 +194,8 @@ def main(argv: list[str] | None = None) -> int:
     # the input's schema plus the partition column: no footer-reading job
     # per wave (a copy: StructType.add mutates t.schema)
     schema = StructType([*t.schema.fields, StructField("_bucket", IntegerType())])
-    total_rows = 0
-    for n, wave in enumerate(waves):
+
+    def run_wave(n: int, wave: list[int]) -> tuple[dict, float]:
         t0 = time.perf_counter()
         part = (
             spark.read.schema(schema)
@@ -195,19 +213,27 @@ def main(argv: list[str] | None = None) -> int:
             snaplog.commit(
                 feats.drop("_bucket"),
                 snap_table,
-                lineage=lambda: {"buckets": _rows(obs), "run_id": run_id},
+                lineage=lambda: {"buckets": obs.get, "run_id": run_id},
             )
         else:
-            # dynamic: the overwrite replaces only this wave's bucket dirs
+            # dynamic: the overwrite replaces only this wave's bucket dirs,
+            # and each write stages in its own .spark-staging-<uuid> dir
             feats.withColumnRenamed("_bucket", "bucket").write.partitionBy("bucket").mode(
                 "overwrite"
             ).option("partitionOverwriteMode", "dynamic").parquet(args.output)
-        counts = _rows(obs)
-        seconds = round(time.perf_counter() - t0, 3)
-        for pid, r in counts.items():  # recorded only after the write committed
-            manifest.record_partition(pid, rows=r, seconds=seconds)
-        manifest.save(manifest_dir)
-        total_rows += sum(counts.values())
+        return obs.get, round(time.perf_counter() - t0, 3)
+
+    total_rows = 0
+    # the snapshot log is single-writer, and a commit holds its lock
+    # through the data write: snapshot waves run one at a time. Results
+    # come back in wave order; only this thread touches the manifest
+    in_flight = 1 if args.snapshots else WAVES_IN_FLIGHT
+    with ThreadPoolExecutor(max_workers=in_flight) as pool:
+        for counts, seconds in pool.map(run_wave, range(len(waves)), waves):
+            for pid, r in counts.items():  # recorded only after the write committed
+                manifest.record_partition(pid, rows=r, seconds=seconds)
+            manifest.save(manifest_dir)
+            total_rows += sum(counts.values())
     shutil.rmtree(staging, ignore_errors=True)
     with os.scandir(args.output) as it:  # left by a wave killed mid-write
         for e in it:
@@ -264,11 +290,6 @@ def _waves(sizes: dict[int, int], budget: int) -> list[list[int]]:
         waves[-1].append(b)
         held += n
     return waves
-
-
-def _rows(obs: Observation) -> dict:
-    """``{"bucket=<i>": rows}`` from a wave's write ``Observation``."""
-    return {pid: int(v) for pid, v in obs.get.items()}
 
 
 def _stage(t, staging: str, buckets: int) -> dict:

@@ -414,6 +414,46 @@ def test_job_snapshot_resume_equals_single_shot(tmp_path, spark, run_job, bucket
     ) == r1["rows_written"]
 
 
+def test_job_snapshot_resume_reads_per_bucket_lineage(tmp_path, spark, run_job, bucket_waves):
+    """A log whose entries name one bucket each (``{"bucket": pid}``, rows
+    the snapshot's), as the job wrote before it ran waves, resumes without
+    appending its committed buckets again; an entry that names no bucket
+    is refused."""
+    import json as _json
+
+    out = str(tmp_path / "out")
+    argv = ["--generate", "30", "--output", out, "--buckets", "4", "--snapshots"]
+    with bucket_waves():
+        rc, r1 = run_job("run_turn_features", argv)
+    assert rc == 0 and r1["waves"] == 4
+
+    table = os.path.join(out, "features")
+    log = os.path.join(table, "metadata", "snapshots.json")
+
+    def rewrite(entries):
+        with open(log, "w") as f:
+            _json.dump(entries, f)
+
+    with open(log) as f:
+        entries = _json.load(f)
+    for e in entries:
+        (pid,) = e["lineage"]["buckets"]
+        e["lineage"] = {"bucket": pid, "run_id": e["lineage"]["run_id"]}
+    rewrite(entries[:2])  # the run died before its last two commits
+
+    rc, r2 = run_job("run_turn_features", [*argv, "--resume"])
+    assert rc == 0 and r2["skipped"] == 2 and r2["waves"] == 1
+    got = snap.read(spark, table)
+    assert got.count() == got.select("conv_id", "turn_idx").distinct().count() == r1["rows_written"]
+
+    with open(log) as f:
+        entries = _json.load(f)
+    entries[0]["lineage"] = {}
+    rewrite(entries)
+    with pytest.raises(SystemExit, match="names no bucket"):
+        run_job("run_turn_features", [*argv, "--resume"])
+
+
 def test_streaming_snapshot_sink_exactly_once(spark, tmp_path):
     """Two drain runs over a growing file source commit each micro-batch
     as one snapshot; an epoch REPLAY (the at-least-once case foreachBatch
