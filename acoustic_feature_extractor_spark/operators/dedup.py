@@ -671,13 +671,13 @@ def cut_duplicated_spans(
     Canonical occurrence = min (id, span_start) within each identical
     span content (64-bit content hash; spans whose merged extents differ
     are different contents and keep their own canonicals). Output one
-    row per input doc: (id, clean_text, removed_tokens, total_tokens)
-    where ``clean_text`` re-joins the kept ORIGINAL tokens with single
-    spaces — matching is case-folded (the engine-wide tokenizer) but the
-    surviving text preserves case; only inter-token whitespace is
-    canonicalized (exact byte-level reconstruction would need offsets
-    the tokenizer drops). Positions align between the two splits because
-    both split on ``\\s+``.
+    row per input doc: (input columns but text, clean_text,
+    removed_tokens, total_tokens) where ``clean_text`` re-joins the kept
+    ORIGINAL tokens with single spaces — matching is case-folded (the
+    engine-wide tokenizer) but the surviving text preserves case; only
+    inter-token whitespace is canonicalized (exact byte-level
+    reconstruction would need offsets the tokenizer drops). Positions
+    align between the two splits because both split on ``\\s+``.
 
     Scale shape: spans scale with the duplicated mass, not the corpus —
     the spans⋈docs hash join (content slice) and the winner
@@ -710,8 +710,9 @@ def cut_duplicated_spans(
             F.collect_list(F.struct("span_start", "span_end")).alias("_cuts")
         )
     )
+    rest = [c for c in df.columns if c != "text"]
     orig_toks = F.split(F.trim(F.col("text")), r"\s+")
-    base = df.select(F.col("doc_id"), orig_toks.alias("_tk"))
+    base = df.select(*rest, orig_toks.alias("_tk"))
     out = base.join(maybe_broadcast(cuts), "doc_id", "left")
     kept = F.filter(
         "_tk",
@@ -724,7 +725,7 @@ def cut_duplicated_spans(
         ),
     )
     return out.select(
-        F.col("doc_id"),
+        *rest,
         F.array_join(kept, " ").alias("clean_text"),
         (F.size("_tk") - F.size(kept)).alias("removed_tokens"),
         F.size("_tk").alias("total_tokens"),

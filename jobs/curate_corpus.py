@@ -16,19 +16,21 @@ Execution model — two modes, one set of stage transforms:
 
 - **fused** (default): the stages compose into ONE lazy DataFrame plan
   ending in a single partitioned write. Resume granularity is the write
-  itself: a ``--resume`` of a finished run skips it. This mode is the
-  SLOWER one today. On the sf0.1 documents (5,000 docs in one file) with
-  ``--shards 4`` on a 4-core host, warm runs took 40 Spark jobs and
-  18.0 s fused against 46 jobs and 11.1 s with ``--checkpoint-stages``:
-  the fused plan scans the input 10 times, because ``quality`` and
-  ``scrubbed`` join the frame with a function of itself, so every
-  upstream stage runs again.
+  itself: a ``--resume`` of a finished run skips it. The C4, quality
+  and scrub stages filter rows and rewrite columns of the frame they are
+  given, so the plan reads the input twice, once for each dedup stage's
+  second reference to it (8 times with ``--cut-spans``, whose span pass
+  refers to its input more than once). On the sf0.1 documents (5,000
+  docs in one file) with ``--shards 4`` on a 4-core host, 6 alternating
+  warm pairs took a median 13.6 s and 36 Spark jobs fused against 13.0 s
+  and 44 jobs with ``--checkpoint-stages``, within noise (the plan whose
+  stages joined the frame with itself: 18.9 s fused, 14.9 s staged).
 - **--checkpoint-stages**: each stage materializes to
   ``<output>/stage=<name>/`` and is recorded in the run manifest, so a
-  killed run resumes AFTER the last completed stage (reads its parquet
-  back, recomputes nothing upstream). Costs one write+read per stage —
-  the knob for clusters where preemption beats I/O. Each stage transform
-  is idempotent on its own output, so replaying a stage is safe.
+  killed run reads the last completed stage's parquet back and reruns
+  only the first unrecorded stage from it; no stage ever runs on its own
+  output. Costs one write+read per stage — the knob for clusters where
+  preemption beats I/O.
 
 Audit outputs (both modes): per-stage row counts in the manifest — every
 document the pipeline DROPS is accounted to the stage that dropped it
@@ -50,10 +52,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 
+FRACTIONS = {"train": 0.9, "val": 0.05, "test": 0.05}
+
+
 def stage_transforms(
     minhash_threshold: float = 0.7,
     min_words: int = 20,
-    fractions: dict[str, float] | None = None,
     n_shards: int = 16,
     seed: int = 0,
     cut_spans: bool = False,
@@ -65,8 +69,8 @@ def stage_transforms(
     """Ordered (name, prev-stage-df → this-stage-df) transforms.
 
     Fused mode folds them into one plan; staged mode checkpoints between
-    each. Every transform is idempotent, so replaying one on its own
-    output is a no-op (the property staged resume relies on).
+    each. No transform runs on its own output (``scrubbed`` would add its
+    ``n_*`` columns twice and recount PII in redacted text).
     """
     from acoustic_feature_extractor_spark.functions import text as tx
     from acoustic_feature_extractor_spark.operators import (
@@ -75,7 +79,10 @@ def stage_transforms(
         sample as sample_ops,
     )
 
-    fractions = fractions or {"train": 0.9, "val": 0.05, "test": 0.05}
+    t = F.col("text")
+
+    def rest(d: DataFrame) -> list[str]:
+        return [c for c in d.columns if c != "text"]
 
     def near_dedup(d: DataFrame) -> DataFrame:
         # LSH candidates → exact-jaccard verify → transitive closure;
@@ -91,26 +98,16 @@ def stage_transforms(
         # substring-level pass AFTER doc-level dedup: excise remaining
         # duplicated spans, keep the canonical occurrence. Case and
         # non-text columns survive; inter-token whitespace is
-        # canonicalized. Near-idempotent: a replay only finds new spans
-        # in the rare case a cut fuses tokens into a fresh hot window.
+        # canonicalized.
         c = dedup_ops.cut_duplicated_spans(d, w=cut_w)
-        return d.drop("text").join(
-            c.select("doc_id", F.col("clean_text").alias("text")), "doc_id"
-        )
-
-    def quality(d: DataFrame) -> DataFrame:
-        gated = tx.gopher_filter(d, min_words=min_words)
-        return d.join(
-            gated.where(F.col("keep")).select("doc_id"), "doc_id", "left_semi"
-        )
+        return c.select(*rest(d), F.col("clean_text").alias("text"))
 
     def scrub(d: DataFrame) -> DataFrame:
-        # map-only; counts stay attached as the per-doc audit trail
-        s = tx.pii_scrub(d).withColumnRenamed("redacted", "text")
-        return d.drop("text").join(s, "doc_id")
+        # counts stay attached as the per-doc audit trail
+        return d.select(*rest(d), *tx.pii_counts(t), tx.redact_pii(t).alias("text"))
 
     def export(d: DataFrame) -> DataFrame:
-        split = sample_ops.hash_split(d, "doc_id", fractions, seed=seed)
+        split = sample_ops.hash_split(d, "doc_id", FRACTIONS, seed=seed)
         return sample_ops.shard_shuffle(
             split, "doc_id", n_shards=n_shards, seed=seed, within=["split"]
         )
@@ -118,27 +115,21 @@ def stage_transforms(
     def c4_stage(d: DataFrame) -> DataFrame:
         # C4 heuristic cleaning FIRST (the published order: strip
         # boilerplate lines before dedup so shared boilerplate can't
-        # fuse unrelated docs into near-dup clusters). Idempotent:
-        # surviving lines already satisfy every line rule.
-        cleaned = tx.c4_clean(
-            d, min_line_words=c4_min_line_words, min_lines=c4_min_lines
-        )
-        return d.drop("text").join(
-            cleaned.where(F.col("keep")).select(
-                "doc_id", F.col("clean_text").alias("text")
-            ),
-            "doc_id",
+        # fuse unrelated docs into near-dup clusters)
+        kept = tx.c4_kept_lines(t, c4_min_line_words)
+        return d.where(tx.c4_page_keep(t, kept, c4_min_lines)).select(
+            *rest(d), F.array_join(kept, "\n").alias("text")
         )
 
     out = [("c4_clean", c4_stage)] if c4 else []
     out += [
-        ("exact_dedup", lambda d: dedup_ops.exact_dedup(d)),
+        ("exact_dedup", dedup_ops.exact_dedup),
         ("near_dedup", near_dedup),
     ]
     if cut_spans:
         out.append(("span_cut", span_cut))
     out += [
-        ("quality", quality),
+        ("quality", lambda d: d.where(tx.gopher_keep(t, min_words))),
         ("scrubbed", scrub),
         ("curated", export),
     ]

@@ -10,6 +10,13 @@ from pyspark.sql import functions as F
 DOCS = "/root/testdata/sf0.001/documents.parquet"
 
 
+def assert_same_rows(a, b):
+    """Same columns in the same order, and the same rows on every column."""
+    assert a.columns == b.columns
+    assert a.count() == b.count()
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
 @pytest.fixture
 def curate(run_job):
     """Run the job in-process; return its JSON line."""
@@ -26,11 +33,7 @@ def test_fused_equals_staged_and_contracts(tmp_path, spark, curate):
     )
 
     a = spark.read.parquet(os.path.join(fused, "curated"))
-    b = spark.read.parquet(os.path.join(staged, "stage=curated"))
-    key = ["doc_id", "split", "shard", "pos"]
-    assert sorted(map(tuple, a.select(key).collect())) == sorted(
-        map(tuple, b.select(key).collect())
-    )
+    assert_same_rows(a, spark.read.parquet(os.path.join(staged, "stage=curated")))
 
     # stage accounting: counts are monotone non-increasing through the drops
     rows = {p["partition"]: p["rows"] for p in m2["stages"]}
@@ -146,11 +149,7 @@ def test_c4_stage(tmp_path, spark, curate):
     assert m1["stages"][-1]["rows"] == rows["stage=curated"]
 
     a = spark.read.parquet(os.path.join(fused, "curated"))
-    b = spark.read.parquet(os.path.join(staged, "stage=curated"))
-    key = ["doc_id", "split", "shard", "pos"]
-    assert sorted(map(tuple, a.select(key).collect())) == sorted(
-        map(tuple, b.select(key).collect())
-    )
+    assert_same_rows(a, spark.read.parquet(os.path.join(staged, "stage=curated")))
     # every surviving line obeys the C4 line rules (scrub may add <IP> etc
     # but never strips the terminal punctuation or shortens below 5 words)
     for r in a.select("text").limit(200).collect():
@@ -179,11 +178,7 @@ def test_cut_spans_stage(tmp_path, spark, curate):
     assert m1["stages"][-1]["rows"] == rows["stage=curated"]
 
     a = spark.read.parquet(os.path.join(fused, "curated"))
-    b = spark.read.parquet(os.path.join(staged, "stage=curated"))
-    key = ["doc_id", "split", "shard", "pos"]
-    assert sorted(map(tuple, a.select(key).collect())) == sorted(
-        map(tuple, b.select(key).collect())
-    )
+    assert_same_rows(a, spark.read.parquet(os.path.join(staged, "stage=curated")))
 
     # the cut output carries strictly less duplicated mass than the input
     pre = spark.read.parquet(os.path.join(staged, "stage=near_dedup"))

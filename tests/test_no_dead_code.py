@@ -1,6 +1,6 @@
 """Every top-level definition in the package is reached from a job, a query
-or a tool, and every keyword option of a public package function is set by
-one.
+or a tool, and every keyword option of a public package or job function is
+set by one.
 
 A plain-Python static scan, no Spark session. It parses the non-test roots
 (``jobs/``, ``tools/``, ``jobbench/``, ``bench.py``, ``__spark_entry__.py``)
@@ -14,7 +14,8 @@ caller that serves a job, a query or a tool.
 ``KEPT`` lists the few unreached definitions that stay, each with its
 reason; what a kept definition calls counts as reached.
 
-The option scan matches calls by function name. An option (a parameter
+The option scan covers the public functions of the package and of
+``jobs/*.py``, and matches calls by function name. An option (a parameter
 with a default) counts as set when some call in a root or in package code
 names it, passes it by position, or forwards ``*args``/``**kwargs``; calls
 in ``tests/`` do not count. An option no such call sets is a value its
@@ -207,7 +208,7 @@ def unreached(root: Path = ROOT, kept: tuple[str, ...] = ()) -> set[str]:
 
 def unset_options(root: Path = ROOT) -> set[str]:
     """``module.func(option)`` for every keyword option of a public package
-    function that no call in a root or in package code sets."""
+    or ``jobs/`` function that no call in a root or in package code sets."""
     mods = _load(root)
     calls: dict[str, list[ast.Call]] = {}
     for m in mods.values():
@@ -218,7 +219,7 @@ def unset_options(root: Path = ROOT) -> set[str]:
                 calls.setdefault(name, []).append(node)
     unset = set()
     for name, m in mods.items():
-        if name.startswith("<root>."):
+        if name.startswith("<root>.") and not name.startswith("<root>.jobs."):
             continue
         for fn in m.tree.body:
             if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or fn.name.startswith("_"):

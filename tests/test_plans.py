@@ -260,6 +260,31 @@ def test_c4_clean_map_only(spark, entry_mod):
     assert not re.findall(r"\(\d+\) Exchange\b", plan), plan[:2000]
 
 
+@pytest.mark.parametrize("c4", [False, True])
+def test_curate_fused_plan_scans_input_twice(spark, c4):
+    """The curation job's C4, quality and scrub stages filter and rewrite
+    columns of the frame they are given, so the fused plan reads the
+    documents twice: once for each dedup stage's second reference to its
+    input."""
+    import importlib.util
+    import os
+    import re
+
+    from acoustic_feature_extractor_spark.plans.cache import release_persisted
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs", "curate_corpus.py")
+    spec = importlib.util.spec_from_file_location("curate_corpus", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    cur = spark.read.parquet(f"{SF}/documents.parquet")
+    for _, fn in job.stage_transforms(n_shards=4, c4=c4):
+        cur = fn(cur)
+    plan = _plan(cur)
+    release_persisted()
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2, plan[:4000]
+
+
 def test_embedding_outliers_shuffles_partials_not_vectors(spark, entry_mod):
     """Label-centroid outliers: the only hash exchanges are the exploded
     (label, dim) partial-average and the labels×dim fold — the corpus
